@@ -23,12 +23,14 @@ per-query comparisons):
                           listener/UI/broadcast-cleanup state does not
                           accumulate across the whole suite)
   --runs N                min-of-N per query (default 2)
-  --cold                  fresh SparkSession per run — memo-consumer
-                          rows (propagation / power-iteration / BPE
-                          families) become independent of suite order;
-                          BASELINE.md records cold figures separately
 
 Defaults (no flags) are exactly what the per-round driver records.
+
+HEADLINE is derived, not listed: every registered key except the
+NEVER_BENCHED streaming keys, sorted by name. A new registration joins
+the suite (and must join the committed bench_summary.json record) with
+no edit here. No query memoizes work across calls, so every row is
+independent of suite order and a fresh session per run is never needed.
 
 HEADLINE wall-growth policy (VERDICT r14 ask #7, decided r15): at
 +15-17 keys/round the full min-of-2 HEADLINE record crosses 5 minutes
@@ -74,6 +76,10 @@ import os
 import sys
 import time
 
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from bristle_spark.registry import all_specs  # noqa: E402
+
 # The round-1 headline set: every cross-round total in BASELINE.md
 # compares on this subset.
 SHARED38 = [
@@ -90,324 +96,22 @@ SHARED38 = [
     "l_token_count", "l_fingerprint", "l_tfidf_top_terms",
 ]
 
-HEADLINE = [
-    # relational
-    "r_hash_agg",
-    "r_filter_predicates",
-    "r_distinct_count",
-    "r_join_inner",
-    "r_join_multi",
-    "r_join_outer",
-    "r_window_rank",
-    "r_window_running",
-    "r_rollup",
-    "r_cube",
-    "r_rollup_cascade",
-    "r_skew_salted_agg",
-    "r_tumbling_window",
-    "r_sort_limit_topk",
-    "r_percentiles",
-    "r_asof_join",
-    "r_range_join",
-    "l_sessionize",
-    # transcode
-    "t_cast_int_widths",
-    "t_map_to_arrays",
-    "t_timestamp_epoch",
-    # LLM data ops
-    "l_dedup_exact",
-    "l_dedup_minhash",
-    "l_dedup_simhash",
-    "l_dedup_ngram_jaccard",
-    "l_dedup_embedding",
-    "l_dedup_clusters",
-    "l_similarity_cosine",
-    "l_ann_ivf",
-    "l_chunk_documents",
-    "r_pivot",
-    "r_conditional_agg",
-    "l_text_stats",
-    "l_lang_id",
-    "l_quality_score",
-    "l_token_count",
-    "l_fingerprint",
-    "l_tfidf_top_terms",
-    # round-5 additions: corpus hygiene + batch kNN join
-    "l_repetition_score",
-    "l_contamination_ngram",
-    "l_cluster_representatives",
-    "l_corpus_stats",
-    "l_ann_knn_join",
-    # round-6 additions: PII scrub, stratified sampling, token entropy,
-    # containment dedup, int8-rerank ANN, perceptual-hash image dedup
-    "l_pii_scrub",
-    "l_stratified_sample",
-    "l_token_entropy",
-    "l_dedup_containment",
-    "l_ann_int8_rerank",
-    # round-6 session-2 additions: corpus LM scoring, Zipf fit,
-    # cross-snapshot dedup, label centroids, unpivot, audio features
-    "l_unigram_logprob",
-    "l_zipf_slope",
-    "l_cross_snapshot_dedup",
-    "l_centroid_by_label",
-    "r_unpivot",
-    "m_audio_features",
-    "l_feature_hash_embedding",
-    "l_knn_eval",
-    "l_ann_recall_eval",
-    "l_duplicate_passages",
-    "l_pack_sequences",
-    "l_bpe_merges",
-    "l_bpe_tokenize",
-    "l_quality_ensemble",
-    "r_robust_stats",
-    "r_attribution",
-    "l_span_corruption",
-    # round-7 additions
-    "l_domain_mix",
-    "l_ann_pq",
-    "l_winnow_fingerprint",
-    "l_dedup_semantic",
-    "l_perplexity_filter",
-    "r_bloom_prune",
-    "r_snapshot_diff",
-    "r_incremental_rollup",
-    "l_embedding_top_component",
-    "l_minhash_error",
-    "l_bigram_logprob",
-    "l_abtt_residual",
-    "l_char_ngram_lang_id",
-    "r_gap_fill",
-    "l_ivf_train_kmeans",
-    "l_lang_id_eval",
-    # round-8 additions
-    "l_dsir_importance",
-    "l_ngram_novelty",
-    "l_inverted_index",
-    "l_embedding_outliers",
-    "r_ntile",
-    "l_mixture_sampler",
-    "l_weighted_sample",
-    "l_prefix_dedup",
-    "l_pmi_bigrams",
-    "l_mips_topk",
-    "l_matryoshka_eval",
-    "l_ann_ivfpq",
-    "m_audio_fingerprint",
-    "l_hard_negatives",
-    # round-8 backfill: every declared non-streaming key that had no
-    # BENCH row in any prior round (VERDICT r7 ask #8) — with these,
-    # HEADLINE == the full non-streaming registry.
-    "r_approx_distinct",
-    "r_approx_percentiles",
-    "t_array_ops",
-    "l_knn_label",
-    "r_join_broadcast",
-    "r_join_semi_anti",
-    "r_set_ops",
-    "r_string_funcs",
-    "r_date_funcs",
-    "r_grouping_sets",
-    "r_window_lag",
-    "l_heavy_hitters",
-    "r_scalar_subquery",
-    "r_agg_collect",
-    "r_join_full",
-    "r_cross_join",
-    "r_window_distribution",
-    "r_exists_subquery",
-    "r_window_range_frame",
-    "r_arg_max",
-    "r_funnel",
-    "r_histogram",
-    "r_retention",
-    "r_stats_agg",
-    "t_project_rename",
-    "t_bool_to_int",
-    "t_enum_codes",
-    "t_null_default",
-    "t_json_props_extract",
-    "t_decimal_math",
-    "t_null_semantics",
-    "l_simhash",
-    "l_sample_hash",
-    "l_train_val_test",
-    "l_ngram_counts",
-    "l_clean_funnel",
-    "l_ann_lsh",
-    "l_ann_ivf_nprobe",
-    # round-8 second batch
-    "l_bm25",
-    "r_islands",
-    "r_interval_coverage",
-    "l_gopher_rules",
-    "r_hll_merge",
-    "l_mmr_diversify",
-    "l_kneser_ney",
-    "r_scd2",
-    "l_score_calibration",
-    "r_skew_salted_join",
-    "l_oov_rate",
-    "l_lang_confusion",
-    # round-8 third batch: distributed statistical analytics
-    "r_mode_per_group",
-    "r_weighted_median",
-    "r_pareto_share",
-    "r_market_basket",
-    "r_cusum_changepoint",
-    "l_edit_distance_dedup",
-    "l_vocab_growth",
-    "l_count_min",
-    "l_quality_classifier_train",
-    "l_pagerank",
-    "l_uncertainty_sample",
-    "r_sliding_distinct",
-    "l_cluster_size_histogram",
-    "l_poisson_bootstrap",
-    "r_bitmap_distinct",
-    "l_pca_project",
-    "r_time_weighted_avg",
-    "l_rank_fusion",
-    "l_source_overlap",
-    "r_markov_transitions",
-    "r_theil_sen",
-    # round-8 third wave: hypothesis tests / conformity statistics
-    "r_ols_by_group",
-    "r_welch_ttest",
-    "l_ks_test",
-    "l_chi2_terms",
-    "r_benford",
-    "r_gini",
-    "l_dedup_sorted_neighborhood",
-    "r_top_paths",
-    "l_sparse_cosine_topk",
-    # round-9 additions
-    "r_ttl_rollup",
-    "r_mv_late_update",
-    "r_sequence_match",
-    # round-10 additions
-    "r_percentile_disc",
-    "r_window_funnel",
-    "l_dedup_band_stats",
-    "l_domain_cap",
-    "r_year_over_year",
-    "r_cohort_ltv",
-    "l_tokenizer_fertility",
-    "l_skipgram_cooccurrence",
-    "r_rfm_segments",
-    "r_seasonality_index",
-    "r_time_to_convert",
-    "l_vocab_coverage",
-    "l_js_divergence",
-    "l_ndcg_eval",
-    "r_data_profile",
-    "m_wav_audio_features",
-    # round-11 additions: the real-codec image/corpus keys
-    "m_png_pixel_stats",
-    "m_png_resize",
-    "m_png_phash_dedup",
-    "l_gzip_decode_stats",
-    # round-11 session-2 additions
-    "m_png_edge_density",
-    "r_exp_decay_avg",
-    "r_autocorrelation",
-    "l_hapax_ratio",
-    "l_curriculum_order",
-    "l_duplicate_spans",
-    "r_summap",
-    "l_k_anonymity",
-    # round-12 additions: the remaining fake-backend keys promoted to
-    # real-PNG twins
-    "m_png_binary_features",
-    "m_png_frame_sample",
-    "m_png_scene_cut",
-    "m_png_patchify",
-    # round-12 additions: the baseline-JPEG stdlib codec keys
-    "m_jpeg_pixel_stats",
-    "m_jpeg_resize",
-    "m_png_augment",
-    # round-12 session-2 additions
-    "l_graph_triangles",
-    "r_recursive_hierarchy",
-    "l_seq_poisson_sample",
-    "r_largest_remainder_alloc",
-    "m_jpeg_phash_dedup",
-    "l_rendezvous_shard",
-    "t_ipv4_codec",
-    "t_uuid_format",
-    "r_mann_whitney",
-    "r_spearman_corr",
-    "r_cramers_v",
-    "r_counter_rate",
-    "r_lttb_downsample",
-    "r_bit_aggregates",
-    "t_ipv6_codec",
-    "s_stream_counter_rate",
-    "l_rank_biased_overlap",
-    "r_topk_others",
-    "r_histogram_equi_depth",
-    "r_window_funnel_strict",
-    "t_fixed_string_codec",
-    "t_datetime64_codec",
-    "r_mann_kendall",
-    "l_bloom_fpp_eval",
-    "m_png_hist_equalize",
-    "l_silhouette_by_label",
-    "l_centroid_drift",
-    "l_retrieval_mrr",
-    "r_geohash_encode",
-    "r_point_in_polygon",
-    "r_spatial_grid_join",
-    "s_stream_geofence",
-    "r_uniq_up_to",
-    "t_tuple_codec",
-    "r_runs_test",
-    "t_date32_codec",
-    # round-13 additions
-    "m_jpeg_rgb_stats",
-    "r_geo_distance",
-    "r_kendall_tau",
-    "t_lowcardinality_codec",
-    "t_map_codec",
-    "l_dedup_url",
-    "r_skyline",
-    "l_ann_list_balance",
-    "s_stream_skyline",
-    "t_array_codec",
-    "r_conversion_wilson_ci",
-    "r_anova_oneway",
-    "r_levene_brown_forsythe",
-    "r_cuped_variance_reduction",
-    # round-14 additions
-    "m_jpeg_ac_stats",
-    "r_kruskal_wallis",
-    "r_benjamini_hochberg",
-    "r_bollinger_bands",
-    "r_survival_km",
-    "l_sq8_quantize_error",
-    "r_srm_check",
-    "s_stream_srm",
-    "r_peak_detection",
-    "r_rolling_corr",
-    "r_power_analysis",
-    "r_allen_intervals",
-    "l_temperature_mix",
-    "r_winsorize",
-    "m_wav_silence_trim",
-    "r_did_estimator",
-    "r_did_pretrend",
-    # round-15 additions
-    "m_jpeg_chroma_ac",
-    "r_holt_trend",
-    "s_stream_holt_trend",
-    "l_graph_assortativity",
-    "m_jpeg_region_count",
-    "r_slo_burn_rate",
-    "l_snippet_extract",
-    "m_wav_resample",
-    "s_stream_slo_burn",
-]
+# Streaming keys the suite has never timed: each runs a full micro-batch
+# stream, and keeping them out holds the HEADLINE set equal to the
+# cross-round record in bench_summary.json.
+NEVER_BENCHED = frozenset({
+    "s_microbatch_flush", "s_drop_policies", "s_late_data",
+    "s_session_window", "s_stream_dedup", "s_stateful_totals",
+    "s_proto_roundtrip", "s_stream_join", "s_stream_dedup_watermark",
+    "s_stream_enrich", "s_stream_rollup", "s_stream_upsert",
+    "s_stream_topk", "s_stream_anomaly", "s_stream_cdc",
+    "s_stream_count_min", "s_stream_bloom_merge",
+    "s_stream_histogram_quantiles", "s_stream_decayed_ltv",
+})
+
+# every registered key except NEVER_BENCHED, by name, so suite order does
+# not follow the driver window
+HEADLINE = sorted(set(all_specs()) - NEVER_BENCHED)
 
 
 def _select_queries(args: argparse.Namespace) -> list[str]:
@@ -429,7 +133,7 @@ def is_closing_gate_run(args: argparse.Namespace, sf_dir: str | None = None) -> 
     The committed summary is the closing-gate record: full HEADLINE at
     sf0.1, warm, min-of-2, no session recycling. Scratch selections
     (--queries/--family/--subset), methodology overrides
-    (--cold/--recycle/--runs), AND a different $SPARK_GRAFT_SF_DIR all
+    (--recycle/--runs), AND a different $SPARK_GRAFT_SF_DIR all
     produce numbers that are not comparable to it and must never
     clobber it (self-review + ADVICE r11, sf gap closed r12).
 
@@ -445,7 +149,7 @@ def is_closing_gate_run(args: argparse.Namespace, sf_dir: str | None = None) -> 
     ):
         return False
     return not (args.queries or args.family or args.subset
-                or args.cold or args.recycle or args.runs != 2)
+                or args.recycle or args.runs != 2)
 
 
 def summary_target(args: argparse.Namespace, sf_dir: str | None = None) -> str:
@@ -469,14 +173,6 @@ def main() -> None:
     sel.add_argument("--queries", default=None)
     ap.add_argument("--recycle", type=int, default=0, metavar="N",
                     help="rebuild the SparkSession every N queries")
-    ap.add_argument("--cold", action="store_true",
-                    help="fresh SparkSession per RUN: the cross-query "
-                         "memo caches key on applicationId, so a memo "
-                         "consumer (l_dedup_clusters, l_pagerank, ...) "
-                         "benched after its producer in one session "
-                         "reads the memo and its row is not independent "
-                         "(VERDICT r8 #6); --cold makes every run pay "
-                         "the full propagation")
     ap.add_argument("--runs", type=int, default=2)
     ap.add_argument("--promote", action="store_true",
                     help="write this run's record to the TRACKED "
@@ -491,9 +187,7 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-    from bristle_spark.registry import all_specs
     from bristle_spark.session import get_spark
 
     def fresh_session():
@@ -522,9 +216,6 @@ def main() -> None:
         best = float("inf")
         try:
             for _ in range(args.runs):
-                if args.cold:
-                    spark.stop()
-                    spark = fresh_session()
                 t0 = time.perf_counter()
                 spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 best = min(best, time.perf_counter() - t0)
@@ -579,7 +270,7 @@ def main() -> None:
     # runs on the closing-gate methodology (warm, min-of-2, no recycle)
     # may write it: a --queries/--family/--subset scratch run must not
     # clobber the committed record (self-review r11 — exactly that
-    # clobber happened once), and neither may a --cold/--recycle/--runs
+    # clobber happened once), and neither may a --recycle/--runs
     # run, whose numbers are methodologically different even though
     # they cover every HEADLINE key (ADVICE r11).
     # Promotion rule (round 14): the tracked bench_summary.json only

@@ -643,10 +643,6 @@ def l_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------- dedup clusters (iterative)
 
 
-# cross-call memo for the converged propagation labels (see docstring)
-_PROP_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 @register(
     "l_dedup_clusters",
     oracle=f"""
@@ -677,20 +673,7 @@ def l_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(component diameter) rounds. cluster_id = min doc_id reachable.
     The DuckDB oracle is a recursive transitive-closure CTE — feasible
     at oracle scale, not at 100 TB, which is exactly why the engine
-    side iterates.
-
-    The converged label frame is memoized per (applicationId, sf_dir)
-    — the l_bpe_merges/_top_direction discipline — because FOUR
-    registered queries consume it (this one, l_cluster_representatives,
-    l_clean_funnel, l_cluster_size_histogram) and each re-running the
-    O(diameter) driver loop would pay the whole propagation again."""
-    app_id = spark.sparkContext.applicationId
-    memo_key = (app_id, sf_dir)
-    hit = _PROP_CACHE.get(memo_key)
-    if hit is not None:
-        return hit
-    for stale in [k for k in _PROP_CACHE if k[0] != app_id]:
-        del _PROP_CACHE[stale]
+    side iterates."""
     pairs = l_dedup_minhash(spark, sf_dir).select("doc_a", "doc_b")
     edges = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
@@ -726,11 +709,9 @@ def l_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         labels = updated.select("doc", F.col("new_label").alias("label"))
         if changed == 0:
             break
-    out = labels.select(
+    return labels.select(
         F.col("doc").alias("doc_id"), F.col("label").cast("bigint").alias("cluster_id")
     )
-    _PROP_CACHE[memo_key] = out
-    return out
 
 
 # ------------------------------------------------------- containment

@@ -1244,25 +1244,10 @@ def l_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------- power-iteration top component
 POWER_ITERS = 5  # fixed iteration count -> deterministic output
 
-# Train-once memo (the l_bpe_merges discipline): the iterative power
-# method runs once per (session, corpus); l_embedding_top_component and
-# l_abtt_residual both consume the cached 1-row direction frame.
-_POWER_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 
 def _top_direction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The converged (after POWER_ITERS rounds) unit direction as a
-    1-row DataFrame with column ``v`` (array<double>), localCheckpointed
-    and memoized per (applicationId, sf_dir)."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    hit = _POWER_CACHE.get(key)
-    if hit is not None:
-        return hit
-    # evict entries from stopped sessions so localCheckpoint'd frames
-    # don't accumulate across session recycles (ADVICE r7)
-    for stale in [k for k in _POWER_CACHE if k[0] != app_id]:
-        del _POWER_CACHE[stale]
+    1-row DataFrame with column ``v`` (array<double>), localCheckpointed."""
     e = _embeddings(spark, sf_dir)
     dim = 64
     v = spark.range(0, 1, 1, 1).select(
@@ -1290,7 +1275,6 @@ def _top_direction(spark: SparkSession, sf_dir: str) -> DataFrame:
         v = w.select(
             F.transform("w", lambda x: x / norm).alias("v")
         ).localCheckpoint()
-    _POWER_CACHE[key] = v
     return v
 
 
@@ -1347,9 +1331,9 @@ def l_abtt_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-but-the-top residual (Mu & Viswanath 2018): remove each
     embedding's projection onto the corpus's dominant direction —
     the post-processing that strips the common component which drags
-    every cosine similarity upward. Consumes the SAME memoized power
-    iteration as l_embedding_top_component (train once, apply
-    broadcast — the BPE-pair discipline), then the removal itself is
+    every cosine similarity upward. Runs the SAME power iteration as
+    l_embedding_top_component (train, then apply broadcast — the
+    BPE-pair discipline), then the removal itself is
     one row-local expression over the broadcast direction: projection,
     residual norm, and the norm retained after removal.
 
@@ -2295,19 +2279,12 @@ def l_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------- 2-component PCA map
 
 
-def _deflated_direction(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _deflated_direction(spark: SparkSession, sf_dir: str, v1: DataFrame) -> DataFrame:
     """Second principal direction by power iteration on the DEFLATED
-    matrix (every vector's v1-component removed before the mat-vec) —
-    memoized like _top_direction, 1-row frame with column ``v2``."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir + "#pc2")
-    hit = _POWER_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for stale in [k for k in _POWER_CACHE if k[0] != app_id]:
-        del _POWER_CACHE[stale]
+    matrix (every vector's component along ``v1``, the 1-row
+    _top_direction frame, removed before the mat-vec) — 1-row frame
+    with column ``v2``."""
     e = _embeddings(spark, sf_dir)
-    v1 = _top_direction(spark, sf_dir)
     dim = 64
     # deterministic init orthogonal-ish to the uniform vector: alternate
     # signs so the start never collapses onto v1's init
@@ -2316,15 +2293,18 @@ def _deflated_direction(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array(*[F.lit(x) for x in init]).alias("w")
     ).localCheckpoint()
     for _ in range(POWER_ITERS):
+        # p1 = x.v1, the residual r = x - p1 v1 and pw = r.w are each
+        # projected as a column before the next reads it: a Column used
+        # inside a lambda is re-evaluated per element, so the nested form
+        # costs dim^3 lambda steps per row and round
         p1 = F.aggregate(
             F.zip_with("emb", "v", lambda a, b: a * b),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
-        # residual r = x - (x.v1) v1, computed row-locally
-        r = F.zip_with("emb", "v", lambda a, b: a - p1 * b)
+        r = F.zip_with("emb", "v", lambda a, b: a - F.col("p1") * b)
         pw = F.aggregate(
-            F.zip_with(r, F.col("w"), lambda a, b: a * b),
+            F.zip_with("r", "w", lambda a, b: a * b),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
@@ -2332,7 +2312,10 @@ def _deflated_direction(spark: SparkSession, sf_dir: str) -> DataFrame:
             e.select(F.col("v").alias("emb"))
             .crossJoin(F.broadcast(v1))
             .crossJoin(F.broadcast(w))
-            .select(F.posexplode(F.transform(r, lambda x: x * pw)).alias("pos", "c"))
+            .select("emb", "v", "w", p1.alias("p1"))
+            .select(r.alias("r"), "w")
+            .select("r", pw.alias("pw"))
+            .select(F.posexplode(F.transform("r", lambda x: x * F.col("pw"))).alias("pos", "c"))
             .groupBy("pos")
             .agg(F.sum("c").alias("s"))
         )
@@ -2345,9 +2328,7 @@ def _deflated_direction(spark: SparkSession, sf_dir: str) -> DataFrame:
         w = packed.select(
             F.transform("w0", lambda x: x / norm).alias("w")
         ).localCheckpoint()
-    w = w.select(F.col("w").alias("v2"))
-    _POWER_CACHE[key] = w
-    return w
+    return w.select(F.col("w").alias("v2"))
 
 
 @register("l_pca_project", oracle=None)
@@ -2359,8 +2340,8 @@ def l_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     whitening. Components are sign-canonicalized (first nonzero
     coordinate positive) so the map is unique.
 
-    Spark-first: v1 reuses the memoized _top_direction run
-    (l_embedding_top_component / l_abtt_residual share it); v2 runs the
+    Spark-first: v1 is the _top_direction run (the same iteration as
+    l_embedding_top_component / l_abtt_residual); v2 runs the
     SAME broadcast-direction power iteration on the row-locally deflated
     vectors (residual r = x - (x.v1) v1 computed inside the scan - the
     deflated matrix is never materialized). The projection pass is one
@@ -2369,7 +2350,7 @@ def l_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_pca_project.py."""
     e = _embeddings(spark, sf_dir)
     v1 = _top_direction(spark, sf_dir)
-    v2 = _deflated_direction(spark, sf_dir)
+    v2 = _deflated_direction(spark, sf_dir, v1)
 
     # sign canonicalization factors (first nonzero coordinate positive)
     def sign_of(col: str) -> F.Column:

@@ -280,8 +280,9 @@ def r_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOTE (r15): four branches consume this frame, but do NOT persist
     # it — the distinct's shuffle subtree is byte-identical across the
     # branches, so runtime exchange reuse already dedups it, and an
-    # interleaved A/B (scripts/ab_market_basket.py) measured the persist
-    # as a 15% LOSS (cache materialization + broken codegen pipelines)
+    # interleaved A/B (OPTIMIZATION_r15.md, "r_market_basket") measured
+    # the persist as a 15% LOSS (cache materialization + broken codegen
+    # pipelines)
     items = li.select("l_orderkey", "l_partkey").distinct()
     freq = items.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_item"))
     tot = items.agg(

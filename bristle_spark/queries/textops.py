@@ -679,29 +679,10 @@ def l_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merges
 
 
-# Train-once memo (VERDICT r6 #3): l_bpe_merges and l_bpe_tokenize share
-# ONE training run instead of each paying the 10-round iterative loop.
-# The cached DataFrames are localCheckpoint'd so they are materialized
-# and session-bound — keying on applicationId drops stale entries when
-# the SparkSession is recycled (bench --family sharding, test sessions).
-_BPE_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _bpe_train(spark: SparkSession, sf_dir: str):
     """Run the BPE loop; returns (final segmented vocabulary
     (w, cnt, s), merge table). Shared by l_bpe_merges (the merge
-    artifact) and l_bpe_tokenize (the application pass) — as a
-    pipeline you train once and ship the dictionary, so both queries
-    consume one memoized training run per (session, corpus)."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    hit = _BPE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    # evict entries from stopped sessions so localCheckpoint'd frames
-    # don't accumulate across session recycles (ADVICE r7)
-    for stale in [k for k in _BPE_CACHE if k[0] != app_id]:
-        del _BPE_CACHE[stale]
+    artifact) and l_bpe_tokenize (the application pass)."""
     d = load_table(spark, sf_dir, "documents")
     words = (
         d.select(F.explode(F.split("text", " ")).alias("w"))
@@ -709,9 +690,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    result = _bpe_loop(words)
-    _BPE_CACHE[key] = result
-    return result
+    return _bpe_loop(words)
 
 
 # symbols of a sentinel-wrapped segmentation string (drop the empty

@@ -10,6 +10,10 @@ Every implemented operator registers a ``QuerySpec``:
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -41,123 +45,69 @@ def register(name: str, oracle: str | None = None, group: str = "") -> Callable[
     return deco
 
 
-# The driver's correctness harness grades the FIRST 50 entries of
-# ``queries()`` in iteration order.  Round-11 rotation (VERDICT r10 ask
-# #1), policy codified in tests/test_driver_window.py: (1) keys with NO
-# driver row ever lead the window, (2) then keys whose query plan
-# changed after their last driver grade, (3) then the window drains
-# strictly oldest-first over the oracle-backed registry (computed from
-# the committed CORRECTNESS_r*.json history).  Everything rotated out
-# keeps local oracle-parity coverage (test_oracle_parity.py at
-# sf0.001/0.01/0.1, scripts/verify_all.py every round).
+# The driver's correctness harness grades the FIRST ``WINDOW`` entries of
+# ``queries()``. all_specs() derives that window from the committed
+# CORRECTNESS_r*.json history, so a new record rotates it with no edit:
+#   1. oracle-backed keys with no driver row in any round lead;
+#   2. then the PLAN_CHANGED_KEYS entries still waiting for a grade of
+#      the round their plan changed in;
+#   3. then the remaining oracle-backed keys drain stalest-first by the
+#      round of their last driver row.
+# Ties keep registration order. Rows-only keys never hold a slot, so
+# every graded row is a hash match. tests/test_driver_window.py states
+# the same rules over its own history reader. Keys outside the window
+# keep local oracle-parity coverage (tests/test_oracle_parity.py at
+# sf0.001/0.01/0.1, scripts/verify_all.py).
+WINDOW = 50
 
-# keys whose query function was touched in THIS round after their last
-# driver grade — the rotation policy forces them into the next window.
-# Round 16 (optimization round): every ORACLE-BACKED key whose QUERY
-# PLAN changed this round (the rows-only l_pagerank and
-# l_quality_classifier_train also changed, but rows-only keys never
-# hold window slots — their trajectories are pinned by
-# tests/test_pagerank.py and tests/test_logreg.py) —
-# the pair-expansion consumers (graph and
-# dedup overlap families), the _probe_scores_arrow kernel consumers
-# (ANN eval harnesses, matryoshka, MRR, list balance), the one-exchange
-# logreg rounds, the trigram classifier's struct-min argmax (and its
-# two oracle composites), and the codegen ipv6 re-parse.  The
-# _pq_packed_key refactor is NOT plan-changed (byte-identical
-# expression trees, the r15 shared-epoch precedent).
-PLAN_CHANGED_KEYS: tuple[str, ...] = (
-    "l_graph_triangles",
-    "l_graph_assortativity",
-    "l_dedup_ngram_jaccard",
-    "l_dedup_containment",
-    "l_source_overlap",
-    "l_contamination_ngram",
-    "l_char_ngram_lang_id",
-    "l_lang_confusion",
-    "l_lang_id_eval",
-    "l_knn_eval",
-    "l_ann_recall_eval",
-    "l_ndcg_eval",
-    "l_matryoshka_eval",
-    "l_retrieval_mrr",
-    "l_ann_list_balance",
-    "t_ipv6_codec",
-)
+HISTORY_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-DRIVER_PRIORITY: tuple[str, ...] = (
-    # --- (1) never driver-graded: none (the r15 additions were all
-    # graded in CORRECTNESS_r15) ---
-    # --- (2) plan-changed after their last grade (PLAN_CHANGED_KEYS) ---
-    "l_graph_triangles",
-    "l_graph_assortativity",
-    "l_dedup_ngram_jaccard",
-    "l_dedup_containment",
-    "l_source_overlap",
-    "l_contamination_ngram",
-    "l_char_ngram_lang_id",
-    "l_lang_confusion",
-    "l_lang_id_eval",
-    "l_knn_eval",
-    "l_ann_recall_eval",
-    "l_ndcg_eval",
-    "l_matryoshka_eval",
-    "l_retrieval_mrr",
-    "l_ann_list_balance",
-    "t_ipv6_codec",
-    # --- (3) oldest-first drain: 34 of the r9-cohort oracle-backed
-    # keys (ties within a cohort may drain in any order) ---
-    "l_cluster_size_histogram",
-    "l_dedup_sorted_neighborhood",
-    "l_edit_distance_dedup",
-    "l_ks_test",
-    "l_minhash_error",
-    "l_poisson_bootstrap",
-    "l_rank_fusion",
-    "l_text_stats",
-    "l_uncertainty_sample",
-    "l_vocab_growth",
-    "r_benford",
-    "r_bitmap_distinct",
-    "r_cusum_changepoint",
-    "r_gini",
-    "r_hash_agg",
-    "r_incremental_rollup",
-    "r_join_broadcast",
-    "r_market_basket",
-    "r_markov_transitions",
-    "r_mv_late_update",
-    "r_ols_by_group",
-    "r_pareto_share",
-    "r_rollup",
-    "r_sequence_match",
-    "r_set_ops",
-    "r_sliding_distinct",
-    "r_sort_limit_topk",
-    "r_theil_sen",
-    "r_time_weighted_avg",
-    "r_top_paths",
-    "r_ttl_rollup",
-    "r_tumbling_window",
-    "r_weighted_median",
-    "r_welch_ttest",
-)
+# key -> round in which its query plan changed. A key ranks under rule 2
+# while its last driver row is older than that round; remove the entry
+# once the record of that round (or a later one) grades it.
+PLAN_CHANGED_KEYS: dict[str, int] = {}
+
+
+def last_graded(history_dir: str = HISTORY_DIR) -> dict[str, int]:
+    """key -> last round with any driver row in ``history_dir``."""
+    last: dict[str, int] = {}
+    for path in glob.glob(os.path.join(history_dir, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", path).group(1))
+        with open(path) as fh:
+            for key in json.load(fh):
+                last[key] = max(last.get(key, 0), rnd)
+    return last
+
+
+def driver_window(
+    specs: dict[str, QuerySpec], history_dir: str = HISTORY_DIR
+) -> tuple[str, ...]:
+    """The ``WINDOW`` keys the driver grades next, in grading order."""
+    graded = last_graded(history_dir)
+
+    def rank(key: str) -> tuple[int, int]:
+        if key not in graded:
+            return (1, 0)
+        if graded[key] < PLAN_CHANGED_KEYS.get(key, 0):
+            return (2, 0)
+        return (3, graded[key])
+
+    oracle_backed = [k for k, spec in specs.items() if spec.oracle is not None]
+    return tuple(sorted(oracle_backed, key=rank)[:WINDOW])
 
 
 def all_specs() -> dict[str, QuerySpec]:
     """Import all query modules (side-effect registration) and return the registry.
 
-    The returned dict is ordered: ``DRIVER_PRIORITY`` keys first (in that
-    order), then every remaining registration in module-import order.
+    The returned dict is ordered: the ``driver_window`` keys first (in
+    grading order), then every remaining registration in module-import
+    order.
     """
     from bristle_spark import queries  # noqa: F401  (populates _REGISTRY)
 
-    ordered: dict[str, QuerySpec] = {}
-    for name in DRIVER_PRIORITY:
-        if name in _REGISTRY:
-            ordered[name] = _REGISTRY[name]
-    for name, spec in _REGISTRY.items():
-        if name not in ordered:
-            ordered[name] = spec
+    window = driver_window(_REGISTRY)
+    ordered = {name: _REGISTRY[name] for name in window}
+    ordered.update(_REGISTRY)
     return ordered
 
 

@@ -35,6 +35,9 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.ansi.enabled": "false",
+    # protojson field aliases are case-distinct (e/E, t/T, m/M in the
+    # binance feed, reference examples/binance.proto:6-18); default
+    # case-insensitive resolution cannot address them
     "spark.sql.caseSensitive": "true",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # pyspark >= 4.1 infers tz-less parquet timestamps as TIMESTAMP_NTZ by
@@ -76,24 +79,13 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        # protojson field aliases are case-distinct (e/E, t/T, m/M in the
-        # binance feed, reference examples/binance.proto:6-18); default
-        # case-insensitive resolution cannot address them
-        .config("spark.sql.caseSensitive", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("BRISTLE_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**RUNTIME_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -142,7 +142,6 @@ SLOW_MODULES = {
     "test_h2_priority.py",
     "test_metrics.py",
     "test_backoff.py",
-    "test_socket_service.py",
     # registry-wide SWEEPS (one plan/robustness probe per key, ~300
     # params each): valuable, but the per-key pins in test_plans.py and
     # the full batch oracle parity already gate the fast tier
@@ -155,7 +154,6 @@ SLOW_MODULES = {
 SLOW_TESTS = (
     "test_pq_recall_against_exact",
     "test_matches_reference_python_bpe",
-    "test_train_once_memo_shared",
     "test_chained_merge_respects_symbol_boundaries",
     "test_funnel_runs_propagation_once",
     "test_winnowing_guarantee_shared_run_shares_fingerprint",

@@ -1,10 +1,12 @@
 """bench.py silently skips unknown query names (one rename would
 quietly shrink the suite and flatter the total) — pin every HEADLINE
-and SHARED38 entry to a real registration."""
+and SHARED38 entry to a real registration, and pin the derived HEADLINE
+to the cross-round record's key set."""
 
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 
 from bristle_spark.registry import all_specs
@@ -16,10 +18,27 @@ _bench = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(_bench)
 
 
+def _committed_summary() -> dict:
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(__file__)), "bench_summary.json"
+    )
+    with open(path) as fh:
+        return json.load(fh)
+
+
 def test_headline_names_all_registered():
     specs = all_specs()
     missing = [n for n in _bench.HEADLINE if n not in specs]
     assert missing == []
+    assert [n for n in _bench.NEVER_BENCHED if n not in specs] == []
+
+
+def test_headline_is_the_committed_record_key_set():
+    """The derived HEADLINE is exactly the 289 keys of the committed
+    cross-round record, in name order."""
+    assert len(_bench.HEADLINE) == 289
+    assert set(_bench.HEADLINE) == set(_committed_summary()["queries"])
+    assert _bench.HEADLINE == sorted(_bench.HEADLINE)
 
 
 def test_shared38_is_38_registered_names():
@@ -36,22 +55,21 @@ def test_headline_has_no_duplicates():
 def test_summary_write_gated_on_closing_methodology():
     """Only a full-HEADLINE warm min-of-2 run may overwrite
     bench_summary.json: scratch selections AND methodology overrides
-    (--cold/--recycle/--runs) must be refused (ADVICE r11 — a --cold
-    full run covers every key, so the coverage test above cannot catch
-    that clobber)."""
+    (--recycle/--runs) must be refused (ADVICE r11 — such a full run
+    covers every key, so the coverage test above cannot catch that
+    clobber)."""
     import argparse
 
     def ns(**over):
         base = dict(subset=None, family=None, queries=None,
-                    recycle=0, cold=False, runs=2)
+                    recycle=0, runs=2)
         base.update(over)
         return argparse.Namespace(**base)
 
     assert _bench.is_closing_gate_run(ns())
     assert _bench.is_closing_gate_run(ns(), _bench.GATE_SF_DIR)
     for bad in (ns(queries="r_hash_agg"), ns(family="l_"),
-                ns(subset="shared38"), ns(cold=True),
-                ns(recycle=5), ns(runs=1), ns(runs=3)):
+                ns(subset="shared38"), ns(recycle=5), ns(runs=1), ns(runs=3)):
         assert not _bench.is_closing_gate_run(bad), bad
     # a full run at a non-gate scale must not clobber the record either
     assert not _bench.is_closing_gate_run(ns(), "/root/testdata/sf0.01")
@@ -71,7 +89,7 @@ def test_summary_write_requires_explicit_promote():
 
     def ns(**over):
         base = dict(subset=None, family=None, queries=None,
-                    recycle=0, cold=False, runs=2, promote=False)
+                    recycle=0, runs=2, promote=False)
         base.update(over)
         return argparse.Namespace(**base)
 
@@ -79,7 +97,7 @@ def test_summary_write_requires_explicit_promote():
     assert _bench.summary_target(ns()) == "bench_scratch.json"
     # --promote without gate methodology: scratch (refused)
     assert _bench.summary_target(ns(promote=True, runs=3)) == "bench_scratch.json"
-    assert _bench.summary_target(ns(promote=True, cold=True)) == "bench_scratch.json"
+    assert _bench.summary_target(ns(promote=True, recycle=5)) == "bench_scratch.json"
     assert _bench.summary_target(
         ns(promote=True), "/root/testdata/sf0.01"
     ) == "bench_scratch.json"
@@ -105,13 +123,7 @@ def test_committed_bench_summary_covers_headline():
     session-2 gate was committed at 210 keys while HEADLINE had grown
     to 211). Fails until the closing bench is re-run after any
     HEADLINE change."""
-    import json
-
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(__file__)), "bench_summary.json"
-    )
-    with open(path) as fh:
-        record = json.load(fh)
+    record = _committed_summary()
     covered = set(record["queries"]) | set(record.get("errors", {}))
     missing = sorted(set(_bench.HEADLINE) - covered)
     assert missing == [], (

@@ -135,21 +135,3 @@ def test_chained_merge_respects_symbol_boundaries(spark):
     want = _reference_bpe({"th": 10, "he": 9, "the": 5}, BPE_MERGES)
     assert want[2] == ("th", "e", 5)
     assert got == want
-
-
-def test_train_once_memo_shared(spark, sf_dir):
-    """l_bpe_merges and l_bpe_tokenize must consume ONE training run
-    (VERDICT r6 #3): after running both, the memo holds exactly one
-    entry for this (session, sf_dir) and a re-train returns the SAME
-    cached DataFrame objects instead of re-running the 10-round loop."""
-    from bristle_spark.queries import textops
-
-    textops._BPE_CACHE.clear()
-    all_specs()["l_bpe_merges"].fn(spark, sf_dir).collect()
-    key = (spark.sparkContext.applicationId, sf_dir)
-    assert key in textops._BPE_CACHE
-    cached_vocab, cached_merges = textops._BPE_CACHE[key]
-    all_specs()["l_bpe_tokenize"].fn(spark, sf_dir).collect()
-    assert textops._BPE_CACHE[key][0] is cached_vocab
-    assert textops._BPE_CACHE[key][1] is cached_merges
-    assert textops._bpe_train(spark, sf_dir)[1] is cached_merges

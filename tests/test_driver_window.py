@@ -1,20 +1,19 @@
 """The driver's correctness harness grades the FIRST 50 queries()
-entries. These tests CODIFY the rotation policy (VERDICT r10 ask #2)
-instead of pinning one round's hand-built list:
+entries. registry.all_specs() derives that window; these tests state
+the rotation policy over their own reader of the committed history:
 
-1. every registered key with no driver row in any committed
+1. every oracle-backed key with no driver row in any committed
    CORRECTNESS_r*.json must be in the window (first driver rows outrank
    everything);
-2. every key in registry.PLAN_CHANGED_KEYS (query function touched
-   after its last driver grade) must be in the window;
+2. every key in registry.PLAN_CHANGED_KEYS whose last driver grade
+   predates the round its plan changed in must be in the window;
 3. the remaining slots drain strictly oldest-first over the
    oracle-backed registry: no oracle-backed key OUTSIDE the window may
    be strictly staler than a non-priority key INSIDE it.
 
-Staleness is computed from the committed CORRECTNESS history, so the
-suite fails the moment a new CORRECTNESS file lands and the pinned
-window no longer satisfies the policy — the next rotation is forced,
-not optional. Keys rotated out keep local oracle-parity coverage via
+Staleness is computed from the committed CORRECTNESS history, and a
+new CORRECTNESS file must rotate the window with no edit to the
+registry. Keys rotated out keep local oracle-parity coverage via
 test_oracle_parity.py and scripts/verify_all.py.
 """
 
@@ -24,6 +23,7 @@ import glob
 import json
 import os
 import re
+import shutil
 
 import pytest
 
@@ -32,10 +32,10 @@ from bristle_spark import registry
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _last_graded() -> dict[str, int]:
+def _last_graded(history_dir: str = REPO) -> dict[str, int]:
     """key -> last round with ANY driver row, from committed history."""
     last: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
+    for path in sorted(glob.glob(os.path.join(history_dir, "CORRECTNESS_r*.json"))):
         rnd = int(re.search(r"r(\d+)\.json$", path).group(1))
         with open(path) as fh:
             for key in json.load(fh):
@@ -49,73 +49,38 @@ def specs():
 
 
 @pytest.fixture(scope="module")
+def window(specs):
+    return registry.driver_window(specs)
+
+
+@pytest.fixture(scope="module")
 def last_graded():
     graded = _last_graded()
     assert graded, "no committed CORRECTNESS history found"
     return graded
 
 
-def test_priority_list_is_exactly_fifty():
-    assert len(registry.DRIVER_PRIORITY) == 50
-    assert len(set(registry.DRIVER_PRIORITY)) == 50
+def _pending_plan_changes(last_graded: dict[str, int]) -> set[str]:
+    return {
+        k for k, rnd in registry.PLAN_CHANGED_KEYS.items()
+        if last_graded.get(k, 0) < rnd
+    }
 
 
-def test_first_fifty_is_exactly_the_priority_list(specs):
-    assert list(specs)[:50] == list(registry.DRIVER_PRIORITY)
-
-
-def test_priority_keys_all_registered(specs):
-    assert [k for k in registry.DRIVER_PRIORITY if k not in specs] == []
-
-
-def test_never_graded_keys_lead_the_window(specs, last_graded):
-    """Policy rule 1: an ORACLE-BACKED key without a single hard driver
-    row is the highest-value slot in the registry — all such keys must
-    be in the window, ahead of every re-confirmation. (Rows-only keys
-    are exempt here exactly as in the drain rule: the window is
-    reserved for hash-gradable slots, so a new rows-only key enters
-    only as the deliberate choice test_every_window_key_is_oracle_backed
-    guards.)"""
-    never = [
-        k for k, spec in specs.items()
-        if k not in last_graded and spec.oracle is not None
-    ]
-    window = set(registry.DRIVER_PRIORITY)
-    missing = [k for k in never if k not in window]
-    assert missing == [], f"never-driver-graded keys outside the window: {missing}"
-    # and they sit at the very front: the driver grades in order, so an
-    # early abort still covers the highest-value keys
-    n = len(never)
-    assert set(registry.DRIVER_PRIORITY[:n]) == set(never)
-
-
-def test_plan_changed_keys_in_window(specs, last_graded):
-    """Policy rule 2: a grade that predates the key's current plan is
-    not evidence about the current plan — re-grade next window."""
-    for key in registry.PLAN_CHANGED_KEYS:
-        assert key in specs, f"PLAN_CHANGED_KEYS names unknown key {key}"
-        assert key in registry.DRIVER_PRIORITY, (
-            f"{key} changed after its last driver grade but is not in "
-            f"the next window"
-        )
-
-
-def test_window_drains_oldest_first(specs, last_graded):
-    """Policy rule 3: among oracle-backed keys with a driver row, no key
-    OUTSIDE the window may be strictly staler than a non-priority key
-    INSIDE it. (Rows-only keys are exempt: the window is reserved for
-    hash-gradable slots — see test_every_window_key_is_oracle_backed.)"""
-    window = set(registry.DRIVER_PRIORITY)
-    priority = set(registry.PLAN_CHANGED_KEYS)
+def _assert_drains_oldest_first(window, specs, last_graded):
+    """Among oracle-backed keys with a driver row, no key OUTSIDE the
+    window may be strictly staler than a non-priority key INSIDE it."""
+    inside = set(window)
+    pending = _pending_plan_changes(last_graded)
     inside_rounds = [
         last_graded[k]
-        for k in window
-        if k in last_graded and k not in priority
+        for k in inside
+        if k in last_graded and k not in pending
     ]
     outside_rounds = {
         k: last_graded[k]
         for k, spec in specs.items()
-        if k not in window and spec.oracle is not None and k in last_graded
+        if k not in inside and spec.oracle is not None and k in last_graded
     }
     if not inside_rounds or not outside_rounds:
         return
@@ -128,61 +93,91 @@ def test_window_drains_oldest_first(specs, last_graded):
     )
 
 
-# Rows-only keys deliberately placed in the current window (VERDICT
-# r13 ask #4): each rides ONE window to get its no_oracle driver row
-# (proving the key runs under the driver), then rotates out for good.
-# Every other rows-only key already has such a row from r7–r9.
-# (r15: r_geo_distance got its one no_oracle row in CORRECTNESS_r14 and
-# left the window for good — the exemption set is empty again.)
-WINDOW_ROWS_ONLY_EXEMPT: frozenset[str] = frozenset()
+def test_priority_list_is_exactly_fifty(window):
+    assert len(window) == 50
+    assert len(set(window)) == 50
 
 
-def test_every_window_key_is_oracle_backed(specs):
-    """All driver-window keys carry a DuckDB oracle, so every graded
-    row is a hash-match — no rows-only slots. Placing a rows-only key
-    in the window is a deliberate, visible choice: it must be listed in
-    WINDOW_ROWS_ONLY_EXEMPT above with the rationale, and only keys
-    with zero driver history qualify (one run each, ever)."""
-    rows_only = [k for k in registry.DRIVER_PRIORITY if specs[k].oracle is None]
-    undeclared = [k for k in rows_only if k not in WINDOW_ROWS_ONLY_EXEMPT]
-    assert undeclared == [], (
-        f"undeclared rows-only keys in the window: {undeclared}"
-    )
+def test_first_fifty_is_exactly_the_priority_list(specs, window):
+    assert list(specs)[:50] == list(window)
 
 
-def test_rows_only_exemption_is_first_run_only(specs, last_graded):
-    """A rows-only window slot is only justified for a key with no
-    driver history — once it has its no_oracle row, the exemption
-    expires and the slot must go back to hash-gradable keys."""
-    for key in WINDOW_ROWS_ONLY_EXEMPT:
-        assert key in specs, key
-        assert specs[key].oracle is None, f"{key} is oracle-backed"
-        assert key not in last_graded, (
-            f"{key} already has a driver row (r{last_graded.get(key)}) — "
-            f"remove it from WINDOW_ROWS_ONLY_EXEMPT and the window"
+def test_priority_keys_all_registered(specs, window):
+    assert [k for k in window if k not in specs] == []
+
+
+def test_never_graded_keys_lead_the_window(specs, window, last_graded):
+    """Policy rule 1: an ORACLE-BACKED key without a single hard driver
+    row is the highest-value slot in the registry — all such keys must
+    be in the window, ahead of every re-confirmation. (Rows-only keys
+    are exempt here exactly as in the drain rule: the window is
+    reserved for hash-gradable slots.)"""
+    never = [
+        k for k, spec in specs.items()
+        if k not in last_graded and spec.oracle is not None
+    ]
+    missing = [k for k in never if k not in window]
+    assert missing == [], f"never-driver-graded keys outside the window: {missing}"
+    # and they sit at the very front: the driver grades in order, so an
+    # early abort still covers the highest-value keys
+    n = len(never)
+    assert set(window[:n]) == set(never)
+
+
+def test_plan_changed_keys_in_window(specs, window, last_graded):
+    """Policy rule 2: a grade that predates the key's current plan is
+    not evidence about the current plan — re-grade next window. An
+    entry whose change has been graded is stale and must be removed."""
+    for key, rnd in registry.PLAN_CHANGED_KEYS.items():
+        assert key in specs, f"PLAN_CHANGED_KEYS names unknown key {key}"
+        assert last_graded.get(key, 0) < rnd, (
+            f"{key} was graded in r{last_graded[key]}, at or after its "
+            f"r{rnd} plan change — drop it from PLAN_CHANGED_KEYS"
         )
+        assert key in window, (
+            f"{key} changed after its last driver grade but is not in "
+            f"the next window"
+        )
+
+
+def test_window_drains_oldest_first(specs, window, last_graded):
+    """Policy rule 3: among oracle-backed keys with a driver row, no key
+    OUTSIDE the window may be strictly staler than a non-priority key
+    INSIDE it. (Rows-only keys are exempt: the window is reserved for
+    hash-gradable slots — see test_every_window_key_is_oracle_backed.)"""
+    _assert_drains_oldest_first(window, specs, last_graded)
+
+
+def test_new_record_rotates_window_without_edit(specs, window, last_graded, tmp_path):
+    """A driver record that grades today's window moves the window on to
+    the next-stalest keys: the history directory is the only input."""
+    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
+        shutil.copy(path, tmp_path)
+    nxt = max(last_graded.values()) + 1
+    row = {"rows_match": True, "schema_match": True, "hash_match": True,
+           "spark_rows": 1, "oracle_rows": 1, "err": None}
+    (tmp_path / f"CORRECTNESS_r{nxt}.json").write_text(
+        json.dumps({k: row for k in window})
+    )
+    graded = _last_graded(str(tmp_path))
+    assert all(graded[k] == nxt for k in window)
+
+    rotated = registry.driver_window(specs, str(tmp_path))
+    assert len(rotated) == 50
+    assert set(rotated).isdisjoint(window), "a just-graded key kept its slot"
+    _assert_drains_oldest_first(rotated, specs, graded)
+
+
+def test_every_window_key_is_oracle_backed(specs, window):
+    """All driver-window keys carry a DuckDB oracle, so every graded
+    row is a hash-match — no rows-only slots."""
+    rows_only = [k for k in window if specs[k].oracle is None]
+    assert rows_only == [], f"rows-only keys in the window: {rows_only}"
 
 
 def test_beyond_window_queries_still_registered(specs):
     """Rotated-out queries stay registered (just past the driver
-    window) — spot-checks the r10 window plus a spread of older keys."""
-    ordered = list(specs)
-    for key in ("r_string_funcs", "r_date_funcs", "r_percentile_disc",
-                "r_window_funnel", "l_dedup_band_stats", "l_domain_cap",
-                "r_year_over_year", "r_cohort_ltv", "l_tokenizer_fertility",
-                "l_skipgram_cooccurrence", "r_rfm_segments",
-                "r_seasonality_index", "r_time_to_convert",
-                "l_vocab_coverage", "l_js_divergence",
-                "l_sessionize", "r_agg_collect", "r_arg_max", "r_asof_join",
-                "r_cube", "r_funnel", "r_grouping_sets", "r_pivot",
-                "r_range_join", "r_skew_salted_agg", "r_window_lag",
-                "l_fingerprint", "l_pagerank",
-                # r14-window keys rotated out this round
-                "r_benjamini_hochberg", "r_bollinger_bands", "r_survival_km",
-                "l_sq8_quantize_error", "r_srm_check", "r_peak_detection",
-                "r_rolling_corr", "r_power_analysis", "r_allen_intervals",
-                "l_temperature_mix", "r_did_estimator", "r_did_pretrend",
-                "r_geo_distance", "r_approx_distinct", "r_filter_predicates",
-                "r_join_inner", "t_project_rename"):
-        assert key in specs
-        assert ordered.index(key) >= 50, key
+    window): every registration is served by queries()."""
+    served = registry.queries()
+    assert set(served) == set(specs)
+    assert len(served) == len(specs) == len(registry._REGISTRY)

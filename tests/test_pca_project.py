@@ -33,9 +33,6 @@ def _reference(x: np.ndarray):
 
 
 def test_matches_numpy_deflated_power(spark, sf_dir):
-    from bristle_spark.queries import similarity as S
-
-    S._POWER_CACHE.clear()
     rows = (
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         .select("vec_id", "embedding")
@@ -59,7 +56,8 @@ def test_pc2_orthogonal_to_pc1_direction(spark, sf_dir):
     deflated iteration — the defining PCA property."""
     from bristle_spark.queries import similarity as S
 
-    v1 = S._top_direction(spark, sf_dir).collect()[0]["v"]
-    v2 = S._deflated_direction(spark, sf_dir).collect()[0]["v2"]
+    top = S._top_direction(spark, sf_dir)
+    v1 = top.collect()[0]["v"]
+    v2 = S._deflated_direction(spark, sf_dir, top).collect()[0]["v2"]
     dot = sum(a * b for a, b in zip(v1, v2))
     assert abs(dot) < 1e-6

@@ -52,11 +52,7 @@ def test_component_is_unit_and_sign_canonical(spark, sf_dir):
 
 def test_abtt_residual_matches_numpy(spark, sf_dir):
     """Residual norms must match the numpy ABTT computation against the
-    same converged direction, and the memo must hand both queries one
-    training run."""
-    from bristle_spark.queries import similarity as S
-
-    S._POWER_CACHE.clear()
+    same converged direction."""
     x = np.array(
         [
             (r["vec_id"], *r["embedding"])
@@ -73,14 +69,8 @@ def test_abtt_residual_matches_numpy(spark, sf_dir):
     nb = np.sqrt((mat * mat).sum(axis=1))
     na = np.sqrt(nb * nb - proj * proj)
     rows = {r["vec_id"]: r for r in all_specs()["l_abtt_residual"].fn(spark, sf_dir).collect()}
-    key = (spark.sparkContext.applicationId, sf_dir)
-    assert key in S._POWER_CACHE
-    cached = S._POWER_CACHE[key]
     for i, vid in enumerate(ids):
         r = rows[int(vid)]
         assert abs(r["top_projection"]) == pytest.approx(abs(proj[i]), abs=2e-6)
         assert r["norm_before"] == pytest.approx(nb[i], abs=2e-6)
         assert r["norm_after"] == pytest.approx(na[i], abs=2e-6)
-    # second consumer reuses the cached direction frame
-    all_specs()["l_embedding_top_component"].fn(spark, sf_dir).collect()
-    assert S._POWER_CACHE[key] is cached
