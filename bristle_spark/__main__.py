@@ -106,7 +106,6 @@ def cmd_serve(args: argparse.Namespace) -> int:
 
     spark = _spark("bristle-serve")
     server = IngestServer(spark, args.config, args.data_root)
-    service = None
     # D18: /metrics + debug endpoints when the config has a debugging
     # block (debug_server.go:32-47 analog)
     from bristle_spark.ingest.metrics import debug_server_from_config
@@ -116,22 +115,19 @@ def cmd_serve(args: argparse.Namespace) -> int:
         print(
             _json.dumps({"debug": f"{debug.host}:{debug.port}"}), file=sys.stderr
         )
-    if args.listen:
-        from bristle_spark.ingest.service import IngestSocketService
+    from bristle_spark.ingest.grpc_transport import GrpcIngestService
+    from bristle_spark.ingest.service import IngestSocketService
 
-        host, _, port = args.listen.rpartition(":")
-        service = IngestSocketService(server, host or "127.0.0.1", int(port)).start()
-        print(_json.dumps({"listening": f"{service.host}:{service.port}"}), file=sys.stderr)
-    grpc_service = None
-    if getattr(args, "grpc_listen", None):
-        from bristle_spark.ingest.grpc_transport import GrpcIngestService
-
-        host, _, port = args.grpc_listen.rpartition(":")
-        grpc_service = GrpcIngestService(server, host or "127.0.0.1", int(port)).start()
-        print(
-            _json.dumps({"grpc": f"{grpc_service.host}:{grpc_service.port}"}),
-            file=sys.stderr,
-        )
+    services = []
+    for listen, service_cls, key in (
+        (args.listen, IngestSocketService, "listening"),
+        (getattr(args, "grpc_listen", None), GrpcIngestService, "grpc"),
+    ):
+        if listen:
+            host, _, port = listen.rpartition(":")
+            service = service_cls(server, host or "127.0.0.1", int(port)).start()
+            services.append(service)
+            print(_json.dumps({key: f"{service.host}:{service.port}"}), file=sys.stderr)
     try:
         for i in range(args.pumps):
             if i > 0 and args.reload_between_pumps:
@@ -147,10 +143,8 @@ def cmd_serve(args: argparse.Namespace) -> int:
                 print(f"[serve] compacted: {merged}", file=sys.stderr)
             print(_json.dumps({"pump": i, "batches": stats}))
     finally:
-        if service is not None:
+        for service in services:
             service.stop()
-        if grpc_service is not None:
-            grpc_service.stop()
         if debug is not None:
             debug.stop()
     return 0

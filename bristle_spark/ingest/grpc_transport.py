@@ -9,11 +9,13 @@ response headers, the 5-byte (compressed-flag + u32 length) gRPC
 message framing inside DATA frames, and grpc-status trailers. The
 ``Streaming`` bidi RPC carries exactly the same
 ``StreamingClientMessage`` / ``StreamingServerMessage`` envelopes as
-the TCP front door (service.py) and drives the SAME transport-agnostic
-batch semantics (service.process_batch): register-type handshake,
-per-batch BatchResult acks, max_in_flight admission, ErrUnsupported
-terminations — so a stock gRPC client implementing bristle.proto can
-connect to this endpoint without speaking anything repo-specific.
+the TCP front door and runs the same session (service.StreamingSession:
+register-type handshake, per-batch BatchResult acks, max_in_flight
+admission, ErrUnsupported terminations), listener (service.FrontDoor)
+and client loop (service.StreamingClient); this module adds only the
+HTTP/2-gRPC framing, the trailers that end an RPC, TLS and the unary
+``WriteBatch`` RPC — so a stock gRPC client implementing bristle.proto
+can connect to this endpoint without speaking anything repo-specific.
 
 gRPC protocol details follow the public gRPC-over-HTTP/2 spec
 (PROTOCOL-HTTP2.md in grpc/grpc): path = /<package>.<Service>/<Method>,
@@ -31,7 +33,6 @@ from __future__ import annotations
 import socket
 import ssl
 import threading
-from concurrent.futures import ThreadPoolExecutor
 
 from bristle_spark.ingest import h2, metrics
 from bristle_spark.ingest import service as svc
@@ -146,16 +147,23 @@ def split_messages(buf: bytearray) -> list[bytes]:
     return out
 
 
-class _Rpc:
-    """Per-stream RPC state (the gRPC twin of service._Session).
-    ``unary=True`` marks a WriteBatch RPC: request messages buffer until
-    END_STREAM, then one response message + trailers go out together."""
+class _Rpc(svc.StreamingSession):
+    """Per-stream state of one RPC on an HTTP/2 connection. A
+    ``Streaming`` RPC is the shared service.StreamingSession with its
+    envelopes framed as gRPC messages in DATA frames; the end of the
+    session maps to trailers, which the ``in_flight`` count holds back
+    until the last ack is out. ``unary=True`` marks a WriteBatch RPC:
+    request messages buffer until END_STREAM, then one response message
+    + trailers go out together."""
 
-    def __init__(self, stream_id: int, max_in_flight: int, unary: bool = False) -> None:
+    def __init__(
+        self, service, stream_id: int, h2c, lock, flush_locked, unary: bool = False
+    ) -> None:
+        super().__init__(service, self.send_msg, "grpc-streaming")
         self.stream_id = stream_id
-        self.sem = threading.Semaphore(max_in_flight)
-        self.type_ids: dict[int, str] = {}
-        self.next_type_id = 0
+        self.h2c = h2c
+        self.lock = lock
+        self.flush_locked = flush_locked
         self.buf = bytearray()
         self.in_flight = 0
         self.recv_done = False
@@ -165,11 +173,65 @@ class _Rpc:
         self.claimed = False  # a pool thread owns the unary response
         self.headers_sent = not unary  # streaming sends headers eagerly
 
+    def submit(self, batch: dict) -> None:
+        # under `lock`: pool threads decrement under the same lock,
+        # and a lost read-modify-write here either strands the
+        # client (trailers never sent) or truncates the RPC early
+        with self.lock:
+            self.in_flight += 1
+        super().submit(batch)
 
-class GrpcIngestService:
-    """HTTP/2-gRPC front door bound to an IngestServer's binding
-    registry and payload landing zones (same backend as
-    IngestSocketService; only the transport differs)."""
+    def write_streaming_batch(self, batch: dict) -> None:
+        super().write_streaming_batch(batch)
+        with self.lock:
+            self.in_flight -= 1
+        self.maybe_finish()
+
+    # -- response plumbing
+
+    def send_msg(self, envelope: bytes) -> None:
+        with self.lock:
+            if self.finished:
+                return
+            self.h2c.send_data(self.stream_id, frame_message(envelope))
+            self.flush_locked()
+
+    def maybe_finish(self) -> None:
+        with self.lock:
+            if self.finished or not self.recv_done or self.in_flight > 0:
+                return
+        self.finish(GRPC_OK, b"")
+
+    def finish(self, status: int, message: bytes) -> None:
+        with self.lock:
+            if self.finished:
+                return
+            self.finished = True
+            metrics.RPC_HANDLED.inc(
+                "WriteBatch" if self.unary else "Streaming", str(status)
+            )
+            trailers = []
+            if not self.headers_sent:
+                # trailers-only response (gRPC spec): the one HEADERS
+                # frame carries :status + content-type + grpc-status
+                trailers += [
+                    (b":status", b"200"),
+                    (b"content-type", GRPC_CONTENT_TYPE),
+                ]
+                self.headers_sent = True
+            trailers.append((b"grpc-status", str(status).encode()))
+            if message:
+                trailers.append((b"grpc-message", bytes(message)))
+            self.h2c.send_headers(self.stream_id, trailers, end_stream=True)
+            try:
+                self.flush_locked()
+            except OSError:
+                pass
+
+
+class GrpcIngestService(svc.FrontDoor):
+    """HTTP/2-gRPC front door: the shared listener and Streaming session
+    (service.py) behind gRPC framing, plus the unary WriteBatch RPC."""
 
     def __init__(
         self,
@@ -181,61 +243,11 @@ class GrpcIngestService:
         backoff_ms: int = 0,
         tls_context: ssl.SSLContext | None = None,
     ) -> None:
-        self.server = server
-        self.host = host
-        self.max_in_flight = max_in_flight
-        self.max_batch_len = max_batch_len
-        # when > 0: an admission rejection also sends a Backoff advisory
-        # (same knob as IngestSocketService)
-        self.backoff_ms = backoff_ms
+        super().__init__(server, host, port, max_in_flight, max_batch_len, backoff_ms)
         # when set: every accepted connection handshakes TLS with ALPN
         # h2 before any HTTP/2 bytes (make_server_tls_context); None =
         # cleartext h2c with prior knowledge, the loopback default
         self.tls_context = tls_context
-        self._sock = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._sock.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._sock.bind((host, port))
-        self.port = self._sock.getsockname()[1]
-        self._stop = threading.Event()
-        self._accept_thread: threading.Thread | None = None
-        self._pool = ThreadPoolExecutor(max_workers=max(1, max_in_flight))
-
-    # -- lifecycle
-
-    def start(self) -> "GrpcIngestService":
-        self._sock.listen()
-        self._accept_thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._accept_thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        try:
-            self._sock.close()
-        except OSError:
-            pass
-        self._pool.shutdown(wait=True)
-
-    def __enter__(self) -> "GrpcIngestService":
-        return self.start()
-
-    def __exit__(self, *exc) -> None:
-        self.stop()
-
-    def _accept_loop(self) -> None:
-        import time as _time
-
-        while not self._stop.is_set():
-            try:
-                conn, _addr = self._sock.accept()
-            except OSError:
-                if self._stop.is_set():
-                    return
-                _time.sleep(0.05)
-                continue
-            threading.Thread(
-                target=self._serve_connection, args=(conn,), daemon=True
-            ).start()
 
     # -- connection handling
 
@@ -268,33 +280,23 @@ class GrpcIngestService:
             if out:
                 conn.sendall(out)
 
-        try:
-            with conn:
-                while True:
-                    chunk = conn.recv(65536)
-                    if not chunk:
-                        return
-                    with lock:
-                        try:
-                            events = h2c.receive_data(chunk)
-                        except h2.H2ConnectionError as exc:
-                            h2c.send_goaway(exc.code)
-                            flush_locked()
-                            return
+        with conn:
+            while True:
+                chunk = conn.recv(65536)
+                if not chunk:
+                    return
+                with lock:
+                    try:
+                        events = h2c.receive_data(chunk)
+                    except h2.H2ConnectionError as exc:
+                        h2c.send_goaway(exc.code)
                         flush_locked()
-                    for ev in events:
-                        self._handle_event(ev, h2c, lock, conn, rpcs, flush_locked)
-                        if h2c.closed:
-                            return
-        except (ConnectionError, OSError, ValueError):
-            return  # client gone / malformed: drop the connection
-        except RuntimeError:
-            # pool.submit after stop() shut the executor — a teardown
-            # race when a connection is mid-event; anything else is a
-            # real bug and must surface
-            if self._stop.is_set():
-                return
-            raise
+                        return
+                    flush_locked()
+                for ev in events:
+                    self._handle_event(ev, h2c, lock, conn, rpcs, flush_locked)
+                    if h2c.closed:
+                        return
 
     # -- event handling (reader thread)
 
@@ -333,10 +335,10 @@ class GrpcIngestService:
                 # unary WriteBatch (bristle.proto:119, ingest_service.go:109-120):
                 # response headers are deferred until the response is ready
                 metrics.RPC_STARTED.inc("WriteBatch")
-                rpc = _Rpc(sid, self.max_in_flight, unary=True)
+                rpc = _Rpc(self, sid, h2c, lock, flush_locked, unary=True)
                 rpcs[sid] = rpc
                 if ev.end_stream:
-                    self._finish_unary(rpc, h2c, lock, flush_locked)
+                    self._pool.submit(self._unary_write_batch, rpc)
                 return
             if headers.get(b":path") != STREAMING_PATH:
                 metrics.RPC_STARTED.inc("unknown")
@@ -356,7 +358,7 @@ class GrpcIngestService:
                     flush_locked()
                 return
             metrics.RPC_STARTED.inc("Streaming")
-            rpc = _Rpc(sid, self.max_in_flight)
+            rpc = _Rpc(self, sid, h2c, lock, flush_locked)
             rpcs[sid] = rpc
             with lock:
                 h2c.send_headers(
@@ -366,7 +368,7 @@ class GrpcIngestService:
                 flush_locked()
             if ev.end_stream:
                 rpc.recv_done = True
-                self._maybe_finish(rpc, h2c, lock, flush_locked)
+                rpc.maybe_finish()
         elif isinstance(ev, h2.DataReceived):
             rpc = rpcs.get(ev.stream_id)
             if rpc is None or rpc.finished:
@@ -375,110 +377,41 @@ class GrpcIngestService:
             try:
                 msgs = split_messages(rpc.buf)
             except MessageTooLarge as exc:
-                self._finish(
-                    rpc, h2c, lock, flush_locked,
-                    GRPC_RESOURCE_EXHAUSTED, str(exc).encode(),
-                )
+                rpc.finish(GRPC_RESOURCE_EXHAUSTED, str(exc).encode())
                 return
             except ValueError:
-                self._finish(
-                    rpc, h2c, lock, flush_locked,
-                    GRPC_INTERNAL, b"unsupported compressed message",
-                )
+                rpc.finish(GRPC_INTERNAL, b"unsupported compressed message")
                 return
             if rpc.unary:
                 rpc.unary_msgs += msgs
                 if ev.end_stream:
-                    self._finish_unary(rpc, h2c, lock, flush_locked)
+                    self._pool.submit(self._unary_write_batch, rpc)
                 return
             for msg in msgs:
-                if rpc.finished:
+                # the Streaming session rules (service.StreamingSession)
+                try:
+                    end = rpc.receive(msg)
+                except (ValueError, IndexError):
+                    rpc.finish(GRPC_INTERNAL, b"malformed envelope")
                     return
-                self._handle_envelope(rpc, msg, h2c, lock, flush_locked)
+                if end is not None:
+                    # ErrUnsupported terminates the RPC
+                    rpc.finish(GRPC_UNKNOWN, end.encode())
+                    return
             if ev.end_stream:
                 rpc.recv_done = True
-                self._maybe_finish(rpc, h2c, lock, flush_locked)
+                rpc.maybe_finish()
         elif isinstance(ev, h2.StreamReset):
             rpc = rpcs.pop(ev.stream_id, None)
             if rpc is not None:
                 rpc.finished = True
 
-    # -- the Streaming session semantics (ingest_service.go:184-234)
-
-    def _handle_envelope(self, rpc, msg, h2c, lock, flush_locked) -> None:
-        try:
-            kind, body = svc._decode_client_message(msg)
-        except (ValueError, IndexError):
-            self._finish(
-                rpc, h2c, lock, flush_locked, GRPC_INTERNAL, b"malformed envelope"
-            )
-            return
-        if kind == "register_message_type":
-            if body["descriptor"]:
-                # ErrUnsupported terminates the RPC (ingest_service.go:199-202)
-                self._finish(
-                    rpc, h2c, lock, flush_locked,
-                    GRPC_UNKNOWN, b"descriptor registration unsupported",
-                )
-                return
-            rpc.next_type_id += 1
-            rpc.type_ids[rpc.next_type_id] = body["type"]
-            self._send_msg(
-                rpc, svc._encode_identify(body["type"], rpc.next_type_id),
-                h2c, lock, flush_locked,
-            )
-        elif kind == "write_batch":
-            if not rpc.sem.acquire(blocking=False):
-                metrics.BATCHES.inc(
-                    "grpc-streaming",
-                    svc.RESULT_NAMES[svc.TOO_MANY_IN_FLIGHT_BATCHES],
-                )
-                # advisory FIRST so a synchronous client has noted it by
-                # the time the rejection ack unblocks its send loop
-                if self.backoff_ms > 0:
-                    import time as _t
-
-                    name = body["type_name"] or rpc.type_ids.get(body["type_id"])
-                    self._send_msg(
-                        rpc,
-                        svc.encode_backoff(
-                            int(_t.time() * 1000) + self.backoff_ms,
-                            [name] if name else [],
-                        ),
-                        h2c, lock, flush_locked,
-                    )
-                self._send_msg(
-                    rpc,
-                    svc._encode_batch_result(
-                        body["id"], svc.TOO_MANY_IN_FLIGHT_BATCHES
-                    ),
-                    h2c, lock, flush_locked,
-                )
-                return
-            # under `lock`: pool threads decrement under the same lock,
-            # and a lost read-modify-write here either strands the
-            # client (trailers never sent) or truncates the RPC early
-            with lock:
-                rpc.in_flight += 1
-            self._pool.submit(
-                self._write_batch, rpc, body, h2c, lock, flush_locked
-            )
-        elif kind == "update_default":
-            # ErrUnsupported (ingest_service.go:228-230, S13)
-            self._finish(
-                rpc, h2c, lock, flush_locked,
-                GRPC_UNKNOWN, b"update_default unsupported",
-            )
-
     # -- the unary WriteBatch semantics (ingest_service.go:109-120)
 
-    def _finish_unary(self, rpc, h2c, lock, flush_locked) -> None:
-        """Request fully received: process off the reader thread, then
-        send response headers + message + trailers together."""
-        self._pool.submit(self._unary_write_batch, rpc, h2c, lock, flush_locked)
-
-    def _unary_write_batch(self, rpc, h2c, lock, flush_locked) -> None:
-        with lock:
+    def _unary_write_batch(self, rpc: _Rpc) -> None:
+        """Request fully received, on a pool thread: process, then send
+        response headers + message + trailers together."""
+        with rpc.lock:
             # claim BEFORE decoding/landing: even if the h2 layer ever
             # re-delivered an END_STREAM (it can't since the half-closed
             # check landed), a duplicate submission must not run
@@ -489,24 +422,15 @@ class GrpcIngestService:
         if rpc.buf:
             # a truncated/garbage tail after the last complete message
             # must not be silently accepted as a successful request
-            self._finish(
-                rpc, h2c, lock, flush_locked,
-                GRPC_INTERNAL, b"truncated gRPC message in request body",
-            )
+            rpc.finish(GRPC_INTERNAL, b"truncated gRPC message in request body")
             return
         if len(rpc.unary_msgs) != 1:
-            self._finish(
-                rpc, h2c, lock, flush_locked,
-                GRPC_INTERNAL,
-                b"expected exactly one WriteBatchRequest message",
-            )
+            rpc.finish(GRPC_INTERNAL, b"expected exactly one WriteBatchRequest message")
             return
         try:
             _key, payloads = svc.decode_write_batch_request(rpc.unary_msgs[0])
         except (ValueError, IndexError):
-            self._finish(
-                rpc, h2c, lock, flush_locked, GRPC_INTERNAL, b"malformed request"
-            )
+            rpc.finish(GRPC_INTERNAL, b"malformed request")
             return
         acknowledged = 0
         for type_name, bodies in payloads:
@@ -530,100 +454,38 @@ class GrpcIngestService:
                 # first non-OK payload aborts the request
                 # (ingest_service.go:112-114); earlier payloads stay
                 # landed, exactly like the reference's partial write
-                self._finish(
-                    rpc, h2c, lock, flush_locked,
+                rpc.finish(
                     GRPC_UNKNOWN,
                     f"WriteBatch error code {svc.RESULT_NAMES[result]}".encode(),
                 )
                 return
             acknowledged += 1
         response = svc.encode_write_batch_response(acknowledged, 0)
-        with lock:
+        with rpc.lock:
             if rpc.finished:
                 return  # reset mid-flight: no response went out, not handled
             rpc.finished = True
             metrics.RPC_HANDLED.inc("WriteBatch", str(GRPC_OK))
-            h2c.send_headers(
+            rpc.h2c.send_headers(
                 rpc.stream_id,
                 [(b":status", b"200"), (b"content-type", GRPC_CONTENT_TYPE)],
             )
-            h2c.send_data(rpc.stream_id, frame_message(response))
-            h2c.send_headers(
+            rpc.h2c.send_data(rpc.stream_id, frame_message(response))
+            rpc.h2c.send_headers(
                 rpc.stream_id, [(b"grpc-status", b"0")], end_stream=True
             )
             try:
-                flush_locked()
-            except OSError:
-                pass
-
-    def _write_batch(self, rpc, batch, h2c, lock, flush_locked) -> None:
-        try:
-            result = svc.process_batch(
-                self.server, rpc.type_ids, batch, self.max_batch_len
-            )
-        except Exception:
-            result = svc.FULL  # server-side failure: retryable, not DECODE_ERR
-        finally:
-            rpc.sem.release()
-        metrics.BATCHES.inc("grpc-streaming", svc.RESULT_NAMES[result])
-        try:
-            self._send_msg(
-                rpc, svc._encode_batch_result(batch["id"], result),
-                h2c, lock, flush_locked,
-            )
-        except OSError:
-            pass  # client hung up before the ack
-        with lock:
-            rpc.in_flight -= 1
-        self._maybe_finish(rpc, h2c, lock, flush_locked)
-
-    # -- response plumbing
-
-    def _send_msg(self, rpc, envelope, h2c, lock, flush_locked) -> None:
-        with lock:
-            if rpc.finished:
-                return
-            h2c.send_data(rpc.stream_id, frame_message(envelope))
-            flush_locked()
-
-    def _maybe_finish(self, rpc, h2c, lock, flush_locked) -> None:
-        with lock:
-            if rpc.finished or not rpc.recv_done or rpc.in_flight > 0:
-                return
-        self._finish(rpc, h2c, lock, flush_locked, GRPC_OK, b"")
-
-    def _finish(self, rpc, h2c, lock, flush_locked, status, message) -> None:
-        with lock:
-            if rpc.finished:
-                return
-            rpc.finished = True
-            metrics.RPC_HANDLED.inc(
-                "WriteBatch" if rpc.unary else "Streaming", str(status)
-            )
-            trailers = []
-            if not rpc.headers_sent:
-                # trailers-only response (gRPC spec): the one HEADERS
-                # frame carries :status + content-type + grpc-status
-                trailers += [
-                    (b":status", b"200"),
-                    (b"content-type", GRPC_CONTENT_TYPE),
-                ]
-                rpc.headers_sent = True
-            trailers.append((b"grpc-status", str(status).encode()))
-            if message:
-                trailers.append((b"grpc-message", bytes(message)))
-            h2c.send_headers(rpc.stream_id, trailers, end_stream=True)
-            try:
-                flush_locked()
+                rpc.flush_locked()
             except OSError:
                 pass
 
 
-class GrpcIngestClient:
+class GrpcIngestClient(svc.StreamingClient):
     """Synchronous gRPC Streaming client over the same stack — the
     loopback stand-in for a stock bristle client (client/client.go),
-    API-identical to IngestSocketClient. ``huffman=True`` exercises the
-    server's Huffman decode path with realistically-compressed headers."""
+    the shared service.StreamingClient loop over gRPC framing.
+    ``huffman=True`` exercises the server's Huffman decode path with
+    realistically-compressed headers."""
 
     def __init__(
         self,
@@ -634,15 +496,12 @@ class GrpcIngestClient:
         tls_context: ssl.SSLContext | None = None,
         server_hostname: str | None = None,
     ) -> None:
+        super().__init__()
         self.conn = _tls_connect(host, port, timeout, tls_context, server_hostname)
         self._h2 = h2.H2Connection(client_side=True)
         self._h2._encoder.huffman = huffman
         self._h2.initiate()
-        self._next_batch = 0
-        self._results: dict[int, int] = {}
         self._envelopes: list[tuple[str, dict]] = []
-        self._type_names: dict[int, str] = {}
-        self.backoff = svc.ClientBackoff()
         self._buf = bytearray()
         self.trailers: dict[bytes, bytes] | None = None
         self._headers_seen = False
@@ -672,13 +531,7 @@ class GrpcIngestClient:
         finally:
             self.conn.close()
 
-    def __enter__(self) -> "GrpcIngestClient":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
-
-    # -- plumbing
+    # -- framing
 
     def _flush(self) -> None:
         out = self._h2.data_to_send()
@@ -726,43 +579,6 @@ class GrpcIngestClient:
         while not self._envelopes:
             self._pump()
         return self._envelopes.pop(0)
-
-    # -- the client API (mirrors IngestSocketClient)
-
-    def register_type(self, type_name: str) -> int:
-        self._send_envelope(svc.encode_register_type(type_name))
-        while True:
-            kind, body = self._recv()
-            if kind == "identify_message_type" and body["type"] == type_name:
-                self._type_names[body["id"]] = body["type"]
-                return body["id"]
-            if kind == "write_batch_result":
-                self._results[body["id"]] = body["result"]
-            elif kind == "backoff":
-                self.backoff.note(body)
-
-    def write_batch(
-        self,
-        bodies: list[bytes],
-        type_name: str | None = None,
-        type_id: int | None = None,
-    ) -> int:
-        self.backoff.wait(type_name or self._type_names.get(type_id))
-        self._next_batch += 1
-        batch_id = self._next_batch
-        self._send_envelope(
-            svc.encode_write_batch(batch_id, bodies, type_name, type_id)
-        )
-        while batch_id not in self._results:
-            kind, body = self._recv()
-            if kind == "write_batch_result":
-                self._results[body["id"]] = body["result"]
-            elif kind == "backoff":
-                self.backoff.note(body)
-        return self._results.pop(batch_id)
-
-    def update_default(self, type_name: str, default: bytes = b"") -> None:
-        self._send_envelope(svc.encode_update_default(type_name, default))
 
 
 def grpc_write_batch_unary(

@@ -31,14 +31,10 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
-from bristle_spark.ingest.bindings import BindingRegistry, MessageBinding, SinkColumn
+from bristle_spark.ingest.bindings import BindingRegistry, MessageBinding
 from bristle_spark.ingest.config import sink_columns_from_config, registry_from_config
 from bristle_spark.ingest.descriptors import DescriptorPool, autobind
 from bristle_spark.streaming.ingest_stream import run_stream_ingest
-
-
-def _sink_columns(table_cfg: dict) -> list[SinkColumn]:
-    return sink_columns_from_config(table_cfg)
 
 
 @dataclass
@@ -150,7 +146,7 @@ class IngestServer:
                 if not os.path.isabs(path):
                     path = os.path.join(cfg_dir, path)
                 pool.add_path(path)
-            tables = {t["name"]: _sink_columns(t) for t in cfg.get("tables", [])}
+            tables = {t["name"]: sink_columns_from_config(t) for t in cfg.get("tables", [])}
             autobind(pool, tables, registry)  # first-table-wins
         return registry
 

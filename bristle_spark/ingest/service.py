@@ -1,17 +1,24 @@
-"""Network ingest front door: the reference's BristleIngestService
-bidirectional streaming protocol served over a plain TCP socket.
+"""Network ingest front doors: the reference's BristleIngestService
+``Streaming`` protocol, one session over two framings.
 
 The reference registers a gRPC service (ingest_service.go:63-65) whose
 ``Streaming`` RPC (ingest_service.go:184-234) carries
 ``StreamingClientMessage`` / ``StreamingServerMessage`` protos:
 register-message-type handshakes, varint-framed write batches, and
 per-batch ``BatchResult`` acks (bristle.proto, service + enum). This
-container has no grpcio, so the same protobuf envelope stream runs over
-a raw TCP connection with standard varint length prefixes between
-envelopes — every proto byte on the wire is identical to what the gRPC
-stream would carry; only the HTTP/2 transport is replaced. The envelope
-codec is the repo's own spec-driven wire module (wire.py), the same one
-the decode path uses.
+module holds everything both front doors share: the envelope codec (on
+the repo's own spec-driven wire module, wire.py, the same one the
+decode path uses), the session rules (``StreamingSession``), the
+listener (``FrontDoor``), the batch path (``process_batch``,
+``land_payload``) and the client loop (``StreamingClient``). Each
+transport adds only its framing of the same envelope bytes:
+
+- TCP socket (``IngestSocketService`` / ``IngestSocketClient``, here):
+  standard varint length prefixes between envelopes on a raw
+  connection.
+- HTTP/2-gRPC (``GrpcIngestService`` / ``GrpcIngestClient``,
+  grpc_transport.py): the 5-byte gRPC message prefix inside HTTP/2 DATA
+  frames, with the session's end mapped to grpc-status trailers.
 
 Session semantics mirror ingest_service.go:
 
@@ -30,7 +37,7 @@ Session semantics mirror ingest_service.go:
 
 Where the reference acks after writing rows into an in-memory buffer
 that a ticker flushes to ClickHouse (best-effort: a failed flush drops
-the batch), this front door acks after landing the validated batch as a
+the batch), both front doors ack after landing the validated batch as a
 durable payload parquet file in the bound table's landing zone; the
 checkpointed Structured Streaming writer (server.py / ingest_stream.py)
 then drains it exactly-once into the sink. TRANSCODE_ERR cannot occur
@@ -43,7 +50,7 @@ and lands files, nothing else — so horizontal scale is N processes
 behind a load balancer appending to one landing zone (an object-store
 prefix in production), with Spark draining the zone continuously. The
 heavy work (decode at scale, transcode, sink) stays in the distributed
-streaming job, not in the socket handler.
+streaming job, not in the connection handler.
 """
 
 from __future__ import annotations
@@ -52,10 +59,12 @@ import io
 import os
 import socket
 import threading
+import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
+from typing import Self
 
-from bristle_spark.ingest import wire
+from bristle_spark.ingest import metrics, wire
 
 # BatchResult (bristle.proto enum)
 OK = 0
@@ -306,31 +315,94 @@ def frame_envelope(payload: bytes) -> bytes:
     return wire.encode_varint(len(payload)) + payload
 
 
-# ------------------------------------------------------------- the server
+# ------------------------------------------------------------ the session
 
 
-class _Session:
-    """Per-connection state (StreamingClientSession analog,
-    ingest_service.go:236-251)."""
+class StreamingSession:
+    """The rules of one ``Streaming`` session (StreamingClientSession,
+    ingest_service.go:184-251), written once for both front doors.
+    ``send`` writes one StreamingServerMessage envelope in the
+    transport's framing and ``transport`` labels metrics.BATCHES. The
+    reader thread feeds ``receive``; admitted batches are processed and
+    acked on the front door's pool."""
 
-    def __init__(self, conn: socket.socket, max_in_flight: int) -> None:
-        self.conn = conn
-        self.send_lock = threading.Lock()
-        self.sem = threading.Semaphore(max_in_flight)
+    def __init__(self, door: "FrontDoor", send, transport: str) -> None:
+        self.door = door
+        self.send = send
+        self.transport = transport
+        self.sem = threading.Semaphore(door.max_in_flight)
         self.type_ids: dict[int, str] = {}
         self.next_type_id = 0
 
-    def send(self, envelope: bytes) -> None:
-        with self.send_lock:
-            self.conn.sendall(frame_envelope(envelope))
+    def receive(self, envelope: bytes) -> str | None:
+        """Apply one client envelope. Returns None while the session
+        goes on, or why it must end (ErrUnsupported). A malformed
+        envelope raises ValueError or IndexError."""
+        kind, body = _decode_client_message(envelope)
+        if kind == "register_message_type":
+            if body["descriptor"]:
+                return "descriptor registration unsupported"  # ingest_service.go:199-202
+            self.next_type_id += 1
+            self.type_ids[self.next_type_id] = body["type"]
+            self.send(_encode_identify(body["type"], self.next_type_id))
+        elif kind == "write_batch":
+            if self.sem.acquire(blocking=False):
+                self.submit(body)
+            else:
+                self._reject(body)
+        elif kind == "update_default":
+            return "update_default unsupported"  # ingest_service.go:228-230 (S13)
+        return None
 
-    def send_result(self, batch_id: int, result: int) -> None:
-        self.send(_encode_batch_result(batch_id, result))
+    def _reject(self, batch: dict) -> None:
+        # advisory FIRST so a synchronous client has noted it by the
+        # time the rejection ack unblocks its send loop
+        if self.door.backoff_ms > 0:
+            name = batch["type_name"] or self.type_ids.get(batch["type_id"])
+            self.send(
+                encode_backoff(
+                    int(time.time() * 1000) + self.door.backoff_ms,
+                    [name] if name else [],
+                )
+            )
+        self._ack(batch["id"], TOO_MANY_IN_FLIGHT_BATCHES)
+
+    def submit(self, batch: dict) -> None:
+        self.door._pool.submit(self.write_streaming_batch, batch)
+
+    def write_streaming_batch(self, batch: dict) -> None:
+        """The write path (writeStreamingBatch analog), on a pool thread."""
+        try:
+            result = process_batch(
+                self.door.server, self.type_ids, batch, self.door.max_batch_len
+            )
+        except Exception:
+            # decode failures are returned explicitly by process_batch;
+            # anything raising here is SERVER-side (landing I/O, disk
+            # full) — ack FULL, the protocol's write-failure result, so
+            # clients know the data was valid and a retry can succeed
+            # (DECODE_ERR would mislabel it as permanently malformed)
+            result = FULL
+        finally:
+            self.sem.release()
+        self._ack(batch["id"], result)
+
+    def _ack(self, batch_id: int, result: int) -> None:
+        metrics.BATCHES.inc(self.transport, RESULT_NAMES[result])
+        try:
+            self.send(_encode_batch_result(batch_id, result))
+        except OSError:
+            pass  # client hung up before the ack
 
 
-class IngestSocketService:
-    """TCP front door bound to an IngestServer's binding registry and
-    payload landing zones."""
+# ------------------------------------------------------------ the listener
+
+
+class FrontDoor:
+    """The listener both front doors share, bound to an IngestServer's
+    binding registry and payload landing zones: bind, the accept loop,
+    the batch pool and the lifecycle. A subclass serves one accepted
+    connection in ``_serve_connection``."""
 
     def __init__(
         self,
@@ -359,7 +431,7 @@ class IngestSocketService:
 
     # -- lifecycle
 
-    def start(self) -> "IngestSocketService":
+    def start(self) -> Self:
         self._sock.listen()
         self._accept_thread = threading.Thread(target=self._accept_loop, daemon=True)
         self._accept_thread.start()
@@ -373,7 +445,7 @@ class IngestSocketService:
             pass
         self._pool.shutdown(wait=True)
 
-    def __enter__(self) -> "IngestSocketService":
+    def __enter__(self) -> Self:
         return self.start()
 
     def __exit__(self, *exc) -> None:
@@ -382,8 +454,6 @@ class IngestSocketService:
     # -- connection handling
 
     def _accept_loop(self) -> None:
-        import time as _time
-
         while not self._stop.is_set():
             try:
                 conn, _addr = self._sock.accept()
@@ -393,60 +463,18 @@ class IngestSocketService:
                 # transient accept failure (e.g. EMFILE): back off and
                 # keep serving — returning here would leave the port
                 # bound but dead, hanging every future client
-                _time.sleep(0.05)
+                time.sleep(0.05)
                 continue
-            threading.Thread(
-                target=self._serve_connection, args=(conn,), daemon=True
-            ).start()
+            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
 
-    def _serve_connection(self, conn: socket.socket) -> None:
-        session = _Session(conn, self.max_in_flight)
+    def _serve(self, conn: socket.socket) -> None:
         try:
-            with conn, conn.makefile("rb") as rf:
-                while True:
-                    envelope = read_envelope(rf)
-                    if envelope is None:
-                        return  # io.EOF -> clean session end
-                    kind, body = _decode_client_message(envelope)
-                    if kind == "register_message_type":
-                        if body["descriptor"]:
-                            return  # ErrUnsupported (ingest_service.go:199-202)
-                        session.next_type_id += 1
-                        session.type_ids[session.next_type_id] = body["type"]
-                        session.send(_encode_identify(body["type"], session.next_type_id))
-                    elif kind == "write_batch":
-                        if not session.sem.acquire(blocking=False):
-                            # advisory FIRST so a synchronous client has
-                            # noted it by the time the rejection ack
-                            # unblocks its send loop
-                            if self.backoff_ms > 0:
-                                import time as _t
-
-                                name = body["type_name"] or session.type_ids.get(
-                                    body["type_id"]
-                                )
-                                session.send(
-                                    encode_backoff(
-                                        int(_t.time() * 1000) + self.backoff_ms,
-                                        [name] if name else [],
-                                    )
-                                )
-                            session.send_result(body["id"], TOO_MANY_IN_FLIGHT_BATCHES)
-                            from bristle_spark.ingest import metrics
-
-                            metrics.BATCHES.inc(
-                                "socket",
-                                RESULT_NAMES[TOO_MANY_IN_FLIGHT_BATCHES],
-                            )
-                            continue
-                        self._pool.submit(self._write_batch, session, body)
-                    elif kind == "update_default":
-                        return  # ErrUnsupported (ingest_service.go:228-230)
-        except (ConnectionError, ValueError, OSError, IndexError):
+            self._serve_connection(conn)
+        except (OSError, ValueError, IndexError):
             # IndexError: a truncated varint inside a client envelope
             # (decode_varint reads past the buffer) — same malformed-
             # stream class as ValueError
-            return  # malformed stream / client gone: drop the session
+            return  # malformed stream / client gone: drop the connection
         except RuntimeError:
             # pool.submit after stop() shut the executor — a teardown
             # race when a session is mid-envelope; anything else is a
@@ -455,32 +483,26 @@ class IngestSocketService:
                 return
             raise
 
-    # -- the write path (writeStreamingBatch analog)
+    def _serve_connection(self, conn: socket.socket) -> None:
+        raise NotImplementedError
 
-    def _write_batch(self, session: _Session, batch: dict) -> None:
-        try:
-            result = self._process_batch(session, batch)
-        except Exception:
-            # decode failures are returned explicitly by _process_batch;
-            # anything raising here is SERVER-side (landing I/O, disk
-            # full) — ack FULL, the protocol's write-failure result, so
-            # clients know the data was valid and a retry can succeed
-            # (DECODE_ERR would mislabel it as permanently malformed)
-            result = FULL
-        finally:
-            session.sem.release()
-        from bristle_spark.ingest import metrics
 
-        metrics.BATCHES.inc("socket", RESULT_NAMES[result])
-        try:
-            session.send_result(batch["id"], result)
-        except OSError:
-            pass  # client hung up before the ack
+class IngestSocketService(FrontDoor):
+    """TCP front door: Streaming envelopes with varint length prefixes."""
 
-    def _process_batch(self, session: _Session, batch: dict) -> int:
-        return process_batch(
-            self.server, session.type_ids, batch, self.max_batch_len
-        )
+    def _serve_connection(self, conn: socket.socket) -> None:
+        send_lock = threading.Lock()
+
+        def send(envelope: bytes) -> None:
+            with send_lock:
+                conn.sendall(frame_envelope(envelope))
+
+        session = StreamingSession(self, send, "socket")
+        with conn, conn.makefile("rb") as rf:
+            # None is io.EOF: a clean session end
+            while (envelope := read_envelope(rf)) is not None:
+                if session.receive(envelope) is not None:
+                    return  # ErrUnsupported: close the connection
 
 
 def process_batch(
@@ -544,8 +566,6 @@ def land_payload(server, binding, type_name: str, bodies: list[bytes]) -> None:
     os.replace(tmp, os.path.join(payload_dir, name))
     # counted AFTER the atomic rename: these are documented as DURABLY
     # landed — incrementing before a failed write would over-count
-    from bristle_spark.ingest import metrics
-
     metrics.ROWS.inc(binding.sink_table, by=len(bodies))
     metrics.PAYLOAD_BYTES.inc(binding.sink_table, by=sum(len(b) for b in bodies))
 
@@ -575,8 +595,6 @@ class ClientBackoff:
     def delay_s(self, type_name: str | None, now_ms: int | None = None) -> float:
         """Seconds a send of ``type_name`` must defer; 0.0 if clear."""
         if now_ms is None:
-            import time
-
             now_ms = int(time.time() * 1000)
         if now_ms >= self.until_ms:
             return 0.0
@@ -586,60 +604,50 @@ class ClientBackoff:
 
     def wait(self, type_name: str | None) -> float:
         """Block until the advisory clears; returns seconds slept."""
-        import time
-
         delay = self.delay_s(type_name)
         if delay > 0.0:
             time.sleep(delay)
         return delay
 
 
-class IngestSocketClient:
-    """Minimal synchronous client (the reference client library's role,
-    client/client.go): register types for short ids, send write batches,
-    collect acks, and defer sends on server Backoff advisories. Results
-    may arrive out of order; responses are correlated by batch id."""
+class StreamingClient:
+    """The client loop both transports share (the reference client
+    library's role, client/client.go): register types for short ids,
+    send write batches, collect acks, and defer sends on server Backoff
+    advisories. Results may arrive out of order; responses are
+    correlated by batch id. A subclass frames the envelopes:
+    ``_send_envelope`` writes one, ``_recv`` returns the next decoded
+    StreamingServerMessage."""
 
-    def __init__(self, host: str, port: int, timeout: float = 30.0) -> None:
-        self.conn = socket.create_connection((host, port), timeout=timeout)
-        self._rf = self.conn.makefile("rb")
+    def __init__(self) -> None:
         self._next_batch = 0
         self._results: dict[int, int] = {}
         self._type_names: dict[int, str] = {}
         self.backoff = ClientBackoff()
 
-    def close(self) -> None:
-        try:
-            self._rf.close()
-        finally:
-            self.conn.close()
-
-    def __enter__(self) -> "IngestSocketClient":
+    def __enter__(self) -> Self:
         return self
 
     def __exit__(self, *exc) -> None:
         self.close()
 
-    def _send(self, envelope: bytes) -> None:
-        self.conn.sendall(frame_envelope(envelope))
-
-    def _recv(self) -> tuple[str, dict]:
-        envelope = read_envelope(self._rf)
-        if envelope is None:
-            raise ConnectionError("server closed the session")
-        return decode_server_message(envelope)
+    def _note(self) -> tuple[str, dict]:
+        """Receive one server message, recording acks (possibly late,
+        for an earlier batch) and Backoff advisories."""
+        kind, body = self._recv()
+        if kind == "write_batch_result":
+            self._results[body["id"]] = body["result"]
+        elif kind == "backoff":
+            self.backoff.note(body)
+        return kind, body
 
     def register_type(self, type_name: str) -> int:
-        self._send(encode_register_type(type_name))
+        self._send_envelope(encode_register_type(type_name))
         while True:
-            kind, body = self._recv()
+            kind, body = self._note()
             if kind == "identify_message_type" and body["type"] == type_name:
                 self._type_names[body["id"]] = body["type"]
                 return body["id"]
-            if kind == "write_batch_result":  # late ack for an async batch
-                self._results[body["id"]] = body["result"]
-            elif kind == "backoff":
-                self.backoff.note(body)
 
     def write_batch(
         self,
@@ -653,14 +661,34 @@ class IngestSocketClient:
         self.backoff.wait(type_name or self._type_names.get(type_id))
         self._next_batch += 1
         batch_id = self._next_batch
-        self._send(encode_write_batch(batch_id, bodies, type_name, type_id))
+        self._send_envelope(encode_write_batch(batch_id, bodies, type_name, type_id))
         while batch_id not in self._results:
-            kind, body = self._recv()
-            if kind == "write_batch_result":
-                self._results[body["id"]] = body["result"]
-            elif kind == "backoff":
-                self.backoff.note(body)
+            self._note()
         return self._results.pop(batch_id)
 
     def update_default(self, type_name: str, default: bytes = b"") -> None:
-        self._send(encode_update_default(type_name, default))
+        self._send_envelope(encode_update_default(type_name, default))
+
+
+class IngestSocketClient(StreamingClient):
+    """Minimal synchronous client over the TCP front door."""
+
+    def __init__(self, host: str, port: int, timeout: float = 30.0) -> None:
+        super().__init__()
+        self.conn = socket.create_connection((host, port), timeout=timeout)
+        self._rf = self.conn.makefile("rb")
+
+    def close(self) -> None:
+        try:
+            self._rf.close()
+        finally:
+            self.conn.close()
+
+    def _send_envelope(self, envelope: bytes) -> None:
+        self.conn.sendall(frame_envelope(envelope))
+
+    def _recv(self) -> tuple[str, dict]:
+        envelope = read_envelope(self._rf)
+        if envelope is None:
+            raise ConnectionError("server closed the session")
+        return decode_server_message(envelope)

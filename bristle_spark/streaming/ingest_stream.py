@@ -18,7 +18,6 @@ exactly-once where the reference silently drops failed flushes
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bristle_spark.ingest import pipeline
@@ -61,12 +60,7 @@ def run_stream_ingest(
     def sink(df: DataFrame, batch_id: int) -> None:
         nonlocal n_batches
         n_batches += 1
-        out = df
-        if ts_column is not None:
-            out = out.withColumn("_day", F.to_date(F.col(ts_column)))
-            out.write.mode("append").partitionBy("_day").parquet(sink_dir)
-        else:
-            out.write.mode("append").parquet(sink_dir)
+        pipeline.write_sink(df, sink_dir, ts_column=ts_column)
 
     q = (
         transcoded.writeStream.foreachBatch(sink)

@@ -114,10 +114,13 @@ def assert_frames_match(spark_pdf, oracle_pdf, name: str):
 # `slow`); these modules / param families form the heavyweight
 # end-to-end tier that still gates every closing round via `-m ""`.
 # Module-level: real Structured Streaming jobs (multi-second
-# availableNow micro-batch floors per test), transport/server
+# availableNow micro-batch floors per test), server reload and CLI
 # end-to-ends, event-log balance probes, and the iterative-trainer
 # numpy pins. Param-level: the s_* streaming keys inside otherwise-fast
 # parametrized suites (each runs a full micro-batch stream).
+# The ingest front doors (socket and gRPC services, TLS, Backoff,
+# metrics, wire framing, h2/HPACK, forwarder) are in the fast tier: they
+# are what the system is for, and they need no streaming job.
 SLOW_MODULES = {
     "test_streaming.py",
     "test_stream_restart_replay.py",
@@ -127,21 +130,12 @@ SLOW_MODULES = {
     "test_canonicalizer_safety.py",
     "test_scale_shapes.py",
     "test_cli.py",
-    "test_grpc_transport.py",
-    "test_grpc_tls.py",
-    "test_socket_service.py",
     "test_server_reload.py",
     "test_maintenance.py",
     "test_pca_project.py",
     "test_ingest_pipeline.py",
-    "test_ingest_wire.py",
     "test_jdbc_sink.py",
     "test_clickhouse_sink.py",
-    "test_forwarder.py",
-    "test_h2.py",
-    "test_h2_priority.py",
-    "test_metrics.py",
-    "test_backoff.py",
     # registry-wide SWEEPS (one plan/robustness probe per key, ~300
     # params each): valuable, but the per-key pins in test_plans.py and
     # the full batch oracle parity already gate the fast tier

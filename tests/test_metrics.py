@@ -148,6 +148,17 @@ def test_socket_front_door_advances_counters(spark, tmp_path):
         len(b) for b in bodies
     )
 
+    # admission rejection: counted once under the socket label, no OK
+    full0 = M.BATCHES.value("socket", "TOO_MANY_IN_FLIGHT_BATCHES")
+    with IngestSocketService(server, max_in_flight=0) as service:
+        with IngestSocketClient("127.0.0.1", service.port) as client:
+            assert (
+                client.write_batch(bodies, type_name="ExampleMessage")
+                == svc.TOO_MANY_IN_FLIGHT_BATCHES
+            )
+    assert M.BATCHES.value("socket", "TOO_MANY_IN_FLIGHT_BATCHES") == full0 + 1
+    assert M.BATCHES.value("socket", "OK") == ok0 + 1
+
 
 def test_grpc_front_door_advances_rpc_counters(spark, tmp_path):
     from bristle_spark.ingest.fixtures import (
@@ -195,4 +206,17 @@ def test_grpc_front_door_advances_rpc_counters(spark, tmp_path):
     assert M.RPC_HANDLED.value("WriteBatch", "0") == handled0 + 1
     assert M.RPC_STARTED.value("Streaming") == s_started0 + 1
     assert M.BATCHES.value("grpc-unary", "OK") == unary0 + 1
+    assert M.BATCHES.value("grpc-streaming", "OK") == stream0 + 1
+
+    # admission rejection: counted once under the grpc-streaming label
+    full0 = M.BATCHES.value("grpc-streaming", "TOO_MANY_IN_FLIGHT_BATCHES")
+    with GrpcIngestService(server, max_in_flight=0) as service:
+        with GrpcIngestClient("127.0.0.1", service.port) as client:
+            assert (
+                client.write_batch(bodies, type_name="ExampleMessage")
+                == svc.TOO_MANY_IN_FLIGHT_BATCHES
+            )
+    assert (
+        M.BATCHES.value("grpc-streaming", "TOO_MANY_IN_FLIGHT_BATCHES") == full0 + 1
+    )
     assert M.BATCHES.value("grpc-streaming", "OK") == stream0 + 1

@@ -278,7 +278,7 @@ def test_unsupported_messages_terminate_session(spark, three_table_server):
     with IngestSocketService(three_table_server) as service:
         # register with inline descriptor: ErrUnsupported, session closed
         client = IngestSocketClient("127.0.0.1", service.port)
-        client._send(svc.encode_register_type("ExampleMessage", descriptor=b"\x01"))
+        client._send_envelope(svc.encode_register_type("ExampleMessage", descriptor=b"\x01"))
         with pytest.raises(ConnectionError):
             client._recv()
         client.close()
