@@ -52,7 +52,6 @@ def cmd_ingest_stream(args: argparse.Namespace) -> int:
         args.sink,
         args.checkpoint,
         ts_column=args.ts_column,
-        max_files_per_trigger=args.max_files_per_trigger,
     )
     print(f"processed {n} micro-batches", file=sys.stderr)
     return 0
@@ -208,7 +207,6 @@ def main(argv: list[str] | None = None) -> int:
     sp = sub.add_parser("ingest-stream", help="checkpointed streaming ingest")
     add_ingest_common(sp)
     sp.add_argument("--checkpoint", required=True)
-    sp.add_argument("--max-files-per-trigger", type=int, default=1)
     sp.set_defaults(fn=cmd_ingest_stream)
 
     sp = sub.add_parser("forward-json", help="JSON-lines -> sink (D16)")

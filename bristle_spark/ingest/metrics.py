@@ -26,6 +26,11 @@ about batch outcomes):
   BatchResult name across socket / grpc-streaming / grpc-unary
 - ``bristle_ingest_rows_total{table}`` / ``bristle_ingest_payload_bytes_total{table}``
   — durably landed rows and payload bytes per sink table
+- ``bristle_ingest_drain_microbatches_total{table}`` /
+  ``bristle_ingest_drain_rows_total{table}`` — micro-batches the
+  streaming drain ran and payload rows it read, per sink table (the
+  rows from the query's progress events, so neither costs a Spark job;
+  a run that outlasts the retained events adds no rows and warns)
 - ``bristle_rpc_started_total{method}`` / ``bristle_rpc_handled_total{method,code}``
   — the grpc-prometheus interceptor pair
 
@@ -171,6 +176,18 @@ ROWS = REGISTRY.counter(
 PAYLOAD_BYTES = REGISTRY.counter(
     "bristle_ingest_payload_bytes_total",
     "Payload body bytes durably landed, per sink table.",
+    ("table",),
+)
+DRAIN_MICROBATCHES = REGISTRY.counter(
+    "bristle_ingest_drain_microbatches_total",
+    "Micro-batches run by the streaming drain, per sink table.",
+    ("table",),
+)
+DRAIN_ROWS = REGISTRY.counter(
+    "bristle_ingest_drain_rows_total",
+    "Landed payload rows read by the streaming drain, per sink table. A drain "
+    "run of more micro-batches than Spark keeps progress events for "
+    "(spark.sql.streaming.numRecentProgressUpdates, 100) adds none.",
     ("table",),
 )
 RPC_STARTED = REGISTRY.counter(

@@ -51,7 +51,8 @@ class TableWriter:
 
     def pump(self, spark: SparkSession) -> int:
         """One drain cycle (flush-ticker analog): process every payload
-        file not yet covered by the checkpoint, exactly-once."""
+        file not yet covered by the checkpoint, exactly-once, in
+        micro-batches of up to ``MAX_BYTES_PER_TRIGGER`` landed bytes."""
         if not os.path.isdir(self.payload_dir):
             return 0
         return run_stream_ingest(

@@ -132,13 +132,13 @@ def _probe_scores_arrow(
     def kern(it):
         import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        t = pq.read_table(path, columns=["vec_id", "embedding"])
-        t = t.filter(pc.less(t["vec_id"], n_probes))
+        # bounds go to the reader, so row groups outside them are skipped
+        filters = [("vec_id", "<", n_probes)]
         if lo:
-            t = t.filter(pc.greater_equal(t["vec_id"], lo))
+            filters.append(("vec_id", ">=", lo))
+        t = pq.read_table(path, columns=["vec_id", "embedding"], filters=filters)
         pids = t["vec_id"].to_numpy()
         order = np.argsort(pids, kind="stable")
         pids = pids[order]

@@ -51,6 +51,27 @@ def test_forward_json_end_to_end(tmp_path, spark):
     assert back.columns == ["symbol", "price", "trade_time", "volume", "trade_conditions"]
 
 
+def test_ingest_stream_drains_backlog_in_one_microbatch(tmp_path, spark):
+    """ingest-stream with the default byte bound takes a 3-file backlog
+    in one micro-batch."""
+    from bristle_spark.ingest.fixtures import finnhub_binding
+    from tests.test_stream_ingest import _write_payload_chunks
+
+    payloads, sink = str(tmp_path / "payloads"), str(tmp_path / "sink")
+    total = _write_payload_chunks(spark, payloads, finnhub_binding(), n_chunks=3)
+    r = _run(
+        "ingest-stream",
+        "--config", CONFIG,
+        "--type", "bristle.examples.finnhub.FinnhubTrade",
+        "--input", payloads,
+        "--sink", sink,
+        "--checkpoint", str(tmp_path / "ckpt"),
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert "processed 1 micro-batches" in r.stderr
+    assert spark.read.parquet(sink).count() == total
+
+
 def test_cli_unknown_query():
     r = _run("query", "--name", "nope_not_real", timeout=200)
     assert r.returncode == 2

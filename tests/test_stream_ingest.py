@@ -4,9 +4,10 @@ semantics (the durability the reference lacks — SURVEY.md §8.2)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import types as T
 
-from bristle_spark.ingest import wire
+from bristle_spark.ingest import metrics, pipeline, wire
 from bristle_spark.ingest.fixtures import finnhub_binding
 from bristle_spark.streaming.ingest_stream import run_stream_ingest
 
@@ -15,9 +16,12 @@ PAYLOAD_SCHEMA = T.StructType(
 )
 
 
-def _write_payload_chunks(spark, payload_dir, binding, n_chunks=3, per_chunk=20):
+def _write_payload_chunks(spark, payload_dir, binding, n_chunks=3, per_chunk=20, first=0):
+    """Land ``n_chunks`` payload files; chunk ``c`` holds symbols
+    ``SYM{c}_*``, so chunks written with distinct ``first`` never share
+    a row."""
     rows_total = 0
-    for c in range(n_chunks):
+    for c in range(first, first + n_chunks):
         bodies = [
             wire.encode_message(
                 [
@@ -35,6 +39,16 @@ def _write_payload_chunks(spark, payload_dir, binding, n_chunks=3, per_chunk=20)
     return rows_total
 
 
+def _drain_counters(binding) -> tuple[float, float]:
+    table = binding.sink_table
+    return metrics.DRAIN_MICROBATCHES.value(table), metrics.DRAIN_ROWS.value(table)
+
+
+def _assert_counted(binding, before, microbatches, rows):
+    after = _drain_counters(binding)
+    assert (after[0] - before[0], after[1] - before[1]) == (microbatches, rows)
+
+
 def test_stream_ingest_exactly_once(spark, tmp_path):
     binding = finnhub_binding()
     payload_dir = str(tmp_path / "payloads")
@@ -42,22 +56,116 @@ def test_stream_ingest_exactly_once(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     total = _write_payload_chunks(spark, payload_dir, binding)
+    before = _drain_counters(binding)
     n1 = run_stream_ingest(
         spark, payload_dir, binding, sink_dir, ckpt, ts_column="trade_time"
     )
-    assert n1 >= 1
+    # the default byte bound takes the whole 3-file backlog in one trigger
+    assert n1 == 1
+    _assert_counted(binding, before, 1, total)
     out = spark.read.parquet(sink_dir)
     assert out.count() == total
     assert "_day" in out.columns  # day-partitioned sink layout
 
     # restart with the same checkpoint: nothing new -> no duplicates
-    run_stream_ingest(spark, payload_dir, binding, sink_dir, ckpt, ts_column="trade_time")
+    before = _drain_counters(binding)
+    n2 = run_stream_ingest(
+        spark, payload_dir, binding, sink_dir, ckpt, ts_column="trade_time"
+    )
+    assert n2 == 0
+    _assert_counted(binding, before, 0, 0)
     assert spark.read.parquet(sink_dir).count() == total
 
     # new data arrives -> only the delta lands
     more = _write_payload_chunks(spark, payload_dir, binding, n_chunks=1)
-    run_stream_ingest(spark, payload_dir, binding, sink_dir, ckpt, ts_column="trade_time")
+    n3 = run_stream_ingest(
+        spark, payload_dir, binding, sink_dir, ckpt, ts_column="trade_time"
+    )
+    assert n3 == 1
     assert spark.read.parquet(sink_dir).count() == total + more
+
+
+def test_byte_bound_below_one_file_still_drains(spark, tmp_path):
+    """A bound smaller than any landed file cannot stall the drain: the
+    file source admits one file per trigger."""
+    binding = finnhub_binding()
+    payload_dir = str(tmp_path / "payloads")
+    sink_dir = str(tmp_path / "sink")
+    n_files = 3
+    total = _write_payload_chunks(spark, payload_dir, binding, n_chunks=n_files)
+    before = _drain_counters(binding)
+    n = run_stream_ingest(
+        spark, payload_dir, binding, sink_dir, str(tmp_path / "ckpt"),
+        max_bytes_per_trigger=1,
+    )
+    assert n == n_files
+    _assert_counted(binding, before, n_files, total)
+    assert spark.read.parquet(sink_dir).count() == total
+
+
+def test_drain_rows_not_added_short_when_progress_is_dropped(spark, tmp_path):
+    """When a drain runs more micro-batches than Spark keeps progress
+    events for, the row counter is left alone (with a warning) instead
+    of counting only the retained events; the micro-batch counter stays
+    exact."""
+    binding = finnhub_binding()
+    payload_dir = str(tmp_path / "payloads")
+    sink_dir = str(tmp_path / "sink")
+    n_files = 3
+    total = _write_payload_chunks(spark, payload_dir, binding, n_chunks=n_files)
+    key = "spark.sql.streaming.numRecentProgressUpdates"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, n_files - 1)
+    try:
+        before = _drain_counters(binding)
+        with pytest.warns(RuntimeWarning, match="drain_rows_total not updated"):
+            n = run_stream_ingest(
+                spark, payload_dir, binding, sink_dir, str(tmp_path / "ckpt"),
+                max_bytes_per_trigger=1,
+            )
+    finally:
+        spark.conf.set(key, saved)
+    assert n == n_files
+    _assert_counted(binding, before, n_files, 0)
+    assert spark.read.parquet(sink_dir).count() == total
+
+
+def test_file_bounded_checkpoint_resumes_under_byte_bound(spark, tmp_path):
+    """Upgrade path: a checkpoint written by the one-file-per-trigger
+    drain resumes under the byte bound with no duplicates and no loss."""
+    binding = finnhub_binding()
+    payload_dir = str(tmp_path / "payloads")
+    sink_dir = str(tmp_path / "sink")
+    ckpt = str(tmp_path / "ckpt")
+    landed = _write_payload_chunks(spark, payload_dir, binding, n_chunks=2)
+
+    stream = (
+        spark.readStream.schema(PAYLOAD_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(payload_dir)
+    )
+    old = pipeline.transcode(pipeline.decode(stream, binding), binding)
+    q = (
+        old.writeStream.foreachBatch(
+            lambda df, _id: pipeline.write_sink(df, sink_dir, ts_column="trade_time")
+        )
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    # one micro-batch per file
+    assert [p.numInputRows for p in q.recentProgress] == [20, 20]
+
+    # two more files land; the byte-bounded drain takes them in one trigger
+    more = _write_payload_chunks(spark, payload_dir, binding, n_chunks=2, first=2)
+    before = _drain_counters(binding)
+    n = run_stream_ingest(spark, payload_dir, binding, sink_dir, ckpt, ts_column="trade_time")
+    assert n == 1
+    _assert_counted(binding, before, 1, more)
+    out = spark.read.parquet(sink_dir)
+    assert out.count() == landed + more
+    assert out.select("symbol").distinct().count() == landed + more
 
 
 def test_wire_journal_survives_server_restart(spark, tmp_path):
