@@ -96,9 +96,10 @@ def _tls_connect(
     tls_context: ssl.SSLContext | None,
     server_hostname: str | None,
 ) -> socket.socket:
-    """Create the client connection, TLS-wrapped with ALPN ``h2``
-    enforced when a context is given."""
-    conn = socket.create_connection((host, port), timeout=timeout)
+    """Create the client connection on the shared ``service.connect``
+    (``TCP_NODELAY`` set), TLS-wrapped with ALPN ``h2`` enforced when a
+    context is given."""
+    conn = svc.connect(host, port, timeout)
     if tls_context is None:
         return conn
     try:

@@ -178,3 +178,21 @@ def test_cleartext_path_still_works(spark, tls_server):
             [("ExampleMessage", [encode_example_row(name="c", value=1)])],
         )
         assert (ack, dropped) == (1, 0)
+
+
+def test_tls_connection_sets_nodelay_and_acks_fast(spark, tls_server):
+    """Over TLS the option is set on the TCP socket before the wrap, so
+    the TLS client keeps it, and the median ack of 20 closed-loop
+    100-row batches stays under half of Linux's 40 ms delayed-ACK floor."""
+    from tests.test_grpc_transport import median_ack_ms
+    from tests.test_socket_service import nodelay
+
+    server, ctx, cert = tls_server
+    with GrpcIngestService(server, tls_context=ctx) as service:
+        with GrpcIngestClient(
+            "127.0.0.1", service.port,
+            tls_context=gt.make_client_tls_context(cafile=cert),
+            server_hostname="localhost",
+        ) as client:
+            assert nodelay(client.conn)
+            assert median_ack_ms(client) < 20.0

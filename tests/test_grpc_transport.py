@@ -12,7 +12,9 @@ from __future__ import annotations
 import json
 import os
 import socket
+import statistics
 import threading
+import time
 
 import pytest
 
@@ -767,3 +769,51 @@ def test_oversized_message_prefix_is_resource_exhausted(spark, three_table_serve
             assert b"larger than max" in message
         finally:
             conn.close()
+
+
+def median_ack_ms(client, acks: int = 20, rows: int = 100) -> float:
+    """Median wall time of ``acks`` closed-loop ``rows``-row write_batch
+    round trips on one Streaming RPC."""
+    tid = client.register_type("ExampleMessage")
+    bodies = [
+        encode_example_row(name=f"t_{i}", type_code=1, ts=(1_700_000_000, 0), value=i)
+        for i in range(rows)
+    ]
+    times = []
+    for _ in range(acks):
+        t0 = time.perf_counter()
+        assert client.write_batch(bodies, type_id=tid) == svc.OK
+        times.append((time.perf_counter() - t0) * 1e3)
+    return statistics.median(times)
+
+
+def test_grpc_connections_set_nodelay(spark, three_table_server, monkeypatch):
+    """Every gRPC client connection turns Nagle off, as grpc-go does: the
+    Streaming client's and the unary call's (the accepted side is pinned
+    by test_socket_service.py::test_socket_connections_set_nodelay)."""
+    from tests.test_socket_service import nodelay
+
+    opened = []
+    real_connect = svc.connect
+
+    def recording_connect(*args):
+        conn = real_connect(*args)
+        opened.append(nodelay(conn))
+        return conn
+
+    with GrpcIngestService(three_table_server) as service:
+        with GrpcIngestClient("127.0.0.1", service.port) as client:
+            assert nodelay(client.conn)
+        monkeypatch.setattr(svc, "connect", recording_connect)
+        assert gt.grpc_write_batch_unary("127.0.0.1", service.port, []) == (0, 0)
+    assert len(opened) == 1 and opened[0]
+
+
+def test_grpc_ack_does_not_wait_on_delayed_ack(spark, three_table_server):
+    """A small ack follows the WINDOW_UPDATE the reader thread flushes
+    for the batch's DATA; with Nagle on, that second small write waits for
+    the peer's delayed ACK (>= 40 ms on Linux) on every batch. The median
+    ack must stay under half that floor."""
+    with GrpcIngestService(three_table_server) as service:
+        with GrpcIngestClient("127.0.0.1", service.port) as client:
+            assert median_ack_ms(client) < 20.0

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import json
 import os
+import queue
+import socket
 
 import pytest
 
@@ -330,3 +332,30 @@ def test_oversized_envelope_prefix_drops_session(spark, three_table_server):
             assert conn.recv(1) == b""
         finally:
             conn.close()
+
+
+def nodelay(conn: socket.socket) -> int:
+    return conn.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY)
+
+
+class NodelayRecordingDoor(svc.FrontDoor):
+    """A front door that serves nothing: it records ``TCP_NODELAY`` of
+    each accepted connection as ``_serve_connection`` receives it."""
+
+    def __init__(self) -> None:
+        super().__init__(None)
+        self.seen: queue.Queue[int] = queue.Queue()
+
+    def _serve_connection(self, conn: socket.socket) -> None:
+        self.seen.put(nodelay(conn))
+        conn.close()
+
+
+def test_socket_connections_set_nodelay():
+    """Both ends of a socket front-door connection turn Nagle off, as Go's
+    net default does: the client connect and the accepted connection,
+    before the transport serves it."""
+    with NodelayRecordingDoor() as door:
+        with IngestSocketClient("127.0.0.1", door.port) as client:
+            assert nodelay(client.conn)
+            assert door.seen.get(timeout=10)
