@@ -17,6 +17,14 @@ HTTP/2-gRPC framing, the trailers that end an RPC, TLS and the unary
 ``WriteBatch`` RPC — so a stock gRPC client implementing bristle.proto
 can connect to this endpoint without speaking anything repo-specific.
 
+As on the reference's stock gRPC server, every response leaves by one
+path, ``_Rpc``'s: headers once, then messages, then a status in
+``finish`` (trailers-only when no headers went out), whether the RPC is
+``Streaming``, ``WriteBatch`` or an unknown method. Both clients are one
+``_Call`` (connect, h2 set-up, request headers, event pump):
+``GrpcIngestClient`` on the Streaming path, ``grpc_write_batch_unary``
+on the WriteBatch path.
+
 gRPC protocol details follow the public gRPC-over-HTTP/2 spec
 (PROTOCOL-HTTP2.md in grpc/grpc): path = /<package>.<Service>/<Method>,
 content-type application/grpc, trailers-only responses for unknown
@@ -148,31 +156,37 @@ def split_messages(buf: bytearray) -> list[bytes]:
     return out
 
 
-class _Rpc(svc.StreamingSession):
-    """Per-stream state of one RPC on an HTTP/2 connection. A
-    ``Streaming`` RPC is the shared service.StreamingSession with its
-    envelopes framed as gRPC messages in DATA frames; the end of the
-    session maps to trailers, which the ``in_flight`` count holds back
-    until the last ack is out. ``unary=True`` marks a WriteBatch RPC:
-    request messages buffer until END_STREAM, then one response message
-    + trailers go out together."""
+# the HEADERS every response opens with, and a trailers-only one starts with
+_RESPONSE_HEADERS = [(b":status", b"200"), (b"content-type", GRPC_CONTENT_TYPE)]
+_METHODS = {STREAMING_PATH: "Streaming", WRITE_BATCH_PATH: "WriteBatch"}
 
-    def __init__(
-        self, service, stream_id: int, h2c, lock, flush_locked, unary: bool = False
-    ) -> None:
+
+class _Rpc(svc.StreamingSession):
+    """Per-stream state of one RPC on an HTTP/2 connection, and the one
+    path every response leaves by, whatever the ``method``
+    (``"Streaming"``, ``"WriteBatch"`` or ``"unknown"``): response
+    headers once (``_send_headers``), then gRPC messages in DATA frames
+    (``send_msg``), then the status in trailers (``finish``), which is a
+    trailers-only response when no headers went out. A ``Streaming`` RPC
+    is the shared service.StreamingSession on that path; the end of the
+    session maps to trailers, which the ``in_flight`` count holds back
+    until the last ack is out. A ``WriteBatch`` RPC keeps its request
+    messages until END_STREAM, then answers with one message."""
+
+    def __init__(self, service, stream_id: int, h2c, lock, flush_locked, method: str) -> None:
         super().__init__(service, self.send_msg, "grpc-streaming")
         self.stream_id = stream_id
         self.h2c = h2c
         self.lock = lock
         self.flush_locked = flush_locked
+        self.method = method
         self.buf = bytearray()
+        self.received: list[bytes] = []  # a WriteBatch request's messages
         self.in_flight = 0
         self.recv_done = False
+        self.headers_sent = False
         self.finished = False  # trailers sent
-        self.unary = unary
-        self.unary_msgs: list[bytes] = []
-        self.claimed = False  # a pool thread owns the unary response
-        self.headers_sent = not unary  # streaming sends headers eagerly
+        metrics.RPC_STARTED.inc(method)
 
     def submit(self, batch: dict) -> None:
         # under `lock`: pool threads decrement under the same lock,
@@ -188,12 +202,85 @@ class _Rpc(svc.StreamingSession):
             self.in_flight -= 1
         self.maybe_finish()
 
-    # -- response plumbing
+    def end_request(self) -> None:
+        """The client half-closed the stream (reader thread): a
+        WriteBatch request is complete, and a Streaming RPC ends once its
+        last ack is out."""
+        if self.recv_done:
+            return  # a repeated END_STREAM must not run the request twice
+        self.recv_done = True
+        if self.method == "WriteBatch":
+            self.door._pool.submit(self.write_batch)
+        else:
+            self.maybe_finish()
+
+    # -- the unary WriteBatch semantics (ingest_service.go:109-120)
+
+    def write_batch(self) -> None:
+        """The whole request, on a pool thread: every payload through the
+        shared batch path, then one response message, or the first
+        non-OK result as the status."""
+        if self.finished:
+            return  # reset before the pool got to it: nothing handled
+        if self.buf:
+            # a truncated/garbage tail after the last complete message
+            # must not be silently accepted as a successful request
+            self.finish(GRPC_INTERNAL, b"truncated gRPC message in request body")
+            return
+        if len(self.received) != 1:
+            self.finish(GRPC_INTERNAL, b"expected exactly one WriteBatchRequest message")
+            return
+        try:
+            _key, payloads = svc.decode_write_batch_request(self.received[0])
+        except (ValueError, IndexError):
+            self.finish(GRPC_INTERNAL, b"malformed request")
+            return
+        acknowledged = 0
+        for type_name, bodies in payloads:
+            # same validate-and-land path as the streaming RPC, so the
+            # ack taxonomy is shared (writePayload, ingest_service.go:79-107)
+            result = self.process(
+                {
+                    "id": 0,
+                    "type_name": type_name,
+                    "type_id": None,
+                    "length": len(bodies),
+                    "data": svc.wire.join_frames(bodies),
+                }
+            )
+            metrics.BATCHES.inc("grpc-unary", svc.RESULT_NAMES[result])
+            if result != svc.OK:
+                # first non-OK payload aborts the request
+                # (ingest_service.go:112-114); earlier payloads stay
+                # landed, exactly like the reference's partial write
+                self.finish(
+                    GRPC_UNKNOWN,
+                    f"WriteBatch error code {svc.RESULT_NAMES[result]}".encode(),
+                )
+                return
+            acknowledged += 1
+        self.send_msg(svc.encode_write_batch_response(acknowledged, 0))
+        self.finish(GRPC_OK, b"")
+
+    # -- the response path
+
+    def _send_headers(self) -> None:
+        # under `lock`: the response headers go out once per RPC
+        if not self.headers_sent:
+            self.headers_sent = True
+            self.h2c.send_headers(self.stream_id, _RESPONSE_HEADERS)
+
+    def open(self) -> None:
+        """Streaming sends its response headers as the RPC opens."""
+        with self.lock:
+            self._send_headers()
+            self.flush_locked()
 
     def send_msg(self, envelope: bytes) -> None:
         with self.lock:
             if self.finished:
                 return
+            self._send_headers()
             self.h2c.send_data(self.stream_id, frame_message(envelope))
             self.flush_locked()
 
@@ -208,21 +295,15 @@ class _Rpc(svc.StreamingSession):
             if self.finished:
                 return
             self.finished = True
-            metrics.RPC_HANDLED.inc(
-                "WriteBatch" if self.unary else "Streaming", str(status)
-            )
-            trailers = []
+            metrics.RPC_HANDLED.inc(self.method, str(status))
+            trailers = [(b"grpc-status", str(status).encode())]
+            if message:
+                trailers.append((b"grpc-message", bytes(message)))
             if not self.headers_sent:
                 # trailers-only response (gRPC spec): the one HEADERS
                 # frame carries :status + content-type + grpc-status
-                trailers += [
-                    (b":status", b"200"),
-                    (b"content-type", GRPC_CONTENT_TYPE),
-                ]
                 self.headers_sent = True
-            trailers.append((b"grpc-status", str(status).encode()))
-            if message:
-                trailers.append((b"grpc-message", bytes(message)))
+                trailers = _RESPONSE_HEADERS + trailers
             self.h2c.send_headers(self.stream_id, trailers, end_stream=True)
             try:
                 self.flush_locked()
@@ -332,44 +413,16 @@ class GrpcIngestService(svc.FrontDoor):
                     h2c.reset_stream(sid, h2.PROTOCOL_ERROR)
                     flush_locked()
                 return
-            if headers.get(b":path") == WRITE_BATCH_PATH:
-                # unary WriteBatch (bristle.proto:119, ingest_service.go:109-120):
-                # response headers are deferred until the response is ready
-                metrics.RPC_STARTED.inc("WriteBatch")
-                rpc = _Rpc(self, sid, h2c, lock, flush_locked, unary=True)
-                rpcs[sid] = rpc
-                if ev.end_stream:
-                    self._pool.submit(self._unary_write_batch, rpc)
+            method = _METHODS.get(headers.get(b":path"), "unknown")
+            rpc = _Rpc(self, sid, h2c, lock, flush_locked, method)
+            if method == "unknown":
+                rpc.finish(GRPC_UNIMPLEMENTED, b"unknown method")
                 return
-            if headers.get(b":path") != STREAMING_PATH:
-                metrics.RPC_STARTED.inc("unknown")
-                metrics.RPC_HANDLED.inc("unknown", str(GRPC_UNIMPLEMENTED))
-                with lock:
-                    # trailers-only response (gRPC spec: UNIMPLEMENTED)
-                    h2c.send_headers(
-                        sid,
-                        [
-                            (b":status", b"200"),
-                            (b"content-type", GRPC_CONTENT_TYPE),
-                            (b"grpc-status", str(GRPC_UNIMPLEMENTED).encode()),
-                            (b"grpc-message", b"unknown method"),
-                        ],
-                        end_stream=True,
-                    )
-                    flush_locked()
-                return
-            metrics.RPC_STARTED.inc("Streaming")
-            rpc = _Rpc(self, sid, h2c, lock, flush_locked)
             rpcs[sid] = rpc
-            with lock:
-                h2c.send_headers(
-                    sid,
-                    [(b":status", b"200"), (b"content-type", GRPC_CONTENT_TYPE)],
-                )
-                flush_locked()
+            if method == "Streaming":
+                rpc.open()
             if ev.end_stream:
-                rpc.recv_done = True
-                rpc.maybe_finish()
+                rpc.end_request()
         elif isinstance(ev, h2.DataReceived):
             rpc = rpcs.get(ev.stream_id)
             if rpc is None or rpc.finished:
@@ -383,110 +436,127 @@ class GrpcIngestService(svc.FrontDoor):
             except ValueError:
                 rpc.finish(GRPC_INTERNAL, b"unsupported compressed message")
                 return
-            if rpc.unary:
-                rpc.unary_msgs += msgs
-                if ev.end_stream:
-                    self._pool.submit(self._unary_write_batch, rpc)
-                return
-            for msg in msgs:
-                # the Streaming session rules (service.StreamingSession)
-                try:
-                    end = rpc.receive(msg)
-                except (ValueError, IndexError):
-                    rpc.finish(GRPC_INTERNAL, b"malformed envelope")
-                    return
-                if end is not None:
-                    # ErrUnsupported terminates the RPC
-                    rpc.finish(GRPC_UNKNOWN, end.encode())
-                    return
+            if rpc.method == "WriteBatch":
+                rpc.received += msgs
+            else:
+                for msg in msgs:
+                    # the Streaming session rules (service.StreamingSession)
+                    try:
+                        end = rpc.receive(msg)
+                    except (ValueError, IndexError):
+                        rpc.finish(GRPC_INTERNAL, b"malformed envelope")
+                        return
+                    if end is not None:
+                        # ErrUnsupported terminates the RPC
+                        rpc.finish(GRPC_UNKNOWN, end.encode())
+                        return
             if ev.end_stream:
-                rpc.recv_done = True
-                rpc.maybe_finish()
+                rpc.end_request()
         elif isinstance(ev, h2.StreamReset):
             rpc = rpcs.pop(ev.stream_id, None)
             if rpc is not None:
                 rpc.finished = True
 
-    # -- the unary WriteBatch semantics (ingest_service.go:109-120)
 
-    def _unary_write_batch(self, rpc: _Rpc) -> None:
-        """Request fully received, on a pool thread: process, then send
-        response headers + message + trailers together."""
-        with rpc.lock:
-            # claim BEFORE decoding/landing: even if the h2 layer ever
-            # re-delivered an END_STREAM (it can't since the half-closed
-            # check landed), a duplicate submission must not run
-            # process_batch a second time
-            if rpc.finished or rpc.claimed:
-                return
-            rpc.claimed = True
-        if rpc.buf:
-            # a truncated/garbage tail after the last complete message
-            # must not be silently accepted as a successful request
-            rpc.finish(GRPC_INTERNAL, b"truncated gRPC message in request body")
-            return
-        if len(rpc.unary_msgs) != 1:
-            rpc.finish(GRPC_INTERNAL, b"expected exactly one WriteBatchRequest message")
-            return
+class _Call:
+    """One client gRPC call on its own HTTP/2 connection, the call both
+    clients make: the connect (``_tls_connect``, so ``TCP_NODELAY`` and
+    optional TLS), the h2 set-up and the request headers for ``path``,
+    then the event pump. ``_pump`` reads one chunk: DATA becomes gRPC
+    messages in ``_messages``, the trailers become ``trailers`` (a non-OK
+    grpc-status raises ConnectionError with the server's grpc-message),
+    and RST_STREAM or GOAWAY raise ConnectionError."""
+
+    def __init__(
+        self,
+        host: str,
+        port: int,
+        path: bytes,
+        timeout: float = 30.0,
+        tls_context: ssl.SSLContext | None = None,
+        server_hostname: str | None = None,
+        huffman: bool = True,
+    ) -> None:
+        self.conn = _tls_connect(host, port, timeout, tls_context, server_hostname)
+        self._authority = f"{host}:{port}".encode()
         try:
-            _key, payloads = svc.decode_write_batch_request(rpc.unary_msgs[0])
-        except (ValueError, IndexError):
-            rpc.finish(GRPC_INTERNAL, b"malformed request")
-            return
-        acknowledged = 0
-        for type_name, bodies in payloads:
-            # same validate-and-land path as the streaming RPC, so the
-            # ack taxonomy is shared (writePayload, ingest_service.go:79-107)
-            batch = {
-                "id": 0,
-                "type_name": type_name,
-                "type_id": None,
-                "length": len(bodies),
-                "data": svc.wire.join_frames(bodies),
-            }
-            try:
-                result = svc.process_batch(
-                    self.server, rpc.type_ids, batch, self.max_batch_len
+            self._h2 = h2.H2Connection(client_side=True)
+            self._h2._encoder.huffman = huffman
+            self._h2.initiate()
+            self._open(path)
+        except OSError:
+            self.conn.close()
+            raise
+
+    def _request_headers(self, path: bytes) -> list[tuple[bytes, bytes]]:
+        return [
+            (b":method", b"POST"),
+            (b":scheme", b"http"),
+            (b":path", path),
+            (b":authority", self._authority),
+            (b"content-type", GRPC_CONTENT_TYPE),
+            (b"te", b"trailers"),
+        ]
+
+    def _open(self, path: bytes) -> None:
+        """Start the call on the connection's next stream."""
+        self.stream_id = self._h2.next_stream_id()
+        self._buf = bytearray()
+        self._messages: list[bytes] = []
+        self.trailers: dict[bytes, bytes] | None = None
+        self._h2.send_headers(self.stream_id, self._request_headers(path))
+        self._flush()
+
+    def _flush(self) -> None:
+        out = self._h2.data_to_send()
+        if out:
+            self.conn.sendall(out)
+
+    def _send(self, msg: bytes, end_stream: bool = False) -> None:
+        self._h2.send_data(self.stream_id, frame_message(msg), end_stream=end_stream)
+        self._flush()
+
+    def _receive(self) -> list:
+        """One chunk off the connection, as h2 events."""
+        chunk = self.conn.recv(65536)
+        if not chunk:
+            raise ConnectionError("server closed the connection")
+        events = self._h2.receive_data(chunk)
+        self._flush()  # auto-replies: SETTINGS ack, WINDOW_UPDATE
+        return events
+
+    def _pump(self) -> None:
+        for ev in self._receive():
+            if isinstance(ev, h2.DataReceived) and ev.stream_id == self.stream_id:
+                self._buf += ev.data
+                self._messages += split_messages(self._buf)
+            elif isinstance(ev, h2.HeadersReceived) and ev.stream_id == self.stream_id:
+                hdrs = dict(ev.headers)
+                if b"grpc-status" not in hdrs:
+                    continue  # the response headers
+                self.trailers = hdrs
+                status = int(hdrs[b"grpc-status"])
+                if status != GRPC_OK:
+                    raise ConnectionError(
+                        f"rpc terminated: grpc-status {status} "
+                        f"{hdrs.get(b'grpc-message', b'').decode()}"
+                    )
+            elif isinstance(ev, h2.StreamReset) and ev.stream_id == self.stream_id:
+                # e.g. REFUSED_STREAM past the concurrency cap: fail
+                # promptly, not via socket timeout
+                raise ConnectionError(
+                    f"rpc stream reset by server (code {ev.error_code})"
                 )
-            except Exception:
-                result = svc.FULL
-            metrics.BATCHES.inc("grpc-unary", svc.RESULT_NAMES[result])
-            if result != svc.OK:
-                # first non-OK payload aborts the request
-                # (ingest_service.go:112-114); earlier payloads stay
-                # landed, exactly like the reference's partial write
-                rpc.finish(
-                    GRPC_UNKNOWN,
-                    f"WriteBatch error code {svc.RESULT_NAMES[result]}".encode(),
-                )
-                return
-            acknowledged += 1
-        response = svc.encode_write_batch_response(acknowledged, 0)
-        with rpc.lock:
-            if rpc.finished:
-                return  # reset mid-flight: no response went out, not handled
-            rpc.finished = True
-            metrics.RPC_HANDLED.inc("WriteBatch", str(GRPC_OK))
-            rpc.h2c.send_headers(
-                rpc.stream_id,
-                [(b":status", b"200"), (b"content-type", GRPC_CONTENT_TYPE)],
-            )
-            rpc.h2c.send_data(rpc.stream_id, frame_message(response))
-            rpc.h2c.send_headers(
-                rpc.stream_id, [(b"grpc-status", b"0")], end_stream=True
-            )
-            try:
-                rpc.flush_locked()
-            except OSError:
-                pass
+            elif isinstance(ev, h2.ConnectionTerminated):
+                raise ConnectionError("server sent GOAWAY")
 
 
-class GrpcIngestClient(svc.StreamingClient):
+class GrpcIngestClient(_Call, svc.StreamingClient):
     """Synchronous gRPC Streaming client over the same stack — the
-    loopback stand-in for a stock bristle client (client/client.go),
-    the shared service.StreamingClient loop over gRPC framing.
-    ``huffman=True`` exercises the server's Huffman decode path with
-    realistically-compressed headers."""
+    loopback stand-in for a stock bristle client (client/client.go):
+    the shared service.StreamingClient loop over one ``_Call`` on
+    ``STREAMING_PATH``. ``huffman=True`` exercises the server's Huffman
+    decode path with realistically-compressed headers."""
 
     def __init__(
         self,
@@ -497,30 +567,10 @@ class GrpcIngestClient(svc.StreamingClient):
         tls_context: ssl.SSLContext | None = None,
         server_hostname: str | None = None,
     ) -> None:
-        super().__init__()
-        self.conn = _tls_connect(host, port, timeout, tls_context, server_hostname)
-        self._h2 = h2.H2Connection(client_side=True)
-        self._h2._encoder.huffman = huffman
-        self._h2.initiate()
-        self._envelopes: list[tuple[str, dict]] = []
-        self._buf = bytearray()
-        self.trailers: dict[bytes, bytes] | None = None
-        self._headers_seen = False
-        self.stream_id = self._h2.next_stream_id()
-        self._h2.send_headers(
-            self.stream_id,
-            [
-                (b":method", b"POST"),
-                (b":scheme", b"http"),
-                (b":path", STREAMING_PATH),
-                (b":authority", f"{host}:{port}".encode()),
-                (b"content-type", GRPC_CONTENT_TYPE),
-                (b"te", b"trailers"),
-            ],
+        svc.StreamingClient.__init__(self)
+        _Call.__init__(
+            self, host, port, STREAMING_PATH, timeout, tls_context, server_hostname, huffman
         )
-        self._flush()
-
-    # -- lifecycle
 
     def close(self) -> None:
         try:
@@ -532,54 +582,15 @@ class GrpcIngestClient(svc.StreamingClient):
         finally:
             self.conn.close()
 
-    # -- framing
-
-    def _flush(self) -> None:
-        out = self._h2.data_to_send()
-        if out:
-            self.conn.sendall(out)
-
     def _send_envelope(self, envelope: bytes) -> None:
-        self._h2.send_data(self.stream_id, frame_message(envelope))
-        self._flush()
-
-    def _pump(self) -> None:
-        chunk = self.conn.recv(65536)
-        if not chunk:
-            raise ConnectionError("server closed the connection")
-        events = self._h2.receive_data(chunk)
-        self._flush()  # auto-replies: SETTINGS ack, WINDOW_UPDATE
-        for ev in events:
-            if isinstance(ev, h2.DataReceived) and ev.stream_id == self.stream_id:
-                self._buf += ev.data
-                for msg in split_messages(self._buf):
-                    self._envelopes.append(svc.decode_server_message(msg))
-            elif isinstance(ev, h2.HeadersReceived) and ev.stream_id == self.stream_id:
-                hdrs = dict(ev.headers)
-                if not self._headers_seen and b":status" in hdrs:
-                    self._headers_seen = True
-                    if b"grpc-status" not in hdrs:
-                        continue  # plain response headers
-                self.trailers = hdrs
-                status = int(hdrs.get(b"grpc-status", b"0"))
-                if status != GRPC_OK:
-                    raise ConnectionError(
-                        f"rpc terminated: grpc-status {status} "
-                        f"{hdrs.get(b'grpc-message', b'').decode()}"
-                    )
-                if ev.end_stream:
-                    raise ConnectionError("server closed the session")
-            elif isinstance(ev, h2.StreamReset) and ev.stream_id == self.stream_id:
-                raise ConnectionError(
-                    f"rpc stream reset by server (code {ev.error_code})"
-                )
-            elif isinstance(ev, h2.ConnectionTerminated):
-                raise ConnectionError("server sent GOAWAY")
+        self._send(envelope)
 
     def _recv(self) -> tuple[str, dict]:
-        while not self._envelopes:
+        while not self._messages:
+            if self.trailers is not None:
+                raise ConnectionError("server closed the session")
             self._pump()
-        return self._envelopes.pop(0)
+        return svc.decode_server_message(self._messages.pop(0))
 
 
 def grpc_write_batch_unary(
@@ -593,66 +604,20 @@ def grpc_write_batch_unary(
 ) -> tuple[int, int]:
     """One unary ``WriteBatch`` call (bristle.proto:119) over a fresh
     HTTP/2 connection — the stand-in for a stock unary gRPC client, the
-    simpler of the reference's two client APIs (ingest_service.go:109).
-    Returns (acknowledged, dropped); raises ConnectionError with the
-    server's grpc-message on a non-OK grpc-status, mirroring how a stock
-    client surfaces the reference's aborted-request error
+    simpler of the reference's two client APIs (ingest_service.go:109):
+    one ``_Call`` on ``WRITE_BATCH_PATH`` that sends one message with
+    END_STREAM and reads until the status arrives. Returns
+    (acknowledged, dropped); raises ConnectionError with the server's
+    grpc-message on a non-OK grpc-status, mirroring how a stock client
+    surfaces the reference's aborted-request error
     (ingest_service.go:112-114)."""
-    conn = _tls_connect(host, port, timeout, tls_context, server_hostname)
+    call = _Call(host, port, WRITE_BATCH_PATH, timeout, tls_context, server_hostname)
     try:
-        h2c = h2.H2Connection(client_side=True)
-        h2c.initiate()
-        sid = h2c.next_stream_id()
-        h2c.send_headers(
-            sid,
-            [
-                (b":method", b"POST"),
-                (b":scheme", b"http"),
-                (b":path", WRITE_BATCH_PATH),
-                (b":authority", f"{host}:{port}".encode()),
-                (b"content-type", GRPC_CONTENT_TYPE),
-                (b"te", b"trailers"),
-            ],
-        )
-        h2c.send_data(
-            sid,
-            frame_message(svc.encode_write_batch_request(key, payloads)),
-            end_stream=True,
-        )
-        conn.sendall(h2c.data_to_send())
-        buf = bytearray()
-        status: int | None = None
-        message = b""
-        while status is None:
-            chunk = conn.recv(65536)
-            if not chunk:
-                raise ConnectionError("server closed the connection")
-            for ev in h2c.receive_data(chunk):
-                if isinstance(ev, h2.DataReceived) and ev.stream_id == sid:
-                    buf += ev.data
-                elif isinstance(ev, h2.HeadersReceived) and ev.stream_id == sid:
-                    hdrs = dict(ev.headers)
-                    if b"grpc-status" in hdrs:
-                        status = int(hdrs[b"grpc-status"])
-                        message = hdrs.get(b"grpc-message", b"")
-                elif isinstance(ev, h2.StreamReset) and ev.stream_id == sid:
-                    # e.g. REFUSED_STREAM past the concurrency cap:
-                    # fail promptly, not via socket timeout
-                    raise ConnectionError(
-                        f"rpc stream reset by server (code {ev.error_code})"
-                    )
-                elif isinstance(ev, h2.ConnectionTerminated):
-                    raise ConnectionError("server sent GOAWAY")
-            out = h2c.data_to_send()  # auto-replies (SETTINGS ack, windows)
-            if out:
-                conn.sendall(out)
-        if status != GRPC_OK:
-            raise ConnectionError(
-                f"rpc terminated: grpc-status {status} {message.decode()}"
-            )
-        msgs = split_messages(buf)
-        if len(msgs) != 1:
+        call._send(svc.encode_write_batch_request(key, payloads), end_stream=True)
+        while call.trailers is None:
+            call._pump()
+        if len(call._messages) != 1:
             raise ConnectionError("expected exactly one WriteBatchResponse")
-        return svc.decode_write_batch_response(msgs[0])
+        return svc.decode_write_batch_response(call._messages[0])
     finally:
-        conn.close()
+        call.conn.close()

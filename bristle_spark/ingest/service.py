@@ -376,19 +376,24 @@ class StreamingSession:
     def submit(self, batch: dict) -> None:
         self.door._pool.submit(self.write_streaming_batch, batch)
 
-    def write_streaming_batch(self, batch: dict) -> None:
-        """The write path (writeStreamingBatch analog), on a pool thread."""
+    def process(self, batch: dict) -> int:
+        """One batch through ``process_batch``; returns the BatchResult."""
         try:
-            result = process_batch(
+            return process_batch(
                 self.door.server, self.type_ids, batch, self.door.max_batch_len
             )
         except Exception:
             # decode failures are returned explicitly by process_batch;
             # anything raising here is SERVER-side (landing I/O, disk
-            # full) — ack FULL, the protocol's write-failure result, so
+            # full) — FULL, the protocol's write-failure result, so
             # clients know the data was valid and a retry can succeed
             # (DECODE_ERR would mislabel it as permanently malformed)
-            result = FULL
+            return FULL
+
+    def write_streaming_batch(self, batch: dict) -> None:
+        """The write path (writeStreamingBatch analog), on a pool thread."""
+        try:
+            result = self.process(batch)
         finally:
             self.sem.release()
         self._ack(batch["id"], result)

@@ -6,7 +6,6 @@ session with the openssl CLI."""
 
 from __future__ import annotations
 
-import json
 import os
 import socket
 import ssl
@@ -16,17 +15,9 @@ import pytest
 
 from bristle_spark.ingest import grpc_transport as gt
 from bristle_spark.ingest import service as svc
-from bristle_spark.ingest.fixtures import (
-    binance_ddl_columns,
-    encode_example_row,
-    example_binding,
-    example_descriptor_set,
-    binance_descriptor_set,
-    finnhub_ddl_columns,
-    finnhub_descriptor_set,
-)
+from bristle_spark.ingest.fixtures import encode_example_row
 from bristle_spark.ingest.grpc_transport import GrpcIngestClient, GrpcIngestService
-from bristle_spark.ingest.server import IngestServer
+from tests.conftest import _binance_body, _finnhub_body, median_ack_ms, nodelay
 
 
 @pytest.fixture(scope="module")
@@ -46,42 +37,15 @@ def certpair(tmp_path_factory):
 
 
 @pytest.fixture()
-def tls_server(spark, tmp_path, certpair):
+def tls_server(three_table_server, certpair):
     cert, key = certpair
-    for fname, blob in (
-        ("example.pb", example_descriptor_set()),
-        ("binance.pb", binance_descriptor_set()),
-        ("finnhub.pb", finnhub_descriptor_set()),
-    ):
-        (tmp_path / fname).write_bytes(blob)
-    cols = lambda cs: [  # noqa: E731
-        {"name": c.name, "type": c.ch_type, "default": c.default} for c in cs
-    ]
-    cfg = {
-        "autobind": True,
-        "proto_descriptor_paths": ["example.pb", "binance.pb", "finnhub.pb"],
-        "tables": [
-            {
-                "name": "default.example_table",
-                "columns": cols(example_binding().sink_columns),
-                "ts_column": "timestamp",
-            },
-            {"name": "binance.trade_events", "columns": cols(binance_ddl_columns())},
-            {"name": "finnhub.trades", "columns": cols(finnhub_ddl_columns())},
-        ],
-    }
-    (tmp_path / "config.json").write_text(json.dumps(cfg))
-    server = IngestServer(spark, str(tmp_path / "config.json"), str(tmp_path / "data"))
-    ctx = gt.make_server_tls_context(cert, key)
-    return server, ctx, cert
+    return three_table_server, gt.make_server_tls_context(cert, key), cert
 
 
 def test_tls_end_to_end_three_fixtures(spark, tls_server):
     """The three-fixture end-to-end over TLS: streaming bidi RPC with a
     CA-verifying client (the production shape), then unary WriteBatch on
     the same TLS listener."""
-    from tests.test_socket_service import _binance_body, _finnhub_body
-
     server, ctx, cert = tls_server
     with GrpcIngestService(server, tls_context=ctx) as service:
         cctx = gt.make_client_tls_context(cafile=cert)
@@ -184,9 +148,6 @@ def test_tls_connection_sets_nodelay_and_acks_fast(spark, tls_server):
     """Over TLS the option is set on the TCP socket before the wrap, so
     the TLS client keeps it, and the median ack of 20 closed-loop
     100-row batches stays under half of Linux's 40 ms delayed-ACK floor."""
-    from tests.test_grpc_transport import median_ack_ms
-    from tests.test_socket_service import nodelay
-
     server, ctx, cert = tls_server
     with GrpcIngestService(server, tls_context=ctx) as service:
         with GrpcIngestClient(

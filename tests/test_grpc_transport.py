@@ -9,62 +9,41 @@ bristle.proto:117-123)."""
 
 from __future__ import annotations
 
-import json
 import os
 import socket
-import statistics
-import threading
-import time
 
 import pytest
 
 from bristle_spark.ingest import grpc_transport as gt
 from bristle_spark.ingest import h2
 from bristle_spark.ingest import service as svc
-from bristle_spark.ingest.fixtures import (
-    binance_ddl_columns,
-    binance_descriptor_set,
-    encode_example_row,
-    example_descriptor_set,
-    finnhub_ddl_columns,
-    finnhub_descriptor_set,
-)
+from bristle_spark.ingest.fixtures import encode_example_row
 from bristle_spark.ingest.grpc_transport import GrpcIngestClient, GrpcIngestService
-from bristle_spark.ingest.server import IngestServer
+from tests.conftest import (
+    _binance_body,
+    _finnhub_body,
+    check_batch_limits_and_backpressure,
+    check_concurrent_clients,
+    check_end_to_end_three_fixtures,
+    check_server_side_failure_acks_full,
+    check_unsupported_messages_terminate,
+    grpc_response,
+    median_ack_ms,
+    nodelay,
+)
 
 
-def _cols_cfg(cols) -> list[dict]:
-    return [
-        {"name": c.name, "type": c.ch_type, "default": c.default} for c in cols
-    ]
-
-
-@pytest.fixture()
-def three_table_server(spark, tmp_path):
-    from bristle_spark.ingest.fixtures import example_binding
-
-    for fname, blob in (
-        ("example.pb", example_descriptor_set()),
-        ("binance.pb", binance_descriptor_set()),
-        ("finnhub.pb", finnhub_descriptor_set()),
-    ):
-        (tmp_path / fname).write_bytes(blob)
-    cfg = {
-        "autobind": True,
-        "proto_descriptor_paths": ["example.pb", "binance.pb", "finnhub.pb"],
-        "tables": [
-            {
-                "name": "default.example_table",
-                "columns": _cols_cfg(example_binding().sink_columns),
-                "ts_column": "timestamp",
-            },
-            {"name": "binance.trade_events", "columns": _cols_cfg(binance_ddl_columns())},
-            {"name": "finnhub.trades", "columns": _cols_cfg(finnhub_ddl_columns())},
-        ],
-    }
-    cfg_path = tmp_path / "config.json"
-    cfg_path.write_text(json.dumps(cfg))
-    yield IngestServer(spark, str(cfg_path), str(tmp_path / "data"))
+def _trailers(call: gt._Call) -> dict[bytes, bytes]:
+    """Pump ``call`` until its trailers arrive and return them; the
+    ConnectionError the pump raises on a non-OK status is the expected
+    end here, any other still raises."""
+    try:
+        while call.trailers is None:
+            call._pump()
+    except ConnectionError:
+        if call.trailers is None:
+            raise
+    return call.trailers
 
 
 # ---------------------------------------------------------- framing unit
@@ -91,65 +70,7 @@ def test_grpc_split_partial_and_compressed_flag():
 
 
 def test_grpc_end_to_end_three_fixtures(spark, three_table_server):
-    from tests.test_socket_service import _binance_body, _finnhub_body
-
-    server = three_table_server
-    with GrpcIngestService(server) as service:
-        with GrpcIngestClient("127.0.0.1", service.port) as client:
-            ex_id = client.register_type("ExampleMessage")
-            assert ex_id == 1
-
-            day1 = [
-                encode_example_row(
-                    name=f"d1_{i}", type_code=1, ts=(1_700_000_000 + i, 0), value=i
-                )
-                for i in range(4)
-            ]
-            day2 = [
-                encode_example_row(
-                    name=f"d2_{i}", type_code=2, ts=(1_700_100_000 + i, 0), value=i
-                )
-                for i in range(3)
-            ]
-            assert client.write_batch(day1, type_id=ex_id) == svc.OK
-            assert client.write_batch(day2, type_id=ex_id) == svc.OK
-            assert (
-                client.write_batch([_binance_body(i) for i in range(5)], type_name="Trade")
-                == svc.OK
-            )
-            assert (
-                client.write_batch(
-                    [_finnhub_body(i) for i in range(2)], type_name="FinnhubTrade"
-                )
-                == svc.OK
-            )
-
-            # error taxonomy over gRPC — same BatchResult enum (D12)
-            assert client.write_batch([b"x"], type_name="no.such.Type") == svc.UNK_MESSAGE
-            assert (
-                client.write_batch([b"\xff\xff\xff"], type_name="ExampleMessage")
-                == svc.DECODE_ERR
-            )
-            assert client.write_batch([b"x"], type_id=999) == svc.UNK_MESSAGE
-
-    server.pump()
-    sink_root = os.path.join(server.data_root, "sink")
-    ex = spark.read.parquet(os.path.join(sink_root, "default__example_table"))
-    assert ex.count() == 7
-    days = {
-        d
-        for d in os.listdir(os.path.join(sink_root, "default__example_table"))
-        if d.startswith("_day=")
-    }
-    assert len(days) == 2
-    bn = spark.read.parquet(os.path.join(sink_root, "binance__trade_events"))
-    assert bn.count() == 5
-    fh = spark.read.parquet(os.path.join(sink_root, "finnhub__trades"))
-    assert fh.collect()[0]["tradeConditions"] == ["1", "12"]
-
-    # exactly-once across a re-pump
-    server.pump()
-    assert spark.read.parquet(os.path.join(sink_root, "default__example_table")).count() == 7
+    check_end_to_end_three_fixtures(spark, three_table_server, "grpc")
 
 
 def test_grpc_and_socket_land_identical_payloads(spark, three_table_server, tmp_path):
@@ -182,54 +103,11 @@ def test_grpc_and_socket_land_identical_payloads(spark, three_table_server, tmp_
 
 
 def test_grpc_batch_limits_and_backpressure(spark, three_table_server):
-    server = three_table_server
-    bodies = [encode_example_row(name="x", value=1)] * 3
-    with GrpcIngestService(server, max_batch_len=2) as service:
-        with GrpcIngestClient("127.0.0.1", service.port) as client:
-            assert client.write_batch(bodies, type_name="ExampleMessage") == svc.TOO_BIG
-    with GrpcIngestService(server, max_in_flight=0) as service:
-        with GrpcIngestClient("127.0.0.1", service.port) as client:
-            assert (
-                client.write_batch(bodies[:1], type_name="ExampleMessage")
-                == svc.TOO_MANY_IN_FLIGHT_BATCHES
-            )
+    check_batch_limits_and_backpressure(three_table_server, "grpc")
 
 
 def test_grpc_concurrent_clients(spark, three_table_server):
-    server = three_table_server
-    results = []
-
-    def run_client(cid: int, port: int) -> None:
-        with GrpcIngestClient("127.0.0.1", port) as client:
-            tid = client.register_type("ExampleMessage")
-            for b in range(3):
-                bodies = [
-                    encode_example_row(
-                        name=f"g{cid}_b{b}_{i}",
-                        type_code=1,
-                        ts=(1_700_000_000, 0),
-                        value=i,
-                    )
-                    for i in range(10)
-                ]
-                results.append(client.write_batch(bodies, type_id=tid))
-
-    with GrpcIngestService(server) as service:
-        threads = [
-            threading.Thread(target=run_client, args=(c, service.port))
-            for c in range(4)
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-
-    assert results == [svc.OK] * 12
-    server.pump()
-    sink = os.path.join(server.data_root, "sink", "default__example_table")
-    out = spark.read.parquet(sink)
-    assert out.count() == 120
-    assert out.select("name").distinct().count() == 120
+    check_concurrent_clients(spark, three_table_server, "grpc")
 
 
 def test_grpc_plain_header_client_also_accepted(spark, three_table_server):
@@ -253,59 +131,61 @@ def test_grpc_plain_header_client_also_accepted(spark, three_table_server):
 
 def test_grpc_unknown_method_gets_trailers_only_unimplemented(spark, three_table_server):
     with GrpcIngestService(three_table_server) as service:
-        conn = socket.create_connection(("127.0.0.1", service.port), timeout=10)
+        call = gt._Call(
+            "127.0.0.1", service.port, b"/bristle.BristleIngestService/NoSuchMethod", 10
+        )
         try:
-            c = h2.H2Connection(client_side=True)
-            c.initiate()
-            sid = c.next_stream_id()
-            c.send_headers(
-                sid,
-                [
-                    (b":method", b"POST"),
-                    (b":scheme", b"http"),
-                    (b":path", b"/bristle.BristleIngestService/NoSuchMethod"),
-                    (b":authority", b"localhost"),
-                    (b"content-type", b"application/grpc"),
-                    (b"te", b"trailers"),
-                ],
-            )
-            conn.sendall(c.data_to_send())
-            trailers = None
-            while trailers is None:
-                chunk = conn.recv(65536)
-                assert chunk, "server closed before responding"
-                for ev in c.receive_data(chunk):
-                    if isinstance(ev, h2.HeadersReceived) and ev.stream_id == sid:
-                        trailers = dict(ev.headers)
-                        assert ev.end_stream  # trailers-only response
-                out = c.data_to_send()
-                if out:
-                    conn.sendall(out)
+            trailers = _trailers(call)
+            # trailers-only response: that one HEADERS ended the stream
+            assert call._h2.streams[call.stream_id].recv_closed
             assert trailers[b":status"] == b"200"
             assert trailers[b"grpc-status"] == str(gt.GRPC_UNIMPLEMENTED).encode()
         finally:
-            conn.close()
+            call.conn.close()
+
+
+def test_response_wire_shapes(spark, three_table_server):
+    """The frame sequence and header order of every response shape, read
+    as raw h2 events on the call's stream (gRPC-over-HTTP/2 spec)."""
+    response_headers = [(b":status", b"200"), (b"content-type", b"application/grpc")]
+    with GrpcIngestService(three_table_server) as service:
+        # unknown method: one trailers-only HEADERS
+        assert grpc_response(service.port, b"/bristle.BristleIngestService/NoSuchMethod") == [
+            (
+                "HEADERS",
+                response_headers
+                + [(b"grpc-status", b"12"), (b"grpc-message", b"unknown method")],
+                True,
+            )
+        ]
+        # unary success: headers, one message, then the status
+        request = svc.encode_write_batch_request(
+            "k", [("ExampleMessage", [encode_example_row(name="w", value=1)])]
+        )
+        (h, hdrs, h_end), (d, data, d_end), (t, trailers, t_end) = grpc_response(
+            service.port, gt.WRITE_BATCH_PATH, request
+        )
+        assert (h, hdrs, h_end) == ("HEADERS", response_headers, False)
+        assert (d, d_end) == ("DATA", False)
+        assert svc.decode_write_batch_response(gt.split_messages(bytearray(data))[0]) == (1, 0)
+        assert (t, trailers, t_end) == ("HEADERS", [(b"grpc-status", b"0")], True)
+        # Streaming: the response headers arrive before the first ack
+        batch = svc.encode_write_batch(
+            1, [encode_example_row(name="s", value=1)], type_name="ExampleMessage"
+        )
+        (h, hdrs, h_end), (d, data, d_end) = grpc_response(
+            service.port, gt.STREAMING_PATH, batch, end_stream=False
+        )
+        assert (h, hdrs, h_end) == ("HEADERS", response_headers, False)
+        assert d == "DATA" and not d_end
+        assert svc.decode_server_message(gt.split_messages(bytearray(data))[0]) == (
+            "write_batch_result",
+            {"id": 1, "result": svc.OK},
+        )
 
 
 def test_grpc_unsupported_messages_terminate_rpc(spark, three_table_server):
-    with GrpcIngestService(three_table_server) as service:
-        # register with inline descriptor: ErrUnsupported ends the RPC
-        client = GrpcIngestClient("127.0.0.1", service.port)
-        client._send_envelope(svc.encode_register_type("ExampleMessage", descriptor=b"\x01"))
-        with pytest.raises(ConnectionError, match="grpc-status 2"):
-            client._recv()
-        client.close()
-
-        # update_default: ErrUnsupported (S13)
-        client = GrpcIngestClient("127.0.0.1", service.port)
-        client.update_default("ExampleMessage", b"")
-        with pytest.raises(ConnectionError, match="grpc-status 2"):
-            client._recv()
-        client.close()
-
-        # a fresh RPC on a fresh connection still works
-        with GrpcIngestClient("127.0.0.1", service.port) as client:
-            assert client.register_type("ExampleMessage") == 1
+    check_unsupported_messages_terminate(three_table_server, "grpc")
 
 
 def test_grpc_compressed_flag_is_internal_error(spark, three_table_server):
@@ -325,15 +205,7 @@ def test_grpc_compressed_flag_is_internal_error(spark, three_table_server):
 
 
 def test_grpc_server_side_failure_acks_full(spark, three_table_server, monkeypatch):
-    server = three_table_server
-    with GrpcIngestService(server) as service:
-        def boom(server, binding, type_name, bodies):
-            raise OSError("disk full")
-
-        monkeypatch.setattr(svc, "land_payload", boom)
-        with GrpcIngestClient("127.0.0.1", service.port) as client:
-            body = encode_example_row(name="ok", value=1)
-            assert client.write_batch([body], type_name="ExampleMessage") == svc.FULL
+    check_server_side_failure_acks_full(three_table_server, "grpc", monkeypatch)
 
 
 # ----------------------------------------------------- wire literalism
@@ -373,8 +245,6 @@ def test_unary_write_batch_three_fixtures(spark, three_table_server):
     """The reference's OTHER public RPC (bristle.proto:119,
     ingest_service.go:109-120): one unary WriteBatch call carrying
     payloads for all three fixture tables lands them all."""
-    from tests.test_socket_service import _binance_body, _finnhub_body
-
     server = three_table_server
     with GrpcIngestService(server) as service:
         ack, dropped = gt.grpc_write_batch_unary(
@@ -494,53 +364,21 @@ def test_unary_request_roundtrip_codec():
 def test_unary_truncated_tail_is_internal_error(spark, three_table_server):
     """A truncated gRPC message after the request must fail the RPC,
     not be silently dropped with a success status."""
-    import socket as socket_mod
-
-    from bristle_spark.ingest import h2 as h2m
-
     with GrpcIngestService(three_table_server) as service:
-        conn = socket_mod.create_connection(("127.0.0.1", service.port), timeout=10)
+        call = gt._Call("127.0.0.1", service.port, gt.WRITE_BATCH_PATH, 10)
         try:
-            h2c = h2m.H2Connection(client_side=True)
-            h2c.initiate()
-            sid = h2c.next_stream_id()
-            h2c.send_headers(
-                sid,
-                [
-                    (b":method", b"POST"), (b":scheme", b"http"),
-                    (b":path", gt.WRITE_BATCH_PATH),
-                    (b":authority", b"x"),
-                    (b"content-type", gt.GRPC_CONTENT_TYPE),
-                    (b"te", b"trailers"),
-                ],
-            )
             body = gt.frame_message(svc.encode_write_batch_request("k", []))
-            h2c.send_data(sid, body + b"\x00\x00\x00\x00", end_stream=True)
-            conn.sendall(h2c.data_to_send())
-            status = None
-            while status is None:
-                chunk = conn.recv(65536)
-                assert chunk, "server closed without a status"
-                for ev in h2c.receive_data(chunk):
-                    if isinstance(ev, h2m.HeadersReceived):
-                        hdrs = dict(ev.headers)
-                        if b"grpc-status" in hdrs:
-                            status = int(hdrs[b"grpc-status"])
-                out = h2c.data_to_send()
-                if out:
-                    conn.sendall(out)
-            assert status == gt.GRPC_INTERNAL
+            call._h2.send_data(call.stream_id, body + b"\x00\x00\x00\x00", end_stream=True)
+            call._flush()
+            assert int(_trailers(call)[b"grpc-status"]) == gt.GRPC_INTERNAL
         finally:
-            conn.close()
+            call.conn.close()
 
 
 def test_finished_rpc_state_is_pruned_per_connection(spark, three_table_server):
     """A long-lived connection issuing many unary RPCs must not grow
     per-connection RPC state without bound: finished entries are swept
     when the next RPC opens."""
-    from bristle_spark.ingest import h2 as h2m
-    import socket as socket_mod
-
     with GrpcIngestService(three_table_server) as service:
         # capture the rpcs dict of the connection via a wrapper
         captured = {}
@@ -551,45 +389,17 @@ def test_finished_rpc_state_is_pruned_per_connection(spark, three_table_server):
             return orig(ev, h2c, lock, conn, rpcs, flush_locked)
 
         service._handle_event = spy
-        conn = socket_mod.create_connection(("127.0.0.1", service.port), timeout=10)
+        call = gt._Call("127.0.0.1", service.port, gt.WRITE_BATCH_PATH, 10)
         try:
-            h2c = h2m.H2Connection(client_side=True)
-            h2c.initiate()
-            for _ in range(8):
-                sid = h2c.next_stream_id()
-                h2c.send_headers(
-                    sid,
-                    [
-                        (b":method", b"POST"), (b":scheme", b"http"),
-                        (b":path", gt.WRITE_BATCH_PATH),
-                        (b":authority", b"x"),
-                        (b"content-type", gt.GRPC_CONTENT_TYPE),
-                        (b"te", b"trailers"),
-                    ],
-                )
-                h2c.send_data(
-                    sid,
-                    gt.frame_message(svc.encode_write_batch_request("k", [])),
-                    end_stream=True,
-                )
-                conn.sendall(h2c.data_to_send())
-                status = None
-                while status is None:
-                    chunk = conn.recv(65536)
-                    assert chunk
-                    for ev in h2c.receive_data(chunk):
-                        if isinstance(ev, h2m.HeadersReceived):
-                            hdrs = dict(ev.headers)
-                            if b"grpc-status" in hdrs:
-                                status = int(hdrs[b"grpc-status"])
-                    out = h2c.data_to_send()
-                    if out:
-                        conn.sendall(out)
-                assert status == gt.GRPC_OK
+            for i in range(8):
+                if i:
+                    call._open(gt.WRITE_BATCH_PATH)  # the next RPC, same connection
+                call._send(svc.encode_write_batch_request("k", []), end_stream=True)
+                assert int(_trailers(call)[b"grpc-status"]) == gt.GRPC_OK
             # all but at most the most recent RPC have been swept
             assert len(captured["rpcs"]) <= 2
         finally:
-            conn.close()
+            call.conn.close()
 
 
 def test_unary_forged_second_end_stream_never_lands_twice(spark, three_table_server):
@@ -597,26 +407,9 @@ def test_unary_forged_second_end_stream_never_lands_twice(spark, three_table_ser
     DATA(END_STREAM) on the same stream used to re-deliver DataReceived
     and land every payload twice. The half-closed(remote) check now
     RSTs the stream (RFC 9113 §5.1) — payloads land AT MOST once."""
-    import socket as socket_mod
-
-    from bristle_spark.ingest import h2 as h2m
-
     with GrpcIngestService(three_table_server) as service:
-        conn = socket_mod.create_connection(("127.0.0.1", service.port), timeout=10)
+        call = gt._Call("127.0.0.1", service.port, gt.WRITE_BATCH_PATH, 10)
         try:
-            h2c = h2m.H2Connection(client_side=True)
-            h2c.initiate()
-            sid = h2c.next_stream_id()
-            h2c.send_headers(
-                sid,
-                [
-                    (b":method", b"POST"), (b":scheme", b"http"),
-                    (b":path", gt.WRITE_BATCH_PATH),
-                    (b":authority", b"x"),
-                    (b"content-type", gt.GRPC_CONTENT_TYPE),
-                    (b"te", b"trailers"),
-                ],
-            )
             body = gt.frame_message(
                 svc.encode_write_batch_request(
                     "forge-key",
@@ -624,32 +417,19 @@ def test_unary_forged_second_end_stream_never_lands_twice(spark, three_table_ser
                       [encode_example_row(name=f"f_{i}", value=i) for i in range(4)])],
                 )
             )
-            h2c.send_data(sid, body, end_stream=True)
-            wire = bytes(h2c.data_to_send())
+            call._h2.send_data(call.stream_id, body, end_stream=True)
             # the forged frame goes out back-to-back with the request so
             # the reader thread sees it before the pool thread responds
-            forged = h2m.encode_frame(h2m.DATA, h2m.FLAG_END_STREAM, sid, b"")
-            conn.sendall(wire + forged)
+            forged = h2.encode_frame(h2.DATA, h2.FLAG_END_STREAM, call.stream_id, b"")
+            call.conn.sendall(call._h2.data_to_send() + forged)
             # drain until RST/status/close — any of the three is fine
-            conn.settimeout(5)
-            saw_reset = saw_status = False
+            call.conn.settimeout(5)
             try:
-                while not (saw_reset or saw_status):
-                    chunk = conn.recv(65536)
-                    if not chunk:
-                        break
-                    for ev in h2c.receive_data(chunk):
-                        if isinstance(ev, h2m.StreamReset):
-                            saw_reset = True
-                        if isinstance(ev, h2m.HeadersReceived) and b"grpc-status" in dict(ev.headers):
-                            saw_status = True
-                    out = h2c.data_to_send()
-                    if out:
-                        conn.sendall(out)
-            except (TimeoutError, OSError):
+                _trailers(call)
+            except OSError:
                 pass
         finally:
-            conn.close()
+            call.conn.close()
     payload_dir = os.path.join(
         three_table_server.data_root, "payloads", "default__example_table"
     )
@@ -667,132 +447,51 @@ def test_headers_replay_on_active_rpc_resets_stream(spark, three_table_server):
     used to overwrite rpcs[sid] with a fresh _Rpc (discarding the live
     type-id registry) and re-send response headers on the same stream.
     The replay now resets the stream instead."""
-    import socket as socket_mod
-
-    from bristle_spark.ingest import h2 as h2m
-
     with GrpcIngestService(three_table_server) as service:
-        conn = socket_mod.create_connection(("127.0.0.1", service.port), timeout=10)
+        call = gt._Call("127.0.0.1", service.port, gt.STREAMING_PATH, 5)
         try:
-            h2c = h2m.H2Connection(client_side=True)
-            h2c.initiate()
-            sid = h2c.next_stream_id()
-            req = [
-                (b":method", b"POST"), (b":scheme", b"http"),
-                (b":path", gt.STREAMING_PATH),
-                (b":authority", b"x"),
-                (b"content-type", gt.GRPC_CONTENT_TYPE),
-                (b"te", b"trailers"),
-            ]
-            h2c.send_headers(sid, req)  # stream stays open (no END_STREAM)
-            conn.sendall(h2c.data_to_send())
             # wait for the server's response headers (RPC is now active)
-            conn.settimeout(5)
-            got_headers = False
-            while not got_headers:
-                chunk = conn.recv(65536)
-                assert chunk
-                for ev in h2c.receive_data(chunk):
-                    if isinstance(ev, h2m.HeadersReceived):
-                        got_headers = True
-                out = h2c.data_to_send()
-                if out:
-                    conn.sendall(out)
+            while not any(isinstance(ev, h2.HeadersReceived) for ev in call._receive()):
+                pass
             # replay the request HEADERS on the SAME open stream
-            h2c.send_headers(sid, req)
-            conn.sendall(h2c.data_to_send())
+            call._h2.send_headers(call.stream_id, call._request_headers(gt.STREAMING_PATH))
+            call._flush()
             saw_reset = False
             extra_headers = 0
             try:
                 while not saw_reset:
-                    chunk = conn.recv(65536)
-                    if not chunk:
-                        break
-                    for ev in h2c.receive_data(chunk):
-                        if isinstance(ev, h2m.StreamReset):
-                            saw_reset = True
-                        if isinstance(ev, h2m.HeadersReceived):
-                            extra_headers += 1
-                    out = h2c.data_to_send()
-                    if out:
-                        conn.sendall(out)
-            except (TimeoutError, OSError):
+                    for ev in call._receive():
+                        saw_reset |= isinstance(ev, h2.StreamReset)
+                        extra_headers += isinstance(ev, h2.HeadersReceived)
+            except OSError:
                 pass
             assert saw_reset, "replayed HEADERS must reset the stream"
             assert extra_headers == 0, "response headers must not be re-sent"
         finally:
-            conn.close()
+            call.conn.close()
 
 
 def test_oversized_message_prefix_is_resource_exhausted(spark, three_table_server):
     """A 4 GiB declared length-prefix must terminate the RPC with
     RESOURCE_EXHAUSTED on the PREFIX (stock-gRPC max-recv-message-size
     behavior), never buffer toward it."""
-    import socket as socket_mod
-
-    from bristle_spark.ingest import h2 as h2m
-
     with GrpcIngestService(three_table_server) as service:
-        conn = socket_mod.create_connection(("127.0.0.1", service.port), timeout=10)
+        call = gt._Call("127.0.0.1", service.port, gt.STREAMING_PATH, 10)
         try:
-            h2c = h2m.H2Connection(client_side=True)
-            h2c.initiate()
-            sid = h2c.next_stream_id()
-            h2c.send_headers(
-                sid,
-                [
-                    (b":method", b"POST"), (b":scheme", b"http"),
-                    (b":path", gt.STREAMING_PATH),
-                    (b":authority", b"x"),
-                    (b"content-type", gt.GRPC_CONTENT_TYPE),
-                    (b"te", b"trailers"),
-                ],
-            )
             # declared length 2^32-1, only a few real bytes behind it
-            h2c.send_data(sid, b"\x00\xff\xff\xff\xff" + b"x" * 64)
-            conn.sendall(h2c.data_to_send())
-            conn.settimeout(10)
-            status = None
-            while status is None:
-                chunk = conn.recv(65536)
-                assert chunk, "server closed without a grpc-status"
-                for ev in h2c.receive_data(chunk):
-                    if isinstance(ev, h2m.HeadersReceived):
-                        hdrs = dict(ev.headers)
-                        if b"grpc-status" in hdrs:
-                            status = int(hdrs[b"grpc-status"])
-                            message = hdrs.get(b"grpc-message", b"")
-                out = h2c.data_to_send()
-                if out:
-                    conn.sendall(out)
-            assert status == gt.GRPC_RESOURCE_EXHAUSTED
-            assert b"larger than max" in message
+            call._h2.send_data(call.stream_id, b"\x00\xff\xff\xff\xff" + b"x" * 64)
+            call._flush()
+            trailers = _trailers(call)
+            assert int(trailers[b"grpc-status"]) == gt.GRPC_RESOURCE_EXHAUSTED
+            assert b"larger than max" in trailers[b"grpc-message"]
         finally:
-            conn.close()
-
-
-def median_ack_ms(client, acks: int = 20, rows: int = 100) -> float:
-    """Median wall time of ``acks`` closed-loop ``rows``-row write_batch
-    round trips on one Streaming RPC."""
-    tid = client.register_type("ExampleMessage")
-    bodies = [
-        encode_example_row(name=f"t_{i}", type_code=1, ts=(1_700_000_000, 0), value=i)
-        for i in range(rows)
-    ]
-    times = []
-    for _ in range(acks):
-        t0 = time.perf_counter()
-        assert client.write_batch(bodies, type_id=tid) == svc.OK
-        times.append((time.perf_counter() - t0) * 1e3)
-    return statistics.median(times)
+            call.conn.close()
 
 
 def test_grpc_connections_set_nodelay(spark, three_table_server, monkeypatch):
     """Every gRPC client connection turns Nagle off, as grpc-go does: the
     Streaming client's and the unary call's (the accepted side is pinned
     by test_socket_service.py::test_socket_connections_set_nodelay)."""
-    from tests.test_socket_service import nodelay
-
     opened = []
     real_connect = svc.connect
 

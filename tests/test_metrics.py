@@ -16,6 +16,7 @@ import pytest
 
 from bristle_spark.ingest import metrics as M
 from bristle_spark.ingest import service as svc
+from tests.conftest import grpc_response
 
 
 # ------------------------------------------------------------ unit level
@@ -193,6 +194,8 @@ def test_grpc_front_door_advances_rpc_counters(spark, tmp_path):
     started0 = M.RPC_STARTED.value("WriteBatch")
     handled0 = M.RPC_HANDLED.value("WriteBatch", "0")
     s_started0 = M.RPC_STARTED.value("Streaming")
+    u_started0 = M.RPC_STARTED.value("unknown")
+    u_handled0 = M.RPC_HANDLED.value("unknown", "12")
     unary0 = M.BATCHES.value("grpc-unary", "OK")
     stream0 = M.BATCHES.value("grpc-streaming", "OK")
     bodies = [encode_example_row(name="g", value=1)]
@@ -202,9 +205,12 @@ def test_grpc_front_door_advances_rpc_counters(spark, tmp_path):
         ) == (1, 0)
         with GrpcIngestClient("127.0.0.1", service.port) as client:
             assert client.write_batch(bodies, type_name="ExampleMessage") == svc.OK
+        grpc_response(service.port, b"/bristle.BristleIngestService/NoSuchMethod")
     assert M.RPC_STARTED.value("WriteBatch") == started0 + 1
     assert M.RPC_HANDLED.value("WriteBatch", "0") == handled0 + 1
     assert M.RPC_STARTED.value("Streaming") == s_started0 + 1
+    assert M.RPC_STARTED.value("unknown") == u_started0 + 1
+    assert M.RPC_HANDLED.value("unknown", "12") == u_handled0 + 1
     assert M.BATCHES.value("grpc-unary", "OK") == unary0 + 1
     assert M.BATCHES.value("grpc-streaming", "OK") == stream0 + 1
 
