@@ -393,13 +393,6 @@ class GrpcIngestService(svc.FrontDoor):
                 del rpcs[done]
             headers = dict(ev.headers)
             sid = ev.stream_id
-            prio = headers.get(b"priority")
-            if prio is not None:
-                # RFC 9218 §5: the request's `priority` header schedules
-                # the RESPONSE stream when the connection window is the
-                # constraint (h2.H2Connection._scheduled_flush)
-                with lock:
-                    h2c.set_priority(sid, *h2.parse_priority_field(prio))
             live = rpcs.get(sid)
             if live is not None and not live.finished:
                 # HEADERS replay on an active RPC (client trailers have

@@ -16,8 +16,16 @@ handshake, HEADERS/CONTINUATION assembly with HPACK, DATA with padding,
 REAL flow control in both directions (send-side windows honoured with
 per-stream pending queues, recv-side windows replenished), RST_STREAM,
 PING, GOAWAY, INITIAL_WINDOW_SIZE retuning of live streams, and frame
-size validation. PRIORITY is parsed and ignored; PUSH is disabled and
-rejected; unknown frame types are ignored as the RFC requires.
+size validation. PUSH is disabled and rejected; unknown frame types are
+ignored as the RFC requires.
+
+Priority signals are ignored, as grpc-go ignores them: the PRIORITY
+frame is length-checked and dropped, and the RFC 9218 `priority` header
+and PRIORITY_UPDATE frame have no effect. Flow-blocked streams therefore
+have one flush path, `_flush_blocked`, an arrival-order pass run on
+SETTINGS and on every WINDOW_UPDATE. Every local RST_STREAM on a live
+stream goes through `_rst_and_retire`, which also drops the stream's
+state, so a reset stream never counts toward the concurrency cap.
 """
 
 from __future__ import annotations
@@ -39,14 +47,6 @@ PING = 0x6
 GOAWAY = 0x7
 WINDOW_UPDATE = 0x8
 CONTINUATION = 0x9
-PRIORITY_UPDATE = 0x10  # RFC 9218 §7.1 (Extensible Priorities)
-
-# RFC 9218 §4.1: urgency 0 (highest) .. 7 (lowest), default 3
-DEFAULT_URGENCY = 3
-# stashed PRIORITY_UPDATEs for streams the peer has signalled but not
-# yet opened (§7.2 allows the frame to race ahead of HEADERS); bounded
-# so a peer spraying ids cannot grow state
-MAX_STASHED_PRIORITIES = 64
 
 # flags
 FLAG_END_STREAM = 0x1
@@ -145,26 +145,6 @@ class WindowOpened:
 # ------------------------------------------------------------------ frames
 
 
-def parse_priority_field(value: bytes) -> tuple[int, bool]:
-    """Parse an RFC 9218 Priority field value (e.g. ``u=2, i``) into
-    (urgency, incremental). Tolerant structured-field-dictionary
-    subset: unknown keys and malformed members are ignored (§4.3), so
-    defaults survive garbage."""
-    urgency, incremental = DEFAULT_URGENCY, False
-    for item in value.split(b","):
-        item = item.strip()
-        if item in (b"i", b"i=?1"):
-            incremental = True
-        elif item == b"i=?0":
-            incremental = False
-        elif item.startswith(b"u="):
-            try:
-                urgency = min(7, max(0, int(item[2:])))
-            except ValueError:
-                pass
-    return urgency, incremental
-
-
 def encode_frame(ftype: int, flags: int, stream_id: int, payload: bytes) -> bytes:
     return (
         len(payload).to_bytes(3, "big")
@@ -181,19 +161,9 @@ class _Stream:
     recv_window: int = DEFAULT_WINDOW
     recv_closed: bool = False
     send_closed: bool = False
-    reset: bool = False
     # a field block was already delivered on this stream: the next one
     # is trailers (no pseudo-fields allowed, RFC 9113 §8.1)
     recv_headers: bool = False
-    # RFC 9218 priority: urgency 0..7 (lower = more urgent) and the
-    # incremental flag (True = the response is useful in pieces, so
-    # same-urgency incremental streams share bandwidth round-robin)
-    urgency: int = DEFAULT_URGENCY
-    incremental: bool = False
-    # arrival order (FIFO key within an urgency level) and the
-    # round-robin clock of the last scheduler turn this stream got
-    seq: int = 0
-    last_served: int = 0
     # data accepted by send_data but deferred by flow control
     pending: list[tuple[bytes, bool]] = field(default_factory=list)
     # trailers accepted while DATA was still flow-blocked; held raw
@@ -228,10 +198,6 @@ class H2Connection:
         self._hdr_flags = 0
         self._hdr_buf = bytearray()
         self.closed = False
-        # RFC 9218 priority scheduling state
-        self._stream_seq = 0  # arrival counter (FIFO key)
-        self._serve_tick = 0  # round-robin clock
-        self._stashed_priorities: dict[int, tuple[int, bool]] = {}
 
     # ------------------------------------------------------------ lifecycle
 
@@ -284,33 +250,12 @@ class H2Connection:
                 # protocol violation
                 return None
             st = _Stream(stream_id, send_window=self.peer_initial_window)
-            self._init_stream_priority(st)
             self.streams[stream_id] = st
             if not self._peer_initiated(stream_id):
                 self._highest_local_opened = max(
                     self._highest_local_opened, stream_id
                 )
         return st
-
-    def _init_stream_priority(self, st: _Stream) -> None:
-        """Assign the FIFO arrival seq and apply any PRIORITY_UPDATE
-        that raced ahead of the stream's HEADERS (RFC 9218 §7.2)."""
-        self._stream_seq += 1
-        st.seq = self._stream_seq
-        stashed = self._stashed_priorities.pop(st.stream_id, None)
-        if stashed is not None:
-            st.urgency, st.incremental = stashed
-
-    def set_priority(
-        self, stream_id: int, urgency: int = DEFAULT_URGENCY, incremental: bool = False
-    ) -> None:
-        """Set a stream's RFC 9218 scheduling parameters — the server
-        calls this from the request's `priority` header (§5); received
-        PRIORITY_UPDATE frames land here too."""
-        st = self.streams.get(stream_id)
-        if st is not None:
-            st.urgency = min(7, max(0, int(urgency)))
-            st.incremental = bool(incremental)
 
     def send_headers(
         self,
@@ -319,7 +264,7 @@ class H2Connection:
         end_stream: bool = False,
     ) -> None:
         st = self._stream_for_send(stream_id)
-        if st is None or st.reset:
+        if st is None:
             return
         if end_stream and st.pending:
             # flow-blocked DATA is still queued: emitting trailers now
@@ -361,20 +306,16 @@ class H2Connection:
         """Queue DATA, honouring connection + stream send windows; what
         the windows cannot carry is deferred until WINDOW_UPDATE."""
         st = self._stream_for_send(stream_id)
-        if st is None or st.reset:
+        if st is None:
             return
         st.pending.append((bytes(data), end_stream))
         self._flush_stream(st)
         self._maybe_retire(st)
 
-    def _flush_stream(self, st: _Stream, max_bytes: int | None = None) -> int:
-        """Emit as much pending DATA as the windows (and the optional
-        per-turn byte cap the RFC 9218 scheduler passes) allow. Returns
-        the payload bytes written this call."""
-        written = 0
+    def _flush_stream(self, st: _Stream) -> None:
+        """Emit as much pending DATA as the windows allow, then any
+        trailers that were waiting for the queue to drain."""
         while st.pending:
-            if max_bytes is not None and written >= max_bytes:
-                return written
             data, end_stream = st.pending[0]
             if not data and end_stream:  # bare end-of-stream marker
                 self._out += encode_frame(DATA, FLAG_END_STREAM, st.stream_id, b"")
@@ -385,11 +326,9 @@ class H2Connection:
                 budget = min(
                     len(data), self.conn_send_window, st.send_window, self.peer_max_frame
                 )
-                if max_bytes is not None:
-                    budget = min(budget, max_bytes - written)
                 if budget <= 0:
                     st.pending[0] = (data, end_stream)
-                    return written
+                    return
                 chunk, data = data[:budget], data[budget:]
                 last = not data and end_stream
                 self._out += encode_frame(
@@ -397,7 +336,6 @@ class H2Connection:
                 )
                 self.conn_send_window -= len(chunk)
                 st.send_window -= len(chunk)
-                written += len(chunk)
                 if last:
                     st.send_closed = True
             st.pending.pop(0)
@@ -408,59 +346,24 @@ class H2Connection:
             trailers = st.pending_trailers
             st.pending_trailers = None
             self._emit_headers(st, trailers, end_stream=True)
-        return written
 
-    def _scheduled_flush(self) -> list[object]:
-        """Distribute a re-opened CONNECTION send window across blocked
-        streams by RFC 9218 priority: strict precedence across urgency
-        levels (lower value first); within a level, non-incremental
-        responses complete one at a time in arrival order (§10), then
-        incremental ones share the window round-robin, one
-        max-frame-sized turn each. Replaces the old insertion-order
-        greedy drain, which let the earliest stream starve every later
-        one whenever the connection window was the constraint."""
+    def _flush_blocked(self) -> list[object]:
+        """The one flush path for flow-blocked streams, run whenever a
+        send window may have grown (SETTINGS, connection or stream
+        WINDOW_UPDATE): flush every stream with deferred DATA in arrival
+        order and report each whose queue drained. Dict insertion order
+        is arrival order — each stream is inserted once and a retired id
+        is never re-created. Iterates a SNAPSHOT: a flush can emit
+        deferred trailers and retire (pop) the stream, and mutating
+        self.streams mid-iteration is a crash."""
         events: list[object] = []
-        had = sorted(
-            st.stream_id for st in self.streams.values() if st.pending
-        )
-        while self.conn_send_window > 0:
-            cands = [
-                st
-                for st in self.streams.values()
-                if st.pending and not st.reset and st.send_window > 0
-            ]
-            if not cands:
-                break
-            top = min(st.urgency for st in cands)
-            level = [st for st in cands if st.urgency == top]
-            fifo = [st for st in level if not st.incremental]
-            if fifo:
-                st = min(fifo, key=lambda s: s.seq)
-                before = len(st.pending)
-                wrote = self._flush_stream(st)
-            else:
-                st = min(level, key=lambda s: (s.last_served, s.seq))
-                self._serve_tick += 1
-                st.last_served = self._serve_tick
-                before = len(st.pending)
-                wrote = self._flush_stream(st, max_bytes=self.peer_max_frame)
-            self._maybe_retire(st)
-            if wrote == 0 and len(st.pending) >= before:
-                break  # stream-window-blocked head of line: no progress
-        for sid in had:
-            st = self.streams.get(sid)
-            if st is None or not st.pending:
-                events.append(WindowOpened(sid))
+        for st in list(self.streams.values()):
+            if st.pending:
+                self._flush_stream(st)
+                self._maybe_retire(st)
+                if not st.pending:
+                    events.append(WindowOpened(st.stream_id))
         return events
-
-    def send_rst_stream(self, stream_id: int, code: int = CANCEL) -> None:
-        st = self._stream_for_send(stream_id)
-        if st is None:
-            return
-        st.reset = True
-        st.pending.clear()
-        st.pending_trailers = None
-        self._out += encode_frame(RST_STREAM, 0, stream_id, code.to_bytes(4, "big"))
 
     def send_goaway(self, code: int = NO_ERROR, debug: bytes = b"") -> None:
         payload = self._highest_peer_stream.to_bytes(4, "big") + code.to_bytes(
@@ -533,8 +436,6 @@ class H2Connection:
             if len(payload) != 5:
                 raise H2ConnectionError(FRAME_SIZE_ERROR, "bad PRIORITY length")
             return []
-        if ftype == PRIORITY_UPDATE:
-            return self._on_priority_update(stream_id, payload)
         if ftype == PUSH_PROMISE:
             raise H2ConnectionError(PROTOCOL_ERROR, "push is disabled")
         return []  # unknown frame types are ignored (§4.1)
@@ -575,7 +476,6 @@ class H2Connection:
                 return None
             self._highest_peer_stream = stream_id
             st = _Stream(stream_id, send_window=self.peer_initial_window)
-            self._init_stream_priority(st)
             self.streams[stream_id] = st
             return st
         # locally-numbered id from the peer: never valid as a NEW stream
@@ -588,20 +488,16 @@ class H2Connection:
     def _maybe_retire(self, st: _Stream) -> None:
         """Drop fully-closed streams so per-connection state is bounded
         by the concurrency cap, not by connection lifetime."""
-        if (st.recv_closed or st.reset) and st.send_closed and not st.pending:
+        if st.recv_closed and st.send_closed and not st.pending:
             self.streams.pop(st.stream_id, None)
 
     def _rst_and_retire(self, st: _Stream, code: int) -> None:
-        """Emit RST_STREAM and fully close the stream: any deferred
-        response is abandoned (send_headers/send_data no-op on a reset
-        stream) and the per-stream state is dropped."""
+        """The one local-reset path: emit RST_STREAM and drop the
+        stream's state. Any deferred response is abandoned, and a later
+        send_headers/send_data on the retired id is a no-op."""
         self._out += encode_frame(
             RST_STREAM, 0, st.stream_id, code.to_bytes(4, "big")
         )
-        st.reset = True
-        st.recv_closed = st.send_closed = True
-        st.pending.clear()
-        st.pending_trailers = None
         self.streams.pop(st.stream_id, None)
 
     def _reset_half_closed(self, st: _Stream) -> list[object]:
@@ -613,11 +509,11 @@ class H2Connection:
 
     def reset_stream(self, stream_id: int, code: int = PROTOCOL_ERROR) -> None:
         """Application-initiated RST_STREAM (e.g. the gRPC layer refusing
-        a HEADERS replay on an active RPC). No-op on unknown streams."""
+        a HEADERS replay on an active RPC). No-op on unknown or retired
+        streams: it never creates stream state."""
         st = self.streams.get(stream_id)
-        if st is None or st.reset:
-            return
-        self._rst_and_retire(st, code)
+        if st is not None:
+            self._rst_and_retire(st, code)
 
     def _on_data(self, flags: int, stream_id: int, payload: bytes) -> list[object]:
         if stream_id == 0:
@@ -667,8 +563,6 @@ class H2Connection:
         if end:
             st.recv_closed = True
             self._maybe_retire(st)
-        if st.reset:
-            return []
         return [DataReceived(stream_id, payload, end)]
 
     def _on_headers(self, flags: int, stream_id: int, payload: bytes) -> list[object]:
@@ -740,8 +634,6 @@ class H2Connection:
         if end:
             st.recv_closed = True
             self._maybe_retire(st)
-        if st.reset:
-            return []
         return [HeadersReceived(stream_id, headers, end)]
 
     # pseudo-fields legal in the block types this endpoint receives
@@ -825,16 +717,7 @@ class H2Connection:
             # MAX_CONCURRENT_STREAMS / MAX_HEADER_LIST_SIZE: stored
             # semantics not needed for this endpoint's behavior
         self._out += encode_frame(SETTINGS, FLAG_ACK, 0, b"")
-        # settings may have opened send windows. Iterate a SNAPSHOT:
-        # _flush_stream can emit deferred trailers and retire (pop) the
-        # stream, and mutating self.streams mid-iteration is a crash
-        flushed: list[object] = []
-        for st in list(self.streams.values()):
-            had = bool(st.pending)
-            self._flush_stream(st)
-            if had and not st.pending:
-                flushed.append(WindowOpened(st.stream_id))
-        return flushed
+        return self._flush_blocked()  # settings may have opened send windows
 
     def _on_window_update(self, stream_id: int, payload: bytes) -> list[object]:
         if len(payload) != 4:
@@ -842,14 +725,10 @@ class H2Connection:
         inc = int.from_bytes(payload, "big") & 0x7FFFFFFF
         if inc == 0:
             raise H2ConnectionError(PROTOCOL_ERROR, "zero window increment")
-        events: list[object] = []
         if stream_id == 0:
             self.conn_send_window += inc
             if self.conn_send_window > MAX_WINDOW:
                 raise H2ConnectionError(FLOW_CONTROL_ERROR, "window overflow")
-            # the re-opened connection window is shared: distribute it
-            # by RFC 9218 priority instead of insertion order
-            events.extend(self._scheduled_flush())
         else:
             st = self.streams.get(stream_id)
             if st is None:
@@ -868,33 +747,9 @@ class H2Connection:
                 return []
             st.send_window += inc
             if st.send_window > MAX_WINDOW:
-                self.send_rst_stream(stream_id, FLOW_CONTROL_ERROR)
+                self._rst_and_retire(st, FLOW_CONTROL_ERROR)
                 return [StreamReset(stream_id, FLOW_CONTROL_ERROR)]
-            had = bool(st.pending)
-            self._flush_stream(st)
-            if had and not st.pending:
-                events.append(WindowOpened(stream_id))
-        return events
-
-    def _on_priority_update(self, stream_id: int, payload: bytes) -> list[object]:
-        """RFC 9218 §7: PRIORITY_UPDATE rides stream 0 and names the
-        prioritized stream in its payload. Applied live if the stream
-        is open; stashed (bounded) if it raced ahead of the stream's
-        HEADERS; ignored for closed streams."""
-        if stream_id != 0:
-            raise H2ConnectionError(PROTOCOL_ERROR, "PRIORITY_UPDATE on a stream")
-        if len(payload) < 4:
-            raise H2ConnectionError(FRAME_SIZE_ERROR, "bad PRIORITY_UPDATE length")
-        target = int.from_bytes(payload[0:4], "big") & 0x7FFFFFFF
-        if target == 0:
-            raise H2ConnectionError(PROTOCOL_ERROR, "PRIORITY_UPDATE for stream 0")
-        urgency, incremental = parse_priority_field(payload[4:])
-        if target in self.streams:
-            self.set_priority(target, urgency, incremental)
-        elif self._peer_initiated(target) and target > self._highest_peer_stream:
-            if len(self._stashed_priorities) < MAX_STASHED_PRIORITIES:
-                self._stashed_priorities[target] = (urgency, incremental)
-        return []
+        return self._flush_blocked()
 
     def _on_rst(self, stream_id: int, payload: bytes) -> list[object]:
         if len(payload) != 4:
@@ -902,8 +757,7 @@ class H2Connection:
         if stream_id == 0:
             raise H2ConnectionError(PROTOCOL_ERROR, "RST_STREAM on stream 0")
         code = int.from_bytes(payload, "big")
-        st = self.streams.get(stream_id)
-        if st is None:
+        if self.streams.pop(stream_id, None) is None:
             # RST for an idle stream is a connection error (§6.4); for a
             # retired (closed) stream it is ignored
             idle = (
@@ -914,10 +768,6 @@ class H2Connection:
             if idle:
                 raise H2ConnectionError(PROTOCOL_ERROR, "RST_STREAM on idle stream")
             return []
-        st.reset = True
-        st.recv_closed = st.send_closed = True
-        st.pending.clear()
-        self.streams.pop(stream_id, None)
         return [StreamReset(stream_id, code)]
 
     def _on_ping(self, flags: int, payload: bytes) -> list[object]:

@@ -20,11 +20,7 @@ import time
 import pytest
 
 from bristle_spark.ingest import service as svc
-from bristle_spark.ingest.fixtures import (
-    example_binding,
-    example_descriptor_set,
-)
-from bristle_spark.ingest.server import IngestServer
+from bristle_spark.ingest.fixtures import example_binding
 from bristle_spark.ingest.service import (
     ClientBackoff,
     IngestSocketClient,
@@ -76,39 +72,17 @@ def test_client_backoff_wait_sleeps_remaining():
 # ------------------------------------------------------- service loop
 
 
-@pytest.fixture()
-def example_server(spark, tmp_path):
-    (tmp_path / "example.pb").write_bytes(example_descriptor_set())
-    cfg = {
-        "autobind": True,
-        "proto_descriptor_paths": ["example.pb"],
-        "tables": [
-            {
-                "name": "default.example_table",
-                "columns": [
-                    {"name": c.name, "type": c.ch_type, "default": c.default}
-                    for c in example_binding().sink_columns
-                ],
-                "ts_column": "timestamp",
-            }
-        ],
-    }
-    cfg_path = tmp_path / "config.json"
-    cfg_path.write_text(json.dumps(cfg))
-    yield IngestServer(spark, str(cfg_path), str(tmp_path / "data"))
-
-
 def _body(i: int) -> bytes:
     from bristle_spark.ingest.fixtures import encode_example_row
 
     return encode_example_row(name=f"bo_{i}", value=i)
 
 
-def test_socket_service_emits_backoff_and_client_defers(spark, example_server):
+def test_socket_service_emits_backoff_and_client_defers(spark, three_table_server):
     """Admission rejection with backoff_ms set sends the advisory; the
     client's next send of that type defers by the remaining window."""
     with IngestSocketService(
-        example_server, max_in_flight=0, backoff_ms=400
+        three_table_server, max_in_flight=0, backoff_ms=400
     ) as service:
         with IngestSocketClient("127.0.0.1", service.port) as client:
             t0 = time.monotonic()
@@ -125,10 +99,10 @@ def test_socket_service_emits_backoff_and_client_defers(spark, example_server):
             assert elapsed >= 0.25  # deferred (400ms window minus slack)
 
 
-def test_backoff_scoped_to_listed_type_socket(spark, example_server):
+def test_backoff_scoped_to_listed_type_socket(spark, three_table_server):
     """An advisory naming one type does not defer sends of another."""
     with IngestSocketService(
-        example_server, max_in_flight=0, backoff_ms=10_000
+        three_table_server, max_in_flight=0, backoff_ms=10_000
     ) as service:
         with IngestSocketClient("127.0.0.1", service.port) as client:
             client.write_batch([_body(0)], type_name="ExampleMessage")
@@ -144,14 +118,14 @@ def test_backoff_scoped_to_listed_type_socket(spark, example_server):
             assert time.monotonic() - t0 < 2.0
 
 
-def test_grpc_client_defers_on_backoff(spark, example_server):
+def test_grpc_client_defers_on_backoff(spark, three_table_server):
     from bristle_spark.ingest.grpc_transport import (
         GrpcIngestClient,
         GrpcIngestService,
     )
 
     with GrpcIngestService(
-        example_server, max_in_flight=0, backoff_ms=400
+        three_table_server, max_in_flight=0, backoff_ms=400
     ) as service:
         with GrpcIngestClient("127.0.0.1", service.port) as client:
             t0 = time.monotonic()
@@ -166,7 +140,7 @@ def test_grpc_client_defers_on_backoff(spark, example_server):
             assert elapsed >= 0.25
 
 
-def test_forwarder_defers_on_backoff(spark, example_server):
+def test_forwarder_defers_on_backoff(spark, three_table_server):
     """The JSON forwarder (D14) inherits deferral through its client:
     after an admission rejection arms the advisory, the next flush
     waits out the window before sending."""
@@ -174,7 +148,7 @@ def test_forwarder_defers_on_backoff(spark, example_server):
 
     line = json.dumps({"name": "fw", "value": 1})
     with IngestSocketService(
-        example_server, max_in_flight=0, backoff_ms=500
+        three_table_server, max_in_flight=0, backoff_ms=500
     ) as service:
         with IngestSocketClient("127.0.0.1", service.port) as client:
             fw = JsonForwarder(client, example_binding(), max_buffer=1)
@@ -187,10 +161,10 @@ def test_forwarder_defers_on_backoff(spark, example_server):
             assert fw.stats.results.get("TOO_MANY_IN_FLIGHT_BATCHES", 0) >= 2
 
 
-def test_backoff_off_by_default(spark, example_server):
+def test_backoff_off_by_default(spark, three_table_server):
     """backoff_ms=0 (the default) reproduces the reference server's
     behavior exactly: no advisory is ever emitted."""
-    with IngestSocketService(example_server, max_in_flight=0) as service:
+    with IngestSocketService(three_table_server, max_in_flight=0) as service:
         with IngestSocketClient("127.0.0.1", service.port) as client:
             client.write_batch([_body(0)], type_name="ExampleMessage")
             client.write_batch([_body(1)], type_name="ExampleMessage")

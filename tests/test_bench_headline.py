@@ -52,6 +52,33 @@ def test_headline_has_no_duplicates():
     assert len(set(_bench.HEADLINE)) == len(_bench.HEADLINE)
 
 
+def test_noisy_key_gets_a_third_run_and_keeps_the_min(monkeypatch):
+    """Two runs more than 2x apart take a third and keep the min; runs
+    within 2x take no third. A fake clock makes each run's wall the
+    next value of its script, and every run is followed by a reset."""
+
+    def walls_of(script: list[float]) -> tuple[float, int, int]:
+        clock = [0.0]
+        pending = list(script)
+        calls = {"run": 0, "reset": 0}
+
+        def run():
+            calls["run"] += 1
+            clock[0] += pending.pop(0)
+
+        def reset():
+            calls["reset"] += 1
+
+        monkeypatch.setattr(_bench.time, "perf_counter", lambda: clock[0])
+        best = _bench.min_wall(run, reset, runs=2)
+        return best, calls["run"], calls["reset"]
+
+    assert walls_of([5.0, 2.0, 1.5]) == (1.5, 3, 3)  # 2.5x apart: third run
+    assert walls_of([1.0, 3.0, 0.5]) == (0.5, 3, 3)
+    assert walls_of([2.0, 4.0]) == (2.0, 2, 2)  # exactly 2x: no third run
+    assert walls_of([1.75, 1.0]) == (1.0, 2, 2)
+
+
 def test_summary_write_gated_on_closing_methodology():
     """Only a full-HEADLINE warm min-of-2 run may overwrite
     bench_summary.json: scratch selections AND methodology overrides

@@ -156,7 +156,7 @@ def test_rst_stream_event_and_drop():
     sid = client.next_stream_id()
     client.send_headers(sid, REQ)
     server.receive_data(client.data_to_send())
-    server.send_rst_stream(sid, h2.CANCEL)
+    server.reset_stream(sid, h2.CANCEL)
     ev = client.receive_data(server.data_to_send())
     assert StreamReset(sid, h2.CANCEL) in ev
     # further sends on the reset stream are dropped silently
@@ -237,6 +237,123 @@ def test_window_opened_event_after_update():
     ev = client.receive_data(server.data_to_send())
     assert any(isinstance(e, WindowOpened) for e in ev)
     assert not client.streams[sid].pending
+
+
+# --- flow-blocked streams: one arrival-order flush pass ---
+
+RESP = [(b":status", b"200"), (b"content-type", b"application/grpc")]
+# RFC 9218 §7.1 frame type; h2 has no handler for it, so it falls to the
+# unknown-frame rule (ignored), as in grpc-go
+PRIORITY_UPDATE = 0x10
+
+
+def _exhaust_conn_window(client: H2Connection, server: H2Connection) -> int:
+    """Open a filler stream and spend the whole 65535-byte connection
+    window on it, WITHOUT letting the server's replenishing
+    WINDOW_UPDATEs flow back yet. Returns the filler stream id."""
+    filler = client.next_stream_id()
+    client.send_headers(filler, REQ)
+    client.send_data(filler, b"x" * h2.DEFAULT_WINDOW)
+    server.receive_data(client.data_to_send())
+    assert client.conn_send_window == 0
+    return filler
+
+
+def _data_stream_order(conn: H2Connection, wire: bytes) -> list[int]:
+    return [
+        e.stream_id
+        for e in conn.receive_data(wire)
+        if isinstance(e, DataReceived) and e.data
+    ]
+
+
+def test_blocked_streams_complete_in_arrival_order():
+    client, server = handshake()
+    _exhaust_conn_window(client, server)
+    s1 = client.next_stream_id()
+    s2 = client.next_stream_id()
+    client.send_headers(s1, REQ)
+    client.send_headers(s2, REQ)
+    client.send_data(s1, b"a" * 40_000)
+    client.send_data(s2, b"b" * 40_000)
+    server.receive_data(client.data_to_send())
+    client.receive_data(server.data_to_send())
+    order = _data_stream_order(server, client.data_to_send())
+    # sequential completion in arrival order: every s1 frame precedes
+    # every s2 frame in the burst
+    assert order and max(i for i, s in enumerate(order) if s == s1) < min(
+        i for i, s in enumerate(order) if s == s2
+    )
+
+
+def test_stream_window_blocked_stream_does_not_hold_back_later_stream():
+    client, server = handshake()
+    s1 = client.next_stream_id()
+    s2 = client.next_stream_id()
+    client.send_headers(s1, REQ)
+    client.send_headers(s2, REQ)
+    server.receive_data(client.data_to_send())
+    server.send_headers(s1, RESP)
+    server.send_headers(s2, RESP)
+    server.send_data(s1, b"a" * h2.DEFAULT_WINDOW)  # spends s1's and the conn window
+    server.send_data(s1, b"a" * 1000)  # blocked by both windows
+    server.send_data(s2, b"b" * 1000)  # blocked by the connection window only
+    client.receive_data(server.data_to_send())
+    client.data_to_send()  # drop the client's replenishing WINDOW_UPDATEs
+    assert server.conn_send_window == 0
+    ev = server.receive_data(
+        encode_frame(h2.WINDOW_UPDATE, 0, 0, (5000).to_bytes(4, "big"))
+    )
+    assert ev == [WindowOpened(s2)]
+    assert _data_stream_order(client, server.data_to_send()) == [s2]
+    assert server.streams[s1].pending  # still waiting on its own window
+
+
+def test_stream_ended_by_a_window_update_flush_is_retired():
+    """A stream whose END_STREAM DATA leaves on a stream WINDOW_UPDATE,
+    after the request already ended, is fully closed: its state is dropped."""
+    client, server = handshake()
+    sid = client.next_stream_id()
+    client.send_headers(sid, REQ, end_stream=True)
+    server.receive_data(client.data_to_send())
+    server.send_headers(sid, RESP)
+    server.send_data(sid, b"r" * (h2.DEFAULT_WINDOW + 10), end_stream=True)
+    assert server.streams[sid].pending
+    client.receive_data(server.data_to_send())
+    server.receive_data(client.data_to_send())  # conn + stream WINDOW_UPDATEs
+    assert sid not in server.streams
+
+
+def test_priority_signals_are_ignored():
+    """Like grpc-go, the stack reads neither the RFC 9218 `priority`
+    request header nor PRIORITY_UPDATE frames: a `u=0` header on the
+    later stream and PRIORITY_UPDATEs on stream 0, on a stream and with
+    a short payload raise nothing, and the blocked responses still
+    complete in arrival order."""
+    client, server = handshake()
+    filler, s1, s2 = (client.next_stream_id() for _ in range(3))
+    client.send_headers(filler, REQ)
+    client.send_headers(s1, REQ)
+    client.send_headers(s2, REQ + [(b"priority", b"u=0")])
+    server.receive_data(client.data_to_send())
+    for sid in (filler, s1, s2):
+        server.send_headers(sid, RESP)
+    server.send_data(filler, b"x" * h2.DEFAULT_WINDOW)  # spends the conn window
+    server.send_data(s1, b"a" * 40_000)
+    server.send_data(s2, b"b" * 40_000)
+    client.receive_data(server.data_to_send())
+    assert server.conn_send_window == 0
+    for sid, payload in (
+        (0, s2.to_bytes(4, "big") + b"u=0"),
+        (s2, s2.to_bytes(4, "big") + b"u=0"),
+        (0, b"\x00\x00"),
+    ):
+        assert server.receive_data(encode_frame(PRIORITY_UPDATE, 0, sid, payload)) == []
+    server.receive_data(client.data_to_send())  # replenishing WINDOW_UPDATEs
+    order = _data_stream_order(client, server.data_to_send())
+    assert order and max(i for i, s in enumerate(order) if s == s1) < min(
+        i for i, s in enumerate(order) if s == s2
+    )
 
 
 # --- round-10 hardening: stream-state policing + bounded state (§5.1) ---
@@ -556,6 +673,28 @@ def test_app_reset_stream_closes_and_noops_on_unknown():
             if f[0] == h2.RST_STREAM and f[1] == sid]
     assert rsts and int.from_bytes(rsts[0][2], "big") == h2.PROTOCOL_ERROR
     server.reset_stream(999)  # unknown: no-op, no crash
+    assert 999 not in server.streams
+
+
+def test_stream_window_overflow_resets_retire_the_stream():
+    """A stream reset for overflowing its send window (§6.9.1) is
+    retired: as many overflows as the concurrency cap leave no state
+    behind, and the next stream still opens."""
+    client, server = handshake()
+    server.max_streams = 4
+    for _ in range(4):
+        sid = client.next_stream_id()
+        client.send_headers(sid, REQ)
+        server.receive_data(client.data_to_send())
+        ev = server.receive_data(
+            encode_frame(h2.WINDOW_UPDATE, 0, sid, h2.MAX_WINDOW.to_bytes(4, "big"))
+        )
+        assert ev == [StreamReset(sid, h2.FLOW_CONTROL_ERROR)]
+    assert server.streams == {}
+    sid = client.next_stream_id()
+    client.send_headers(sid, REQ)
+    ev = server.receive_data(client.data_to_send())
+    assert [e.stream_id for e in ev if isinstance(e, HeadersReceived)] == [sid]
 
 
 @pytest.mark.parametrize(

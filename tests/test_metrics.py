@@ -9,7 +9,6 @@ they generate, never absolute values."""
 
 from __future__ import annotations
 
-import json
 import urllib.request
 
 import pytest
@@ -104,32 +103,11 @@ def test_debug_server_from_config():
 # ----------------------------------------------------- front-door deltas
 
 
-def test_socket_front_door_advances_counters(spark, tmp_path):
-    from bristle_spark.ingest.fixtures import (
-        encode_example_row,
-        example_binding,
-        example_descriptor_set,
-    )
-    from bristle_spark.ingest.server import IngestServer
+def test_socket_front_door_advances_counters(three_table_server):
+    from bristle_spark.ingest.fixtures import encode_example_row
     from bristle_spark.ingest.service import IngestSocketClient, IngestSocketService
 
-    (tmp_path / "example.pb").write_bytes(example_descriptor_set())
-    cfg = {
-        "autobind": True,
-        "proto_descriptor_paths": ["example.pb"],
-        "tables": [
-            {
-                "name": "default.example_table",
-                "columns": [
-                    {"name": c.name, "type": c.ch_type, "default": c.default}
-                    for c in example_binding().sink_columns
-                ],
-            }
-        ],
-    }
-    (tmp_path / "config.json").write_text(json.dumps(cfg))
-    server = IngestServer(spark, str(tmp_path / "config.json"), str(tmp_path / "data"))
-
+    server = three_table_server
     bodies = [encode_example_row(name=f"m_{i}", value=i) for i in range(5)]
     ok0 = M.BATCHES.value("socket", "OK")
     unk0 = M.BATCHES.value("socket", "UNK_MESSAGE")
@@ -161,36 +139,15 @@ def test_socket_front_door_advances_counters(spark, tmp_path):
     assert M.BATCHES.value("socket", "OK") == ok0 + 1
 
 
-def test_grpc_front_door_advances_rpc_counters(spark, tmp_path):
-    from bristle_spark.ingest.fixtures import (
-        encode_example_row,
-        example_binding,
-        example_descriptor_set,
-    )
+def test_grpc_front_door_advances_rpc_counters(three_table_server):
+    from bristle_spark.ingest.fixtures import encode_example_row
     from bristle_spark.ingest.grpc_transport import (
         GrpcIngestClient,
         GrpcIngestService,
         grpc_write_batch_unary,
     )
-    from bristle_spark.ingest.server import IngestServer
 
-    (tmp_path / "example.pb").write_bytes(example_descriptor_set())
-    cfg = {
-        "autobind": True,
-        "proto_descriptor_paths": ["example.pb"],
-        "tables": [
-            {
-                "name": "default.example_table",
-                "columns": [
-                    {"name": c.name, "type": c.ch_type, "default": c.default}
-                    for c in example_binding().sink_columns
-                ],
-            }
-        ],
-    }
-    (tmp_path / "config.json").write_text(json.dumps(cfg))
-    server = IngestServer(spark, str(tmp_path / "config.json"), str(tmp_path / "data"))
-
+    server = three_table_server
     started0 = M.RPC_STARTED.value("WriteBatch")
     handled0 = M.RPC_HANDLED.value("WriteBatch", "0")
     s_started0 = M.RPC_STARTED.value("Streaming")
