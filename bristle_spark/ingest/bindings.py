@@ -23,8 +23,9 @@ engine terms:
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import cached_property
 
-from bristle_spark.ingest.wire import LEN_KINDS, SCALAR_NUMERIC
+from bristle_spark.ingest.wire import LEN_KINDS, SCALAR_NUMERIC, Decoder, compile_decoder
 
 
 @dataclass(frozen=True)
@@ -69,6 +70,11 @@ class MessageBinding:
 
     def field_specs_by_number(self) -> dict[int, tuple[str, bool]]:
         return {f.number: f.wire_spec() for f in self.fields}
+
+    @cached_property
+    def decoder(self) -> Decoder:
+        """This message's compiled wire decoder, built on first use."""
+        return compile_decoder(self.field_specs_by_number())
 
     def validate(self) -> None:
         """Eager bind-time validation (reference clickhouse_table.go:204-226):

@@ -28,36 +28,46 @@ from bristle_spark.ingest.bindings import (
     SinkColumn,
 )
 
-# descriptor.proto message schemas, as {field_number: (kind, repeated)}
-_FILE_SET = {1: ("bytes", True)}  # FileDescriptorSet.file
-_FILE = {
-    1: ("string", False),  # name
-    2: ("string", False),  # package
-    4: ("bytes", True),  # message_type
-}
-_MESSAGE = {
-    1: ("string", False),  # name
-    2: ("bytes", True),  # field
-    3: ("bytes", True),  # nested_type
-    7: ("bytes", False),  # options (MessageOptions)
-}
-_FIELD = {
-    1: ("string", False),  # name
-    3: ("int32", False),  # number
-    4: ("enum", False),  # label (3 = LABEL_REPEATED)
-    5: ("enum", False),  # type
-    6: ("string", False),  # type_name (".pkg.Message" for message/enum)
-    8: ("bytes", False),  # options (FieldOptions)
-    10: ("string", False),  # json_name
-}
-_MESSAGE_OPTIONS = {
-    7: ("bool", False),  # map_entry
-    50001: ("string", False),  # bristle.bristle_table extension
-}
-_FIELD_OPTIONS = {
-    50001: ("string", False),  # bristle.bristle_column extension
-    50002: ("string", False),  # bristle.bristle_clickhouse_type extension
-}
+# descriptor.proto message decoders, compiled from {field_number: (kind, repeated)}
+_FILE_SET = wire.compile_decoder({1: ("bytes", True)})  # FileDescriptorSet.file
+_FILE = wire.compile_decoder(
+    {
+        1: ("string", False),  # name
+        2: ("string", False),  # package
+        4: ("bytes", True),  # message_type
+    }
+)
+_MESSAGE = wire.compile_decoder(
+    {
+        1: ("string", False),  # name
+        2: ("bytes", True),  # field
+        3: ("bytes", True),  # nested_type
+        7: ("bytes", False),  # options (MessageOptions)
+    }
+)
+_FIELD = wire.compile_decoder(
+    {
+        1: ("string", False),  # name
+        3: ("int32", False),  # number
+        4: ("enum", False),  # label (3 = LABEL_REPEATED)
+        5: ("enum", False),  # type
+        6: ("string", False),  # type_name (".pkg.Message" for message/enum)
+        8: ("bytes", False),  # options (FieldOptions)
+        10: ("string", False),  # json_name
+    }
+)
+_MESSAGE_OPTIONS = wire.compile_decoder(
+    {
+        7: ("bool", False),  # map_entry
+        50001: ("string", False),  # bristle.bristle_table extension
+    }
+)
+_FIELD_OPTIONS = wire.compile_decoder(
+    {
+        50001: ("string", False),  # bristle.bristle_column extension
+        50002: ("string", False),  # bristle.bristle_clickhouse_type extension
+    }
+)
 
 _LABEL_REPEATED = 3
 _TYPE_MESSAGE = 11
@@ -113,7 +123,7 @@ class DescriptorPool:
         self.messages: dict[str, MessageDesc] = {}
 
     def add_descriptor_set(self, data: bytes) -> None:
-        fds = wire.decode_message(bytes(data), _FILE_SET)
+        fds = _FILE_SET(bytes(data))
         for file_bytes in fds.get(1, []):
             self._add_file(file_bytes)
 
@@ -131,22 +141,22 @@ class DescriptorPool:
                 self.add_descriptor_set(fh.read())
 
     def _add_file(self, file_bytes: bytes) -> None:
-        f = wire.decode_message(file_bytes, _FILE)
+        f = _FILE(file_bytes)
         package = f.get(2, "")
         for msg_bytes in f.get(4, []):
             self._add_message(msg_bytes, package)
 
     def _add_message(self, msg_bytes: bytes, scope: str) -> None:
-        m = wire.decode_message(msg_bytes, _MESSAGE)
+        m = _MESSAGE(msg_bytes)
         name = m.get(1, "")
         full_name = f"{scope}.{name}" if scope else name
         desc = MessageDesc(full_name=full_name)
-        opts = wire.decode_message(m[7], _MESSAGE_OPTIONS) if 7 in m else {}
+        opts = _MESSAGE_OPTIONS(m[7]) if 7 in m else {}
         desc.map_entry = bool(opts.get(7, False))
         desc.bristle_table = opts.get(50001)
         for fd_bytes in m.get(2, []):
-            fd = wire.decode_message(fd_bytes, _FIELD)
-            fopts = wire.decode_message(fd[8], _FIELD_OPTIONS) if 8 in fd else {}
+            fd = _FIELD(fd_bytes)
+            fopts = _FIELD_OPTIONS(fd[8]) if 8 in fd else {}
             desc.fields.append(
                 FieldDesc(
                     name=fd.get(1, ""),

@@ -236,25 +236,26 @@ class H2Connection:
         return sid
 
     def _stream_for_send(self, stream_id: int) -> _Stream | None:
+        """The stream an application send goes out on, or None to drop
+        the send: one whose send side already ended (or will end once
+        its queued DATA or trailers go out), a retired stream, or a
+        peer-numbered stream the peer has not opened (RFC 9113 §5.1.1:
+        a server never sends first on an idle stream). Only a new
+        locally-numbered id creates state."""
         st = self.streams.get(stream_id)
-        if st is None:
-            retired = (
-                stream_id <= self._highest_peer_stream
-                if self._peer_initiated(stream_id)
-                else stream_id <= self._highest_local_opened
-            )
-            if retired:
-                # retired (closed or reset) stream — peer- or
-                # locally-numbered: a late application send must NOT
-                # resurrect it; sending on a closed stream is our own
-                # protocol violation
+        if st is not None:
+            if (
+                st.send_closed
+                or st.pending_trailers is not None
+                or (st.pending and st.pending[-1][1])
+            ):
                 return None
-            st = _Stream(stream_id, send_window=self.peer_initial_window)
-            self.streams[stream_id] = st
-            if not self._peer_initiated(stream_id):
-                self._highest_local_opened = max(
-                    self._highest_local_opened, stream_id
-                )
+            return st
+        if self._peer_initiated(stream_id) or stream_id <= self._highest_local_opened:
+            return None
+        st = _Stream(stream_id, send_window=self.peer_initial_window)
+        self.streams[stream_id] = st
+        self._highest_local_opened = stream_id
         return st
 
     def send_headers(
@@ -339,7 +340,7 @@ class H2Connection:
                 if last:
                     st.send_closed = True
             st.pending.pop(0)
-        if st.pending_trailers is not None and not st.send_closed:
+        if st.pending_trailers is not None:
             # the DATA queue just drained: the deferred trailers can now
             # go out in order (encoded here, at transmit time, so HPACK
             # dynamic-table order matches wire order)

@@ -52,12 +52,12 @@ def _to_cell(value: Any, kind: str) -> Any:
 def _decode_rows(
     bodies: Iterator[bytes], binding: MessageBinding
 ) -> Iterator[dict[str, Any]]:
-    specs = binding.field_specs_by_number()
+    decode = binding.decoder
     by_number = {f.number: f for f in binding.fields}
     for body in bodies:
         row: dict[str, Any] = {f.name: None for f in binding.fields}
         try:
-            decoded = wire.decode_message(bytes(body), specs)
+            decoded = decode(bytes(body))
             for number, value in decoded.items():
                 f = by_number[number]
                 if f.repeated and not f.is_map:

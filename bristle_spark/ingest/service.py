@@ -103,6 +103,29 @@ _SM_IDENTIFY_TYPE = 3
 
 # ------------------------------------------------------- envelope codec
 
+# StreamingClientMessage and StreamingServerMessage: a oneof of three
+# sub-messages, numbered _CM_* and _SM_* above
+_ENVELOPE = wire.compile_decoder({n: ("bytes", False) for n in (1, 2, 3)})
+_WRITE_BATCH = wire.compile_decoder(
+    {
+        1: ("uint32", False),  # id
+        2: ("string", False),  # type_name
+        3: ("uint32", False),  # type_id
+        4: ("uint32", False),  # length
+        5: ("bytes", False),  # data
+    }
+)
+_REGISTER_TYPE = wire.compile_decoder({1: ("string", False), 2: ("bytes", False)})
+_WRITE_BATCH_RESULT = wire.compile_decoder({1: ("uint32", False), 2: ("enum", False)})
+_BACKOFF = wire.compile_decoder({1: ("uint64", False), 2: ("string", True)})
+_IDENTIFY_TYPE = wire.compile_decoder({1: ("string", False), 2: ("uint32", False)})
+# WriteBatchRequest{key, repeated Payload} and Payload{type, repeated
+# body} share one shape
+_WRITE_BATCH_REQUEST = _PAYLOAD = wire.compile_decoder(
+    {1: ("string", False), 2: ("bytes", True)}
+)
+_WRITE_BATCH_RESPONSE = wire.compile_decoder({1: ("uint64", False), 2: ("uint64", False)})
+
 
 def encode_write_batch(
     batch_id: int,
@@ -166,30 +189,17 @@ def encode_backoff(until_ms: int, types: list[str]) -> bytes:
 
 
 def decode_server_message(buf: bytes) -> tuple[str, dict]:
-    msg = wire.decode_message(
-        buf,
-        {
-            _SM_WRITE_BATCH_RESULT: ("bytes", False),
-            _SM_BACKOFF: ("bytes", False),
-            _SM_IDENTIFY_TYPE: ("bytes", False),
-        },
-    )
+    msg = _ENVELOPE(buf)
     if _SM_WRITE_BATCH_RESULT in msg:
-        inner = wire.decode_message(
-            msg[_SM_WRITE_BATCH_RESULT], {1: ("uint32", False), 2: ("enum", False)}
-        )
+        inner = _WRITE_BATCH_RESULT(msg[_SM_WRITE_BATCH_RESULT])
         return "write_batch_result", {
             "id": inner.get(1, 0),
             "result": inner.get(2, OK),
         }
     if _SM_BACKOFF in msg:
-        inner = wire.decode_message(
-            msg[_SM_BACKOFF], {1: ("uint64", False), 2: ("string", True)}
-        )
+        inner = _BACKOFF(msg[_SM_BACKOFF])
         return "backoff", {"until": inner.get(1, 0), "types": inner.get(2, [])}
-    inner = wire.decode_message(
-        msg[_SM_IDENTIFY_TYPE], {1: ("string", False), 2: ("uint32", False)}
-    )
+    inner = _IDENTIFY_TYPE(msg[_SM_IDENTIFY_TYPE])
     return "identify_message_type", {"type": inner.get(1, ""), "id": inner.get(2, 0)}
 
 
@@ -208,10 +218,10 @@ def encode_write_batch_request(
 
 
 def decode_write_batch_request(buf: bytes) -> tuple[str, list[tuple[str, list[bytes]]]]:
-    msg = wire.decode_message(buf, {1: ("string", False), 2: ("bytes", True)})
+    msg = _WRITE_BATCH_REQUEST(buf)
     payloads: list[tuple[str, list[bytes]]] = []
     for raw in msg.get(2, []):
-        inner = wire.decode_message(raw, {1: ("string", False), 2: ("bytes", True)})
+        inner = _PAYLOAD(raw)
         payloads.append((inner.get(1, ""), inner.get(2, [])))
     return msg.get(1, ""), payloads
 
@@ -230,30 +240,14 @@ def encode_write_batch_response(acknowledged: int, dropped: int) -> bytes:
 
 
 def decode_write_batch_response(buf: bytes) -> tuple[int, int]:
-    msg = wire.decode_message(buf, {1: ("uint64", False), 2: ("uint64", False)})
+    msg = _WRITE_BATCH_RESPONSE(buf)
     return msg.get(1, 0), msg.get(2, 0)
 
 
 def _decode_client_message(buf: bytes) -> tuple[str, dict]:
-    msg = wire.decode_message(
-        buf,
-        {
-            _CM_WRITE_BATCH: ("bytes", False),
-            _CM_UPDATE_DEFAULT: ("bytes", False),
-            _CM_REGISTER_TYPE: ("bytes", False),
-        },
-    )
+    msg = _ENVELOPE(buf)
     if _CM_WRITE_BATCH in msg:
-        inner = wire.decode_message(
-            msg[_CM_WRITE_BATCH],
-            {
-                1: ("uint32", False),
-                2: ("string", False),
-                3: ("uint32", False),
-                4: ("uint32", False),
-                5: ("bytes", False),
-            },
-        )
+        inner = _WRITE_BATCH(msg[_CM_WRITE_BATCH])
         return "write_batch", {
             "id": inner.get(1, 0),
             "type_name": inner.get(2),
@@ -262,9 +256,7 @@ def _decode_client_message(buf: bytes) -> tuple[str, dict]:
             "data": inner.get(5, b""),
         }
     if _CM_REGISTER_TYPE in msg:
-        inner = wire.decode_message(
-            msg[_CM_REGISTER_TYPE], {1: ("string", False), 2: ("bytes", False)}
-        )
+        inner = _REGISTER_TYPE(msg[_CM_REGISTER_TYPE])
         return "register_message_type", {
             "type": inner.get(1, ""),
             "descriptor": inner.get(2, b""),
@@ -548,12 +540,12 @@ def process_batch(
     # frame-by-frame decode validation BEFORE the durable ack — the
     # reference's proto.Unmarshal loop (ingest_service.go:155-177);
     # the distributed pipeline re-decodes at scale on the drain path
-    specs = binding.field_specs_by_number()
-    for body in bodies:
-        try:
-            wire.decode_message(body, specs)
-        except Exception:
-            return DECODE_ERR
+    decode = binding.decoder
+    try:
+        for body in bodies:
+            decode(body)
+    except Exception:
+        return DECODE_ERR
 
     land_payload(server, binding, type_name, bodies)
     return OK

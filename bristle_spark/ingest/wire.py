@@ -9,18 +9,36 @@ container ships neither python-protobuf nor the spark-protobuf JVM
 connector, so the engine carries its own spec-driven codec:
 
 - field specs (bindings.py) play the role of the descriptor set;
-- ``decode_message`` is the dynamicpb.Unmarshal analog;
+- ``compile_decoder`` is the dynamicpb.Unmarshal analog: it compiles a
+  message's field specs once into a ``Decoder``, a table keyed by the
+  full tag (``number << 3 | wire type``) with one handler per wire type
+  the field's kind accepts, and a single-byte fast path for tags and
+  lengths. ``MessageBinding.decoder`` holds one per binding; the front
+  door's ack validation, the drain's decode and the envelope and
+  descriptor parsers all run it. ``decode_message`` compiles and runs
+  one in a single call;
 - ``split_frames`` is the protowire.ConsumeBytes framing loop;
 - ``encode_message`` exists for tests/fixtures (the client side,
   reference client/client.go:148-156).
+
+Decoding follows protobuf-go on two points where a lax loop would not:
+
+- a known field that arrives on a wire type its kind does not take is
+  skipped as an unknown field (errUnknown -> ConsumeFieldValue), so
+  ``08 05`` against a string field 1 decodes to ``{}``, not ``{1: 5}``;
+- a field that runs past the end of the message -- a length-delimited
+  payload (string, bytes, sub-message, packed run) longer than the
+  bytes left, a skipped fixed-width field cut short -- raises
+  (io.ErrUnexpectedEOF), so the front door acks DECODE_ERR.
 
 On a real deployment one would use Spark's `from_protobuf` (JVM,
 vectorized) with the same descriptor files bristle loads; this module
 keeps identical semantics in Arrow-batched Python (see pipeline.py).
 
 Wire types: 0 varint, 1 64-bit, 2 length-delimited, 5 32-bit.
-proto3 packed encoding is handled for repeated scalar numerics, and
-map<k,v> fields arrive as repeated (key=1, value=2) sub-messages.
+Repeated scalar numerics take both the packed (proto3 default) and the
+unpacked encoding, and map<k,v> fields arrive as repeated (key=1,
+value=2) sub-messages.
 """
 
 from __future__ import annotations
@@ -77,11 +95,6 @@ def zigzag_decode(value: int) -> int:
 
 def _to_signed64(value: int) -> int:
     return value - (1 << 64) if value >= (1 << 63) else value
-
-
-def _to_signed32(value: int) -> int:
-    value &= (1 << 32) - 1
-    return value - (1 << 32) if value >= (1 << 31) else value
 
 
 # ------------------------------------------------------------- encoding
@@ -158,116 +171,269 @@ def encode_message(fields: list[tuple[int, str, Any, bool]]) -> bytes:
 
 
 # ------------------------------------------------------------- decoding
+#
+# compile_decoder() turns {field_number: (kind, repeated)} into a table
+# keyed by the full tag (number << 3 | wire type). Each entry is a
+# handler ``handler(buf, pos, out) -> pos`` for one wire type the
+# field's kind accepts; a repeated numeric field has two, packed and
+# unpacked. A tag the table lacks -- an unknown field, or a known field
+# on a wire type its kind does not take -- is skipped as unknown, as
+# protobuf-go does (errUnknown -> ConsumeFieldValue). Every length and
+# fixed width is checked against the buffer: a truncated field raises
+# (protowire's io.ErrUnexpectedEOF).
+
+_TRUNCATED = "truncated field"
+# struct codes of the fixed-width kinds (little-endian on the wire)
+_FIXED_CODES = {
+    "double": "d",
+    "fixed64": "Q",
+    "sfixed64": "q",
+    "float": "f",
+    "fixed32": "I",
+    "sfixed32": "i",
+}
 
 
-def _decode_value(kind: str, wire_type: int, buf: bytes, pos: int) -> tuple[Any, int]:
-    if wire_type == 0:
-        raw, pos = decode_varint(buf, pos)
-        if kind in ZIGZAG_KINDS:
-            return zigzag_decode(raw), pos
-        if kind == "bool":
-            return bool(raw), pos
-        if kind in {"int32", "int64", "enum"}:
-            return _to_signed64(raw), pos
-        return raw, pos  # uint32/uint64
-    if wire_type == 1:
-        if kind == "double":
-            return struct.unpack_from("<d", buf, pos)[0], pos + 8
-        fmt = "<q" if kind == "sfixed64" else "<Q"
-        return struct.unpack_from(fmt, buf, pos)[0], pos + 8
-    if wire_type == 5:
-        if kind == "float":
-            return struct.unpack_from("<f", buf, pos)[0], pos + 4
-        fmt = "<i" if kind == "sfixed32" else "<I"
-        return struct.unpack_from(fmt, buf, pos)[0], pos + 4
-    if wire_type == 2:
-        length, pos = decode_varint(buf, pos)
-        payload = buf[pos : pos + length]
-        pos += length
-        if kind == "string":
-            return payload.decode("utf-8"), pos
-        if kind == "bytes":
-            return bytes(payload), pos
-        if kind == "timestamp":
-            return _decode_timestamp(payload), pos
-        return payload, pos  # caller-handled (packed / map entry)
-    raise ValueError(f"unsupported wire type {wire_type}")
-
-
-def _decode_timestamp(payload: bytes) -> tuple[int, int]:
-    seconds = nanos = 0
-    pos = 0
-    while pos < len(payload):
-        tag, pos = decode_varint(payload, pos)
-        number, wt = tag >> 3, tag & 7
-        val, pos = _decode_value("int64", wt, payload, pos)
-        if number == 1:
-            seconds = val
-        elif number == 2:
-            nanos = val
-    return seconds, nanos
-
-
-def _decode_packed(kind: str, payload: bytes) -> list:
-    values = []
-    pos = 0
-    wire_type = 1 if kind in FIXED64_KINDS else 5 if kind in FIXED32_KINDS else 0
-    while pos < len(payload):
-        v, pos = _decode_value(kind, wire_type, payload, pos)
-        values.append(v)
-    return values
+def _bounds(buf: bytes, pos: int) -> tuple[int, int]:
+    """(start, end) of the length-delimited payload whose length prefix
+    is at ``pos``."""
+    n = buf[pos]
+    if n < 0x80:
+        pos += 1
+    else:
+        n, pos = decode_varint(buf, pos)
+    end = pos + n
+    if end > len(buf):
+        raise ValueError(_TRUNCATED)
+    return pos, end
 
 
 def _skip(wire_type: int, buf: bytes, pos: int) -> int:
     if wire_type == 0:
         _, pos = decode_varint(buf, pos)
         return pos
-    if wire_type == 1:
-        return pos + 8
-    if wire_type == 5:
-        return pos + 4
     if wire_type == 2:
-        length, pos = decode_varint(buf, pos)
-        return pos + length
-    raise ValueError(f"unsupported wire type {wire_type}")
+        return _bounds(buf, pos)[1]
+    if wire_type == 1:
+        end = pos + 8
+    elif wire_type == 5:
+        end = pos + 4
+    else:
+        raise ValueError(f"unsupported wire type {wire_type}")
+    if end > len(buf):
+        raise ValueError(_TRUNCATED)
+    return end
+
+
+def _varint_conv(kind: str):
+    """The value a varint of ``kind`` decodes to, from its raw
+    unsigned value; None keeps it raw (uint32/uint64)."""
+    if kind in ZIGZAG_KINDS:
+        return zigzag_decode
+    if kind == "bool":
+        return bool
+    if kind in {"int32", "int64", "enum"}:
+        return _to_signed64
+    return None
+
+
+def _varint(number: int, conv, repeated: bool):
+    def handler(buf, pos, out):
+        v = buf[pos]
+        if v < 0x80:
+            pos += 1
+        else:
+            v, pos = decode_varint(buf, pos)
+        if conv is not None:
+            v = conv(v)
+        if repeated:
+            out.setdefault(number, []).append(v)
+        else:
+            out[number] = v
+        return pos
+
+    return handler
+
+
+def _fixed(number: int, code: str, repeated: bool):
+    unpack = struct.Struct("<" + code).unpack_from
+    width = struct.calcsize(code)
+
+    def handler(buf, pos, out):
+        v = unpack(buf, pos)[0]
+        if repeated:
+            out.setdefault(number, []).append(v)
+        else:
+            out[number] = v
+        return pos + width
+
+    return handler
+
+
+def _string(number: int, repeated: bool):
+    def handler(buf, pos, out):
+        n = buf[pos]
+        if n < 0x80:
+            pos += 1
+        else:
+            n, pos = decode_varint(buf, pos)
+        end = pos + n
+        if end > len(buf):
+            raise ValueError(_TRUNCATED)
+        if repeated:
+            out.setdefault(number, []).append(buf[pos:end].decode("utf-8"))
+        else:
+            out[number] = buf[pos:end].decode("utf-8")
+        return end
+
+    return handler
+
+
+def _delimited(number: int, convert, repeated: bool):
+    """bytes and google.protobuf.Timestamp: ``convert(payload)``."""
+
+    def handler(buf, pos, out):
+        start, end = _bounds(buf, pos)
+        v = convert(buf[start:end])
+        if repeated:
+            out.setdefault(number, []).append(v)
+        else:
+            out[number] = v
+        return end
+
+    return handler
+
+
+def _packed(number: int, kind: str):
+    """A packed repeated numeric: the payload's values extend the list
+    the unpacked handler appends to."""
+    if kind in _FIXED_CODES:
+        code = _FIXED_CODES[kind]
+        width = struct.calcsize(code)
+
+        def unpack(payload):
+            if len(payload) % width:
+                raise ValueError(_TRUNCATED)
+            return struct.unpack(f"<{len(payload) // width}{code}", payload)
+
+    else:
+        conv = _varint_conv(kind)
+
+        def unpack(payload):
+            values = []
+            pos = 0
+            while pos < len(payload):
+                v, pos = decode_varint(payload, pos)
+                values.append(v if conv is None else conv(v))
+            return values
+
+    def handler(buf, pos, out):
+        start, end = _bounds(buf, pos)
+        out.setdefault(number, []).extend(unpack(buf[start:end]))
+        return end
+
+    return handler
+
+
+def _map(number: int, entry: Decoder):
+    """map<k,v>: repeated (key=1, value=2) entries into one dict; an
+    entry without a key or value contributes None for it."""
+
+    def handler(buf, pos, out):
+        start, end = _bounds(buf, pos)
+        e = entry(buf[start:end])
+        out.setdefault(number, {})[e.get(1)] = e.get(2)
+        return end
+
+    return handler
+
+
+def _timestamp(payload: bytes) -> tuple[int, int]:
+    ts = _TIMESTAMP(payload)
+    return ts.get(1, 0), ts.get(2, 0)
+
+
+def _handlers(number: int, kind: str, repeated: bool) -> dict[int, Any]:
+    """{wire type: handler} for one field."""
+    if kind.startswith("map:"):
+        _, kk, vk = kind.split(":")
+        return {2: _map(number, compile_decoder({1: (kk, False), 2: (vk, False)}))}
+    if kind == "string":
+        return {2: _string(number, repeated)}
+    if kind == "bytes":
+        return {2: _delimited(number, bytes, repeated)}
+    if kind == "timestamp":
+        return {2: _delimited(number, _timestamp, repeated)}
+    if kind in VARINT_KINDS or kind in ZIGZAG_KINDS:
+        handlers = {0: _varint(number, _varint_conv(kind), repeated)}
+    elif kind in _FIXED_CODES:
+        wire_type = 1 if kind in FIXED64_KINDS else 5
+        handlers = {wire_type: _fixed(number, _FIXED_CODES[kind], repeated)}
+    else:
+        raise ValueError(f"unsupported kind {kind}")
+    if repeated:
+        handlers[2] = _packed(number, kind)
+    return handlers
+
+
+class Decoder:
+    """One compiled message decoder: ``decoder(buf) -> {number: value}``.
+
+    Unknown fields are skipped (proto3 semantics). Repeated fields
+    accumulate, packed or not. Map fields accumulate into a dict. Later
+    occurrences of a singular field win (proto3 last-one-wins).
+
+    Pickles as its field specs and recompiles on load: its handlers
+    hold ``struct.Struct`` unpackers, which do not pickle, and a
+    decoder rides in the closures Spark ships to executors."""
+
+    __slots__ = ("specs", "_table")
+
+    def __init__(self, specs: dict[int, tuple[str, bool]], table: dict[int, Any]) -> None:
+        self.specs = specs
+        self._table = table
+
+    def __reduce__(self):
+        return compile_decoder, (self.specs,)
+
+    def __call__(self, buf: bytes) -> dict[int, Any]:
+        table = self._table
+        out: dict[int, Any] = {}
+        pos = 0
+        end = len(buf)
+        while pos < end:
+            tag = buf[pos]
+            if tag < 0x80:
+                pos += 1
+            else:
+                tag, pos = decode_varint(buf, pos)
+            handler = table.get(tag)
+            if handler is None:
+                pos = _skip(tag & 7, buf, pos)
+            else:
+                pos = handler(buf, pos, out)
+        return out
+
+
+def compile_decoder(field_specs: dict[int, tuple[str, bool]]) -> Decoder:
+    """Compile {field_number: (kind, repeated)} into a Decoder; kind
+    "map:<kk>:<vk>" is a map field."""
+    specs = dict(field_specs)
+    table = {}
+    for number, (kind, repeated) in specs.items():
+        for wire_type, handler in _handlers(number, kind, repeated).items():
+            table[number << 3 | wire_type] = handler
+    return Decoder(specs, table)
+
+
+# google.protobuf.Timestamp{seconds=1, nanos=2}
+_TIMESTAMP = compile_decoder({1: ("int64", False), 2: ("int64", False)})
 
 
 def decode_message(buf: bytes, field_specs: dict[int, tuple[str, bool]]) -> dict[int, Any]:
-    """Decode one message given {field_number: (kind, repeated)}.
-
-    Unknown fields are skipped (proto3 semantics). Repeated fields
-    accumulate; packed scalar payloads are expanded. Map fields use
-    kind "map:<kk>:<vk>" and accumulate into a dict. Later occurrences
-    of a singular field win (proto3 last-one-wins)."""
-    out: dict[int, Any] = {}
-    pos = 0
-    while pos < len(buf):
-        tag, pos = decode_varint(buf, pos)
-        number, wire_type = tag >> 3, tag & 7
-        spec = field_specs.get(number)
-        if spec is None:
-            pos = _skip(wire_type, buf, pos)
-            continue
-        kind, repeated = spec
-        if kind.startswith("map:"):
-            _, kk, vk = kind.split(":")
-            payload, pos2 = _decode_value("bytes", wire_type, buf, pos)
-            pos = pos2
-            entry = decode_message(payload, {1: (kk, False), 2: (vk, False)})
-            out.setdefault(number, {})[entry.get(1)] = entry.get(2)
-            continue
-        if repeated and kind in SCALAR_NUMERIC and wire_type == 2:
-            length, pos2 = decode_varint(buf, pos)
-            values = _decode_packed(kind, buf[pos2 : pos2 + length])
-            out.setdefault(number, []).extend(values)
-            pos = pos2 + length
-            continue
-        value, pos = _decode_value(kind, wire_type, buf, pos)
-        if repeated:
-            out.setdefault(number, []).append(value)
-        else:
-            out[number] = value
-    return out
+    """Decode one message; callers that decode many hold a compiled
+    decoder instead."""
+    return compile_decoder(field_specs)(buf)
 
 
 # ------------------------------------------------------------- framing

@@ -484,6 +484,50 @@ def test_trailers_defer_behind_flow_blocked_data():
     assert sid not in server.streams
 
 
+def test_trailers_behind_data_that_ends_the_stream_are_refused():
+    """Once queued DATA already ends the stream, a trailing
+    send_headers(end_stream=True) is refused up front: nothing is parked
+    that the flush would never send, and once the DATA drains only it
+    reaches the wire and the stream retires with no trailers held."""
+    client, server = handshake()
+    sid = client.next_stream_id()
+    client.send_headers(sid, REQ, end_stream=True)
+    server.receive_data(client.data_to_send())
+    server.send_headers(sid, RESP)
+    server.send_data(sid, b"r" * (h2.DEFAULT_WINDOW + 10), end_stream=True)
+    st = server.streams[sid]
+    assert st.pending and not st.send_closed
+    server.send_headers(sid, [(b"grpc-status", b"0")], end_stream=True)
+    assert st.pending_trailers is None
+    server.send_data(sid, b"late")  # refused too: the stream is ending
+    ev = client.receive_data(server.data_to_send())
+    server.receive_data(client.data_to_send())  # replenishing WINDOW_UPDATEs
+    ev += client.receive_data(server.data_to_send())
+    assert sum(len(e.data) for e in ev if isinstance(e, DataReceived)) == (
+        h2.DEFAULT_WINDOW + 10
+    )
+    assert [e.end_stream for e in ev if isinstance(e, HeadersReceived)] == [False]
+    assert st.send_closed and st.pending_trailers is None
+    assert sid not in server.streams
+
+
+def test_send_on_an_unopened_peer_stream_is_dropped():
+    """RFC 9113 §5.1.1: a server must not send first on a client-numbered
+    stream the client has not opened. The send is dropped without
+    creating state, like a send on a retired stream."""
+    client, server = handshake()
+    sid = client.next_stream_id()
+    server.send_headers(sid, RESP)
+    server.send_data(sid + 2, b"x", end_stream=True)
+    assert server.streams == {}
+    assert server.data_to_send() == b""
+    client.send_headers(sid, REQ)
+    server.receive_data(client.data_to_send())
+    server.send_headers(sid, RESP)  # opened by the client: allowed
+    ev = client.receive_data(server.data_to_send())
+    assert [e.stream_id for e in ev if isinstance(e, HeadersReceived)] == [sid]
+
+
 # ----------------------------------------------- adversarial robustness
 
 

@@ -7,11 +7,12 @@ transcode -> sink-typed rows, over the reference's example fixtures
 from __future__ import annotations
 
 import datetime
+from types import SimpleNamespace
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bristle_spark.ingest import pipeline, wire
+from bristle_spark.ingest import pipeline, service, wire
 from bristle_spark.ingest.bindings import BindingRegistry, FieldSpec, MessageBinding, SinkColumn
 from bristle_spark.ingest.fixtures import (
     binance_binding,
@@ -150,6 +151,34 @@ def test_decode_error_quarantine(spark):
     err = pipeline.quarantined(decoded).collect()[0][pipeline.ERROR_COL]
     assert err.startswith("DECODE_ERR")
     assert pipeline.transcode(decoded, binding).count() == 1
+
+
+def test_wire_type_mismatch_is_acked_and_lands_with_null_field(spark, tmp_path):
+    """A known field on the wrong wire type is an unknown field to
+    protobuf-go, so the front door acks the batch OK, and the drain
+    decodes that field as NULL (unset) and lands the row, instead of
+    failing the task on an int in the string column. A truncated field
+    still acks DECODE_ERR."""
+    binding = finnhub_binding()
+    registry = BindingRegistry()
+    registry.register(binding)
+    server = SimpleNamespace(registry=registry, data_root=str(tmp_path))
+    poison = b"\x08\x05"  # field 1, the string symbol, sent as a varint
+    good = wire.encode_message([(1, "string", "AAPL", False), (2, "double", 1.5, False)])
+
+    def batch(bodies):
+        return {"id": 1, "type_name": binding.message_name, "type_id": None,
+                "data": wire.join_frames(bodies)}
+
+    assert service.process_batch(server, {}, batch([poison, good]), 10) == service.OK
+    assert service.process_batch(server, {}, batch([b"\x0a\x05ab"]), 10) == service.DECODE_ERR
+    landed = spark.read.parquet(str(tmp_path / "payloads" / binding.sink_table.replace(".", "__")))
+    decoded = pipeline.decode(landed, binding)
+    assert pipeline.quarantined(decoded).count() == 0
+    assert sorted(r["symbol"] or "-" for r in decoded.collect()) == ["-", "AAPL"]
+    # the sink's String and Float64 columns take the proto3 zero value
+    rows = pipeline.transcode(decoded, binding).collect()
+    assert sorted((r["symbol"], r["price"]) for r in rows) == [("", 0.0), ("AAPL", 1.5)]
 
 
 def test_binding_validation_rejects_missing_column():
