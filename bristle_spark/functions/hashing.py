@@ -58,20 +58,8 @@ def hash60_sql(expr: str) -> str:
     return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
 
 
-def hash31(col: Column) -> Column:
-    """Hash reduced mod P for use as MinHash input."""
-    return hash60(col) % MINHASH_P
-
-
 def hash31_sql(expr: str) -> str:
     return f"({hash60_sql(expr)} % {MINHASH_P})"
-
-
-def minhash_expr(j: int, hashes_col: Column) -> Column:
-    """j-th MinHash over an array<bigint> of 31-bit shingle hashes
-    (row-local array formulation)."""
-    a, b = MINHASH_A[j], MINHASH_B[j]
-    return F.array_min(F.transform(hashes_col, lambda h: (F.lit(a) * h + F.lit(b)) % MINHASH_P))
 
 
 def minhash_min_agg(j: int, h: Column) -> Column:

@@ -41,11 +41,6 @@ FULL_RETRIES = 1  # FULL is the protocol's retryable server-side failure
 
 _EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
-_INT_KINDS = {
-    "int32", "int64", "sint32", "sint64", "sfixed32", "sfixed64",
-    "uint32", "uint64", "fixed32", "fixed64", "enum",
-}
-
 
 def _timestamp_parts(v: Any) -> tuple[int, int]:
     """protojson timestamp (RFC 3339 string, 'Z' or offset, optional
@@ -68,7 +63,7 @@ def _timestamp_parts(v: Any) -> tuple[int, int]:
 
 
 def _coerce(kind: str, v: Any) -> Any:
-    if kind in _INT_KINDS:
+    if kind in wire.INT_KINDS:
         return int(v)
     if kind == "bool":
         return bool(v)

@@ -17,13 +17,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bristle_spark.ingest.bindings import FieldSpec, MessageBinding
+from bristle_spark.ingest.wire import INT_KINDS
 from bristle_spark.transcode import build_select
 
 _JSON_TYPES: dict[str, T.DataType] = {
-    **{k: T.LongType() for k in (
-        "int32", "int64", "sint32", "sint64", "sfixed32", "sfixed64",
-        "uint32", "uint64", "fixed32", "fixed64", "enum",
-    )},
+    **{k: T.LongType() for k in INT_KINDS},
     "bool": T.BooleanType(),
     "float": T.DoubleType(),
     "double": T.DoubleType(),

@@ -52,6 +52,7 @@ FIXED64_KINDS = {"fixed64", "sfixed64", "double"}
 FIXED32_KINDS = {"fixed32", "sfixed32", "float"}
 LEN_KINDS = {"string", "bytes", "timestamp"}
 SCALAR_NUMERIC = VARINT_KINDS | ZIGZAG_KINDS | FIXED64_KINDS | FIXED32_KINDS
+INT_KINDS = SCALAR_NUMERIC - {"bool", "float", "double"}  # the eleven integer kinds
 
 
 # ------------------------------------------------------------- varints

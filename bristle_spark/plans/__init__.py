@@ -49,10 +49,6 @@ def exchange_count(df: DataFrame) -> int:
     )
 
 
-def codegen_span_count(df: DataFrame) -> int:
-    return len(set(re.findall(r"\*\((\d+)\)", plan_string(df, "simple"))))
-
-
 def _top_level_bracket_groups(s: str) -> list[str]:
     """Split ``[a, [b]], [c]`` into top-level ``[...]`` groups."""
     groups, depth, start = [], 0, -1

@@ -10,6 +10,21 @@ appends flush-sentinel micro-batches (split_events_files_with_flush)
 — watermark punctuation, the same keep-alive events a production
 stream carries.
 
+One drain, one landing. Every key builds its source with
+``_event_stream`` and runs it through ``_run`` (availableNow on a
+throwaway checkpoint, or the persistent one under a restart replay).
+Keys whose state lands as per-batch partials go through ``_drain``:
+each micro-batch's ``partial(batch)`` lands with ``_land_idempotent``
+and is read back with ``_landed``. foreachBatch is at-least-once — a
+crash between the parquet write and the checkpoint commit replays the
+batch — so a sink is exactly-once only if re-landing a batch_id
+replaces its earlier landing. Landing under a batch_id-keyed
+directory with overwrite gives every key that property, whether its
+merge is additive (counts would double) or duplicate-insensitive
+(bloom OR, skyline dominance). The upsert and CDC keys keep a
+generation-swapped sink instead (``_merge_generation``), which is
+idempotent per batch_id the same way.
+
 Still rows-only by SURVEY §2.D contract (accounting, not state):
 - s_microbatch_flush: D9 — one micro-batch per trigger, sizes bounded
   by the source rate limit (maxFilesPerTrigger), foreachBatch sink.
@@ -39,6 +54,7 @@ from bristle_spark.functions.rounding import r6, rN, rN_sql
 from bristle_spark.streaming.buffer import POLICIES, BoundedBuffer
 from bristle_spark.streaming.source import (
     FLUSH_EVENT_TYPE,
+    active_replay,
     events_file_stream,
     split_events_files,
     split_events_files_with_flush,
@@ -68,12 +84,22 @@ def _workdir(sf_dir: str, tag: str) -> str:
     return d
 
 
+def _event_stream(
+    spark: SparkSession, sf_dir: str, tag: str, split=split_events_files, **split_kw
+) -> tuple[str, DataFrame]:
+    """The ``events`` table replayed as a file stream, one chunk file per
+    micro-batch. ``split(spark, sf_dir, work, **split_kw)`` writes the
+    chunk dir (cached across runs) under the key's work dir; returns
+    ``(work dir, stream)``."""
+    work = _workdir(sf_dir, tag)
+    data_dir = split(spark, sf_dir, work, **split_kw)
+    return work, events_file_stream(spark, data_dir, load_table(spark, sf_dir, "events").schema)
+
+
 def _fresh_dir(path: str, mkdir: bool = False) -> str:
     """Start the query's emission dir clean — EXCEPT under stage 2 of a
     restart replay, where the stage-1 emissions ARE the recovered state
     being tested and must survive the re-invocation."""
-    from bristle_spark.streaming.source import active_replay
-
     ctl = active_replay()
     keep = ctl is not None and ctl.stage >= 2
     if os.path.exists(path) and not keep:
@@ -83,33 +109,28 @@ def _fresh_dir(path: str, mkdir: bool = False) -> str:
     return path
 
 
-def _run_available_now(writer, checkpoint: str) -> None:
-    from bristle_spark.streaming.source import active_replay
-
+def _run(df: DataFrame, output_mode: str, sink) -> None:
+    """Run ``df`` to the end of its source as an availableNow query,
+    handing each micro-batch to ``sink(batch, batch_id)``."""
     ctl = active_replay()
-    if ctl is not None:
+    with tempfile.TemporaryDirectory() as ckpt:
         # restart replay: the persistent checkpoint (offset log + state
-        # store) replaces the caller's throwaway dir, so stage 2 resumes
-        # from stage 1's recorded offsets instead of replaying file 0
-        checkpoint = ctl.checkpoint_dir()
-    q = (
-        writer.option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        # store) replaces the throwaway dir, so stage 2 resumes from
+        # stage 1's recorded offsets instead of replaying file 0
+        q = (
+            df.writeStream.outputMode(output_mode)
+            .foreachBatch(sink)
+            .option("checkpointLocation", ctl.checkpoint_dir() if ctl else ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
 
 
 def _land_idempotent(df: DataFrame, out_dir: str, batch_id: int) -> None:
-    """Idempotent micro-batch landing for duplicate-SENSITIVE partials.
-
-    foreachBatch is at-least-once: a crash between the parquet write
-    and the checkpoint commit replays the batch on restart.  Additive
-    cell counts double under a plain ``mode('append')`` re-landing
-    (unlike the duplicate-insensitive skyline/bloom merges), so each
-    batch lands under its own batch_id-keyed subdirectory with
-    ``mode('overwrite')`` — a replayed batch clobbers its previous
-    landing instead of double-counting (ADVICE r14).  Read back with
+    """Land one micro-batch's partial under its own batch_id-keyed
+    subdirectory with ``mode('overwrite')``: a replayed batch replaces
+    its previous landing instead of landing twice. Read back with
     ``_landed()``.
 
     coalesce(1) (r15, guide §6): the partials are one row per key per
@@ -131,24 +152,32 @@ def _landed(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(out_dir, "b*"))
 
 
+def _drain(
+    spark: SparkSession, df: DataFrame, work: str, output_mode: str, partial=None
+) -> DataFrame:
+    """Run ``df`` through ``_run``, land ``partial(batch)`` (the batch
+    itself by default) for every micro-batch with ``_land_idempotent``
+    under a fresh per-process dir in ``work``, and return the landed
+    partials. The landed rows stay executor-side: nothing but the
+    batch id crosses to the driver. With no micro-batch there is
+    nothing to read back, so the result is an empty frame with the
+    schema ``partial`` gives a batch of ``df``."""
+    partial = partial or (lambda batch: batch)
+    out_dir = _fresh_dir(os.path.join(work, f"landed_{os.getpid()}"))
+    _run(df, output_mode, lambda batch, batch_id: _land_idempotent(partial(batch), out_dir, batch_id))
+    if not os.path.isdir(out_dir):
+        return partial(spark.createDataFrame([], df.schema))
+    return _landed(spark, out_dir)
+
+
 @register("s_microbatch_flush", oracle=None)
 def s_microbatch_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D9 timed-flush analog: the stream lands in micro-batches of at most
     MaxBatchSize rows each (source rate limit = maxFilesPerTrigger),
     foreachBatch = the bulk INSERT (clickhouse_table_writer.go:91-113)."""
-    work = _workdir(sf_dir, "flush")
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    data_dir = split_events_files(spark, sf_dir, work, n_chunks=4)
-    stream = events_file_stream(spark, data_dir, ev_schema)
-
+    _, stream = _event_stream(spark, sf_dir, "flush")
     batches: list[tuple[int, int]] = []
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        batches.append((batch_id, df.count()))
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(stream.writeStream.foreachBatch(sink), ckpt)
-
+    _run(stream, "append", lambda df, batch_id: batches.append((batch_id, df.count())))
     total = load_table(spark, sf_dir, "events").count()
     out = [
         (int(bid), int(n), int(n <= MAX_BATCH_SIZE)) for bid, n in sorted(batches)
@@ -165,11 +194,7 @@ def s_drop_policies(spark: SparkSession, sf_dir: str) -> DataFrame:
     per policy (capacity 600, flush 400/tick — small enough that the
     sf0.01 chunks overflow) and report written/dropped/rejected/flushed
     per policy, plus a TOO_BIG probe."""
-    work = _workdir(sf_dir, "drop")
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    data_dir = split_events_files(spark, sf_dir, work, n_chunks=4)
-    stream = events_file_stream(spark, data_dir, ev_schema).select("event_id")
-
+    _, stream = _event_stream(spark, sf_dir, "drop")
     buffers = {p: BoundedBuffer(max_size=600, on_full=p) for p in POLICIES}
 
     def sink(df: DataFrame, batch_id: int) -> None:
@@ -186,8 +211,7 @@ def s_drop_policies(spark: SparkSession, sf_dir: str) -> DataFrame:
                 buf.write_batch(list(range(min(500, n - i))))
             buf.flush_batch(400)  # one flush tick per micro-batch (D9)
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(stream.writeStream.foreachBatch(sink), ckpt)
+    _run(stream.select("event_id"), "append", sink)
 
     rows = []
     for p, buf in sorted(buffers.items()):
@@ -221,32 +245,14 @@ def s_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-window counts in append mode: rows arriving
     behind the 1-hour watermark are dropped — the event-time analog of
     the reference's lossy buffer (SURVEY.md §2.D Group S)."""
-    work = _workdir(sf_dir, "late")
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    data_dir = split_events_files(spark, sf_dir, work, n_chunks=4)
-    stream = events_file_stream(spark, data_dir, ev_schema)
-
+    work, stream = _event_stream(spark, sf_dir, "late")
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("hour_start"), "n_events")
     )
-    out_dir = _fresh_dir(os.path.join(work, f"windows_{os.getpid()}"))  # re-runs must not append to stale windows
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        # distributed per-batch landing — finalized windows never cross
-        # to the driver (at 100 TB the window stream is unbounded);
-        # batch_id-keyed overwrite so an at-least-once replay re-lands
-        # instead of duplicating (self-review r15)
-        _land_idempotent(df, out_dir, batch_id)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(agg.writeStream.outputMode("append").foreachBatch(sink), ckpt)
-
-    if not os.path.exists(out_dir):
-        return spark.createDataFrame([], schema="hour_start timestamp, n_events bigint")
-    return _landed(spark, out_dir).orderBy("hour_start")
+    return _drain(spark, agg, work, "append").orderBy("hour_start")
 
 
 @register(
@@ -287,10 +293,7 @@ def s_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     islands-and-gaps SQL: a session breaks where the gap to the previous
     event is >= 30 minutes (session_window intervals are half-open), and
     session_end = last event + gap."""
-    work = _workdir(sf_dir, "sessionw")
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    data_dir = split_events_files_with_flush(spark, sf_dir, work, n_chunks=4)
-    stream = events_file_stream(spark, data_dir, ev_schema)
+    work, stream = _event_stream(spark, sf_dir, "sessionw", split_events_files_with_flush)
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), F.col("user_id"))
@@ -306,23 +309,8 @@ def s_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # push a user_id predicate below the EventTimeWatermark node, see
     # s_stream_rollup; sentinel sessions never close, so filtering the
     # LANDED table below is belt-and-braces)
-    out_dir = _fresh_dir(os.path.join(work, f"sessions_{os.getpid()}"))  # re-runs must not append to stale sessions
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        # distributed per-batch landing — session-cardinality data stays
-        # off the driver; idempotent under at-least-once replay
-        _land_idempotent(df, out_dir, batch_id)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(agg.writeStream.outputMode("append").foreachBatch(sink), ckpt)
-
-    if not os.path.exists(out_dir):
-        return spark.createDataFrame(
-            [],
-            schema="user_id bigint, session_start timestamp, session_end timestamp, n_events bigint",
-        )
     return (
-        _landed(spark, out_dir)
+        _drain(spark, agg, work, "append")
         .filter(F.col("user_id") >= 0)
         .orderBy("user_id", "session_start")
     )
@@ -337,7 +325,6 @@ def _duplicated_chunks(spark: SparkSession, sf_dir: str, work: str) -> str:
     """Every source chunk copied twice (a/b, interleaved mtimes) so each
     event arrives in two different micro-batches."""
     import glob
-    import shutil as _shutil
 
     base_dir = split_events_files(spark, sf_dir, work, n_chunks=4)
     dup_dir = os.path.join(work, "dup_chunks")
@@ -348,7 +335,7 @@ def _duplicated_chunks(spark: SparkSession, sf_dir: str, work: str) -> str:
             stem = os.path.basename(f).removesuffix(".parquet")
             for k, suffix in enumerate(("a", "b")):
                 dst = os.path.join(dup_dir, f"{stem}_{suffix}.parquet")
-                _shutil.copy(f, dst)
+                shutil.copy(f, dst)
                 os.utime(dst, (base + 2 * j + k, base + 2 * j + k))
         open(os.path.join(dup_dir, "_done"), "w").close()
     return dup_dir
@@ -360,27 +347,9 @@ def _run_dedup_stream(spark: SparkSession, sf_dir: str, tag: str, dedup) -> Data
     themselves. The source duplicates are byte-identical, so whichever
     copy the state store keeps, the kept row set must equal the original
     events table exactly — the registered oracle."""
-    work = _workdir(sf_dir, tag)
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    dup_dir = _duplicated_chunks(spark, sf_dir, work)
-    stream = dedup(events_file_stream(spark, dup_dir, ev_schema))
-
-    out_dir = _fresh_dir(os.path.join(work, f"kept_{os.getpid()}"))
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        _land_idempotent(df, out_dir, batch_id)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(stream.writeStream.outputMode("update").foreachBatch(sink), ckpt)
-
-    if not os.path.exists(out_dir):
-        return spark.createDataFrame(
-            [],
-            "event_id bigint, ts timestamp, user_id bigint, "
-            "event_type string, value double, props string",
-        )
+    work, stream = _event_stream(spark, sf_dir, tag, _duplicated_chunks)
     return (
-        _landed(spark, out_dir)
+        _drain(spark, dedup(stream), work, "update")
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
         .orderBy("event_id")
     )
@@ -421,34 +390,16 @@ def s_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash."""
     from bristle_spark.streaming.stateful import running_user_totals
 
-    work = _workdir(sf_dir, "stateful")
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    data_dir = split_events_files(spark, sf_dir, work, n_chunks=4)
-    stream = events_file_stream(spark, data_dir, ev_schema)
-    totals = running_user_totals(stream)
-
-    out_dir = _fresh_dir(os.path.join(work, f"emissions_{os.getpid()}"))  # re-runs must not append to stale emissions
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        # distributed parquet append of (batch_id, user_id, ...) — the
-        # per-user update stream stays off the driver; "latest emission
-        # per user" is a batch max_by over the sink afterwards
-        _land_idempotent(df.withColumn("batch_id", F.lit(batch_id)), out_dir, batch_id)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(totals.writeStream.outputMode("update").foreachBatch(sink), ckpt)
-
-    if not os.path.exists(out_dir):
-        return spark.createDataFrame(
-            [], schema="user_id bigint, n_events bigint, total_value double"
-        )
-    # one emission per (batch_id, user_id): the update-mode state emission
-    emitted = _landed(spark, out_dir)
+    work, stream = _event_stream(spark, sf_dir, "stateful")
+    emitted = _drain(spark, running_user_totals(stream), work, "update")
+    # the operator emits a user only in batches holding that user's
+    # rows, so each emission's running n_events is strictly larger than
+    # the last: the latest emission per user is the one with max n_events
     return (
         emitted.groupBy("user_id")
         .agg(
-            F.max_by("n_events", "batch_id").alias("n_events"),
-            rN(F.max_by("total_value", "batch_id").cast("double"), 4).alias(
+            F.max("n_events").alias("n_events"),
+            rN(F.max_by("total_value", "n_events").cast("double"), 4).alias(
                 "total_value"
             ),
         )
@@ -535,13 +486,9 @@ def s_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     The (unbounded at scale) pair stream never touches the driver: each
     micro-batch writes its pairs to a parquet sink executor-side, and
     the per-purchase click count is a batch aggregation over the sink."""
-    work = _workdir(sf_dir, "sjoin")
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    data_dir = split_events_files(spark, sf_dir, work, n_chunks=4, order_col="ts")
-
+    work, stream = _event_stream(spark, sf_dir, "sjoin", order_col="ts")
     p = (
-        events_file_stream(spark, data_dir, ev_schema)
-        .filter(F.col("event_type") == "purchase")
+        stream.filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
             "user_id",
@@ -550,8 +497,7 @@ def s_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("p_ts", "1 hour")
     )
     c = (
-        events_file_stream(spark, data_dir, ev_schema)
-        .filter(F.col("event_type") == "click")
+        stream.filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
             F.col("user_id").alias("c_user_id"),
@@ -567,20 +513,10 @@ def s_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "inner",
     )
 
-    pair_dir = _fresh_dir(os.path.join(work, f"pairs_{os.getpid()}"))  # re-runs must not append to stale pairs
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        # distributed parquet append — zero rows cross to the driver
-        _land_idempotent(df.select("purchase_id", "user_id", "click_id"), pair_dir, batch_id)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(joined.writeStream.outputMode("append").foreachBatch(sink), ckpt)
-
-    if not os.path.exists(pair_dir):
-        return spark.createDataFrame(
-            [], schema="purchase_id bigint, user_id bigint, n_clicks_10m bigint"
-        )
-    pairs = _landed(spark, pair_dir)
+    pairs = _drain(
+        spark, joined, work, "append",
+        lambda batch: batch.select("purchase_id", "user_id", "click_id"),
+    )
     return (
         pairs.groupBy("purchase_id", "user_id")
         .agg(F.count(F.lit(1)).alias("n_clicks_10m"))
@@ -626,35 +562,16 @@ def s_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet executor-side (no driver collects); the summed landed
     totals must hash-match the batch join (the registered oracle —
     round 7; no watermark is involved, so every row lands)."""
-    work = _workdir(sf_dir, "enrich")
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    data_dir = split_events_files(spark, sf_dir, work, n_chunks=4)
-    stream = events_file_stream(spark, data_dir, ev_schema)
+    work, stream = _event_stream(spark, sf_dir, "enrich")
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_nationkey"
     )
     enriched = stream.join(F.broadcast(cust), "user_id")
-
-    out_dir = _fresh_dir(os.path.join(work, f"enrich_agg_{os.getpid()}"))
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        _land_idempotent(
-            df.groupBy("c_nationkey").agg(F.count(F.lit(1)).alias("n")),
-            out_dir,
-            batch_id,
-        )
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(
-            enriched.writeStream.outputMode("append").foreachBatch(sink), ckpt
-        )
-
-    if not os.path.exists(out_dir):
-        return spark.createDataFrame(
-            [], schema="c_nationkey int, n_events bigint"
-        )
     return (
-        _landed(spark, out_dir)
+        _drain(
+            spark, enriched, work, "append",
+            lambda batch: batch.groupBy("c_nationkey").agg(F.count(F.lit(1)).alias("n")),
+        )
         .groupBy("c_nationkey")
         .agg(F.sum("n").cast("bigint").alias("n_events"))
         .orderBy("c_nationkey")
@@ -701,10 +618,7 @@ def s_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily cascade must hash-match the batch-replay SQL exactly.
 
     Returns both granularities stacked."""
-    work = _workdir(sf_dir, "rollup")
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    data_dir = split_events_files_with_flush(spark, sf_dir, work, n_chunks=4)
-    stream = events_file_stream(spark, data_dir, ev_schema)
+    work, stream = _event_stream(spark, sf_dir, "rollup", split_events_files_with_flush)
     # NOTE: the flush sentinels are NOT filtered here — a filter between
     # withWatermark and the aggregation gets pushed below the
     # EventTimeWatermark operator by Catalyst, so the sentinel would
@@ -726,23 +640,7 @@ def s_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    out_dir = _fresh_dir(os.path.join(work, f"hourly_{os.getpid()}"))  # re-runs must not append to a stale rollup
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        _land_idempotent(df, out_dir, batch_id)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(
-            hourly.writeStream.outputMode("append").foreachBatch(sink), ckpt
-        )
-
-    if not os.path.exists(out_dir):
-        return spark.createDataFrame(
-            [],
-            schema="granularity string, bucket_start timestamp, "
-            "event_type string, n_events bigint, total_value double",
-        )
-    hour_tbl = _landed(spark, out_dir).filter(
+    hour_tbl = _drain(spark, hourly, work, "append").filter(
         F.col("event_type") != FLUSH_EVENT_TYPE
     )
     day_tbl = (
@@ -760,6 +658,57 @@ def s_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .union(day_tbl.select(F.lit("day").alias("granularity"), "*"))
         .orderBy("granularity", "bucket_start", "event_type")
     )
+
+
+_GEN_COLS = ("user_id", "event_type", "ts", "event_id", "value")
+
+
+def _generations(gen_root: str) -> list[int]:
+    return sorted(int(d.split("_")[1]) for d in os.listdir(gen_root))
+
+
+def _merge_generation(
+    batch: DataFrame, gen_root: str, batch_id: int, keys, extra_cols=()
+) -> None:
+    """MERGE one micro-batch into a latest-row-wins sink keyed on
+    ``keys``: union the batch with the latest generation, keep the
+    max-(ts, event_id) row per key, and write generation
+    ``g_{batch_id}`` — an atomic pointer swap, so readers never see a
+    half-written merge. Latest-row-wins absorbs a row merged twice, and
+    a replayed batch overwrites its own generation, so the sink is
+    idempotent per batch_id."""
+    current = batch.select(*_GEN_COLS, *extra_cols)
+    prev = _generations(gen_root)
+    if prev:
+        current = (
+            batch.sparkSession.read.parquet(os.path.join(gen_root, f"g_{prev[-1]}"))
+            .unionByName(current)
+        )
+    w = Window.partitionBy(*keys).orderBy(F.col("ts").desc(), F.col("event_id").desc())
+    merged = (
+        current.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+    merged.write.mode("overwrite").parquet(os.path.join(gen_root, f"g_{batch_id}"))
+
+
+def _drain_generations(
+    spark: SparkSession, stream: DataFrame, work: str, keys, extra_cols=()
+) -> DataFrame:
+    """Run ``stream`` through ``_run`` into a ``_merge_generation`` sink
+    and return the final generation (empty, same columns, if no
+    micro-batch ran)."""
+    gen_root = _fresh_dir(os.path.join(work, f"gen_{os.getpid()}"), mkdir=True)
+    _run(
+        stream,
+        "append",
+        lambda batch, batch_id: _merge_generation(batch, gen_root, batch_id, keys, extra_cols),
+    )
+    gens = _generations(gen_root)
+    if not gens:
+        return spark.createDataFrame([], stream.select(*_GEN_COLS, *extra_cols).schema)
+    return spark.read.parquet(os.path.join(gen_root, f"g_{gens[-1]}"))
 
 
 @register(
@@ -790,50 +739,9 @@ def s_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself — latest-row-wins is deterministic (event_id breaks ties), so
     the sink must hash-match the batch argMax SQL over the same
     events."""
-    work = _workdir(sf_dir, "upsert")
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    data_dir = split_events_files(spark, sf_dir, work, n_chunks=4)
-    stream = events_file_stream(spark, data_dir, ev_schema)
-    gen_root = _fresh_dir(os.path.join(work, f"gen_{os.getpid()}"), mkdir=True)
-
-    from pyspark.sql.window import Window as W
-
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        gens = sorted(int(d.split("_")[1]) for d in os.listdir(gen_root))
-        current = batch.select(
-            "user_id", "event_type", "ts", "event_id", "value"
-        )
-        if gens:
-            prev = spark.read.parquet(os.path.join(gen_root, f"g_{gens[-1]}"))
-            current = prev.unionByName(current)
-        w = W.partitionBy("user_id", "event_type").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
-        )
-        merged = (
-            current.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(gen_root, f"g_{batch_id}")
-        )
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(
-            stream.writeStream.outputMode("append").foreachBatch(merge), ckpt
-        )
-
-    gens = sorted(int(d.split("_")[1]) for d in os.listdir(gen_root))
-    if not gens:
-        return spark.createDataFrame(
-            [],
-            "user_id bigint, event_type string, ts timestamp, "
-            "event_id bigint, value double",
-        )
-    sink = spark.read.parquet(os.path.join(gen_root, f"g_{gens[-1]}"))
-    return sink.select("user_id", "event_type", "ts", "event_id", "value").orderBy(
-        "user_id", "event_type"
-    )
+    work, stream = _event_stream(spark, sf_dir, "upsert")
+    sink = _drain_generations(spark, stream, work, ("user_id", "event_type"))
+    return sink.select(*_GEN_COLS).orderBy("user_id", "event_type")
 
 
 STREAM_TOPK = 3
@@ -871,37 +779,17 @@ def s_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     PARTITIONED by bucket (per-window work); at 100 TB the aggregate
     table is |windows| x |types| rows, so the rank stage is
     dimension-sized, not stream-sized."""
-    work = _workdir(sf_dir, "topk")
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    data_dir = split_events_files_with_flush(spark, sf_dir, work, n_chunks=4)
-    stream = events_file_stream(spark, data_dir, ev_schema)
+    work, stream = _event_stream(spark, sf_dir, "topk", split_events_files_with_flush)
     hourly = (
         stream.withWatermark("ts", "1 minute")
         .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("bucket_start"), "event_type", "n_events")
     )
-    out_dir = _fresh_dir(os.path.join(work, f"hourly_{os.getpid()}"))
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        _land_idempotent(df, out_dir, batch_id)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(
-            hourly.writeStream.outputMode("append").foreachBatch(sink), ckpt
-        )
-
-    if not os.path.exists(out_dir):
-        return spark.createDataFrame(
-            [],
-            "bucket_start timestamp, event_type string, n_events bigint, rk bigint",
-        )
-    from pyspark.sql.window import Window as W
-
-    tbl = _landed(spark, out_dir).filter(
+    tbl = _drain(spark, hourly, work, "append").filter(
         F.col("event_type") != FLUSH_EVENT_TYPE
     )
-    w = W.partitionBy("bucket_start").orderBy(
+    w = Window.partitionBy("bucket_start").orderBy(
         F.col("n_events").desc(), F.col("event_type")
     )
     return (
@@ -949,11 +837,7 @@ def s_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     landed set deterministic — it must hash-match the batch replay
     (baseline mean rounded to 6 dp, stddev to 4 dp, z to 6 dp — the
     r_stats_agg rounding discipline, so both engines gate identically)."""
-    work = _workdir(sf_dir, "anomaly")
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    data_dir = split_events_files(spark, sf_dir, work, n_chunks=4)
-    stream = events_file_stream(spark, data_dir, ev_schema)
-
+    work, stream = _event_stream(spark, sf_dir, "anomaly")
     base = (
         load_table(spark, sf_dir, "events")
         .groupBy("event_type")
@@ -973,22 +857,7 @@ def s_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
             rN((F.col("value") - F.col("m")) / F.col("sd"), 6).alias("z"),
         )
     )
-
-    out_dir = _fresh_dir(os.path.join(work, f"anomaly_out_{os.getpid()}"))
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        _land_idempotent(df, out_dir, batch_id)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(
-            flagged.writeStream.outputMode("append").foreachBatch(sink), ckpt
-        )
-
-    if not os.path.exists(out_dir):
-        return spark.createDataFrame(
-            [], schema="event_id bigint, event_type string, value double, z double"
-        )
-    return _landed(spark, out_dir).orderBy("event_id")
+    return _drain(spark, flagged, work, "append").orderBy("event_id")
 
 
 CDC_DELETE_TYPE = "error"  # events of this type are CDC delete markers
@@ -1028,52 +897,9 @@ def s_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the rewrite narrows to the key partitions a batch touches.
     Tombstones are GC'd in production by a retention horizon; kept
     forever here so the gate is deterministic."""
-    work = _workdir(sf_dir, "cdc")
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    data_dir = split_events_files(spark, sf_dir, work, n_chunks=4)
-    stream = events_file_stream(spark, data_dir, ev_schema)
-    gen_root = _fresh_dir(os.path.join(work, f"gen_{os.getpid()}"), mkdir=True)
-
-    from pyspark.sql.window import Window as W
-
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        gens = sorted(int(d.split("_")[1]) for d in os.listdir(gen_root))
-        current = batch.select(
-            "user_id",
-            "ts",
-            "event_id",
-            "event_type",
-            "value",
-            (F.col("event_type") == CDC_DELETE_TYPE).cast("int").alias("is_deleted"),
-        )
-        if gens:
-            prev = spark.read.parquet(os.path.join(gen_root, f"g_{gens[-1]}"))
-            current = prev.unionByName(current)
-        w = W.partitionBy("user_id").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
-        )
-        merged = (
-            current.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(gen_root, f"g_{batch_id}")
-        )
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(
-            stream.writeStream.outputMode("append").foreachBatch(merge), ckpt
-        )
-
-    gens = sorted(int(d.split("_")[1]) for d in os.listdir(gen_root))
-    if not gens:
-        return spark.createDataFrame(
-            [],
-            "user_id bigint, ts timestamp, event_id bigint, "
-            "event_type string, value double",
-        )
-    sink = spark.read.parquet(os.path.join(gen_root, f"g_{gens[-1]}"))
+    work, stream = _event_stream(spark, sf_dir, "cdc")
+    is_deleted = (F.col("event_type") == CDC_DELETE_TYPE).cast("int").alias("is_deleted")
+    sink = _drain_generations(spark, stream, work, ("user_id",), (is_deleted,))
     return (
         sink.filter(F.col("is_deleted") == 0)
         .select("user_id", "ts", "event_id", "event_type", "value")
@@ -1154,28 +980,12 @@ def s_stream_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     d x w cells per task regardless of batch size; the stateless
     foreachBatch sink keeps no state store; the merge aggregates
     |batches| x d x w cells, never raw events."""
-    work = _workdir(sf_dir, "cms")
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    data_dir = split_events_files(spark, sf_dir, work, n_chunks=4)
-    stream = events_file_stream(spark, data_dir, ev_schema)
-
-    out_dir = _fresh_dir(os.path.join(work, f"partials_{os.getpid()}"))
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        # additive cells double under an at-least-once re-landing —
-        # land idempotently per batch_id (ADVICE r14, as s_stream_srm)
-        _land_idempotent(_cms_partials(df), out_dir, batch_id)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(
-            stream.writeStream.outputMode("append").foreachBatch(sink), ckpt
-        )
-
+    work, stream = _event_stream(spark, sf_dir, "cms")
     from bristle_spark.functions.hashing import hash60
     from bristle_spark.queries.corpus import CMS_D, CMS_W
 
     merged = (
-        _landed(spark, out_dir)
+        _drain(spark, stream, work, "append", _cms_partials)
         .groupBy("i", "bucket")
         .agg(F.sum("c").cast("bigint").alias("c"))
     )
@@ -1313,25 +1123,13 @@ def s_stream_bloom_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sink is stateless foreachBatch; the merge aggregates
     |batches| x m/64 words; probing broadcasts the {SBLOOM_M // 64}-row
     word table."""
-    work = _workdir(sf_dir, "sbloom")
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    data_dir = split_events_files(spark, sf_dir, work, n_chunks=4)
-    stream = events_file_stream(spark, data_dir, ev_schema)
-
-    out_dir = _fresh_dir(os.path.join(work, f"partials_{os.getpid()}"))
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        _sbloom_word_partials(df).write.mode("append").parquet(out_dir)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(
-            stream.writeStream.outputMode("append").foreachBatch(sink), ckpt
-        )
-
+    work, stream = _event_stream(spark, sf_dir, "sbloom")
     from bristle_spark.functions.hashing import hash60
 
     words = (
-        spark.read.parquet(out_dir).groupBy("w").agg(F.bit_or("bm").alias("bm"))
+        _drain(spark, stream, work, "append", _sbloom_word_partials)
+        .groupBy("w")
+        .agg(F.bit_or("bm").alias("bm"))
     )
     ev = load_table(spark, sf_dir, "events")
     users = ev.select("user_id").distinct()
@@ -1487,23 +1285,9 @@ def s_stream_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateless foreachBatch; the merge aggregates |batches| x
     {HQ_BUCKETS} cells; the cumulative cut windows over the
     {HQ_BUCKETS}-row merged histogram."""
-    work = _workdir(sf_dir, "hq")
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    data_dir = split_events_files(spark, sf_dir, work, n_chunks=4)
-    stream = events_file_stream(spark, data_dir, ev_schema)
-
-    out_dir = _fresh_dir(os.path.join(work, f"partials_{os.getpid()}"))
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        _land_idempotent(_hq_partials(df), out_dir, batch_id)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(
-            stream.writeStream.outputMode("append").foreachBatch(sink), ckpt
-        )
-
+    work, stream = _event_stream(spark, sf_dir, "hq")
     merged = (
-        _landed(spark, out_dir)
+        _drain(spark, stream, work, "append", _hq_partials)
         .groupBy("bucket")
         .agg(F.sum("c").cast("bigint").alias("c"))
     )
@@ -1620,22 +1404,8 @@ def s_stream_decayed_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     user-keyed sum over |batches| x users partial rows. DECIMAL(38,0)
     absorbs 2^45-weighted cents past 1e12 rows; a deployment re-bases
     the epoch each quarter to renew headroom."""
-    work = _workdir(sf_dir, "ltv")
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    data_dir = split_events_files(spark, sf_dir, work, n_chunks=4)
-    stream = events_file_stream(spark, data_dir, ev_schema)
-
-    out_dir = _fresh_dir(os.path.join(work, f"partials_{os.getpid()}"))
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        _land_idempotent(_ltv_partials(df), out_dir, batch_id)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(
-            stream.writeStream.outputMode("update").foreachBatch(sink), ckpt
-        )
-
-    merged = _landed(spark, out_dir).groupBy("user_id").agg(
+    work, stream = _event_stream(spark, sf_dir, "ltv")
+    merged = _drain(spark, stream, work, "update", _ltv_partials).groupBy("user_id").agg(
         F.sum("n").cast("bigint").alias("n_events"),
         F.sum("sw").alias("sw"),
         F.sum("scw").alias("scw"),
@@ -1721,22 +1491,8 @@ def s_stream_counter_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch); the merge is one user-keyed window + rollup over
     |batches|×|users| partial rows — never the raw corpus twice.
     """
-    work = _workdir(sf_dir, "ctrrate")
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    data_dir = split_events_files(spark, sf_dir, work, n_chunks=4, order_col="ts")
-    stream = events_file_stream(spark, data_dir, ev_schema)
-
-    out_dir = _fresh_dir(os.path.join(work, f"partials_{os.getpid()}"))
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        _land_idempotent(_counter_partials(df), out_dir, batch_id)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(
-            stream.writeStream.outputMode("update").foreachBatch(sink), ckpt
-        )
-
-    p = _landed(spark, out_dir)
+    work, stream = _event_stream(spark, sf_dir, "ctrrate", order_col="ts")
+    p = _drain(spark, stream, work, "update", _counter_partials)
     w = Window.partitionBy("user_id").orderBy("first_ts", "first_eid")
     bridged = p.select(
         "user_id",
@@ -1781,7 +1537,7 @@ def s_stream_counter_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Additive spatial state: per micro-batch, each event's hash-derived
 # point ray-casts against the fixed polygon (the r_point_in_polygon
 # geometry, imported so the two keys can never disagree on the fence),
-# and per-type (n, n_inside) partials land append-only; the serve-time
+# and per-type (n, n_inside) partials land per batch; the serve-time
 # merge is a plain sum — commutative, so unlike the counter-rate
 # segments no ordering or seam logic is needed, and streamed state ==
 # batch state bit-for-bit.
@@ -1809,43 +1565,26 @@ def s_stream_geofence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: row-local integer predicates inside each micro-batch,
     map-side-combined per-type partials (one row per type per batch),
-    stateless append sink, and a |batches|×|types| serve-time rollup.
+    stateless per-batch landing, and a |batches|×|types| serve-time rollup.
     The geofence itself is a compile-time literal; a production
     variant broadcasts a polygon table per the r_spatial_grid_join
     prune-then-verify shape.
     """
-    work = _workdir(sf_dir, "geofence")
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    data_dir = split_events_files(spark, sf_dir, work, n_chunks=4)
-    stream = events_file_stream(spark, data_dir, ev_schema)
-
-    out_dir = _fresh_dir(os.path.join(work, f"partials_{os.getpid()}"))
-
+    work, stream = _event_stream(spark, sf_dir, "geofence")
     inside = F.expr(f"CAST(({_ray_terms('px', 'py')}) % 2 AS BIGINT)")
 
-    def sink(df: DataFrame, batch_id: int) -> None:
-        _land_idempotent(
-            df.select(
-                "event_type",
-                _lat_col().alias("py"),
-                _lon_col().alias("px"),
-            )
+    def partial(batch: DataFrame) -> DataFrame:
+        return (
+            batch.select("event_type", _lat_col().alias("py"), _lon_col().alias("px"))
             .select("event_type", inside.alias("inside"))
             .groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n"),
                 F.sum("inside").cast("bigint").alias("n_in"),
-            ),
-            out_dir,
-            batch_id,
+            )
         )
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(
-            stream.writeStream.outputMode("update").foreachBatch(sink), ckpt
-        )
-
-    merged = _landed(spark, out_dir).groupBy("event_type").agg(
+    merged = _drain(spark, stream, work, "update", partial).groupBy("event_type").agg(
         F.sum("n").cast("bigint").alias("n_points"),
         F.sum("n_in").cast("bigint").alias("n_inside"),
     )
@@ -1888,34 +1627,18 @@ def s_stream_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     minimum id always survives to the merge.  Oracle-backed against
     the SAME batch SQL as r_skyline: the streamed front must land the
     batch-defined final state exactly, including across crash/restart
-    replay.  Unlike the additive partial keys, this merge is also
-    IDEMPOTENT — a re-landed duplicate point ties with its twin and is
-    absorbed by the dominance pass — so the operator is safe under
-    at-least-once delivery, not just exactly-once; the checkpointed
-    file offsets still provide exactly-once, but the hash here
-    witnesses state recovery (stage-1 partials surviving the restart),
-    not double-landing.
+    replay.  The dominance merge would also absorb a duplicate point
+    (it ties with its twin), so the hash here witnesses state recovery
+    (stage-1 partials surviving the restart), not double-landing.
 
     Scale shape: per-batch dominance windows partition by event_type
     and see only that batch's rows; partials are expected O(log n)
     points per type per batch, so the serve-time pass runs on a
     |batches| x |types| x O(log n) frame — never the corpus twice."""
-    work = _workdir(sf_dir, "skyline")
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    data_dir = split_events_files(spark, sf_dir, work, n_chunks=4)
-    stream = events_file_stream(spark, data_dir, ev_schema)
-
-    out_dir = _fresh_dir(os.path.join(work, f"partials_{os.getpid()}"))
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        skyline_front(skyline_points(df)).write.mode("append").parquet(out_dir)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(
-            stream.writeStream.outputMode("update").foreachBatch(sink), ckpt
-        )
-
-    partials = spark.read.parquet(out_dir)
+    work, stream = _event_stream(spark, sf_dir, "skyline")
+    partials = _drain(
+        spark, stream, work, "update", lambda batch: skyline_front(skyline_points(batch))
+    )
     return skyline_present(skyline_front(partials))
 
 
@@ -1926,7 +1649,7 @@ from bristle_spark.queries.stats_tests import (  # noqa: E402
 )
 
 
-@register("s_stream_srm", oracle=SRM_ORACLE_SQL, group="s")
+@register("s_stream_srm", oracle=SRM_ORACLE_SQL)
 def s_stream_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuously-maintained sample-ratio-mismatch gate: each
     micro-batch reduces its events to per-(event_type, bucket) partial
@@ -1940,32 +1663,12 @@ def s_stream_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     the live version of the batch gate: assignment skew detected while
     the experiment runs, not at readout.
 
-    Unlike the duplicate-absorbing skyline merge, these additive cells
-    DOUBLE under an at-least-once re-landing, so each batch lands
-    idempotently (batch_id-keyed subdir, overwrite — _land_idempotent):
-    a crash between the parquet write and the checkpoint commit replays
-    the batch into the same slot instead of double-counting it.
-
     Scale shape: per-batch work is ONE map-side-combined aggregation
     to |types| x 4 rows; the landed partial table grows by that
     bounded frame per batch, and the serve-time merge re-aggregates
     |batches| x |types| x 4 rows — never the raw stream twice."""
-    work = _workdir(sf_dir, "srm")
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    data_dir = split_events_files(spark, sf_dir, work, n_chunks=4)
-    stream = events_file_stream(spark, data_dir, ev_schema)
-
-    out_dir = _fresh_dir(os.path.join(work, f"partials_{os.getpid()}"))
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        _land_idempotent(srm_bucket_cells(df), out_dir, batch_id)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(
-            stream.writeStream.outputMode("update").foreachBatch(sink), ckpt
-        )
-
-    partials = _landed(spark, out_dir)
+    work, stream = _event_stream(spark, sf_dir, "srm")
+    partials = _drain(spark, stream, work, "update", srm_bucket_cells)
     merged = partials.groupBy("event_type", "bucket").agg(
         F.sum("o").cast("bigint").alias("o")
     )
@@ -1979,7 +1682,7 @@ from bristle_spark.queries.analytic import (  # noqa: E402
 )
 
 
-@register("s_stream_holt_trend", oracle=HOLT_ORACLE_SQL, group="s")
+@register("s_stream_holt_trend", oracle=HOLT_ORACLE_SQL)
 def s_stream_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuously-maintained Holt level/trend state: each micro-batch
     reduces its events to per-(event_type, day_idx) partial cent sums
@@ -1993,34 +1696,14 @@ def s_stream_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch forecast: level/trend current to the last landed batch,
     not the last nightly job.
 
-    Additive cells DOUBLE under an at-least-once re-landing, so each
-    batch lands idempotently (_land_idempotent, the s_stream_srm
-    discipline): a crash between the parquet write and the checkpoint
-    commit replays the batch into its own batch_id slot instead of
-    double-counting it.
-
     Scale shape: per-batch work is ONE map-side-combined aggregation
     to at most |types| x |days-in-batch| rows; the landed partial
     table grows by that bounded frame per batch, the serve-time merge
     re-aggregates |batches| x |types| x |days| rows, and the fold runs
     on |types| bounded lists — never the raw stream twice."""
-    work = _workdir(sf_dir, "holt")
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    data_dir = split_events_files(spark, sf_dir, work, n_chunks=4)
-    stream = events_file_stream(spark, data_dir, ev_schema)
-
-    out_dir = _fresh_dir(os.path.join(work, f"partials_{os.getpid()}"))
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        _land_idempotent(daily_cents(df), out_dir, batch_id)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(
-            stream.writeStream.outputMode("update").foreachBatch(sink), ckpt
-        )
-
+    work, stream = _event_stream(spark, sf_dir, "holt")
     daily = (
-        _landed(spark, out_dir)
+        _drain(spark, stream, work, "update", daily_cents)
         .groupBy("event_type", "day_idx")
         .agg(F.sum("cents").cast("bigint").alias("cents"))
     )
@@ -2034,19 +1717,19 @@ from bristle_spark.queries.analytic import (  # noqa: E402
 )
 
 
-@register("s_stream_slo_burn", oracle=SLO_BURN_ORACLE_SQL, group="s")
+@register("s_stream_slo_burn", oracle=SLO_BURN_ORACLE_SQL)
 def s_stream_slo_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuously-maintained error-budget burn alerting — the USE
     CASE of r_slo_burn_rate is inherently live (a page that fires at
     the nightly batch is an outage report, not an alert): each
     micro-batch reduces its events to per-hour (n_total, n_err)
     partial cells (slo_hourly_cells, imported verbatim from the batch
-    key) and lands them idempotently per batch_id; the served verdict
+    key) and lands them; the served verdict
     re-sums the partials into the full hourly frame and runs the SAME
     multiwindow policy (slo_burn_present).  Hourly cells are ADDITIVE
     partials, so the streamed readout must hash-match the batch SQL
     exactly — the shared oracle grades precisely that, including
-    across crash/restart replay (the s_stream_srm discipline).
+    across crash/restart replay.
 
     Scale shape: per-batch work is ONE map-side-combined aggregation
     to |hours-in-batch| rows; the landed table grows by that bounded
@@ -2054,23 +1737,9 @@ def s_stream_slo_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
     |hours| rows, and the burn windows run on the bounded hourly
     frame via the broadcast range self-join — never the raw stream
     twice."""
-    work = _workdir(sf_dir, "slo")
-    ev_schema = load_table(spark, sf_dir, "events").schema
-    data_dir = split_events_files(spark, sf_dir, work, n_chunks=4)
-    stream = events_file_stream(spark, data_dir, ev_schema)
-
-    out_dir = _fresh_dir(os.path.join(work, f"partials_{os.getpid()}"))
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        _land_idempotent(slo_hourly_cells(df), out_dir, batch_id)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        _run_available_now(
-            stream.writeStream.outputMode("update").foreachBatch(sink), ckpt
-        )
-
+    work, stream = _event_stream(spark, sf_dir, "slo")
     hourly = (
-        _landed(spark, out_dir)
+        _drain(spark, stream, work, "update", slo_hourly_cells)
         .groupBy("hour_idx")
         .agg(
             F.sum("n_total").cast("bigint").alias("n_total"),

@@ -40,10 +40,6 @@ BPE_RE = "[a-z]+|[0-9]+|[^a-z0-9 ]"
 FP_PREFIX_TOKENS = 16
 
 
-def _marker_count(tokens: Column, words: tuple[str, ...]) -> Column:
-    return F.size(F.filter(tokens, lambda t: t.isin(*words))).cast("bigint")
-
-
 def _marker_sum(tk: Column, words: tuple[str, ...]) -> Column:
     """Codegen-friendly marker count over exploded token rows (the
     array-lambda version runs interpreted; explode + conditional sum

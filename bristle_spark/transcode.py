@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bristle_spark.ingest.bindings import FieldSpec, MessageBinding, SinkColumn
+from bristle_spark.ingest.wire import INT_KINDS
 
 # --------------------------------------------------- ClickHouse type model
 
@@ -111,10 +112,9 @@ def spark_type_str(ch: ChType) -> str:
 # ------------------------------------------------------- raw decode schema
 
 _RAW_TYPES: dict[str, T.DataType] = {
-    **{k: T.LongType() for k in ("int32", "int64", "sint32", "sint64", "sfixed32", "sfixed64", "enum")},
     # uint64 fidelity note: decoded values are carried as signed 64-bit;
     # values above 2^63-1 need the Decimal(20,0) sink path end-to-end.
-    **{k: T.LongType() for k in ("uint32", "uint64", "fixed32", "fixed64")},
+    **{k: T.LongType() for k in INT_KINDS},
     "bool": T.BooleanType(),
     "float": T.FloatType(),
     "double": T.DoubleType(),

@@ -5,8 +5,10 @@ dependencies, divide-by-zero surprises, and iterative loops that assume
 at least one edge.
 
 Streaming-group queries are excluded: they split the events table into
-chunk files to simulate micro-batches, and an empty source means there
-is no stream to run (covered by their own unit tests)."""
+chunk files to simulate micro-batches. The path they share when no
+micro-batch runs — the drain returning an empty frame typed by its
+partial — is pinned by
+tests/test_drain.py::test_drain_with_no_microbatch_is_empty_and_typed."""
 
 from __future__ import annotations
 
