@@ -11,7 +11,7 @@ Layout:
     transcode.py  scalar conversion surface (reference clickhouse_table.go:249-380)
     ingest/       protobuf wire decode + binding registry + batch ingest
     streaming/    micro-batch flush, bounded-buffer drop policies, late data
-    multimodal/   binary-column plumbing with stubbed decoders
+    multimodal/   binary-column plumbing, decoded by each payload's meta.format
 """
 
 __version__ = "0.1.0"

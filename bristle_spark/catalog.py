@@ -53,7 +53,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def fan_out_if_coarse(df: DataFrame, spark: SparkSession, key: str) -> DataFrame:
+def fan_out_if_coarse(df: DataFrame, key: str | None = None) -> DataFrame:
     """Spread a row-expansion-heavy stage across the cluster when the
     upstream scan is coarser than the available parallelism.
 
@@ -63,8 +63,9 @@ def fan_out_if_coarse(df: DataFrame, spark: SparkSession, key: str) -> DataFrame
     sized on the small pre-expansion bytes — runs them on one task. An
     EXPLICIT-count repartition (which AQE respects) fixes that; the
     partition-count guard keeps a well-split 100 TB scan from paying a
-    whole-table reshuffle it doesn't need."""
-    par = spark.sparkContext.defaultParallelism
+    whole-table reshuffle it doesn't need. The repartition hashes on
+    ``key`` when one is given and is round-robin otherwise."""
+    par = df.sparkSession.sparkContext.defaultParallelism
     # df.rdd.getNumPartitions() forces a plan->RDD conversion on the
     # driver (VERDICT r7 nit): acceptable here because it runs once at
     # query-BUILD time on the un-executed scan (no job is triggered),
@@ -74,5 +75,5 @@ def fan_out_if_coarse(df: DataFrame, spark: SparkSession, key: str) -> DataFrame
     # shows up in build-time profiles, swap to counting the scan's
     # files via spark.catalog / the FileIndex instead.
     if df.rdd.getNumPartitions() < par:
-        return df.repartition(par, F.col(key))
+        return df.repartition(par, F.col(key)) if key else df.repartition(par)
     return df

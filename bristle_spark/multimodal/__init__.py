@@ -1,33 +1,45 @@
 """Multimodal column plumbing: opaque ``binary`` payloads + typed
 metadata, with Arrow-batched decode/feature-extract UDFs.
 
-The container ships no image/audio codecs, so the default *decode*
-backend is the deterministic fake (``decode_backend="fake"`` derives
-pseudo-pixels from the payload bytes themselves) and the real decoder
-is an optional dependency: ``decode_backend="pil"`` decodes
-PNG/JPEG/... through Pillow when it is importable (tested via a
-skip-if-absent test) and raises a clear RuntimeError otherwise.
-Everything around the decode — schema, partitioning, UDF signature,
-Arrow batch shape — is the real 100 TB design either way:
+Every payload names its own container in ``meta.format``, and that is
+the only thing that picks its decoder (``_DECODERS``), row by row — the
+way the ingest binding registry routes a body by its message type, not
+by a caller's flag. The codecs are real and stdlib-only: RIFF/WAVE
+through ``wave`` (``wav_pcm_s16le``), PNG through multimodal/png.py
+(``png-grey8``) and baseline JPEG through multimodal/jpeg.py
+(``jpeg-grey8``). The raw formats (``fake-rgb``, ``pcm_s16le`` and the
+``fake`` of hand-built test frames) decode to themselves: their payload
+bytes ARE the pixels or samples. A format with no decoder is a payload
+error. Everything around the decode — schema, partitioning, UDF
+signature, Arrow batch shape — is the real 100 TB design:
 
 - payloads travel as one ``binary`` column next to a metadata struct
   (never exploded into rows);
-- feature extraction is ``mapInPandas`` over Arrow batches, emitting
-  fixed-width feature arrays;
+- every payload builder that needs Python runs the one ``_attach``
+  scaffold; feature extraction is ``mapInPandas`` over Arrow batches,
+  emitting fixed-width feature arrays;
 - downstream similarity/dedup reuse the embedding operators
   (queries/similarity.py, queries/dedup.py) unchanged.
 """
 
 from __future__ import annotations
 
+import gzip
 import hashlib
-from collections.abc import Iterator
+import io
+import wave
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from bristle_spark.catalog import fan_out_if_coarse
+from bristle_spark.multimodal import jpeg as jpeg_codec
+from bristle_spark.multimodal import png as png_codec
 
 N_HIST_BUCKETS = 16
 
@@ -40,75 +52,103 @@ FEATURE_SCHEMA = T.StructType(
     ]
 )
 
+# the raw-pixel format: what decode_pixels leaves behind
+_RAW_PIXELS = "fake-rgb"
 
-def _rebalance_for_kernel(df: DataFrame) -> DataFrame:
-    """Widen a narrow scan before the CPU-bound codec kernels.
-
-    Every m_* pipeline is attach -> mapInPandas kernel, and mapInPandas
-    preserves partitioning — so a scan narrower than the session's core
-    count serializes the WHOLE codec chain on that few Python workers
-    (at bench scale documents.parquet is one file = one split, and the
-    r14 gate's single biggest line item, m_jpeg_rgb_stats at 6.4 s, was
-    one worker decoding 5000 JPEGs serially; VERDICT r14 ask #2).
-
-    The round-robin repartition is applied ONLY when the scan is
-    narrower than defaultParallelism: at 100 TB the input already
-    carries thousands of splits, the branch is metadata-only, and the
-    plan keeps zero compute shuffles.  When it does apply, it shuffles
-    the pre-payload rows (key + text — the cheapest frame in the
-    pipeline) exactly once, the same rebalance-before-expensive-UDF
-    hint a production pipeline would declare.
-    """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+# the 2x2 checker sign pattern s(x)s(y), s = (+,-,-,+,+,-,-,+): the
+# (4,4) DCT-II basis scaled by 1/4, so a checker block's spectrum is
+# exactly two integers (DC and AC(4,4))
+_S = np.array([1, -1, -1, 1, 1, -1, -1, 1], dtype=np.int64)
+_CHECKER = np.outer(_S, _S)
 
 
-def attach_fake_payload(df: DataFrame, key_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Deterministic fake media payload: 256 bytes of iterated md5 over
-    the text, plus a metadata struct — stands in for (image_bytes,
-    {width,height,format}) until a real decoder exists."""
-    payload = F.unhex(
+def _md5_chain(text: str) -> bytes:
+    """The deterministic 256-byte payload: 16 chained md5 digests of
+    ``text || i``. Oracles re-derive every byte hex-side."""
+    return b"".join(hashlib.md5((text + str(i)).encode()).digest() for i in range(16))
+
+
+def _md5_chain_col(text_col: str) -> Column:
+    """``_md5_chain`` as a JVM-side column expression."""
+    return F.unhex(
         F.concat(*[F.md5(F.concat(F.col(text_col), F.lit(str(i)))) for i in range(16)])
     )
+
+
+def _checker(hx: bytes, i: int) -> np.ndarray:
+    """One 8x8 checker block ``mid + amp * s(x)s(y)`` with
+    ``mid = 64 + hx[i] % 128`` and ``amp = 1 + hx[i+1] % 63``."""
+    return 64 + hx[i] % 128 + (1 + hx[i + 1] % 63) * _CHECKER
+
+
+def _grid2x2(tiles: list) -> np.ndarray:
+    """Four equal-shape tiles (raster order) as one 2x2-tiled uint8 image."""
+    return np.concatenate(
+        [np.concatenate(tiles[:2], axis=1), np.concatenate(tiles[2:], axis=1)]
+    ).astype(np.uint8)
+
+
+def _attach(
+    df: DataFrame, text_col: str, encode: Callable[[int, str], bytes], meta: dict
+) -> DataFrame:
+    """The one payload-builder scaffold: ``(doc_id, payload, meta)``
+    with ``payload = encode(doc_id, text)`` per row and ``meta`` the
+    same constant struct on every row (int fields IntegerType, the rest
+    strings).
+
+    Container bytes depend on the content (zlib, entropy coding, a
+    per-row RIFF size), so the encode runs as one partition-local
+    mapInPandas stage, zero shuffles. Every m_* pipeline is attach ->
+    mapInPandas kernel, and mapInPandas preserves partitioning, so a
+    scan narrower than the session's core count would serialize the
+    WHOLE codec chain on that few Python workers (at bench scale
+    documents.parquet is one split; VERDICT r14 ask #2).
+    ``fan_out_if_coarse`` widens it first, shuffling the pre-payload
+    rows (key + text, the cheapest frame in the pipeline) once; a
+    well-split scan keeps zero compute shuffles."""
+    meta_type = T.StructType(
+        [
+            T.StructField(k, T.IntegerType() if isinstance(v, int) else T.StringType())
+            for k, v in meta.items()
+        ]
+    )
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("payload", T.BinaryType()),
+            T.StructField("meta", meta_type),
+        ]
+    )
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            keys = pdf["doc_id"].to_numpy()
+            yield pd.DataFrame(
+                {
+                    "doc_id": keys,
+                    "payload": [
+                        encode(int(k), str(t)) for k, t in zip(keys, pdf["__text"])
+                    ],
+                    "meta": [meta] * len(keys),
+                }
+            )
+
+    src = fan_out_if_coarse(df).select("doc_id", F.col(text_col).alias("__text"))
+    return src.mapInPandas(run, schema=schema)
+
+
+def attach_fake_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Deterministic raw media payload: the 256 iterated-md5 bytes of
+    the text as 16x16 pixels (format ``fake-rgb``), built JVM-side —
+    the codec-free input for unit-testing the kernels."""
     meta = F.struct(
         F.lit(16).alias("width"),
         F.lit(16).alias("height"),
-        F.lit("fake-rgb").alias("format"),
+        F.lit(_RAW_PIXELS).alias("format"),
     )
-    return _rebalance_for_kernel(df).select(
-        F.col(key_col), payload.alias("payload"), meta.alias("meta")
+    return fan_out_if_coarse(df).select(
+        "doc_id", _md5_chain_col(text_col).alias("payload"), meta.alias("meta")
     )
-
-
-def _fake_decode(payload: bytes) -> bytes:
-    """The stub decode: the payload bytes ARE the pixels."""
-    return payload
-
-
-def _pil_decode(payload: bytes) -> bytes:
-    """Real image decode (optional Pillow dependency): parse the encoded
-    payload (PNG/JPEG/...), normalize to single-channel luminance ("L"),
-    return the raw ``width*height`` pixel bytes — the same flat
-    one-byte-per-pixel contract _fake_decode satisfies, so every
-    downstream feature/resize/phash kernel is backend-agnostic.
-    Raises RuntimeError (not NotImplementedError) when Pillow is absent:
-    choosing the pil backend without the optional dependency installed
-    is a caller configuration error, and no registered query does so
-    (they all default to decode_backend='fake')."""
-    try:
-        from PIL import Image
-    except ImportError as exc:  # pragma: no cover - env has no Pillow
-        raise RuntimeError(
-            "decode_backend='pil' requires the optional Pillow dependency "
-            "(pip install Pillow); this environment ships no image codecs — "
-            "use decode_backend='fake'"
-        ) from exc
-    import io
-
-    with Image.open(io.BytesIO(payload)) as im:
-        return im.convert("L").tobytes()
 
 
 def _wav_decode(payload: bytes) -> bytes:
@@ -118,9 +158,6 @@ def _wav_decode(payload: bytes) -> bytes:
     audio_features / audio_fingerprint run unchanged on actual .wav
     payloads. 16-bit PCM only (the overwhelmingly common case and the
     kernels' sample format); anything else is a payload error."""
-    import io
-    import wave
-
     with wave.open(io.BytesIO(payload), "rb") as w:
         if w.getsampwidth() != 2:
             raise ValueError(
@@ -132,12 +169,10 @@ def _wav_decode(payload: bytes) -> bytes:
 def _png_decode(payload: bytes) -> bytes:
     """REAL image container decode, stdlib-only: parse the PNG (zlib
     IDAT inflate + scanline unfilter, multimodal/png.py), return the
-    raw pixel bytes — the same flat one-byte-per-pixel contract
-    _fake_decode satisfies, so the resize/phash/patchify kernels run
-    unchanged on actual encoded payloads. Greyscale only here (the
-    kernels' pixel format); RGB payloads are a payload error."""
-    from bristle_spark.multimodal import png as png_codec
-
+    raw pixel bytes — the flat one-byte-per-pixel contract of the raw
+    formats, so the resize/phash/patchify kernels run unchanged on
+    actual encoded payloads. Greyscale only here (the kernels' pixel
+    format); RGB payloads are a payload error."""
     _w, _h, channels, pixels = png_codec.decode_png(payload)
     if channels != 1:
         raise ValueError(
@@ -146,49 +181,72 @@ def _png_decode(payload: bytes) -> bytes:
     return pixels
 
 
+def _jpeg_image(payload: bytes, channels: int) -> np.ndarray:
+    """Decode a baseline JPEG (marker segments, Annex-K Huffman entropy
+    decode, dequantize, 8x8 IDCT — multimodal/jpeg.py) to an
+    ``(h, w, channels)`` uint8 array; a payload with another channel
+    count is a payload error."""
+    w, h, got, pixels = jpeg_codec.decode_jpeg(bytes(payload))
+    if got != channels:
+        raise ValueError(f"jpeg payload has {got} channels; kernels expect {channels}")
+    return np.frombuffer(pixels, dtype=np.uint8).reshape(h, w, channels)
+
+
 def _jpeg_decode(payload: bytes) -> bytes:
-    """REAL image container decode, stdlib-only: parse a baseline
-    greyscale JPEG (marker segments, Annex-K Huffman entropy decode,
-    dequantize, 8x8 IDCT — multimodal/jpeg.py) and return the raw pixel
-    bytes, the same flat one-byte-per-pixel contract the other decoders
-    satisfy. Greyscale baseline only; anything else is a payload
-    error."""
-    from bristle_spark.multimodal import jpeg as jpeg_codec
-
-    _w, _h, channels, pixels = jpeg_codec.decode_jpeg(payload)
-    if channels != 1:
-        raise ValueError(
-            f"jpeg payload has {channels} channels; kernels expect greyscale"
-        )
-    return pixels
+    """REAL greyscale JPEG decode, stdlib-only: the raw pixel bytes,
+    the same flat one-byte-per-pixel contract the other decoders
+    satisfy."""
+    return _jpeg_image(payload, 1).tobytes()
 
 
+def _raw(payload: bytes) -> bytes:
+    """The raw formats: the payload bytes ARE the pixels/samples."""
+    return payload
+
+
+# meta.format -> decode to the flat raw pixels (one byte each) or
+# int16-LE samples the kernels consume
 _DECODERS = {
-    "fake": _fake_decode,
-    "pil": _pil_decode,
-    "wav": _wav_decode,
-    "png": _png_decode,
-    "jpeg": _jpeg_decode,
+    "fake": _raw,
+    _RAW_PIXELS: _raw,
+    "pcm_s16le": _raw,
+    "png-grey8": _png_decode,
+    "jpeg-grey8": _jpeg_decode,
+    "wav_pcm_s16le": _wav_decode,
 }
 
 
-def _dims_stacks(pdf: pd.DataFrame, decode):
+def _decode(meta, payload) -> bytes:
+    """One row's payload, decoded by its own ``meta.format``."""
+    fmt = meta["format"]
+    if fmt not in _DECODERS:
+        raise ValueError(f"no decoder for payload format {fmt!r}")
+    return _DECODERS[fmt](bytes(payload))
+
+
+def _decoded(pdf: pd.DataFrame) -> list[bytes]:
+    """Every payload of a mapInPandas batch, each decoded by its row's
+    format."""
+    return [_decode(m, p) for m, p in zip(pdf["meta"], pdf["payload"])]
+
+
+def _dims_stacks(pdf: pd.DataFrame):
     """Shared scaffolding of every image kernel: group a mapInPandas
     batch by (width, height) from the meta struct and yield
     ``(w, h, idx, stack)`` — ``idx`` the batch positions of the group,
-    ``stack`` the decoded ``(n, h, w)`` uint8 tensor (zero-copy
-    frombuffer views stacked once). Kernels keep only their transform,
-    so the group-by-dims plumbing can't drift between them (review
-    r12). A payload shorter than ``w*h`` pixels is a payload error."""
-    import numpy as np
-
-    widths = pdf["meta"].map(lambda m: int(m["width"])).to_numpy()
-    heights = pdf["meta"].map(lambda m: int(m["height"])).to_numpy()
+    ``stack`` the decoded ``(n, h, w)`` uint8 tensor (each row decoded
+    by its own format, zero-copy frombuffer views stacked once).
+    Kernels keep only their transform, so the group-by-dims plumbing
+    can't drift between them (review r12). A payload shorter than
+    ``w*h`` pixels is a payload error."""
+    metas = pdf["meta"].to_numpy()
+    widths = np.array([int(m["width"]) for m in metas], dtype=np.int64)
+    heights = np.array([int(m["height"]) for m in metas], dtype=np.int64)
     payloads = pdf["payload"].to_numpy()
     for w, h in {(int(w), int(h)) for w, h in zip(widths, heights)}:
         idx = np.flatnonzero((widths == w) & (heights == h))
         group = [
-            np.frombuffer(decode(bytes(payloads[i])), dtype=np.uint8)[: w * h]
+            np.frombuffer(_decode(metas[i], payloads[i]), dtype=np.uint8)[: w * h]
             for i in idx
         ]
         short = [g.size for g in group if g.size < w * h]
@@ -199,9 +257,10 @@ def _dims_stacks(pdf: pd.DataFrame, decode):
         yield w, h, idx, np.stack(group).reshape(len(idx), h, w)
 
 
-def decode_pixels(df: DataFrame, decode_backend: str = "png") -> DataFrame:
-    """Decode the payload column in place: (key, payload, meta) ->
-    (key, payload=RAW PIXEL BYTES, meta). The bridge that lets
+def decode_pixels(df: DataFrame) -> DataFrame:
+    """Decode the image payload column in place: (key, payload, meta) ->
+    (key, payload=RAW PIXEL BYTES, meta with format ``fake-rgb``), so
+    the output can never be decoded twice. The bridge that lets
     JVM-side binary kernels (sample_frames' substring slicing) consume
     encoded containers: one partition-local mapInPandas decode stage,
     zero shuffles, then the downstream plan is unchanged.
@@ -209,25 +268,21 @@ def decode_pixels(df: DataFrame, decode_backend: str = "png") -> DataFrame:
     At 100 TB this is the canonical split of an image pipeline: decode
     once (Python/codec-bound, linearly scale-out), then every
     slice/sample/stat stage stays JVM-side whole-stage codegen."""
-    decode = _DECODERS[decode_backend]
-    schema = df.schema
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             pdf = pdf.copy()
-            pdf["payload"] = [decode(bytes(p)) for p in pdf["payload"]]
+            pdf["payload"] = _decoded(pdf)
+            pdf["meta"] = [{**m, "format": _RAW_PIXELS} for m in pdf["meta"]]
             yield pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return df.mapInPandas(run, schema=df.schema)
 
 
 def wav_container(pcm: bytes, sample_rate: int = 16000, channels: int = 1) -> bytes:
     """Wrap raw int16-LE PCM in a real RIFF/WAVE container (the inverse
     of _wav_decode), stdlib-only — used by tests and by producers that
     need genuine .wav payloads for the pipeline."""
-    import io
-    import wave
-
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
         w.setnchannels(channels)
@@ -237,115 +292,54 @@ def wav_container(pcm: bytes, sample_rate: int = 16000, channels: int = 1) -> by
     return buf.getvalue()
 
 
-def attach_wav_audio(df: DataFrame, key_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def attach_wav_audio(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Deterministic REAL-WAV audio payload: the same iterated-md5 PCM
     as attach_fake_audio, wrapped in a genuine RIFF/WAVE container. The
     44-byte canonical header is constant for fixed-size mono 16-bit PCM,
     so the wrap is a JVM-side byte concat — no Python in the plan."""
     header = wav_container(b"\x00" * 256)[:44]  # canonical 44-byte header
-    pcm = F.unhex(
-        F.concat(*[F.md5(F.concat(F.col(text_col), F.lit(str(i)))) for i in range(16)])
-    )
     meta = F.struct(
         F.lit(16000).alias("sample_rate"),
         F.lit(1).alias("channels"),
         F.lit("wav_pcm_s16le").alias("format"),
     )
-    return _rebalance_for_kernel(df).select(
-        F.col(key_col),
-        F.concat(F.lit(bytearray(header)), pcm).alias("payload"),
+    return fan_out_if_coarse(df).select(
+        "doc_id",
+        F.concat(F.lit(bytearray(header)), _md5_chain_col(text_col)).alias("payload"),
         meta.alias("meta"),
     )
 
 
 def attach_png_payload(
-    df: DataFrame,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-    *,
-    filter_type: int | None = None,
-    compress_level: int = 9,
-    noise_from_key: bool = False,
+    df: DataFrame, text_col: str = "text", *, noise_from_key: bool = False
 ) -> DataFrame:
     """Deterministic REAL-PNG image payload: the same iterated-md5 256
     bytes as attach_fake_payload, encoded as a genuine 16x16 greyscale
     PNG (multimodal/png.py) — fully DEFLATEd, with the scanline filter
-    chosen per image (key % 5) by default so the graded hot path
-    exercises ALL FIVE spec filters, not one; pass ``filter_type`` to
-    pin a single filter. Unlike
-    the constant WAV header, a PNG's IDAT bytes depend on the pixels
-    (zlib + per-line filters), so the wrap runs in the same Arrow
-    mapInPandas shape as the kernels that will consume it (partition-
-    local, zero shuffles). The pixel derivation is hex-reproducible, so
-    oracles re-derive expected pixels from the text side and any
-    encode/decode mistake shows up as a hash mismatch.
+    chosen per image (key % 5) so the graded hot path exercises ALL
+    FIVE spec filters, not one. The pixel derivation is
+    hex-reproducible, so oracles re-derive expected pixels from the
+    text side and any encode/decode mistake shows up as a hash
+    mismatch.
 
     ``noise_from_key=True`` applies m_phash_dedup's one-byte decode-
     noise convention BEFORE encoding (pixel[key % 200] = (key % 4)*63):
     a container cannot be byte-spliced after the fact (chunk CRCs), so
     the perturbation that models decode/re-encode noise moves to the
-    pixel domain — the decoded pixels still equal the fake-backend
+    pixel domain — the decoded pixels still equal the raw-format
     perturbed bytes, keeping the phash oracle derivation unchanged."""
-    import hashlib as _hl
 
-    from bristle_spark.multimodal import png as png_codec
+    def encode(key: int, text: str) -> bytes:
+        pixels = bytearray(_md5_chain(text))
+        if noise_from_key:
+            pixels[key % 200] = (key % 4) * 63
+        return png_codec.encode_png(bytes(pixels), 16, 16, filter_type=key % 5)
 
-    src = _rebalance_for_kernel(df).select(F.col(key_col), F.col(text_col).alias("__text"))
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField(
-                "meta",
-                T.StructType(
-                    [
-                        T.StructField("width", T.IntegerType()),
-                        T.StructField("height", T.IntegerType()),
-                        T.StructField("format", T.StringType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for key, text in zip(pdf[key_col], pdf["__text"]):
-                t = str(text).encode()
-                pixels = bytearray(
-                    b"".join(
-                        _hl.md5(t + str(i).encode()).digest() for i in range(16)
-                    )
-                )
-                if noise_from_key:
-                    pixels[int(key) % 200] = (int(key) % 4) * 63
-                ft = int(key) % 5 if filter_type is None else filter_type
-                payloads.append(
-                    png_codec.encode_png(
-                        bytes(pixels), 16, 16,
-                        filter_type=ft,
-                        compress_level=compress_level,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].to_numpy(),
-                    "payload": payloads,
-                    "meta": [
-                        {"width": 16, "height": 16, "format": "png-grey8"}
-                    ] * len(payloads),
-                }
-            )
-
-    return src.mapInPandas(run, schema=schema)
+    return _attach(df, text_col, encode, {"width": 16, "height": 16, "format": "png-grey8"})
 
 
 def attach_jpeg_payload(
-    df: DataFrame,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-    noise_from_key: bool = False,
+    df: DataFrame, text_col: str = "text", noise_from_key: bool = False
 ) -> DataFrame:
     """Deterministic REAL-JPEG image payload: a 16x16 greyscale image
     whose four 8x8 blocks are each CONSTANT — block (by, bx) is byte
@@ -362,68 +356,20 @@ def attach_jpeg_payload(
     planting keyed decode-noise in the BLOCK-CONSTANT domain (a
     baseline JPEG stays byte-exact only while blocks are constant, so
     per-pixel splicing would break the hex-side oracle; this is the
-    JPEG analog of attach_png_payload's pixel-domain noise).
+    JPEG analog of attach_png_payload's pixel-domain noise)."""
 
-    Same mapInPandas shape as attach_png_payload: the entropy bytes
-    depend on the pixels, so the wrap runs partition-local over Arrow
-    batches, zero shuffles."""
-    import hashlib as _hl
+    def encode(key: int, text: str) -> bytes:
+        blocks = list(hashlib.md5(text.encode() + b"0").digest()[:4])
+        if noise_from_key:
+            bi = key % 4
+            blocks[bi] = (blocks[bi] + 1 + key % 7) % 256
+        img = _grid2x2([np.full((8, 8), v) for v in blocks])
+        return jpeg_codec.encode_jpeg(img.tobytes(), 16, 16)
 
-    from bristle_spark.multimodal import jpeg as jpeg_codec
-
-    src = _rebalance_for_kernel(df).select(F.col(key_col), F.col(text_col).alias("__text"))
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField(
-                "meta",
-                T.StructType(
-                    [
-                        T.StructField("width", T.IntegerType()),
-                        T.StructField("height", T.IntegerType()),
-                        T.StructField("format", T.StringType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for key, text in zip(pdf[key_col], pdf["__text"]):
-                blocks = list(_hl.md5(str(text).encode() + b"0").digest()[:4])
-                if noise_from_key:
-                    bi = int(key) % 4
-                    blocks[bi] = (blocks[bi] + 1 + int(key) % 7) % 256
-                img = np.empty((16, 16), dtype=np.uint8)
-                for by in range(2):
-                    for bx in range(2):
-                        img[8 * by : 8 * by + 8, 8 * bx : 8 * bx + 8] = blocks[
-                            2 * by + bx
-                        ]
-                payloads.append(jpeg_codec.encode_jpeg(img.tobytes(), 16, 16))
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].to_numpy(),
-                    "payload": payloads,
-                    "meta": [
-                        {"width": 16, "height": 16, "format": "jpeg-grey8"}
-                    ] * len(payloads),
-                }
-            )
-
-    return src.mapInPandas(run, schema=schema)
+    return _attach(df, text_col, encode, {"width": 16, "height": 16, "format": "jpeg-grey8"})
 
 
-def attach_jpeg_checker_payload(
-    df: DataFrame,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def attach_jpeg_checker_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Deterministic REAL-JPEG payload with NONZERO AC coefficients
     (VERDICT r13 ask #5 — the constant-block contract never exercises
     the AC entropy-decode path hex-side): a 16x16 greyscale image whose
@@ -442,62 +388,14 @@ def attach_jpeg_checker_payload(
     code, the amplitude bits, and an EOB — the exact T.81 F.1.2 AC
     machinery (run-length, ZRL, magnitude/extend, EOB) the
     constant-block fixtures never touch, now witnessed by a SQL-side
-    oracle that re-derives the decoded pixels from the text hex.
+    oracle that re-derives the decoded pixels from the text hex."""
 
-    Same mapInPandas shape as attach_jpeg_payload: entropy bytes
-    depend on the pixels, so the wrap runs partition-local over Arrow
-    batches, zero shuffles."""
-    import hashlib as _hl
+    def encode(key: int, text: str) -> bytes:
+        hx = hashlib.md5(text.encode() + b"0").digest()
+        img = _grid2x2([_checker(hx, 2 * b) for b in range(4)])
+        return jpeg_codec.encode_jpeg(img.tobytes(), 16, 16)
 
-    from bristle_spark.multimodal import jpeg as jpeg_codec
-
-    src = _rebalance_for_kernel(df).select(F.col(key_col), F.col(text_col).alias("__text"))
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField(
-                "meta",
-                T.StructType(
-                    [
-                        T.StructField("width", T.IntegerType()),
-                        T.StructField("height", T.IntegerType()),
-                        T.StructField("format", T.StringType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        s = np.array([1, -1, -1, 1, 1, -1, -1, 1], dtype=np.int64)
-        pat = np.outer(s, s)
-        for pdf in batches:
-            payloads = []
-            for text in pdf["__text"]:
-                hx = _hl.md5(str(text).encode() + b"0").digest()[:8]
-                img = np.empty((16, 16), dtype=np.uint8)
-                for b in range(4):
-                    mid = 64 + hx[2 * b] % 128
-                    amp = 1 + hx[2 * b + 1] % 63
-                    by, bx = divmod(b, 2)
-                    img[8 * by : 8 * by + 8, 8 * bx : 8 * bx + 8] = (
-                        mid + amp * pat
-                    ).astype(np.uint8)
-                payloads.append(jpeg_codec.encode_jpeg(img.tobytes(), 16, 16))
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].to_numpy(),
-                    "payload": payloads,
-                    "meta": [
-                        {"width": 16, "height": 16, "format": "jpeg-grey8"}
-                    ] * len(payloads),
-                }
-            )
-
-    return src.mapInPandas(run, schema=schema)
+    return _attach(df, text_col, encode, {"width": 16, "height": 16, "format": "jpeg-grey8"})
 
 
 def checker_block_stats(df: DataFrame) -> DataFrame:
@@ -515,8 +413,6 @@ def checker_block_stats(df: DataFrame) -> DataFrame:
     Scale shape: one partition-local mapInPandas pass (vectorized
     numpy over the decoded tensor), zero shuffles before the
     presentation sort."""
-    from bristle_spark.multimodal import jpeg as jpeg_codec
-
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -531,21 +427,13 @@ def checker_block_stats(df: DataFrame) -> DataFrame:
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        s = np.array([1, -1, -1, 1, 1, -1, -1, 1], dtype=np.int64)
-        pat = np.outer(s, s)
         for pdf in batches:
             keys, idxs, mins, maxs, sums, amps, mids, oks = (
                 [], [], [], [], [], [], [], [],
             )
             for key, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, channels, pixels = jpeg_codec.decode_jpeg(bytes(payload))
-                if channels != 1:
-                    raise ValueError(
-                        f"jpeg payload has {channels} channels; grey expected"
-                    )
-                img = np.frombuffer(pixels, dtype=np.uint8).reshape(h, w)
+                img = _jpeg_image(payload, 1)[..., 0]
+                h, w = img.shape
                 blocks = (
                     img.reshape(h // 8, 8, w // 8, 8)
                     .transpose(0, 2, 1, 3)
@@ -556,7 +444,7 @@ def checker_block_stats(df: DataFrame) -> DataFrame:
                 bmax = blocks.max(axis=(1, 2))
                 amp = (bmax - bmin) // 2
                 mid = (bmax + bmin) // 2
-                recon = mid[:, None, None] + amp[:, None, None] * pat
+                recon = mid[:, None, None] + amp[:, None, None] * _CHECKER
                 ok = (blocks == recon).all(axis=(1, 2))
                 for t in range(blocks.shape[0]):
                     keys.append(int(key))
@@ -583,11 +471,7 @@ def checker_block_stats(df: DataFrame) -> DataFrame:
     return df.mapInPandas(run, schema=schema)
 
 
-def attach_jpeg_rgb_payload(
-    df: DataFrame,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def attach_jpeg_rgb_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Deterministic REAL-COLOR-JPEG payload: a 32x32 RGB image whose
     four 16x16 MCUs are each a CONSTANT color — MCU k (row-major) is
     bytes (3k, 3k+1, 3k+2) of md5(text || '0') — encoded as a genuine
@@ -600,59 +484,14 @@ def attach_jpeg_rgb_payload(
     SQL-side. The oracle therefore witnesses the WHOLE color decode
     path: 3-component SOF0 parse, interleaved-MCU entropy decode with
     per-component predictors and chroma Huffman tables, per-component
-    dequant/IDCT, chroma upsampling, and YCbCr->RGB.
+    dequant/IDCT, chroma upsampling, and YCbCr->RGB."""
 
-    Same mapInPandas shape as attach_jpeg_payload: partition-local
-    over Arrow batches, zero shuffles."""
-    import hashlib as _hl
+    def encode(key: int, text: str) -> bytes:
+        c = hashlib.md5(text.encode() + b"0").digest()
+        img = _grid2x2([np.full((16, 16, 3), list(c[3 * k : 3 * k + 3])) for k in range(4)])
+        return jpeg_codec.encode_jpeg_color(img.tobytes(), 32, 32)
 
-    from bristle_spark.multimodal import jpeg as jpeg_codec
-
-    src = _rebalance_for_kernel(df).select(F.col(key_col), F.col(text_col).alias("__text"))
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField(
-                "meta",
-                T.StructType(
-                    [
-                        T.StructField("width", T.IntegerType()),
-                        T.StructField("height", T.IntegerType()),
-                        T.StructField("format", T.StringType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            payloads = []
-            for text in pdf["__text"]:
-                colors = _hl.md5(str(text).encode() + b"0").digest()[:12]
-                img = np.empty((32, 32, 3), dtype=np.uint8)
-                for k in range(4):
-                    my, mx = divmod(k, 2)
-                    img[16 * my : 16 * my + 16, 16 * mx : 16 * mx + 16] = [
-                        colors[3 * k], colors[3 * k + 1], colors[3 * k + 2]
-                    ]
-                payloads.append(
-                    jpeg_codec.encode_jpeg_color(img.tobytes(), 32, 32)
-                )
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].to_numpy(),
-                    "payload": payloads,
-                    "meta": [
-                        {"width": 32, "height": 32, "format": "jpeg-rgb420"}
-                    ] * len(payloads),
-                }
-            )
-
-    return src.mapInPandas(run, schema=schema)
+    return _attach(df, text_col, encode, {"width": 32, "height": 32, "format": "jpeg-rgb420"})
 
 
 def rgb_mcu_stats(df: DataFrame, mcu: int = 16) -> DataFrame:
@@ -668,8 +507,6 @@ def rgb_mcu_stats(df: DataFrame, mcu: int = 16) -> DataFrame:
     Scale shape: one partition-local mapInPandas pass (vectorized
     numpy over the decoded tensor), zero shuffles before the
     presentation sort."""
-    from bristle_spark.multimodal import jpeg as jpeg_codec
-
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -682,17 +519,11 @@ def rgb_mcu_stats(df: DataFrame, mcu: int = 16) -> DataFrame:
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         for pdf in batches:
             keys, idxs, rs, gs, bs, ncs = [], [], [], [], [], []
             for key, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, channels, pixels = jpeg_codec.decode_jpeg(bytes(payload))
-                if channels != 3:
-                    raise ValueError(
-                        f"jpeg payload has {channels} channels; RGB expected"
-                    )
-                img = np.frombuffer(pixels, dtype=np.uint8).reshape(h, w, 3)
+                img = _jpeg_image(payload, 3)
+                h, w, _ = img.shape
                 n_my, n_mx = h // mcu, w // mcu
                 tiles = (
                     img.reshape(n_my, mcu, n_mx, mcu, 3)
@@ -726,11 +557,7 @@ def rgb_mcu_stats(df: DataFrame, mcu: int = 16) -> DataFrame:
     return df.mapInPandas(run, schema=schema)
 
 
-def attach_jpeg_ycc_checker_payload(
-    df: DataFrame,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def attach_jpeg_ycc_checker_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Deterministic 4:2:0 COLOR JPEG with NONZERO AC in EVERY
     component (VERDICT r14 ask #3 — m_jpeg_rgb_stats rides the
     MCU-constant contract, so a chroma AC decode bug was invisible
@@ -750,65 +577,16 @@ def attach_jpeg_ycc_checker_payload(
     RGB is hex-derivable pixel-exactly while every block's entropy
     stream carries the full T.81 AC machinery (two ZRLs, a run-6 code,
     magnitude/extend, EOB) through BOTH the luma and the CHROMA AC
-    Huffman tables, interleaved in one scan with three DC predictors.
+    Huffman tables, interleaved in one scan with three DC predictors."""
 
-    Same mapInPandas shape as attach_jpeg_payload: partition-local
-    over Arrow batches (narrow scans rebalanced), zero compute
-    shuffles."""
-    import hashlib as _hl
+    def encode(key: int, text: str) -> bytes:
+        hx = hashlib.md5(text.encode() + b"0").digest()
+        y = _grid2x2([_checker(hx, 2 * b) for b in range(4)])
+        cb = _checker(hx, 8).astype(np.uint8)
+        cr = _checker(hx, 10).astype(np.uint8)
+        return jpeg_codec.encode_jpeg_ycbcr420(y, cb, cr)
 
-    from bristle_spark.multimodal import jpeg as jpeg_codec
-
-    src = _rebalance_for_kernel(df).select(
-        F.col(key_col), F.col(text_col).alias("__text")
-    )
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField(
-                "meta",
-                T.StructType(
-                    [
-                        T.StructField("width", T.IntegerType()),
-                        T.StructField("height", T.IntegerType()),
-                        T.StructField("format", T.StringType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        s = np.array([1, -1, -1, 1, 1, -1, -1, 1], dtype=np.int64)
-        pat = np.outer(s, s)
-        for pdf in batches:
-            payloads = []
-            for text in pdf["__text"]:
-                hx = _hl.md5(str(text).encode() + b"0").digest()[:12]
-                y = np.empty((16, 16), dtype=np.uint8)
-                for b in range(4):
-                    by, bx = divmod(b, 2)
-                    mid, amp = 64 + hx[2 * b] % 128, 1 + hx[2 * b + 1] % 63
-                    y[8 * by : 8 * by + 8, 8 * bx : 8 * bx + 8] = (
-                        mid + amp * pat
-                    ).astype(np.uint8)
-                cb = (64 + hx[8] % 128 + (1 + hx[9] % 63) * pat).astype(np.uint8)
-                cr = (64 + hx[10] % 128 + (1 + hx[11] % 63) * pat).astype(np.uint8)
-                payloads.append(jpeg_codec.encode_jpeg_ycbcr420(y, cb, cr))
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].to_numpy(),
-                    "payload": payloads,
-                    "meta": [
-                        {"width": 16, "height": 16, "format": "jpeg-ycc420"}
-                    ] * len(payloads),
-                }
-            )
-
-    return src.mapInPandas(run, schema=schema)
+    return _attach(df, text_col, encode, {"width": 16, "height": 16, "format": "jpeg-ycc420"})
 
 
 def rgb_block_stats(df: DataFrame) -> DataFrame:
@@ -820,8 +598,6 @@ def rgb_block_stats(df: DataFrame) -> DataFrame:
 
     Scale shape: one partition-local mapInPandas pass (whole-tensor
     numpy per image), zero compute shuffles."""
-    from bristle_spark.multimodal import jpeg as jpeg_codec
-
     fields = [T.StructField("doc_id", T.LongType()),
               T.StructField("block_idx", T.IntegerType())]
     for ch in ("r", "g", "b"):
@@ -833,17 +609,11 @@ def rgb_block_stats(df: DataFrame) -> DataFrame:
     schema = T.StructType(fields)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         for pdf in batches:
             out: dict[str, list] = {f.name: [] for f in schema.fields}
             for key, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, channels, pixels = jpeg_codec.decode_jpeg(bytes(payload))
-                if channels != 3:
-                    raise ValueError(
-                        f"jpeg payload has {channels} channels; RGB expected"
-                    )
-                img = np.frombuffer(pixels, dtype=np.uint8).reshape(h, w, 3)
+                img = _jpeg_image(payload, 3)
+                h, w, _ = img.shape
                 nby, nbx = h // 8, w // 8
                 blocks = (
                     img.reshape(nby, 8, nbx, 8, 3)
@@ -867,36 +637,16 @@ def rgb_block_stats(df: DataFrame) -> DataFrame:
     return df.mapInPandas(run, schema=schema)
 
 
-def attach_gzip_payload(
-    df: DataFrame, key_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def attach_gzip_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Each document's text as a REAL gzip member (stdlib ``gzip``,
     mtime pinned to 0 so the container bytes are deterministic) — the
     shape a 100 TB corpus actually arrives in (WARC/WET members, .jsonl.gz
-    shards). Partition-local mapInPandas, zero shuffles."""
-    import gzip as _gzip
+    shards)."""
 
-    src = _rebalance_for_kernel(df).select(F.col(key_col), F.col(text_col).alias("__text"))
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
+    def encode(key: int, text: str) -> bytes:
+        return gzip.compress(text.encode(), compresslevel=6, mtime=0)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].to_numpy(),
-                    "payload": [
-                        _gzip.compress(str(t).encode(), compresslevel=6, mtime=0)
-                        for t in pdf["__text"]
-                    ],
-                }
-            )
-
-    return src.mapInPandas(run, schema=schema)
+    return _attach(df, text_col, encode, {"format": "gzip"})
 
 
 GZIP_STATS_SCHEMA = T.StructType(
@@ -916,19 +666,16 @@ def gzip_text_stats(df: DataFrame) -> DataFrame:
     l_token_count convention) and an md5 witness of the recovered
     bytes, so an oracle hashing the raw text side verifies the
     decompression BYTE-EXACT."""
-    import hashlib as _hl
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gzip as _gzip
-
         for pdf in batches:
-            texts = [_gzip.decompress(bytes(p)) for p in pdf["payload"]]
+            texts = [gzip.decompress(bytes(p)) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].to_numpy(),
                     "n_bytes": [len(t) for t in texts],
                     "ws_tokens": [len(t.decode().split(" ")) for t in texts],
-                    "text_md5": [_hl.md5(t).hexdigest() for t in texts],
+                    "text_md5": [hashlib.md5(t).hexdigest() for t in texts],
                 }
             )
 
@@ -949,20 +696,16 @@ PIXEL_STATS_SCHEMA = T.StructType(
 )
 
 
-def pixel_stats(df: DataFrame, decode_backend: str = "fake") -> DataFrame:
+def pixel_stats(df: DataFrame) -> DataFrame:
     """Decode the payload and emit per-image pixel statistics plus the
     full decoded buffer as hex — the byte-exact witness that the decode
     path (container parse, inflate, unfilter) recovered the pixels. The
     batch's pixel buffers concatenate into ONE flat numpy array (per-row
     reductions via bincount over repeated row ids, no Python loop over
     bytes); partition-local mapInPandas, zero shuffles."""
-    import numpy as np
-
-    decode = _DECODERS[decode_backend]
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            decoded = [decode(bytes(p)) for p in pdf["payload"]]
+            decoded = _decoded(pdf)
             widths = pdf["meta"].map(lambda m: int(m["width"])).to_numpy()
             heights = pdf["meta"].map(lambda m: int(m["height"])).to_numpy()
             n = len(decoded)
@@ -1008,9 +751,7 @@ EDGE_STATS_SCHEMA = T.StructType(
 )
 
 
-def edge_stats(
-    df: DataFrame, threshold: int = 96, decode_backend: str = "fake"
-) -> DataFrame:
+def edge_stats(df: DataFrame, threshold: int = 96) -> DataFrame:
     """Decode the payload and emit per-image gradient/edge statistics:
     the L1 sums of horizontal and vertical neighbor differences, the
     max gradient, and the count/ratio of gradients above ``threshold``
@@ -1023,10 +764,6 @@ def edge_stats(
     ONE (n, h, w) int16 tensor and both gradient fields reduce with
     whole-tensor numpy ops — no Python loop over pixels. Partition-
     local mapInPandas, zero shuffles, the same plan at any scale."""
-    import numpy as np
-
-    decode = _DECODERS[decode_backend]
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             n = len(pdf)
@@ -1035,7 +772,7 @@ def edge_stats(
             maxes = np.zeros(n, dtype=np.int64)
             edges = np.zeros(n, dtype=np.int64)
             dens = np.zeros(n, dtype=np.float64)
-            for w, h, idx, stack in _dims_stacks(pdf, decode):
+            for w, h, idx, stack in _dims_stacks(pdf):
                 total = h * (w - 1) + (h - 1) * w
                 # 1x1 (or empty) image: no gradient field exists — the
                 # pre-zeroed sums/max/edges/density stand
@@ -1070,19 +807,15 @@ def edge_stats(
     return df.mapInPandas(run, schema=EDGE_STATS_SCHEMA)
 
 
-def extract_features(df: DataFrame, decode_backend: str = "fake") -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary column: byte
     count, mean byte value, 16-bucket byte histogram. Partition-local;
     the whole Arrow batch is processed as one flat numpy buffer — one
     ``bincount`` for the per-row sums and one for all histograms, no
     Python loop over rows or bytes."""
-    import numpy as np
-
-    decode = _DECODERS[decode_backend]
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            decoded = [decode(bytes(p)) for p in pdf["payload"]]
+            decoded = _decoded(pdf)
             lengths = np.fromiter((len(d) for d in decoded), dtype=np.int64, count=len(decoded))
             flat = np.frombuffer(b"".join(decoded), dtype=np.uint8)
             n = len(decoded)
@@ -1138,17 +871,13 @@ PHASH_SCHEMA = T.StructType(
 )
 
 
-def phash(df: DataFrame, decode_backend: str = "fake") -> DataFrame:
+def phash(df: DataFrame) -> DataFrame:
     """64-bit average-pool perceptual hash: decode -> 8x8 average pool ->
     bit i = (cell i > mean of cells) -> pack. Near-identical images (same
     content, small decode/re-encode noise) land within a few bits of
     Hamming distance; unrelated images sit ~32 bits apart. Same
     mapInPandas shape as the other decoders: partition-local, no shuffle,
     Arrow-batched numpy with per-(width,height) stacked pooling."""
-    import numpy as np
-
-    decode = _DECODERS[decode_backend]
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         weights = (np.uint64(1) << np.arange(64, dtype=np.uint64))[::-1]
         for pdf in batches:
@@ -1160,7 +889,7 @@ def phash(df: DataFrame, decode_backend: str = "fake") -> DataFrame:
             doc_ids = pdf["doc_id"].to_numpy()
             out_docs: list = []
             out_hash: list = []
-            for w, h, idx, stack in _dims_stacks(pdf, decode):
+            for w, h, idx, stack in _dims_stacks(pdf):
                 if w < 8 or h < 8:
                     raise ValueError(
                         f"phash needs at least an 8x8 image, got {w}x{h}"
@@ -1191,22 +920,17 @@ RESIZE_SCHEMA = T.StructType(
 )
 
 
-def resize(df: DataFrame, out_width: int = 8, out_height: int = 8,
-           decode_backend: str = "fake") -> DataFrame:
+def resize(df: DataFrame, out_width: int = 8, out_height: int = 8) -> DataFrame:
     """Image resize via average pooling over the decoded pixel buffer.
 
-    The decode step is the same stub as extract_features; the pooling
-    itself is real numpy over Arrow batches (vectorized, partition-local,
+    Each row decodes by its own format; the pooling itself is real
+    numpy over Arrow batches (vectorized, partition-local,
     no shuffle) — exactly the shape a PIL/libjpeg-backed resize takes at
     100 TB: binary in, binary out, fixed output size, mapInPandas.
 
     Average pooling can only downscale: an output dimension larger than
     a source image's raises inside the task (bh/bw of 0 would otherwise
     mean-reduce an empty axis into NaN bytes — silent garbage)."""
-    import numpy as np
-
-    decode = _DECODERS[decode_backend]
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             # each (width, height) group pools as ONE stacked tensor —
@@ -1214,7 +938,7 @@ def resize(df: DataFrame, out_width: int = 8, out_height: int = 8,
             doc_ids = pdf["doc_id"].to_numpy()
             out_docs: list = []
             out_bytes: list = []
-            for w, h, idx, stack in _dims_stacks(pdf, decode):
+            for w, h, idx, stack in _dims_stacks(pdf):
                 if w < out_width or h < out_height:
                     raise ValueError(
                         f"resize is an average pool (downscale only): "
@@ -1251,28 +975,19 @@ AUGMENT_SCHEMA = T.StructType(
 )
 
 
-def augment(
-    df: DataFrame,
-    crop: int = 8,
-    flip: bool = True,
-    decode_backend: str = "fake",
-) -> DataFrame:
+def augment(df: DataFrame, crop: int = 8, flip: bool = True) -> DataFrame:
     """Deterministic vision-training augmentation: horizontal flip then
     center crop to ``crop`` x ``crop`` — the eval-time transform pair of
     every image training pipeline (random variants differ only in the
     offset/flip coin, which a distributed pipeline derives from a
     per-sample seed, not a global RNG). Zero-copy numpy views per
     (width, height) group; partition-local mapInPandas, no shuffle."""
-    import numpy as np
-
-    decode = _DECODERS[decode_backend]
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             doc_ids = pdf["doc_id"].to_numpy()
             out_docs: list = []
             out_bytes: list = []
-            for w, h, idx, stack in _dims_stacks(pdf, decode):
+            for w, h, idx, stack in _dims_stacks(pdf):
                 if w < crop or h < crop:
                     raise ValueError(
                         f"center crop {crop}x{crop} exceeds source {w}x{h}"
@@ -1308,26 +1023,21 @@ AUDIO_SCHEMA = T.StructType(
 )
 
 
-def attach_fake_audio(df: DataFrame, key_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Deterministic fake audio payload: the same iterated-md5 256 bytes
-    reinterpreted as 128 little-endian int16 PCM samples, with audio
-    metadata — stands in for (audio_bytes, {sample_rate, channels,
-    format}) until a real codec exists."""
-    payload = F.unhex(
-        F.concat(*[F.md5(F.concat(F.col(text_col), F.lit(str(i)))) for i in range(16)])
-    )
+def attach_fake_audio(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Deterministic raw audio payload: the same iterated-md5 256 bytes
+    reinterpreted as 128 little-endian int16 PCM samples (format
+    ``pcm_s16le``), with audio metadata, built JVM-side."""
     meta = F.struct(
         F.lit(16000).alias("sample_rate"),
         F.lit(1).alias("channels"),
         F.lit("pcm_s16le").alias("format"),
     )
-    return _rebalance_for_kernel(df).select(
-        F.col(key_col), payload.alias("payload"), meta.alias("meta")
+    return fan_out_if_coarse(df).select(
+        "doc_id", _md5_chain_col(text_col).alias("payload"), meta.alias("meta")
     )
 
 
-def audio_features(df: DataFrame, chunk_samples: int = 32,
-                   decode_backend: str = "fake") -> DataFrame:
+def audio_features(df: DataFrame, chunk_samples: int = 32) -> DataFrame:
     """Chunked audio feature extraction over the binary column: per
     fixed-size sample window, RMS energy, peak amplitude, and
     zero-crossing rate — the VAD/quality front end of an audio
@@ -1338,10 +1048,6 @@ def audio_features(df: DataFrame, chunk_samples: int = 32,
     features come out of whole-tensor numpy reductions — no Python loop
     over rows, chunks, or samples. A trailing partial window is
     truncated (codec-frame semantics)."""
-    import numpy as np
-
-    decode = _DECODERS[decode_backend]
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             n = len(pdf)
@@ -1350,9 +1056,8 @@ def audio_features(df: DataFrame, chunk_samples: int = 32,
                     {f.name: pd.Series([], dtype="object") for f in AUDIO_SCHEMA}
                 )
                 continue
-            payloads = pdf["payload"].to_numpy()
             doc_ids = pdf["doc_id"].to_numpy()
-            decoded = [decode(bytes(p)) for p in payloads]
+            decoded = _decoded(pdf)
             lengths = np.fromiter((len(d) for d in decoded), dtype=np.int64, count=n)
             out = {k: [] for k in ("doc_id", "chunk_idx", "n_samples", "rms", "peak", "zcr")}
             for nbytes in np.unique(lengths):
@@ -1396,7 +1101,7 @@ FP_WINDOW = 8   # samples per energy window
 FP_WINDOWS = 16  # windows per payload -> 15 comparison bits
 
 
-def audio_fingerprint(df: DataFrame, decode_backend: str = "fake") -> DataFrame:
+def audio_fingerprint(df: DataFrame) -> DataFrame:
     """Chromaprint-style acoustic fingerprint over the binary column:
     the int16 sample stream is cut into {FP_WINDOWS} energy windows of
     {FP_WINDOW} samples and each adjacent-window energy comparison
@@ -1411,9 +1116,6 @@ def audio_fingerprint(df: DataFrame, decode_backend: str = "fake") -> DataFrame:
     Same vectorized ``mapInPandas`` shape as ``audio_features``: one
     (rows, windows, samples) tensor per Arrow batch, whole-tensor
     reductions, no per-row Python."""
-    import numpy as np
-
-    decode = _DECODERS[decode_backend]
     n_samp_need = FP_WINDOW * FP_WINDOWS
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1423,7 +1125,7 @@ def audio_fingerprint(df: DataFrame, decode_backend: str = "fake") -> DataFrame:
                 yield pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
                                     "fp": pd.Series([], dtype="int64")})
                 continue
-            decoded = [decode(bytes(p)) for p in pdf["payload"].to_numpy()]
+            decoded = _decoded(pdf)
             keep = np.flatnonzero(
                 np.fromiter((len(d) for d in decoded), dtype=np.int64, count=n)
                 >= 2 * n_samp_need
@@ -1458,7 +1160,7 @@ SCENE_FRAME_BYTES = 16  # bytes per video frame
 SCENE_CUT_DIFF = 1600   # L1 frame-delta above which a cut is declared
 
 
-def scene_cuts(df: DataFrame, decode_backend: str = "fake") -> DataFrame:
+def scene_cuts(df: DataFrame) -> DataFrame:
     """Shot-boundary detection over the payload treated as a frame
     sequence: the L1 distance between consecutive {SCENE_FRAME_BYTES}-
     byte frames (INTEGER sum of absolute byte deltas — exact in any
@@ -1469,10 +1171,6 @@ def scene_cuts(df: DataFrame, decode_backend: str = "fake") -> DataFrame:
     Vectorized ``mapInPandas``: one (rows, frames, bytes) uint8 tensor
     per Arrow batch; the deltas are a whole-tensor diff + reduction, no
     per-row Python. A trailing partial frame is truncated."""
-    import numpy as np
-
-    decode = _DECODERS[decode_backend]
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             n = len(pdf)
@@ -1481,7 +1179,7 @@ def scene_cuts(df: DataFrame, decode_backend: str = "fake") -> DataFrame:
                     {f.name: pd.Series([], dtype="object") for f in SCENE_SCHEMA}
                 )
                 continue
-            decoded = [decode(bytes(p)) for p in pdf["payload"].to_numpy()]
+            decoded = _decoded(pdf)
             lengths = np.fromiter((len(d) for d in decoded), dtype=np.int64, count=n)
             out = {k: [] for k in ("doc_id", "n_cuts", "cut_idxs", "max_diff")}
             doc_ids = pdf["doc_id"].to_numpy()
@@ -1522,7 +1220,7 @@ PATCH_SCHEMA = T.StructType(
 )
 
 
-def patchify(df: DataFrame, patch: int = 4, decode_backend: str = "fake") -> DataFrame:
+def patchify(df: DataFrame, patch: int = 4) -> DataFrame:
     """ViT-style patch extraction: split each decoded image into a grid
     of ``patch`` x ``patch`` pixel patches, row-major patch ids, each
     emitted as its own row with the flattened patch bytes and the patch
@@ -1534,10 +1232,6 @@ def patchify(df: DataFrame, patch: int = 4, decode_backend: str = "fake") -> Dat
     views, no per-pixel Python. Partition-local, no shuffle; at 100 TB
     the patch stream inherits the scan's partitioning and feeds the
     embedding stage without a repartition."""
-    import numpy as np
-
-    decode = _DECODERS[decode_backend]
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             doc_ids = pdf["doc_id"].to_numpy()
@@ -1547,7 +1241,7 @@ def patchify(df: DataFrame, patch: int = 4, decode_backend: str = "fake") -> Dat
                 "patch": [],
                 "patch_mean": [],
             }
-            for w, h, idx, stack in _dims_stacks(pdf, decode):
+            for w, h, idx, stack in _dims_stacks(pdf):
                 if w % patch or h % patch:
                     raise ValueError(
                         f"image {w}x{h} not divisible into {patch}x{patch} patches"
@@ -1582,7 +1276,7 @@ HIST_EQ_SCHEMA = T.StructType(
 )
 
 
-def hist_equalize(df: DataFrame, decode_backend: str = "fake") -> DataFrame:
+def hist_equalize(df: DataFrame) -> DataFrame:
     """Per-image histogram equalization — the classic contrast
     normalization a vision-preprocessing pipeline applies before
     feature extraction: each pixel maps through the image's own CDF,
@@ -1596,10 +1290,6 @@ def hist_equalize(df: DataFrame, decode_backend: str = "fake") -> DataFrame:
     from a row-wise cumsum, and the mapping is a fancy-index gather —
     no Python loop over pixels.  Partition-local mapInPandas, zero
     shuffles, same plan at any scale."""
-    import numpy as np
-
-    decode = _DECODERS[decode_backend]
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             doc_ids = pdf["doc_id"].to_numpy()
@@ -1608,7 +1298,7 @@ def hist_equalize(df: DataFrame, decode_backend: str = "fake") -> DataFrame:
             out_min: list = []
             out_max: list = []
             out_sum: list = []
-            for w, h, idx, stack in _dims_stacks(pdf, decode):
+            for w, h, idx, stack in _dims_stacks(pdf):
                 n_img = len(idx)
                 npx = h * w
                 flat = stack.reshape(n_img, npx).astype(np.int64)
@@ -1643,64 +1333,25 @@ def hist_equalize(df: DataFrame, decode_backend: str = "fake") -> DataFrame:
     return df.mapInPandas(run, schema=HIST_EQ_SCHEMA)
 
 
-def attach_wav_padded(
-    df: DataFrame, key_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def attach_wav_padded(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Deterministic REAL-WAV payload with PLANTED silence padding: the
     128 iterated-md5 int16 samples of attach_wav_audio, preceded by
     ``16 + byte0 % 64`` and followed by ``16 + byte1 % 64`` zero
     samples (bytes from md5(text || 'pad')) — the shape voice-activity
     trimming actually runs on. The PCM length now VARIES per document,
     so the RIFF/WAVE header's chunk-size fields vary too and the wrap
-    runs through the real ``wave`` encoder per row (mapInPandas, the
+    runs through the real ``wave`` encoder per row (the ``_attach``
     codec-wrap shape) instead of the constant-header JVM concat —
     which also makes any decoder that ignores the declared data size
     fail the oracle."""
-    import hashlib as _hl
 
-    src = _rebalance_for_kernel(df).select(F.col(key_col), F.col(text_col).alias("__text"))
-    schema = T.StructType(
-        [
-            T.StructField(key_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField(
-                "meta",
-                T.StructType(
-                    [
-                        T.StructField("sample_rate", T.IntegerType()),
-                        T.StructField("channels", T.IntegerType()),
-                        T.StructField("format", T.StringType()),
-                    ]
-                ),
-            ),
-        ]
-    )
+    def encode(key: int, text: str) -> bytes:
+        pad = hashlib.md5((text + "pad").encode()).digest()
+        lead, trail = 16 + pad[0] % 64, 16 + pad[1] % 64
+        return wav_container(b"\x00\x00" * lead + _md5_chain(text) + b"\x00\x00" * trail)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["__text"]:
-                t = str(text)
-                pad = _hl.md5((t + "pad").encode()).digest()
-                lead, trail = 16 + pad[0] % 64, 16 + pad[1] % 64
-                pcm = b"".join(
-                    _hl.md5((t + str(i)).encode()).digest() for i in range(16)
-                )
-                payloads.append(
-                    wav_container(b"\x00\x00" * lead + pcm + b"\x00\x00" * trail)
-                )
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].to_numpy(),
-                    "payload": payloads,
-                    "meta": [
-                        {"sample_rate": 16000, "channels": 1,
-                         "format": "wav_pcm_s16le"}
-                    ] * len(payloads),
-                }
-            )
-
-    return src.mapInPandas(run, schema=schema)
+    meta = {"sample_rate": 16000, "channels": 1, "format": "wav_pcm_s16le"}
+    return _attach(df, text_col, encode, meta)
 
 
 def wav_trim_stats(df: DataFrame) -> DataFrame:
@@ -1729,8 +1380,6 @@ def wav_trim_stats(df: DataFrame) -> DataFrame:
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         for pdf in batches:
             rows = {k: [] for k in ("doc_id", "n_total", "lead_zeros",
                                     "trail_zeros", "n_trimmed",
@@ -1762,7 +1411,7 @@ def wav_trim_stats(df: DataFrame) -> DataFrame:
     return df.mapInPandas(run, schema=schema)
 
 
-def region_count(df: DataFrame, decode_backend: str = "jpeg") -> DataFrame:
+def region_count(df: DataFrame) -> DataFrame:
     """4-connectivity connected-component count over decoded greyscale
     images — the region/blob counter of a document-layout or figure-
     detection front end (how many disjoint same-intensity regions does
@@ -1779,8 +1428,6 @@ def region_count(df: DataFrame, decode_backend: str = "jpeg") -> DataFrame:
     the largest component's graph diameter, while per-iteration work
     is whole-tensor numpy over (batch, H, W).  No per-pixel Python, no
     shuffles; partition-local mapInPandas like every codec kernel."""
-    decode = _DECODERS[decode_backend]
-
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -1791,12 +1438,10 @@ def region_count(df: DataFrame, decode_backend: str = "jpeg") -> DataFrame:
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         for pdf in batches:
             keys = pdf["doc_id"].to_numpy()
             out_keys, out_reg, out_vals, out_big = [], [], [], []
-            for w, h, idx, v in _dims_stacks(pdf, decode):
+            for w, h, idx, v in _dims_stacks(pdf):
                 n, hh, ww = v.shape
                 lab = np.arange(hh * ww, dtype=np.int64).reshape(1, hh, ww)
                 lab = np.broadcast_to(lab, v.shape).copy()
@@ -1853,8 +1498,6 @@ def wav_resample_half(df: DataFrame) -> DataFrame:
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         for pdf in batches:
             keys, payloads, nins, nouts, rmss = [], [], [], [], []
             for key, payload in zip(pdf["doc_id"], pdf["payload"]):

@@ -6,8 +6,7 @@ stream is stdlib ``zlib``, and the five scanline filters (None / Sub /
 Up / Average / Paeth) are spec'd byte math — everything needed to run
 the m_resize / m_phash / m_patchify kernels on REAL encoded payloads
 is implementable without a dependency. Format details follow the
-public W3C PNG specification (ISO/IEC 15948); the Pillow backend
-remains the general-codec path for formats beyond PNG.
+public W3C PNG specification (ISO/IEC 15948).
 
 Scope: 8-bit greyscale (color type 0) and 8-bit RGB (color type 2),
 non-interlaced — the fixture shapes plus the common ML-preprocessing

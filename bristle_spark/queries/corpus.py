@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from bristle_spark.catalog import load_table
+from bristle_spark.catalog import fan_out_if_coarse, load_table
 from bristle_spark.functions.hashing import hash60, hash60_sql
 from bristle_spark.queries.dedup import (
     _MINHASH_CTES,
@@ -2035,14 +2035,11 @@ def l_quality_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r15: widen a narrow bench scan BEFORE checkpointing, so the
     # feature materialization and all {LOGREG_ITERS} gradient passes
-    # run at session parallelism (the multimodal kernel-rebalance
-    # rule; at corpus scale the scan already carries many splits and
-    # the branch is metadata-only). The numpy pin tolerates the
-    # partial-sum reordering (2e-6 >> the 5e3-term fp noise).
-    target = spark.sparkContext.defaultParallelism
-    if feats.rdd.getNumPartitions() < target:
-        feats = feats.repartition(target)
-    feats = feats.localCheckpoint()
+    # run at session parallelism (at corpus scale the scan already
+    # carries many splits and the branch is metadata-only). The numpy
+    # pin tolerates the partial-sum reordering (2e-6 >> the 5e3-term
+    # fp noise).
+    feats = fan_out_if_coarse(feats).localCheckpoint()
     n_docs = feats.count()  # action on the checkpointed frame; reused below
     if n_docs == 0:  # empty corpus: report the zero-init weights
         return spark.range(0, LOGREG_DIM, 1, 1).select(

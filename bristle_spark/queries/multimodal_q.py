@@ -6,12 +6,14 @@ and binary outputs are emitted as lowercase hex so every oracle checks
 full content (the pHash keys replay the 64-bit bit packing via
 HUGEINT). Every image key decodes a REAL container: the m_png_* keys
 run the stdlib PNG codec (multimodal/png.py), the m_jpeg_* keys the
-stdlib ITU-T T.81 codec (multimodal/jpeg.py). The fake-backend
-originals (m_binary_features, m_frame_sample, m_resize, m_phash_dedup,
-m_scene_cut, m_patchify) were retired in round 13 (VERDICT r12 ask #3)
-after each was superseded by a real-codec twin sharing the SAME oracle;
-``attach_fake_payload``/``decode_backend='fake'`` remain in
-bristle_spark/multimodal for unit-testing the kernels without a codec.
+stdlib ITU-T T.81 codec (multimodal/jpeg.py). No key picks a decoder:
+each kernel decodes a payload by the container its builder wrote into
+``meta.format``. The raw-payload originals (m_binary_features,
+m_frame_sample, m_resize, m_phash_dedup, m_scene_cut, m_patchify) were
+retired in round 13 (VERDICT r12 ask #3) after each was superseded by a
+real-codec twin sharing the SAME oracle; ``attach_fake_payload`` (raw
+``fake-rgb`` pixels) remains in bristle_spark/multimodal for
+unit-testing the kernels without a codec.
 """
 
 from __future__ import annotations
@@ -93,7 +95,7 @@ def m_png_binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     the metadata join."""
     d = load_table(spark, sf_dir, "documents")
     payloads = multimodal.attach_png_payload(d)
-    feats = multimodal.extract_features(payloads, decode_backend="png")
+    feats = multimodal.extract_features(payloads)
     return (
         feats.join(d.select("doc_id", "lang"), "doc_id")
         .select(
@@ -134,7 +136,7 @@ def m_png_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero shuffles before the presentation sort."""
     d = load_table(spark, sf_dir, "documents")
     pngs = multimodal.attach_png_payload(d)
-    payloads = multimodal.decode_pixels(pngs, decode_backend="png")
+    payloads = multimodal.decode_pixels(pngs)
     sampled = multimodal.sample_frames(payloads, every_nth=4)
     return sampled.select(
         "doc_id",
@@ -319,7 +321,7 @@ def m_png_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-payload cost inside the partition-local phash pass."""
     docs = _planted_near_dup_docs(spark, sf_dir)
     pngs = multimodal.attach_png_payload(docs, text_col="ctext", noise_from_key=True)
-    hashes = multimodal.phash(pngs, decode_backend="png")
+    hashes = multimodal.phash(pngs)
     return _phash_band_pairs(hashes)
 
 
@@ -472,7 +474,7 @@ def m_png_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas stages (PNG wrap, decode+diff), zero shuffles."""
     d = load_table(spark, sf_dir, "documents")
     payloads = multimodal.attach_png_payload(d)
-    return multimodal.scene_cuts(payloads, decode_backend="png").transform(_present, "doc_id")
+    return multimodal.scene_cuts(payloads).transform(_present, "doc_id")
 
 
 _PATCHIFY_ORACLE = f"""
@@ -506,7 +508,7 @@ def m_png_patchify(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan's partitioning."""
     d = load_table(spark, sf_dir, "documents")
     payloads = multimodal.attach_png_payload(d)
-    patches = multimodal.patchify(payloads, patch=4, decode_backend="png")
+    patches = multimodal.patchify(payloads, patch=4)
     return patches.select(
         "doc_id",
         "patch_id",
@@ -520,7 +522,7 @@ def m_wav_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The m_audio_features pipeline driven through a REAL codec: the
     deterministic PCM is wrapped in a genuine RIFF/WAVE container
     (JVM-side constant-header concat) and the kernel decodes it with
-    Python's stdlib ``wave`` module (``decode_backend='wav'``) — no
+    Python's stdlib ``wave`` module (format ``wav_pcm_s16le``) — no
     external dependency, actual container parsing in the hot path. The
     oracle is IDENTICAL to m_audio_features' (DuckDB re-derives the
     int16 samples from the hex side): a correct wav parse must strip
@@ -532,7 +534,7 @@ def m_wav_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds a fixed per-payload cost inside the same batch loop."""
     d = load_table(spark, sf_dir, "documents")
     audio = multimodal.attach_wav_audio(d)
-    feats = multimodal.audio_features(audio, chunk_samples=32, decode_backend="wav")
+    feats = multimodal.audio_features(audio, chunk_samples=32)
     return feats.select(
         "doc_id",
         "chunk_idx",
@@ -576,7 +578,7 @@ def m_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same plan at any scale."""
     d = load_table(spark, sf_dir, "documents")
     payloads = multimodal.attach_png_payload(d)
-    return multimodal.pixel_stats(payloads, decode_backend="png").transform(_present, "doc_id")
+    return multimodal.pixel_stats(payloads).transform(_present, "doc_id")
 
 
 @register("m_png_resize", oracle=_RESIZE_ORACLE)
@@ -593,8 +595,7 @@ def m_png_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-payload cost inside the same batch loop."""
     d = load_table(spark, sf_dir, "documents")
     payloads = multimodal.attach_png_payload(d)
-    resized = multimodal.resize(payloads, out_width=8, out_height=8,
-                                decode_backend="png")
+    resized = multimodal.resize(payloads, out_width=8, out_height=8)
     return resized.select(
         "doc_id",
         "out_width",
@@ -668,7 +669,7 @@ def m_png_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding stages without a repartition."""
     d = load_table(spark, sf_dir, "documents")
     payloads = multimodal.attach_png_payload(d)
-    aug = multimodal.augment(payloads, crop=8, flip=True, decode_backend="png")
+    aug = multimodal.augment(payloads, crop=8, flip=True)
     return aug.select(
         "doc_id",
         "out_width",
@@ -729,7 +730,7 @@ def m_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale."""
     d = load_table(spark, sf_dir, "documents")
     payloads = multimodal.attach_jpeg_payload(d)
-    return multimodal.pixel_stats(payloads, decode_backend="jpeg").transform(_present, "doc_id")
+    return multimodal.pixel_stats(payloads).transform(_present, "doc_id")
 
 
 _JPEG_RESIZE_ORACLE = """
@@ -763,8 +764,7 @@ def m_jpeg_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas stages, zero shuffles."""
     d = load_table(spark, sf_dir, "documents")
     payloads = multimodal.attach_jpeg_payload(d)
-    resized = multimodal.resize(payloads, out_width=8, out_height=8,
-                                decode_backend="jpeg")
+    resized = multimodal.resize(payloads, out_width=8, out_height=8)
     return resized.select(
         "doc_id",
         "out_width",
@@ -820,7 +820,7 @@ def m_jpeg_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-payload cost inside the partition-local phash pass."""
     docs = _planted_near_dup_docs(spark, sf_dir)
     jpgs = multimodal.attach_jpeg_payload(docs, text_col="ctext", noise_from_key=True)
-    hashes = multimodal.phash(jpgs, decode_backend="jpeg")
+    hashes = multimodal.phash(jpgs)
     return _phash_band_pairs(hashes)
 
 
@@ -1094,9 +1094,7 @@ def m_png_edge_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the presentation sort — identical plan at any scale."""
     d = load_table(spark, sf_dir, "documents")
     payloads = multimodal.attach_png_payload(d)
-    return multimodal.edge_stats(
-        payloads, threshold=EDGE_T, decode_backend="png"
-    ).transform(_present, "doc_id")
+    return multimodal.edge_stats(payloads, threshold=EDGE_T).transform(_present, "doc_id")
 
 
 _HIST_EQ_ORACLE = f"""
@@ -1151,7 +1149,7 @@ def m_png_hist_equalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     equalized buffer lands as binary, never exploded."""
     d = load_table(spark, sf_dir, "documents")
     payloads = multimodal.attach_png_payload(d)
-    eq = multimodal.hist_equalize(payloads, decode_backend="png")
+    eq = multimodal.hist_equalize(payloads)
     return eq.select(
         "doc_id",
         F.lower(F.hex("equalized")).alias("eq_hex"),
@@ -1305,7 +1303,7 @@ def m_jpeg_region_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(component diameter) whole-tensor numpy ops per batch."""
     d = load_table(spark, sf_dir, "documents")
     payloads = multimodal.attach_jpeg_payload(d)
-    return multimodal.region_count(payloads, decode_backend="jpeg").transform(
+    return multimodal.region_count(payloads).transform(
         _present, "doc_id"
     )
 

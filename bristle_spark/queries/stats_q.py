@@ -828,7 +828,7 @@ def r_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 9.5s -> ~1s at sf0.1)
     from bristle_spark.catalog import fan_out_if_coarse
 
-    daily = fan_out_if_coarse(daily, spark, "user_id")
+    daily = fan_out_if_coarse(daily, "user_id")
     return (
         daily.groupBy("user_id")
         .applyInPandas(fit, schema=_TS_SCHEMA)

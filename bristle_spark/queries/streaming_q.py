@@ -88,12 +88,15 @@ def _event_stream(
     spark: SparkSession, sf_dir: str, tag: str, split=split_events_files, **split_kw
 ) -> tuple[str, DataFrame]:
     """The ``events`` table replayed as a file stream, one chunk file per
-    micro-batch. ``split(spark, sf_dir, work, **split_kw)`` writes the
-    chunk dir (cached across runs) under the key's work dir; returns
-    ``(work dir, stream)``."""
-    work = _workdir(sf_dir, tag)
-    data_dir = split(spark, sf_dir, work, **split_kw)
-    return work, events_file_stream(spark, data_dir, load_table(spark, sf_dir, "events").schema)
+    micro-batch. ``split(spark, sf_dir, chunks, **split_kw)`` writes the
+    chunk dir (cached across runs) under the one ``chunks`` dir of the
+    fixture, which every key shares: each chunker names its own subdir,
+    so a split is built once per fixture, not once per key. Returns
+    ``(the key's own work dir, stream)``; the key lands under its work
+    dir."""
+    data_dir = split(spark, sf_dir, _workdir(sf_dir, "chunks"), **split_kw)
+    stream = events_file_stream(spark, data_dir, load_table(spark, sf_dir, "events").schema)
+    return _workdir(sf_dir, tag), stream
 
 
 def _fresh_dir(path: str, mkdir: bool = False) -> str:

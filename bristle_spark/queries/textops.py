@@ -859,9 +859,7 @@ def l_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     gram_hash exactly like l_dedup_ngram_jaccard's shingle index."""
     from bristle_spark.catalog import fan_out_if_coarse
 
-    d = fan_out_if_coarse(
-        load_table(spark, sf_dir, "documents"), spark, "doc_id"
-    )
+    d = fan_out_if_coarse(load_table(spark, sf_dir, "documents"), "doc_id")
     t = F.split("text", " ")
     d = d.withColumn("t", t).filter(F.size("t") >= WINNOW_K + WINNOW_W - 1)
     tc = F.col("t")
@@ -962,7 +960,6 @@ def l_char_ngram_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents").filter(
             F.length("text") >= CHAR_NGRAM_N
         ),
-        spark,
         "doc_id",
     )
     gram_arr = F.expr(

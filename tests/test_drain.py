@@ -1,15 +1,23 @@
-"""The one landing and the one drain behind every streaming key
-(bristle_spark.queries.streaming_q): small local streams, no fixture
-tables, so these run in the fast tier while the s_* keys themselves
-run only in the slow one.
+"""The one source, the one landing and the one drain behind every
+streaming key (bristle_spark.queries.streaming_q): small local streams
+and no fixture rows, so these run in the fast tier while the s_* keys
+themselves run only in the slow one.
 """
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bristle_spark.queries.streaming_q import _drain, _land_idempotent, _landed
+from bristle_spark.queries.streaming_q import (
+    _drain,
+    _event_stream,
+    _land_idempotent,
+    _landed,
+)
 
 SCHEMA = T.StructType(
     [
@@ -60,3 +68,22 @@ def test_drain_with_no_microbatch_is_empty_and_typed(spark, tmp_path):
     ]
     assert same.count() == 0
 
+
+
+def test_keys_with_one_chunker_share_its_chunk_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """The events split is built once per fixture, not once per key:
+    two keys with the same chunker are handed the same chunk dir, while
+    each keeps its own work dir to land under."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    handed = []
+
+    def chunker(spark, sf_dir, out_dir):
+        handed.append(out_dir)
+        data_dir = os.path.join(out_dir, "chunks")
+        os.makedirs(data_dir, exist_ok=True)
+        return data_dir
+
+    work_a, _ = _event_stream(spark, sf_dir, "a", chunker)
+    work_b, _ = _event_stream(spark, sf_dir, "b", chunker)
+    assert handed[0] == handed[1]
+    assert work_a != work_b

@@ -1,8 +1,8 @@
 """Pure-stdlib baseline JPEG codec (multimodal/jpeg.py): the
 constant-block exactness contract the graded keys build on, lossy
 roundtrip bounds, T.81 bit-level vectors, unsupported-subset
-rejection, and the Spark plumbing (attach_jpeg_payload ->
-decode_backend='jpeg')."""
+rejection, and the Spark plumbing (attach_jpeg_payload -> the
+jpeg-grey8 decoder)."""
 
 from __future__ import annotations
 
@@ -246,7 +246,7 @@ def test_zrl_overflowing_block_is_value_error():
 
 
 def test_spark_jpeg_pipeline_end_to_end(spark):
-    """attach_jpeg_payload -> decode_backend='jpeg' recovers exactly the
+    """attach_jpeg_payload -> the jpeg-grey8 decoder recovers exactly the
     block-constant pixels the hex-side oracle derives from md5(text)."""
     import hashlib
 

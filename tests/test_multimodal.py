@@ -1,8 +1,9 @@
-"""Real-container multimodal decode (stdlib-only WAV backend):
-RIFF/WAVE payloads built and parsed with Python's wave module drive the
-SAME audio kernels as raw PCM — proving the decode seam is real (an
-actual container format goes in) while staying dependency-free. The
-fake/pil image seam has the identical contract (multimodal/__init__.py).
+"""Real-container multimodal decode: every kernel decodes a payload by
+its own ``meta.format``. RIFF/WAVE payloads built and parsed with
+Python's wave module drive the SAME audio kernels as raw PCM, and PNG
+payloads the same image kernels as raw pixels — proving the decode seam
+is real (an actual container format goes in) while staying
+dependency-free.
 """
 
 # ------------------------------------------------- real WAV container
@@ -34,17 +35,17 @@ def wav_container_8bit() -> bytes:
 
 def test_audio_kernels_identical_on_real_wav_payloads(spark, sf_dir):
     """The audio feature and fingerprint kernels produce IDENTICAL
-    results whether the payload is raw PCM (fake backend) or the same
+    results whether the payload is raw PCM (``pcm_s16le``) or the same
     PCM inside a genuine RIFF/WAVE container parsed by the stdlib wave
     module — real-container decode, zero new dependencies."""
     from bristle_spark import multimodal as M
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
-    raw = M.audio_features(M.attach_fake_audio(d), decode_backend="fake")
-    wav = M.audio_features(M.attach_wav_audio(d), decode_backend="wav")
+    raw = M.audio_features(M.attach_fake_audio(d))
+    wav = M.audio_features(M.attach_wav_audio(d))
     assert sorted(map(tuple, raw.collect())) == sorted(map(tuple, wav.collect()))
-    raw_fp = M.audio_fingerprint(M.attach_fake_audio(d), decode_backend="fake")
-    wav_fp = M.audio_fingerprint(M.attach_wav_audio(d), decode_backend="wav")
+    raw_fp = M.audio_fingerprint(M.attach_fake_audio(d))
+    wav_fp = M.audio_fingerprint(M.attach_wav_audio(d))
     assert sorted(map(tuple, raw_fp.collect())) == sorted(map(tuple, wav_fp.collect()))
 
 
@@ -69,7 +70,7 @@ def test_attach_wav_audio_is_a_real_wave_file(spark, sf_dir):
 
 
 def test_edge_stats_hand_computed_4x4(spark):
-    """edge_stats on a hand-computable 4x4 image (fake backend: the
+    """edge_stats on a hand-computable 4x4 image (raw format: the
     payload bytes ARE the pixels): every output column checked against
     pencil-and-paper gradients."""
     from bristle_spark import multimodal as M
@@ -86,7 +87,7 @@ def test_edge_stats_hand_computed_4x4(spark):
         [(1, px, {"width": 4, "height": 4, "format": "fake"})],
         "doc_id long, payload binary, meta map<string,string>",
     )
-    row = M.edge_stats(d, threshold=96, decode_backend="fake").collect()[0]
+    row = M.edge_stats(d, threshold=96).collect()[0]
     h = [10, 0, 0, 80, 0, 100, 165, 245, 100, 255, 10, 100]
     v = [90, 0, 0, 100, 0, 245, 0, 0, 165, 255, 0, 0]
     assert row.h_grad_sum == sum(h)
@@ -101,16 +102,55 @@ def test_edge_stats_hand_computed_4x4(spark):
 
 def test_edge_stats_identical_on_real_png_payloads(spark, sf_dir):
     """The gradient kernel produces IDENTICAL results whether the
-    pixels arrive raw (fake backend) or inside a genuine PNG parsed by
-    the stdlib codec — the m_wav_audio_features cross-backend witness,
+    pixels arrive raw (``fake-rgb``) or inside a genuine PNG parsed by
+    the stdlib codec — the m_wav_audio_features cross-container witness,
     for the edge/sharpness kernel."""
     from bristle_spark import multimodal as M
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
-    raw = M.edge_stats(M.attach_fake_payload(d), decode_backend="fake")
-    png = M.edge_stats(M.attach_png_payload(d), decode_backend="png")
+    raw = M.edge_stats(M.attach_fake_payload(d))
+    png = M.edge_stats(M.attach_png_payload(d))
     assert sorted(map(tuple, raw.collect())) == sorted(map(tuple, png.collect()))
 
+
+
+def test_kernels_decode_each_row_by_its_own_format(spark, sf_dir):
+    """One Arrow batch mixing png-grey8 and raw rows: each row decodes
+    by its own meta.format, so edge_stats and phash give, per row, the
+    values of the raw pixels alone. decode_pixels leaves raw-format
+    rows behind, so its output is never decoded twice. A row whose
+    format has no decoder fails with an error naming that format."""
+    import pytest
+
+    from pyspark.sql import functions as F
+
+    from bristle_spark import multimodal as M
+
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(40)
+    raw = M.attach_fake_payload(d)
+    png = M.attach_png_payload(d)
+    # coalesce(1): both kinds of row reach the kernel in ONE batch
+    mixed = (
+        png.filter(F.col("doc_id") % 2 == 0)
+        .unionByName(raw.filter(F.col("doc_id") % 2 == 1))
+        .coalesce(1)
+    )
+    assert {r.meta.format for r in mixed.collect()} == {"png-grey8", "fake-rgb"}
+    decoded = M.decode_pixels(png)
+    assert {r.meta.format for r in decoded.collect()} == {"fake-rgb"}
+    for kernel in (M.edge_stats, M.phash):
+        want = sorted(map(tuple, kernel(raw).collect()))
+        assert want
+        assert sorted(map(tuple, kernel(mixed).collect())) == want
+        assert sorted(map(tuple, kernel(decoded).collect())) == want
+
+    bad = spark.createDataFrame(
+        [(1, bytes(16), {"width": "4", "height": "4", "format": "tiff-cmyk"})],
+        "doc_id long, payload binary, meta map<string,string>",
+    )
+    for kernel in (M.edge_stats, M.extract_features):
+        with pytest.raises(Exception, match="tiff-cmyk"):
+            kernel(bad).collect()
 
 def test_edge_stats_degenerate_dimensions(spark):
     """1x1 / 1xN / Nx1 images must not crash the partition (zero-size
@@ -199,7 +239,7 @@ def test_hist_equalize_hand_computed_and_constant_image(spark):
     )
     rows = {
         r.doc_id: r
-        for r in M.hist_equalize(d, decode_backend="fake").collect()
+        for r in M.hist_equalize(d).collect()
     }
     assert bytes(rows[1].equalized) == bytes([0, 0, 127, 255])
     assert (rows[1].eq_min, rows[1].eq_max, rows[1].eq_sum) == (0, 255, 382)

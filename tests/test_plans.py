@@ -465,8 +465,7 @@ def test_kernel_rebalance_widens_narrow_scan(spark, sf_dir):
     appears when the scan is narrower than defaultParallelism, so at
     corpus scale (thousands of splits) the plan keeps zero compute
     shuffles — both branches are asserted here."""
-    from bristle_spark.catalog import load_table
-    from bristle_spark.multimodal import _rebalance_for_kernel
+    from bristle_spark.catalog import fan_out_if_coarse, load_table
 
     df = SPECS["m_jpeg_rgb_stats"].fn(spark, sf_dir)
     target = spark.sparkContext.defaultParallelism
@@ -475,7 +474,7 @@ def test_kernel_rebalance_widens_narrow_scan(spark, sf_dir):
         assert plans.has_node(df, "RoundRobinPartitioning")
     # wide input: the rebalance must vanish (metadata-only branch)
     wide = narrow.repartition(target)
-    assert _rebalance_for_kernel(wide) is wide
+    assert fan_out_if_coarse(wide) is wide
 
 
 def test_scene_cut_is_partition_local(spark, sf_dir):

@@ -1,6 +1,6 @@
 """Pure-stdlib PNG codec (multimodal/png.py): roundtrips across all
 five scanline filters and zlib levels, hand-built spec vectors, and
-the Spark plumbing (attach_png_payload -> decode_backend='png')."""
+the Spark plumbing (attach_png_payload -> the png-grey8 decoder)."""
 
 from __future__ import annotations
 
@@ -130,9 +130,9 @@ def test_png_backend_rejects_rgb():
 
 
 def test_spark_png_pipeline_end_to_end(spark):
-    """attach_png_payload -> decode_backend='png' recovers exactly the
-    md5-derived pixels the fake backend would have produced — so every
-    kernel's png-backend output equals its fake-backend output."""
+    """attach_png_payload -> the png-grey8 decoder recovers exactly the
+    md5-derived pixels of the raw ``fake-rgb`` payload — so every
+    kernel's output on PNG payloads equals its output on raw ones."""
     import hashlib
 
     from bristle_spark import multimodal

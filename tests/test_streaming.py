@@ -114,18 +114,6 @@ def test_multimodal_features_deterministic(spark, sf_dir):
     assert sum(hist) == 256 and len(hist) == 16
 
 
-def test_multimodal_pil_stub_raises(spark, sf_dir):
-    import pytest
-
-    from bristle_spark import multimodal
-    from bristle_spark.catalog import load_table
-
-    d = multimodal.attach_fake_payload(load_table(spark, sf_dir, "documents").limit(2))
-    feats = multimodal.extract_features(d, decode_backend="pil")
-    with pytest.raises(Exception):  # NotImplementedError surfaces as PythonException
-        feats.collect()
-
-
 def test_stream_enrich_matches_batch_join(spark, sf_dir):
     """The stream-static broadcast enrichment must reproduce the batch
     join's per-nation totals exactly across micro-batches."""
