@@ -18,10 +18,6 @@ per-query comparisons):
   --family PREFIX         only queries whose name starts with PREFIX
                           (e.g. --family l_dedup, --family r_)
   --queries a,b,c         an explicit comma-separated list
-  --recycle N             stop + rebuild the SparkSession every N
-                          queries (JVM survives, so JIT stays warm;
-                          listener/UI/broadcast-cleanup state does not
-                          accumulate across the whole suite)
   --runs N                min-of-N per query (default 2); when a key's
                           runs differ by more than 2x, one more run is
                           taken and the min kept
@@ -156,11 +152,11 @@ def is_closing_gate_run(args: argparse.Namespace, sf_dir: str | None = None) -> 
     """True iff this invocation's METHODOLOGY matches the committed record.
 
     The committed summary is the closing-gate record: full HEADLINE at
-    sf0.1, warm, min-of-2, no session recycling. Scratch selections
-    (--queries/--family/--subset), methodology overrides
-    (--recycle/--runs), AND a different $SPARK_GRAFT_SF_DIR all
-    produce numbers that are not comparable to it and must never
-    clobber it (self-review + ADVICE r11, sf gap closed r12).
+    sf0.1, warm, min-of-2. Scratch selections (--queries/--family/
+    --subset), a methodology override (--runs), AND a different
+    $SPARK_GRAFT_SF_DIR all produce numbers that are not comparable to
+    it and must never clobber it (self-review + ADVICE r11, sf gap
+    closed r12).
 
     Since round 14 this gate is necessary but NOT sufficient to write
     bench_summary.json: the driver's per-round run uses the gate
@@ -174,7 +170,7 @@ def is_closing_gate_run(args: argparse.Namespace, sf_dir: str | None = None) -> 
     ):
         return False
     return not (args.queries or args.family or args.subset
-                or args.recycle or args.runs != 2)
+                or args.runs != 2)
 
 
 def summary_target(args: argparse.Namespace, sf_dir: str | None = None) -> str:
@@ -196,14 +192,12 @@ def main() -> None:
     sel.add_argument("--subset", choices=["shared38"], default=None)
     sel.add_argument("--family", default=None)
     sel.add_argument("--queries", default=None)
-    ap.add_argument("--recycle", type=int, default=0, metavar="N",
-                    help="rebuild the SparkSession every N queries")
     ap.add_argument("--runs", type=int, default=2)
     ap.add_argument("--promote", action="store_true",
                     help="write this run's record to the TRACKED "
                          "bench_summary.json (requires the closing-gate "
                          "methodology: full HEADLINE, sf0.1, warm, "
-                         "min-of-2, no recycle). Without it, every run "
+                         "min-of-2). Without it, every run "
                          "— including the driver's per-round run — "
                          "lands in the untracked bench_scratch.json, "
                          "so a host-loaded run can never clobber the "
@@ -215,26 +209,19 @@ def main() -> None:
 
     from bristle_spark.session import get_spark
 
-    def fresh_session():
-        spark = get_spark(app_name="bristle-spark-bench")
-        # warmup: JVM, codegen, parquet footer caches
-        spark.range(1000).selectExpr("sum(id)").collect()
-        specs["r_hash_agg"].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return spark
-
     specs = all_specs()
     names = _select_queries(args)
-    spark = fresh_session()
+    spark = get_spark(app_name="bristle-spark-bench")
+    # warmup: JVM, codegen, parquet footer caches
+    spark.range(1000).selectExpr("sum(id)").collect()
+    specs["r_hash_agg"].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
-    for qi, name in enumerate(names):
+    for name in names:
         spec = specs.get(name)
         if spec is None:
             continue
-        if args.recycle and qi and qi % args.recycle == 0:
-            spark.stop()
-            spark = fresh_session()
         # min of N runs: the first pays one-time codegen/JIT compilation
         # of the plan's generated classes (irrelevant at real scale and
         # very noisy locally); the min reflects steady-state execution.
@@ -291,10 +278,10 @@ def main() -> None:
     # per-query map once the suite passes ~150 queries (BENCH_r8/r9
     # "parsed": null) — also persist the full record to a file so the
     # per-query history survives (VERDICT r9 ask #4). ONLY full-HEADLINE
-    # runs on the closing-gate methodology (warm, min-of-2, no recycle)
+    # runs on the closing-gate methodology (warm, min-of-2)
     # may write it: a --queries/--family/--subset scratch run must not
     # clobber the committed record (self-review r11 — exactly that
-    # clobber happened once), and neither may a --recycle/--runs
+    # clobber happened once), and neither may a --runs
     # run, whose numbers are methodologically different even though
     # they cover every HEADLINE key (ADVICE r11).
     # Promotion rule (round 14): the tracked bench_summary.json only
@@ -306,7 +293,7 @@ def main() -> None:
     promote_refused = args.promote and not is_closing_gate_run(args, sf_dir)
     if promote_refused:
         print("[bench] --promote refused: not a closing-gate run "
-              "(need full HEADLINE at sf0.1, warm, min-of-2, no recycle)",
+              "(need full HEADLINE at sf0.1, warm, min-of-2)",
               file=sys.stderr)
     try:
         with open(os.path.join(repo, summary_target(args, sf_dir)), "w") as f:

@@ -81,13 +81,14 @@ def cmd_forward_json(args: argparse.Namespace) -> int:
         )
         return 0 if stats.results.keys() <= {"OK"} else 1
 
+    from bristle_spark.ingest import pipeline
     from bristle_spark.ingest.json_source import ingest_json_lines
 
     spark = _spark("bristle-forward-json")
     binding = registry_from_json(args.config).for_type(args.type)
     lines = spark.read.text(args.input)
     out = ingest_json_lines(lines, binding)
-    out.write.mode("append").parquet(args.sink)
+    pipeline.write_sink(out, args.sink, ts_column=args.ts_column)
     print(f"forwarded {out.count()} rows", file=sys.stderr)
     return 0
 

@@ -56,8 +56,9 @@ def register(name: str, oracle: str | None = None, group: str = "") -> Callable[
 # Ties keep registration order. Rows-only keys never hold a slot, so
 # every graded row is a hash match. tests/test_driver_window.py states
 # the same rules over its own history reader. Keys outside the window
-# keep local oracle-parity coverage (tests/test_oracle_parity.py at
-# sf0.001/0.01/0.1, scripts/verify_all.py).
+# keep local oracle-parity coverage: tests/test_oracle_parity.py at
+# sf0.001 in the gate, and at sf0.01/0.1 with -m "" (the s_* keys are
+# `slow`) in the closing run, scripts/verify_all.py.
 WINDOW = 50
 
 HISTORY_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

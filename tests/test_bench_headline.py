@@ -82,21 +82,20 @@ def test_noisy_key_gets_a_third_run_and_keeps_the_min(monkeypatch):
 def test_summary_write_gated_on_closing_methodology():
     """Only a full-HEADLINE warm min-of-2 run may overwrite
     bench_summary.json: scratch selections AND methodology overrides
-    (--recycle/--runs) must be refused (ADVICE r11 — such a full run
+    (--runs) must be refused (ADVICE r11 — such a full run
     covers every key, so the coverage test above cannot catch that
     clobber)."""
     import argparse
 
     def ns(**over):
-        base = dict(subset=None, family=None, queries=None,
-                    recycle=0, runs=2)
+        base = dict(subset=None, family=None, queries=None, runs=2)
         base.update(over)
         return argparse.Namespace(**base)
 
     assert _bench.is_closing_gate_run(ns())
     assert _bench.is_closing_gate_run(ns(), _bench.GATE_SF_DIR)
     for bad in (ns(queries="r_hash_agg"), ns(family="l_"),
-                ns(subset="shared38"), ns(recycle=5), ns(runs=1), ns(runs=3)):
+                ns(subset="shared38"), ns(runs=1), ns(runs=3)):
         assert not _bench.is_closing_gate_run(bad), bad
     # a full run at a non-gate scale must not clobber the record either
     assert not _bench.is_closing_gate_run(ns(), "/root/testdata/sf0.01")
@@ -115,8 +114,8 @@ def test_summary_write_requires_explicit_promote():
     import argparse
 
     def ns(**over):
-        base = dict(subset=None, family=None, queries=None,
-                    recycle=0, runs=2, promote=False)
+        base = dict(subset=None, family=None, queries=None, runs=2,
+                    promote=False)
         base.update(over)
         return argparse.Namespace(**base)
 
@@ -124,7 +123,6 @@ def test_summary_write_requires_explicit_promote():
     assert _bench.summary_target(ns()) == "bench_scratch.json"
     # --promote without gate methodology: scratch (refused)
     assert _bench.summary_target(ns(promote=True, runs=3)) == "bench_scratch.json"
-    assert _bench.summary_target(ns(promote=True, recycle=5)) == "bench_scratch.json"
     assert _bench.summary_target(
         ns(promote=True), "/root/testdata/sf0.01"
     ) == "bench_scratch.json"

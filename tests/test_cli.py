@@ -28,7 +28,7 @@ def test_list_queries():
     assert out.count("\n") >= 60
 
 
-def test_forward_json_end_to_end(tmp_path, spark):
+def _forward_json(tmp_path, *extra: str):
     lines = [
         json.dumps(
             {"s": f"SYM{i}", "p": 1.5 + i, "t": 1_700_000_000_000 + i, "v": 10.0, "c": ["1"]}
@@ -44,11 +44,22 @@ def test_forward_json_end_to_end(tmp_path, spark):
         "--type", "bristle.examples.finnhub.FinnhubTrade",
         "--input", str(src),
         "--sink", str(sink),
+        *extra,
     )
     assert r.returncode == 0, r.stderr[-2000:]
-    back = spark.read.parquet(str(sink))
+    return sink
+
+
+def test_forward_json_end_to_end(tmp_path, spark):
+    back = spark.read.parquet(str(_forward_json(tmp_path)))
     assert back.count() == 25
     assert back.columns == ["symbol", "price", "trade_time", "volume", "trade_conditions"]
+
+
+def test_forward_json_day_partitions_on_ts_column(tmp_path, spark):
+    sink = _forward_json(tmp_path, "--ts-column", "trade_time")
+    assert [p.name for p in sink.iterdir() if p.is_dir()] == ["_day=2023-11-14"]
+    assert spark.read.parquet(str(sink)).count() == 25
 
 
 def test_ingest_stream_drains_backlog_in_one_microbatch(tmp_path, spark):

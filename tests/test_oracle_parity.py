@@ -2,110 +2,21 @@
 oracle must match DuckDB exactly (columns, row count, values) on the
 test SF. Rows-only queries must at least run and return a stable schema.
 
-``BRISTLE_PARITY_SHARD=i/n`` restricts the run to the i-th of n
-weight-balanced shards of the key list so scripts/verify_all.py can fan
-the sweep out over parallel pytest processes (VERDICT r7 ask #7).
-Unset = every key, exactly as before; every process computes the SAME
-deterministic greedy assignment over the full registry, so the shards
-partition the key set and the union of all n shards is always the full
-sweep.  Weight-balanced (round 9, VERDICT r8 ask #5) because the old
-stable-hash split let the iterative trainers clump into one shard,
-making it the 1000s critical path of the whole sweep.
+The test SF comes from ``BRISTLE_TEST_SF_DIR`` (default sf0.001). The
+s_* streaming keys carry the `slow` mark (tests/conftest.py), so the
+default ``-m "not slow"`` selection skips them; scripts/verify_all.py
+runs every key with ``-m ""`` at sf0.01 and sf0.1.
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 
 from bristle_spark.registry import all_specs
 
-# Approximate per-key sweep seconds (query + oracle + compare at
-# sf0.1, idle host — BENCH_r08 / round-8 verify profile).  Unlisted
-# keys get the fallback; staleness skews the balance, never coverage.
-_HEAVY = {
-    "l_quality_classifier_train": 40,
-    "l_pca_project": 35,
-    "l_pagerank": 30,
-    "l_ivf_train_kmeans": 25,
-    "l_abtt_residual": 22,
-    "l_embedding_top_component": 18,
-    "l_bpe_merges": 18,
-    "l_bpe_tokenize": 14,
-    "l_edit_distance_dedup": 12,
-    "l_sparse_cosine_topk": 10,
-    "l_dedup_clusters": 10,
-    "l_dedup_ngram_jaccard": 8,
-    "l_minhash_error": 8,
-    "l_kneser_ney": 8,
-    "l_contamination_ngram": 7,
-    "l_winnow_fingerprint": 7,
-    "l_dedup_containment": 6,
-    "l_char_ngram_lang_id": 6,
-    "l_mmr_diversify": 6,
-    "s_stream_count_min": 6,
-    "s_stream_bloom_merge": 6,
-    "s_stream_cdc": 6,
-    "s_stream_topk": 6,
-    "s_stream_anomaly": 6,
-    # round-11: the real-codec png keys (two chained Python stages)
-    "m_png_pixel_stats": 6,
-    "m_png_resize": 5,
-    "m_png_phash_dedup": 5,
-    "m_png_edge_density": 5,
-    "s_stream_decayed_ltv": 6,
-    # round-12: triangle graph build + real-JPEG phash decode
-    "l_graph_triangles": 6,
-    "m_jpeg_phash_dedup": 5,
-    # round-14 refresh (VERDICT r13 ask #3): the color-JPEG decode is
-    # the heaviest key in the registry, the real-codec family and the
-    # availableNow streaming keys all cost a real stream/codec pass
-    "m_jpeg_rgb_stats": 10,
-    "m_jpeg_ac_stats": 6,
-    "m_jpeg_pixel_stats": 5,
-    "m_jpeg_resize": 5,
-    "m_png_patchify": 5,
-    "m_png_augment": 5,
-    "m_png_hist_equalize": 5,
-    "m_png_scene_cut": 5,
-    "m_png_frame_sample": 5,
-    "m_png_binary_features": 5,
-    "s_stream_counter_rate": 6,
-    "s_stream_geofence": 6,
-    "s_stream_skyline": 6,
-    "s_stream_srm": 6,
-    "l_duplicate_spans": 5,
-    "l_contamination_ngram": 7,
-    "m_wav_silence_trim": 5,
-}
-_FALLBACK_W = 3
-
-
-def _shard_assignment(names: list[str], n: int) -> dict[str, int]:
-    """Deterministic greedy bin-packing: heaviest key to the lightest
-    shard, ties by key name — identical in every process."""
-    loads = [0.0] * n
-    assign: dict[str, int] = {}
-    for name in sorted(names, key=lambda k: (-_HEAVY.get(k, _FALLBACK_W), k)):
-        j = min(range(n), key=lambda j: (loads[j], j))
-        assign[name] = j
-        loads[j] += _HEAVY.get(name, _FALLBACK_W)
-    return assign
-
-
-def _shard_filter(names: list[str]) -> list[str]:
-    spec = os.environ.get("BRISTLE_PARITY_SHARD")
-    if not spec:
-        return names
-    i, n = (int(x) for x in spec.split("/"))
-    assign = _shard_assignment(sorted(all_specs()), n)
-    return [name for name in names if assign[name] == i]
-
-
 SPECS = all_specs()
-WITH_ORACLE = _shard_filter(sorted(n for n, s in SPECS.items() if s.oracle is not None))
-ROWS_ONLY = _shard_filter(sorted(n for n, s in SPECS.items() if s.oracle is None))
+WITH_ORACLE = sorted(n for n, s in SPECS.items() if s.oracle is not None)
+ROWS_ONLY = sorted(n for n, s in SPECS.items() if s.oracle is None)
 
 
 @pytest.mark.parametrize("name", WITH_ORACLE)
