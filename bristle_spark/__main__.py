@@ -9,8 +9,10 @@ bristle-forward-json CLI, cmd/bristle-forward-json/main.go:184-219).
     python -m bristle_spark list-queries
 
 ingest reads parquet payload files with columns (type string,
-body binary); forward-json reads JSON-lines text (protojson field
-names). Sinks are parquet, day-partitioned when --ts-column is given.
+body binary); ingest-stream drains a landing dir as the front doors
+write it (the binding's raw columns plus body, service.land_payload);
+forward-json reads JSON-lines text (protojson field names). Sinks are
+parquet, day-partitioned when --ts-column is given.
 """
 
 from __future__ import annotations
@@ -41,10 +43,14 @@ def cmd_ingest(args: argparse.Namespace) -> int:
 
 def cmd_ingest_stream(args: argparse.Namespace) -> int:
     from bristle_spark.ingest.config import registry_from_json
+    from bristle_spark.ingest.service import prepare_landing
     from bristle_spark.streaming.ingest_stream import run_stream_ingest
 
     spark = _spark("bristle-ingest-stream")
     binding = registry_from_json(args.config).for_type(args.type)
+    # a landing dir of the older (type, body) layout would read back as
+    # all-null raw columns: upgrade it first, as a server start does
+    prepare_landing(args.input, binding)
     n = run_stream_ingest(
         spark,
         args.input,

@@ -25,7 +25,17 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from functools import cached_property
 
-from bristle_spark.ingest.wire import LEN_KINDS, SCALAR_NUMERIC, Decoder, compile_decoder
+from bristle_spark.ingest.wire import (
+    LEN_KINDS,
+    SCALAR_NUMERIC,
+    ColumnDecoder,
+    arrow_type,
+    compile_column_decoder,
+)
+
+
+# the landing zone stores each body next to its raw columns under this name
+LANDED_BODY = "body"
 
 
 @dataclass(frozen=True)
@@ -72,9 +82,18 @@ class MessageBinding:
         return {f.number: f.wire_spec() for f in self.fields}
 
     @cached_property
-    def decoder(self) -> Decoder:
-        """This message's compiled wire decoder, built on first use."""
-        return compile_decoder(self.field_specs_by_number())
+    def column_decoder(self) -> ColumnDecoder:
+        """This message's compiled wire decoder into its raw columns,
+        built on first use."""
+        return compile_column_decoder(self.field_specs_by_number())
+
+    @cached_property
+    def raw_arrow_schema(self):
+        """The raw columns, one per field in declaration order: what the
+        column decoder fills and the landing zone stores."""
+        import pyarrow as pa
+
+        return pa.schema([pa.field(f.name, arrow_type(f.kind, f.repeated)) for f in self.fields])
 
     def validate(self) -> None:
         """Eager bind-time validation (reference clickhouse_table.go:204-226):
@@ -82,6 +101,11 @@ class MessageBinding:
         supported embedded message is google.protobuf.Timestamp."""
         sink_names = {c.name for c in self.sink_columns}
         for f in self.fields:
+            if f.name == LANDED_BODY:
+                raise ValueError(
+                    f"binding {self.message_name}: field name {f.name!r} is taken "
+                    "by the landed payload's raw body column"
+                )
             base_kind = f.kind
             if f.is_map:
                 # map -> ClickHouse Nested: two parallel columns

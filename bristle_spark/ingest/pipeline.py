@@ -3,18 +3,21 @@
 Mirrors the reference's unary WriteBatch lifecycle (SURVEY.md §3.1)
 Spark-first:
 
-    payload DataFrame (type string, body binary)      D1 source
-      -> filter(type == binding.message_name)         routing (D1)
-      -> mapInPandas(decode)                          D4 proto decode
-      -> select(transcode.build_select(binding))      D6 transcode
-      -> write parquet partitioned by day             D10 sink
+    payload DataFrame (body binary, optional type string)  D1 source
+      -> filter(type == binding.message_name)              routing (D1)
+      -> mapInArrow(binding.column_decoder)                D4 proto decode
+      -> select(transcode.build_select(binding))           D6 transcode
+      -> write parquet partitioned by day                  D10 sink
 
 plus the bidi-stream framing (D2): ``explode_frames`` splits
 varint-length-prefixed message batches into individual bodies.
 
 The decode step is Arrow-batched Python (the environment has no
-spark-protobuf JVM module — see wire.py); everything after it is pure
-Catalyst. Error handling follows the D12 taxonomy but per-row
+spark-protobuf JVM module — see wire.py): the same column decoder the
+front door runs before its ack, so both paths produce the same raw
+columns. Everything after it is pure Catalyst. The streaming drain
+(streaming/ingest_stream.py) has no decode step: the front door lands
+the raw columns. Error handling follows the D12 taxonomy but per-row
 (quarantine column) instead of the reference's all-or-nothing batch
 rejection: a DECODE_ERR row carries its error and NULL fields rather
 than failing the batch.
@@ -23,10 +26,8 @@ than failing the batch.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -37,38 +38,6 @@ from bristle_spark.ingest.bindings import MessageBinding
 from bristle_spark.transcode import build_select, raw_schema
 
 ERROR_COL = "_decode_error"
-
-
-def _to_cell(value: Any, kind: str) -> Any:
-    if value is None:
-        return None
-    if kind == "timestamp":
-        return {"seconds": value[0], "nanos": value[1]}
-    if kind == "bool":
-        return bool(value)
-    return value
-
-
-def _decode_rows(
-    bodies: Iterator[bytes], binding: MessageBinding
-) -> Iterator[dict[str, Any]]:
-    decode = binding.decoder
-    by_number = {f.number: f for f in binding.fields}
-    for body in bodies:
-        row: dict[str, Any] = {f.name: None for f in binding.fields}
-        try:
-            decoded = decode(bytes(body))
-            for number, value in decoded.items():
-                f = by_number[number]
-                if f.repeated and not f.is_map:
-                    row[f.name] = [_to_cell(v, f.kind) for v in value]
-                else:
-                    row[f.name] = _to_cell(value, f.kind)
-            row[ERROR_COL] = None
-        except Exception as exc:  # DECODE_ERR quarantine
-            row = {f.name: None for f in binding.fields}
-            row[ERROR_COL] = f"DECODE_ERR: {exc}"
-        yield row
 
 
 def decoded_schema(binding: MessageBinding) -> T.StructType:
@@ -83,17 +52,20 @@ def decode(payloads: DataFrame, binding: MessageBinding, body_col: str = "body")
     like the reference's binding lookup (ingest_service.go:81-85)."""
     if "type" in payloads.columns:
         payloads = payloads.filter(F.col("type") == binding.message_name)
-    schema = decoded_schema(binding)
+    decoder = binding.column_decoder
+    schema = binding.raw_arrow_schema.append(pa.field(ERROR_COL, pa.string()))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in schema.fields]
-        for pdf in batches:
-            rows = list(_decode_rows(pdf[body_col], binding))
-            yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
-                {c: [] for c in cols}
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            arrays, errors = decoder(batch.column(0).to_pylist())
+            quarantine = [None] * batch.num_rows
+            for row, message in errors:
+                quarantine[row] = f"DECODE_ERR: {message}"
+            yield pa.RecordBatch.from_arrays(
+                [*arrays, pa.array(quarantine, pa.string())], schema=schema
             )
 
-    return payloads.mapInPandas(run, schema=schema)
+    return payloads.select(body_col).mapInArrow(run, decoded_schema(binding))
 
 
 def explode_frames(batches: DataFrame, data_col: str = "data") -> DataFrame:
@@ -107,21 +79,19 @@ def explode_frames(batches: DataFrame, data_col: str = "data") -> DataFrame:
     )
     other_cols = [f.name for f in out_schema.fields if f.name != "body"]
 
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            # columnar split: one split_frames call per input row, then
-            # np.repeat the passthrough columns by each row's frame count
-            # (no per-row pandas Series materialization — iterrows() cost
-            # dominated this path, round-3 verdict "What's wrong" #4)
-            frame_lists = [wire.split_frames(bytes(b)) for b in pdf[data_col].to_numpy()]
-            counts = [len(fl) for fl in frame_lists]
-            out = {
-                c: np.repeat(pdf[c].to_numpy(), counts) for c in other_cols
-            }
-            out["body"] = [f for fl in frame_lists for f in fl]
-            yield pd.DataFrame(out, columns=other_cols + ["body"])
+    def run(record_batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in record_batches:
+            frame_lists = [wire.split_frames(d) for d in batch.column(data_col).to_pylist()]
+            # each input row's index once per frame it holds: the
+            # passthrough columns are taken by it, not rebuilt per row
+            rows = pa.array([i for i, frames in enumerate(frame_lists) for _ in frames], pa.int64())
+            bodies = pa.array([f for frames in frame_lists for f in frames], pa.binary())
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c).take(rows) for c in other_cols] + [bodies],
+                names=other_cols + ["body"],
+            )
 
-    return batches.mapInPandas(run, schema=out_schema)
+    return batches.mapInArrow(run, schema=out_schema)
 
 
 def transcode(decoded: DataFrame, binding: MessageBinding) -> DataFrame:

@@ -34,6 +34,7 @@ from pyspark.sql import SparkSession
 from bristle_spark.ingest.bindings import BindingRegistry, MessageBinding
 from bristle_spark.ingest.config import sink_columns_from_config, registry_from_config
 from bristle_spark.ingest.descriptors import DescriptorPool, autobind
+from bristle_spark.ingest.service import check_landing, landing_dir, prepare_landing
 from bristle_spark.streaming.ingest_stream import run_stream_ingest
 
 
@@ -131,6 +132,9 @@ class IngestServer:
         self.registry: BindingRegistry | None = None
         self.writer_group: WriterGroup | None = None
         self._apply(self._load())
+        # no front door serves this server yet, so no landing is in flight
+        for w in self.writer_group.writers:
+            prepare_landing(w.payload_dir, w.binding)
 
     def _load(self) -> dict:
         with open(self.config_path) as fh:
@@ -164,7 +168,7 @@ class IngestServer:
             safe = binding.sink_table.replace(".", "__")
             writer = TableWriter(
                 binding=binding,
-                payload_dir=os.path.join(self.data_root, "payloads", safe),
+                payload_dir=landing_dir(self.data_root, binding.sink_table),
                 sink_dir=os.path.join(self.data_root, "sink", safe),
                 checkpoint_dir=os.path.join(self.data_root, "ckpt", safe),
                 ts_column=ts_columns.get(binding.sink_table),
@@ -175,6 +179,9 @@ class IngestServer:
             # resolve one footer and drop/null the rest) — refuse instead,
             # BEFORE the swap, so reload() keeps the old state serving
             _validate_sink_schema(writer)
+            # likewise landed files: the drain reads them with the
+            # binding's raw schema, so the swap must keep it
+            check_landing(writer.payload_dir, binding)
             group.add(writer)
         # swap order mirrors reloadConfig: new state live, then the old
         # writer group drains and releases

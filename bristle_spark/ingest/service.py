@@ -45,12 +45,20 @@ per-row here because bindings validate eagerly at bind time
 (bindings.py, reference clickhouse_table.go:204-226); DECODE_ERR is
 checked frame-by-frame before the ack.
 
-100 TB shape: the listener is a thin, stateless ingress — it validates
-and lands files, nothing else — so horizontal scale is N processes
-behind a load balancer appending to one landing zone (an object-store
-prefix in production), with Spark draining the zone continuously. The
-heavy work (decode at scale, transcode, sink) stays in the distributed
-streaming job, not in the connection handler.
+Decode once, at the front door: like the reference's proto.Unmarshal
+before its ack, ``process_batch`` decodes every body, into the
+binding's raw columns (``MessageBinding.column_decoder``), and the
+landed file carries those columns next to the raw bodies. A body whose
+values do not fit the raw columns is refused at the ack, so "acked OK"
+implies "drains". The drain reads the raw columns and runs no Python
+node.
+
+100 TB shape: the listener is stateless — it decodes, lands files and
+acks, nothing else — so horizontal scale is N processes behind a load
+balancer appending to one landing zone (an object-store prefix in
+production), with Spark draining the zone continuously. The decode
+scales with the listeners; transcode and sink stay in the distributed
+streaming job.
 
 Every ingest connection, client or accepted, sets ``TCP_NODELAY``
 (``connect`` and ``FrontDoor._serve``): the reference's Go
@@ -67,10 +75,12 @@ import socket
 import threading
 import time
 import uuid
+import warnings
 from concurrent.futures import ThreadPoolExecutor
 from typing import Self
 
 from bristle_spark.ingest import metrics, wire
+from bristle_spark.ingest.bindings import LANDED_BODY
 
 # BatchResult (bristle.proto enum)
 OK = 0
@@ -537,43 +547,146 @@ def process_batch(
     if len(bodies) > max_batch_len:
         return TOO_BIG
 
-    # frame-by-frame decode validation BEFORE the durable ack — the
-    # reference's proto.Unmarshal loop (ingest_service.go:155-177);
-    # the distributed pipeline re-decodes at scale on the drain path
-    decode = binding.decoder
-    try:
-        for body in bodies:
-            decode(body)
-    except Exception:
+    # each frame decoded once, BEFORE the durable ack -- the reference's
+    # proto.Unmarshal loop (ingest_service.go:155-177) -- into the raw
+    # columns that land with the bodies, so the drain decodes nothing
+    columns, errors = binding.column_decoder(bodies)
+    if errors:
         return DECODE_ERR
 
-    land_payload(server, binding, type_name, bodies)
+    land_payload(landing_dir(server.data_root, binding.sink_table), binding, bodies, columns)
     return OK
 
 
-def land_payload(server, binding, type_name: str, bodies: list[bytes]) -> None:
-    """Durably land the validated batch as one payload parquet file
-    in the table's landing zone (the ack-backing write)."""
+# ------------------------------------------------------------ the landing zone
+#
+# One directory per bound table. Each acked batch is one parquet file:
+# the binding's raw columns (``MessageBinding.raw_arrow_schema``) and
+# each raw body. The drain reads the raw columns alone.
+
+# the layout before raw columns landed: the message type and the body
+_LEGACY_COLUMNS = ["type", LANDED_BODY]
+
+
+# parquet writer options, by measurement (pyarrow 16.1, 4-core host,
+# 5,000 finnhub rows): 1.25 ms a file, against 3.27 ms with the defaults
+# (snappy, dictionaries, statistics), for 410 KB against 227 KB. The
+# write is on the ack path; the drain reads each file once and prunes
+# nothing by statistics.
+_LANDING_WRITE = {"compression": "none", "use_dictionary": False, "write_statistics": False}
+
+
+def landing_dir(data_root: str, sink_table: str) -> str:
+    return os.path.join(data_root, "payloads", sink_table.replace(".", "__"))
+
+
+def landing_schema(binding):
     import pyarrow as pa
+
+    return binding.raw_arrow_schema.append(pa.field(LANDED_BODY, pa.binary()))
+
+
+def _write_landed(table, path: str) -> None:
+    """Write a landed file under a hidden temporary name (the drain's
+    file source skips names starting with a dot) and rename it into
+    place, so the drain never reads half a file."""
     import pyarrow.parquet as pq
 
-    safe = binding.sink_table.replace(".", "__")
-    payload_dir = os.path.join(server.data_root, "payloads", safe)
+    directory, name = os.path.split(path)
+    tmp = os.path.join(directory, f".{name}.tmp")
+    pq.write_table(table, tmp, **_LANDING_WRITE)
+    os.replace(tmp, path)
+
+
+def land_payload(payload_dir: str, binding, bodies: list[bytes], columns: list) -> None:
+    """Durably land one validated batch, its raw columns as the column
+    decoder returned them and its bodies, as one parquet file in the
+    table's landing zone (the ack-backing write)."""
+    import pyarrow as pa
+
     os.makedirs(payload_dir, exist_ok=True)
-    table = pa.table(
-        {
-            "type": pa.array([type_name] * len(bodies), pa.string()),
-            "body": pa.array(bodies, pa.binary()),
-        }
+    table = pa.Table.from_arrays(
+        [*columns, pa.array(bodies, pa.binary())], schema=landing_schema(binding)
     )
-    name = f"socket_{uuid.uuid4().hex}.parquet"
-    tmp = os.path.join(payload_dir, f".{name}.tmp")
-    pq.write_table(table, tmp)
-    os.replace(tmp, os.path.join(payload_dir, name))
+    _write_landed(table, os.path.join(payload_dir, f"socket_{uuid.uuid4().hex}.parquet"))
     # counted AFTER the atomic rename: these are documented as DURABLY
     # landed — incrementing before a failed write would over-count
     metrics.ROWS.inc(binding.sink_table, by=len(bodies))
     metrics.PAYLOAD_BYTES.inc(binding.sink_table, by=sum(len(b) for b in bodies))
+
+
+def _landed_files(payload_dir: str) -> list[str]:
+    """The parquet files the drain's file source sees, in name order."""
+    if not os.path.isdir(payload_dir):
+        return []
+    return [
+        os.path.join(payload_dir, name)
+        for name in sorted(os.listdir(payload_dir))
+        if name.endswith(".parquet") and not name.startswith((".", "_"))
+    ]
+
+
+def check_landing(payload_dir: str, binding) -> None:
+    """Refuse a binding whose raw columns differ from those already
+    landed for its table: the drain reads every landed file with the
+    binding's raw schema, so a changed one would misread them."""
+    import pyarrow.parquet as pq
+
+    want = landing_schema(binding)
+    for path in _landed_files(payload_dir):
+        have = pq.read_schema(path)
+        if have.names == _LEGACY_COLUMNS:
+            continue  # upgraded by prepare_landing at start-up
+        if not have.equals(want):
+            raise ValueError(
+                f"table {binding.sink_table}: bound raw columns {want} do not match "
+                f"the landed payload schema {have} ({path}); drain or move the "
+                "landing dir before rebinding"
+            )
+        return
+
+
+def prepare_landing(payload_dir: str, binding) -> None:
+    """Start-up pass over one table's landing dir, before any front door
+    serves it. Removes the temporary files of writes a crash cut short,
+    and rewrites each file of the legacy (type, body) layout in place
+    with the raw columns, decoded by the same column decoder. A rewritten
+    file keeps its path and mtime, so the drain's file source never sees
+    a new file; a body that does not decode is dropped with a warning
+    (it could never have drained). Hadoop's checksum file of a rewritten
+    file is removed with it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if not os.path.isdir(payload_dir):
+        return
+    for name in os.listdir(payload_dir):
+        if name.startswith(".") and name.endswith(".tmp"):
+            os.remove(os.path.join(payload_dir, name))
+    for path in _landed_files(payload_dir):
+        if pq.read_schema(path).names != _LEGACY_COLUMNS:
+            continue
+        bodies = pq.read_table(path, columns=[LANDED_BODY]).column(0).to_pylist()
+        columns, errors = binding.column_decoder(bodies)
+        table = pa.Table.from_arrays(
+            [*columns, pa.array(bodies, pa.binary())], schema=landing_schema(binding)
+        )
+        if errors:
+            bad = {row for row, _ in errors}
+            table = table.filter(pa.array([row not in bad for row in range(len(bodies))]))
+            warnings.warn(
+                f"{path}: dropped {len(bad)} of {len(bodies)} legacy bodies that do "
+                f"not decode as {binding.message_name} (first: {errors[0][1]})",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+        st = os.stat(path)
+        _write_landed(table, path)
+        os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
+        directory, name = os.path.split(path)
+        crc = os.path.join(directory, f".{name}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
 
 
 # ------------------------------------------------------------- the client

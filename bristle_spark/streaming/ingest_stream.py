@@ -1,12 +1,17 @@
 """Streaming ingest: the full bristle dataflow as one Structured
 Streaming query (SURVEY.md §3 "Spark lifecycle equivalent"):
 
-    payload file stream (type, body)        D1/D2 source
-      -> decode (mapInPandas, wire.py)      D4
+    landed payload files (raw columns)      D1/D2 source; decoded once
+                                            at the front door (D4)
       -> transcode (Catalyst projection)    D6
       -> foreachBatch parquet sink          D9/D10 (micro-batch ≈ flush tick)
       with checkpointing                    the durability bristle lacks
                                             (ack-before-write, SURVEY.md §8.2)
+
+The front door lands each batch with the binding's raw columns
+(service.land_payload), so the drain reads them with ``raw_schema``
+(column pruning skips the raw ``body``) and runs no Python: the plan is
+a file scan, a projection and the sink.
 
 ``trigger(processingTime=...)`` plays the reference's FlushInterval
 ticker (clickhouse_table_writer.go:91-98); the source rate limit
@@ -22,14 +27,10 @@ from __future__ import annotations
 import warnings
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from bristle_spark.ingest import metrics, pipeline
 from bristle_spark.ingest.bindings import MessageBinding
-
-PAYLOAD_SCHEMA = T.StructType(
-    [T.StructField("type", T.StringType()), T.StructField("body", T.BinaryType())]
-)
+from bristle_spark.transcode import build_select, raw_schema
 
 # Landed payload bytes one drain micro-batch may take: the byte analog of
 # the reference's MaxBatchSize rows per flush (clickhouse_table_writer.go:
@@ -43,18 +44,6 @@ PAYLOAD_SCHEMA = T.StructType(
 MAX_BYTES_PER_TRIGGER = 64 * 1024 * 1024
 
 
-def payload_stream(
-    spark: SparkSession,
-    payload_dir: str,
-    max_bytes_per_trigger: int = MAX_BYTES_PER_TRIGGER,
-) -> DataFrame:
-    return (
-        spark.readStream.schema(PAYLOAD_SCHEMA)
-        .option("maxBytesPerTrigger", max_bytes_per_trigger)
-        .parquet(payload_dir)
-    )
-
-
 def run_stream_ingest(
     spark: SparkSession,
     payload_dir: str,
@@ -64,14 +53,17 @@ def run_stream_ingest(
     ts_column: str | None = None,
     max_bytes_per_trigger: int = MAX_BYTES_PER_TRIGGER,
 ) -> int:
-    """Drain all available payload files through decode+transcode into a
+    """Drain all available landed payload files through transcode into a
     parquet sink, exactly-once. Returns the number of micro-batches
     processed this run (0 when the checkpoint says everything is done —
     the restart-idempotence the reference lacks), and adds it and the
     rows read to the table's drain counters in ``metrics``."""
-    stream = payload_stream(spark, payload_dir, max_bytes_per_trigger)
-    decoded = pipeline.decode(stream, binding)
-    transcoded = pipeline.transcode(decoded, binding)
+    transcoded = (
+        spark.readStream.schema(raw_schema(binding))
+        .option("maxBytesPerTrigger", max_bytes_per_trigger)
+        .parquet(payload_dir)
+        .select(*build_select(binding))
+    )
 
     batch_ids: list[int] = []
 

@@ -25,9 +25,9 @@ from dataclasses import dataclass, field as dc_field
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from bristle_spark.ingest.bindings import FieldSpec, MessageBinding, SinkColumn
-from bristle_spark.ingest.wire import INT_KINDS
 
 # --------------------------------------------------- ClickHouse type model
 
@@ -111,33 +111,13 @@ def spark_type_str(ch: ChType) -> str:
 
 # ------------------------------------------------------- raw decode schema
 
-_RAW_TYPES: dict[str, T.DataType] = {
-    # uint64 fidelity note: decoded values are carried as signed 64-bit;
-    # values above 2^63-1 need the Decimal(20,0) sink path end-to-end.
-    **{k: T.LongType() for k in INT_KINDS},
-    "bool": T.BooleanType(),
-    "float": T.FloatType(),
-    "double": T.DoubleType(),
-    "string": T.StringType(),
-    "bytes": T.BinaryType(),
-    "timestamp": T.StructType(
-        [T.StructField("seconds", T.LongType()), T.StructField("nanos", T.LongType())]
-    ),
-}
-
-
-def raw_field_type(spec: FieldSpec) -> T.DataType:
-    if spec.is_map:
-        _, kk, vk = spec.kind.split(":")
-        return T.MapType(_RAW_TYPES[kk], _RAW_TYPES[vk])
-    base = _RAW_TYPES[spec.kind]
-    return T.ArrayType(base) if spec.repeated else base
-
 
 def raw_schema(binding: MessageBinding) -> T.StructType:
-    return T.StructType(
-        [T.StructField(f.name, raw_field_type(f), nullable=True) for f in binding.fields]
-    )
+    """The raw columns as Spark types: the Arrow raw schema that the
+    column decoder fills and the landing zone stores (wire.arrow_type;
+    every integer kind is int64, so a uint64 of 2^63 or more is refused
+    at decode -- PARITY D4)."""
+    return from_arrow_schema(binding.raw_arrow_schema)
 
 
 # --------------------------------------------------------- S1-S13 builders

@@ -361,7 +361,7 @@ def check_server_side_failure_acks_full(server, door: str, monkeypatch) -> None:
     service_cls, client_cls, _ = FRONT_DOORS[door]
     with service_cls(server) as service:
 
-        def boom(server, binding, type_name, bodies):
+        def boom(payload_dir, binding, bodies, columns):
             raise OSError("disk full")
 
         monkeypatch.setattr(svc, "land_payload", boom)

@@ -3,10 +3,11 @@
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CONFIG = f"{REPO}/examples/config.json"
 
 
@@ -63,13 +64,25 @@ def test_forward_json_day_partitions_on_ts_column(tmp_path, spark):
 
 
 def test_ingest_stream_drains_backlog_in_one_microbatch(tmp_path, spark):
-    """ingest-stream with the default byte bound takes a 3-file backlog
-    in one micro-batch."""
+    """ingest-stream with the default byte bound takes a 4-file backlog
+    in one micro-batch; one file, in the older (type, body) layout, is
+    upgraded in place before the drain and lands every row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bristle_spark.ingest import wire
     from bristle_spark.ingest.fixtures import finnhub_binding
     from tests.test_stream_ingest import _write_payload_chunks
 
+    binding = finnhub_binding()
     payloads, sink = str(tmp_path / "payloads"), str(tmp_path / "sink")
-    total = _write_payload_chunks(spark, payloads, finnhub_binding(), n_chunks=3)
+    total = _write_payload_chunks(payloads, binding, n_chunks=3)
+    legacy = [wire.encode_message([(1, "string", f"OLD{i}", False)]) for i in range(4)]
+    pq.write_table(
+        pa.table({"type": [binding.message_name] * 4, "body": pa.array(legacy, pa.binary())}),
+        f"{payloads}/socket_legacy.parquet",
+    )
+    total += len(legacy)
     r = _run(
         "ingest-stream",
         "--config", CONFIG,
@@ -80,7 +93,9 @@ def test_ingest_stream_drains_backlog_in_one_microbatch(tmp_path, spark):
     )
     assert r.returncode == 0, r.stderr[-2000:]
     assert "processed 1 micro-batches" in r.stderr
-    assert spark.read.parquet(sink).count() == total
+    out = spark.read.parquet(sink)
+    assert out.count() == total
+    assert out.filter("symbol LIKE 'OLD%'").count() == len(legacy)
 
 
 def test_cli_unknown_query():
@@ -98,7 +113,7 @@ def test_query_docs_fresh():
         [sys.executable, "scripts/gen_query_docs.py", "--check"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     assert r.returncode == 0, r.stdout + r.stderr
 

@@ -5,7 +5,7 @@ from __future__ import annotations
 import random
 import struct
 
-import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -21,6 +21,17 @@ def test_varint_roundtrip(v):
     buf = wire.encode_varint(v)
     out, pos = wire.decode_varint(buf, 0)
     assert out == v and pos == len(buf)
+
+
+def test_varint_past_64_bits_is_refused():
+    """A tenth varint byte may carry bit 63 alone (protobuf-go's
+    errOverflow); the column decoder fails the row that holds one."""
+    assert wire.decode_varint(b"\xff" * 9 + b"\x01", 0) == ((1 << 64) - 1, 10)
+    with pytest.raises(ValueError):
+        wire.decode_varint(b"\xff" * 9 + b"\x02", 0)
+    body = b"\x18" + b"\xff" * 9 + b"\x02"  # finnhub tradeTime (3, uint64)
+    arrays, errors = finnhub_binding().column_decoder([body])
+    assert [row for row, _ in errors] == [0]
 
 
 @given(st.integers(min_value=-(1 << 63), max_value=(1 << 63) - 1))
@@ -351,7 +362,7 @@ def _outcome(decode, body):
         return "error"
 
 
-@pytest.mark.parametrize(
+_SPEC_SETS = pytest.mark.parametrize(
     "specs",
     [
         example_binding().field_specs_by_number(),
@@ -361,45 +372,162 @@ def _outcome(decode, body):
     ],
     ids=["example", "binance", "finnhub", "all_kinds"],
 )
-def test_compiled_decoder_agrees_with_interpretive_oracle(specs):
-    """Random, mutated (byte flips, truncations, insertions) and pure
-    noise bodies decode to the same value, or fail alike, under the
-    compiled decoder and the interpretive oracle."""
-    rng = random.Random(20261019)
-    decode = wire.compile_decoder(specs)
+
+
+def _bodies(specs, seed=20261019):
+    """Random bodies, each followed by a mutated copy (byte flips,
+    truncations, insertions) and pure noise."""
+    rng = random.Random(seed)
     bodies = []
     for _ in range(400):
         body = _random_body(rng, specs)
         bodies += [body, _mutate(rng, body), rng.randbytes(rng.randrange(12))]
+    return bodies
+
+
+@_SPEC_SETS
+def test_compiled_decoder_agrees_with_interpretive_oracle(specs):
+    """Random, mutated and pure noise bodies decode to the same value, or
+    fail alike, under the compiled decoder and the interpretive oracle;
+    and the column decoder fills each body's row with the oracle's
+    values, or fails it where the oracle fails or a value does not fit
+    its int64 column."""
+    bodies = _bodies(specs)
+    decode = wire.compile_decoder(specs)
     outcomes = [_outcome(decode, b) for b in bodies]
     assert outcomes == [_outcome(lambda b: _oracle_decode(b, specs), b) for b in bodies]
     # every unmutated body decodes; mutation and noise reach the errors
     assert "error" not in outcomes[0::3] and "error" in outcomes
 
+    arrays, errors = wire.compile_column_decoder(specs)(bodies)
+    failed = dict(errors)
+    assert all(len(a) == len(bodies) for a in arrays)
+    for row, body in enumerate(bodies):
+        expected = _oracle_row(body, specs)
+        got = None if row in failed else [a[row].as_py() for a in arrays]
+        assert got == expected, (row, body)
+        if row in failed:
+            assert all(not a[row].is_valid for a in arrays)
+    # the uint64 and fixed64 fields of the random bodies overflow int64
+    # about half the time
+    if any(k in ("uint64", "fixed64") for k, _ in specs.values()):
+        assert any("int64" in message for message in failed.values())
+
+
+_INT64 = range(-(1 << 63), 1 << 63)
+
+
+def _oracle_row(body, specs):
+    """The oracle's decode as a raw-column row: None where the body
+    fails, or where an integer does not fit int64. A map reads back as
+    (key, value) pairs, its missing keys as the key kind's zero value."""
+    try:
+        out = _oracle_decode(body, specs)
+    except Exception:
+        return None
+
+    def cell(kind, value):
+        if isinstance(value, tuple):  # Timestamp
+            return {"seconds": value[0], "nanos": value[1]}
+        if isinstance(value, int) and not isinstance(value, bool) and value not in _INT64:
+            raise OverflowError
+        if kind == "float":  # float32 column
+            return struct.unpack("<f", struct.pack("<f", value))[0]
+        return value
+
+    row = []
+    try:
+        for number, (kind, repeated) in specs.items():
+            value = out.get(number)
+            if value is None:
+                row.append(None)
+            elif kind.startswith("map:"):
+                _, kk, vk = kind.split(":")
+                zero = {"string": ""}.get(kk, 0)
+                row.append(
+                    [(zero if k is None else cell(kk, k), cell(vk, v)) for k, v in value.items()]
+                )
+            elif repeated:
+                row.append([cell(kind, v) for v in value])
+            else:
+                row.append(cell(kind, value))
+    except OverflowError:
+        return None
+    return row
+
 
 class _Payloads:
     """Stands in for the payload DataFrame: keeps the function that
-    pipeline.decode hands to mapInPandas."""
+    pipeline.decode hands to mapInArrow."""
 
     columns = ["body"]
 
-    def mapInPandas(self, fn, schema):  # noqa: N802
+    def select(self, *cols):
+        return self
+
+    def mapInArrow(self, fn, schema):  # noqa: N802
         self.fn = fn
         return self
 
 
 def test_drain_decode_closure_survives_cloudpickle():
-    """The drain ships pipeline.decode's mapInPandas function, and the
-    binding and compiled decoder it closes over, to executors through
-    cloudpickle; the decoder's struct unpackers do not pickle, so it
-    must travel as its specs and recompile there."""
+    """pipeline.decode ships its mapInArrow function, and the column
+    decoder it closes over, to executors through cloudpickle; the
+    decoder's generated code does not pickle, so it must travel as its
+    specs and recompile there."""
     binding = finnhub_binding()
     body = wire.encode_message(
         [(1, "string", "AAPL", False), (2, "double", 1.5, False), (5, "string", ["1"], True)]
     )
-    assert binding.decoder(body) == {1: "AAPL", 2: 1.5, 5: ["1"]}  # compiled before shipping
+    arrays, errors = binding.column_decoder([body])  # compiled before shipping
+    assert errors == [] and arrays[0].to_pylist() == ["AAPL"]
     fn = cloudpickle.loads(cloudpickle.dumps(pipeline.decode(_Payloads(), binding).fn))
-    (out,) = fn(iter([pd.DataFrame({"body": [body, b"\x0a\x05ab"]})]))
-    assert out["symbol"].tolist() == ["AAPL", None]
-    assert out["price"].tolist()[0] == 1.5
-    assert out[pipeline.ERROR_COL].isna().tolist() == [True, False]
+    batch = pa.RecordBatch.from_arrays([pa.array([body, b"\x0a\x05ab"], pa.binary())], ["body"])
+    (out,) = fn(iter([batch]))
+    assert out.column("symbol").to_pylist() == ["AAPL", None]
+    assert out.column("price").to_pylist()[0] == 1.5
+    assert out.column("tradeConditions").to_pylist()[0] == ["1"]
+    assert [e is None for e in out.column(pipeline.ERROR_COL).to_pylist()] == [True, False]
+
+
+@pytest.mark.parametrize(
+    "binding", [example_binding(), binance_binding(), finnhub_binding()],
+    ids=["example", "binance", "finnhub"],
+)
+def test_every_body_acked_ok_lands_under_the_raw_schema(binding, tmp_path, spark):
+    """"Acked OK" implies "drains": over seeded random and mutated bodies
+    (the random uint64 values reach 2^63 and more about half the time),
+    a body the front door acks OK lands a file whose raw columns hold the
+    oracle's decode of it and read back under ``raw_schema``; every
+    other body is refused with DECODE_ERR."""
+    import types
+
+    import pyarrow.parquet as pq
+
+    from bristle_spark.ingest import service as svc
+    from bristle_spark.ingest.bindings import BindingRegistry
+    from bristle_spark.transcode import raw_schema
+
+    registry = BindingRegistry()
+    registry.register(binding)
+    server = types.SimpleNamespace(registry=registry, data_root=str(tmp_path))
+    specs = binding.field_specs_by_number()
+    acked, refused = [], 0
+    for i, body in enumerate(_bodies(specs, seed=20261020)[:300]):
+        batch = {"id": i, "type_id": None, "type_name": binding.message_name,
+                 "data": wire.join_frames([body])}
+        result = svc.process_batch(server, {}, batch, 10)
+        expected = _oracle_row(body, specs)
+        assert result == (svc.DECODE_ERR if expected is None else svc.OK), body
+        if expected is None:
+            refused += 1
+        else:
+            acked.append(expected)
+    assert acked and refused
+    payload_dir = svc.landing_dir(str(tmp_path), binding.sink_table)
+    names = binding.raw_arrow_schema.names
+    landed = pq.read_table(payload_dir).select(names)
+    assert landed.schema.equals(binding.raw_arrow_schema)
+    got = [[row[n] for n in names] for row in landed.to_pylist()]
+    assert sorted(map(repr, got)) == sorted(map(repr, acked))
+    assert spark.read.schema(raw_schema(binding)).parquet(payload_dir).count() == len(acked)

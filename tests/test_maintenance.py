@@ -130,20 +130,19 @@ def test_server_compact_merges_pumped_parts(spark, sf_dir, tmp_path):
     cfg_path.write_text(json.dumps(cfg))
     server = IngestServer(spark, str(cfg_path), str(tmp_path / "data"))
 
+    from bristle_spark.ingest import service as svc
     from bristle_spark.ingest.fixtures import encode_example_row
 
     safe = b.sink_table.replace(".", "__")
-    payload_dir = os.path.join(server.data_root, "payloads", safe)
-    os.makedirs(payload_dir, exist_ok=True)
+    payload_dir = svc.landing_dir(server.data_root, b.sink_table)
     for i in range(3):
         bodies = [
             encode_example_row(name=f"p{i}_{j}", ts=(1_700_000_000 + j, 0), value=j)
             for j in range(5)
         ]
-        df = spark.createDataFrame(
-            [(b.message_name, body) for body in bodies], "type string, body binary"
-        )
-        df.coalesce(1).write.mode("append").parquet(payload_dir)
+        columns, errors = b.column_decoder(bodies)
+        assert errors == []
+        svc.land_payload(payload_dir, b, bodies, columns)
         server.pump()
 
     sink_dir = os.path.join(server.data_root, "sink", safe)

@@ -5,6 +5,8 @@ broadcast) fails CI rather than an at-scale run.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from bristle_spark import plans
@@ -753,3 +755,37 @@ def test_summap_two_level_aggregation(spark, sf_dir):
     assert plans.exchange_count(df) == 2
     assert not plans.has_node(df, "Join")
     assert plans.unpartitioned_windows(df) == []
+
+
+def test_ingest_drain_runs_no_python(spark, tmp_path, monkeypatch):
+    """The front door lands each batch with its raw columns, so a drain
+    micro-batch is a parquet scan of those columns, a projection and the
+    sink: no Python node, and the scan skips the raw body."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from bristle_spark.ingest import service, wire
+    from bristle_spark.ingest.fixtures import finnhub_binding
+    from bristle_spark.streaming.ingest_stream import run_stream_ingest
+
+    binding = finnhub_binding()
+    bodies = [
+        wire.encode_message([(1, "string", "AAPL", False), (3, "uint64", 1_700_000_000_000, False)])
+    ]
+    payload_dir = str(tmp_path / "payloads")
+    service.land_payload(payload_dir, binding, bodies, binding.column_decoder(bodies)[0])
+    queries = []
+    start = DataStreamWriter.start
+
+    def keep_query(self, *args, **kwargs):
+        queries.append(start(self, *args, **kwargs))
+        return queries[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", keep_query)
+    run_stream_ingest(spark, payload_dir, binding, str(tmp_path / "sink"), str(tmp_path / "ckpt"))
+    (query,) = queries
+    plan = query._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    assert "FileScan parquet" in plan, plan
+    for node in ("MapInPandas", "MapInArrow", "EvalPython"):  # EvalPython: Arrow/Batch*
+        assert node not in plan, plan
+    (schema,) = re.findall(r"ReadSchema: (struct<[^\n]*>)", plan)
+    assert "symbol" in schema and "body" not in schema

@@ -1,4 +1,4 @@
-"""Streaming ingest end-to-end: file payload stream -> decode ->
+"""Streaming ingest end-to-end: landed payload files (raw columns) ->
 transcode -> checkpointed parquet sink, with exactly-once restart
 semantics (the durability the reference lacks — SURVEY.md §8.2)."""
 
@@ -8,18 +8,15 @@ import pytest
 from pyspark.sql import types as T
 
 from bristle_spark.ingest import metrics, pipeline, wire
+from bristle_spark.ingest import service as svc
 from bristle_spark.ingest.fixtures import finnhub_binding
 from bristle_spark.streaming.ingest_stream import run_stream_ingest
 
-PAYLOAD_SCHEMA = T.StructType(
-    [T.StructField("type", T.StringType()), T.StructField("body", T.BinaryType())]
-)
 
-
-def _write_payload_chunks(spark, payload_dir, binding, n_chunks=3, per_chunk=20, first=0):
-    """Land ``n_chunks`` payload files; chunk ``c`` holds symbols
-    ``SYM{c}_*``, so chunks written with distinct ``first`` never share
-    a row."""
+def _write_payload_chunks(payload_dir, binding, n_chunks=3, per_chunk=20, first=0):
+    """Land ``n_chunks`` payload files as the front door does; chunk
+    ``c`` holds symbols ``SYM{c}_*``, so chunks written with distinct
+    ``first`` never share a row."""
     rows_total = 0
     for c in range(first, first + n_chunks):
         bodies = [
@@ -33,9 +30,9 @@ def _write_payload_chunks(spark, payload_dir, binding, n_chunks=3, per_chunk=20,
             for i in range(per_chunk)
         ]
         rows_total += len(bodies)
-        spark.createDataFrame(
-            [(binding.message_name, b) for b in bodies], schema=PAYLOAD_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(payload_dir)
+        columns, errors = binding.column_decoder(bodies)
+        assert errors == []
+        svc.land_payload(payload_dir, binding, bodies, columns)
     return rows_total
 
 
@@ -55,7 +52,7 @@ def test_stream_ingest_exactly_once(spark, tmp_path):
     sink_dir = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
 
-    total = _write_payload_chunks(spark, payload_dir, binding)
+    total = _write_payload_chunks(payload_dir, binding)
     before = _drain_counters(binding)
     n1 = run_stream_ingest(
         spark, payload_dir, binding, sink_dir, ckpt, ts_column="trade_time"
@@ -77,7 +74,7 @@ def test_stream_ingest_exactly_once(spark, tmp_path):
     assert spark.read.parquet(sink_dir).count() == total
 
     # new data arrives -> only the delta lands
-    more = _write_payload_chunks(spark, payload_dir, binding, n_chunks=1)
+    more = _write_payload_chunks(payload_dir, binding, n_chunks=1)
     n3 = run_stream_ingest(
         spark, payload_dir, binding, sink_dir, ckpt, ts_column="trade_time"
     )
@@ -92,7 +89,7 @@ def test_byte_bound_below_one_file_still_drains(spark, tmp_path):
     payload_dir = str(tmp_path / "payloads")
     sink_dir = str(tmp_path / "sink")
     n_files = 3
-    total = _write_payload_chunks(spark, payload_dir, binding, n_chunks=n_files)
+    total = _write_payload_chunks(payload_dir, binding, n_chunks=n_files)
     before = _drain_counters(binding)
     n = run_stream_ingest(
         spark, payload_dir, binding, sink_dir, str(tmp_path / "ckpt"),
@@ -112,7 +109,7 @@ def test_drain_rows_not_added_short_when_progress_is_dropped(spark, tmp_path):
     payload_dir = str(tmp_path / "payloads")
     sink_dir = str(tmp_path / "sink")
     n_files = 3
-    total = _write_payload_chunks(spark, payload_dir, binding, n_chunks=n_files)
+    total = _write_payload_chunks(payload_dir, binding, n_chunks=n_files)
     key = "spark.sql.streaming.numRecentProgressUpdates"
     saved = spark.conf.get(key)
     spark.conf.set(key, n_files - 1)
@@ -137,10 +134,10 @@ def test_file_bounded_checkpoint_resumes_under_byte_bound(spark, tmp_path):
     payload_dir = str(tmp_path / "payloads")
     sink_dir = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
-    landed = _write_payload_chunks(spark, payload_dir, binding, n_chunks=2)
+    landed = _write_payload_chunks(payload_dir, binding, n_chunks=2)
 
     stream = (
-        spark.readStream.schema(PAYLOAD_SCHEMA)
+        spark.readStream.schema(T.StructType([T.StructField("body", T.BinaryType())]))
         .option("maxFilesPerTrigger", 1)
         .parquet(payload_dir)
     )
@@ -158,7 +155,7 @@ def test_file_bounded_checkpoint_resumes_under_byte_bound(spark, tmp_path):
     assert [p.numInputRows for p in q.recentProgress] == [20, 20]
 
     # two more files land; the byte-bounded drain takes them in one trigger
-    more = _write_payload_chunks(spark, payload_dir, binding, n_chunks=2, first=2)
+    more = _write_payload_chunks(payload_dir, binding, n_chunks=2, first=2)
     before = _drain_counters(binding)
     n = run_stream_ingest(spark, payload_dir, binding, sink_dir, ckpt, ts_column="trade_time")
     assert n == 1
@@ -252,10 +249,47 @@ def test_wire_journal_survives_server_restart(spark, tmp_path):
 def test_stream_ingest_schema_matches_batch(spark, tmp_path):
     binding = finnhub_binding()
     payload_dir = str(tmp_path / "payloads")
-    _write_payload_chunks(spark, payload_dir, binding, n_chunks=1, per_chunk=5)
+    _write_payload_chunks(payload_dir, binding, n_chunks=1, per_chunk=5)
     run_stream_ingest(
         spark, payload_dir, binding, str(tmp_path / "sink"), str(tmp_path / "ckpt")
     )
     out = spark.read.parquet(str(tmp_path / "sink"))
     expected = [c.name for c in sorted(binding.sink_columns, key=lambda c: c.position)]
     assert out.columns == expected
+
+
+def test_uint64_poison_pill_is_refused_at_the_ack(spark, tmp_path):
+    """A uint64 of 2^63 or more does not fit the raw int64 column, so the
+    front door refuses its batch (DECODE_ERR) instead of acking a body
+    the drain can never land; the good batches around it all drain."""
+    import json
+
+    from bristle_spark.ingest.server import IngestServer
+    from bristle_spark.ingest.service import IngestSocketClient, IngestSocketService
+    from tests.test_server_reload import _explicit_config
+
+    binding = finnhub_binding()
+    cfg_path = tmp_path / "config.json"
+    cfg_path.write_text(json.dumps(_explicit_config(binding)))
+    server = IngestServer(spark, str(cfg_path), str(tmp_path / "data"))
+
+    def rows(tag, n, trade_time=1_700_000_000_000):
+        return [
+            wire.encode_message(
+                [(1, "string", f"{tag}{i}", False), (3, "uint64", trade_time + i, False)]
+            )
+            for i in range(n)
+        ]
+
+    with IngestSocketService(server) as service:
+        with IngestSocketClient("127.0.0.1", service.port) as client:
+            assert client.write_batch(rows("a", 10), type_name=binding.message_name) == svc.OK
+            server.pump()
+            poison = rows("bad", 1, trade_time=(1 << 63) + 5)
+            assert client.write_batch(poison, type_name=binding.message_name) == svc.DECODE_ERR
+            assert client.write_batch(rows("b", 10), type_name=binding.message_name) == svc.OK
+    server.pump()
+    server.pump()
+    sink = tmp_path / "data" / "sink" / binding.sink_table.replace(".", "__")
+    names = sorted(r["symbol"] for r in spark.read.parquet(str(sink)).collect())
+    assert names == sorted([f"a{i}" for i in range(10)] + [f"b{i}" for i in range(10)])
